@@ -21,7 +21,7 @@ from fs2_kafka_streams_spark.canonical import clamp_ts, sql_clamp_ts
 from fs2_kafka_streams_spark.catalog import Catalog
 from fs2_kafka_streams_spark.queries import query
 from fs2_kafka_streams_spark.streaming.replay import replay_dir
-from fs2_kafka_streams_spark.streaming.run import run_to_memory
+from fs2_kafka_streams_spark.streaming.run import _drain, run_to_memory
 from fs2_kafka_streams_spark.streaming.stateful import EVENTS_SCHEMA
 
 
@@ -527,25 +527,9 @@ def streaming_ann_topk(spark, sf_dir, k: int = 3, sink=None):
     def score_batch(bdf, epoch_id: int) -> None:
         sink(cosine_topk(corpus, bdf, k=k, spread=False), epoch_id)
 
-    checkpoint = tempfile.mkdtemp(prefix="ckpt_ann_stream_")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from fs2_kafka_streams_spark.streaming.run import record_run
-
-        record_run("ann_stream", q)
-    finally:
-        # availableNow ran to completion (or died); nothing resumes from
-        # this checkpoint — only the SPOOL must outlive the call (the
-        # returned DataFrame reads it lazily), never the offset log
-        import shutil
-
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    # stateless: pins nothing — 16 shuffle partitions would change the
+    # plans inside score_batch
+    _drain(spark, stream.writeStream.foreachBatch(score_batch), "ann_stream")
     if spool is None:
         return None
     return (

@@ -24,6 +24,8 @@ Match timestamps compare in exact microseconds; the emitted
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,9 +34,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fs2_kafka_streams_spark.queries import ntz_epoch_seconds
 from fs2_kafka_streams_spark.streaming.replay import replay_dir
-from fs2_kafka_streams_spark.streaming.conf import duration_us
-from fs2_kafka_streams_spark.streaming.run import run_to_memory
-from fs2_kafka_streams_spark.streaming.stateful import EVENTS_SCHEMA
+from fs2_kafka_streams_spark.streaming.conf import STREAM_PERF_CONF, duration_us
+from fs2_kafka_streams_spark.streaming.run import _drain, run_to_memory
+from fs2_kafka_streams_spark.streaming.stateful import (
+    HAS_TWS,
+    _changelog_source,
+    _tws_prepare,
+)
 
 _MATCH_SCHEMA = (
     "user_id long, base_event_id long, trigger_event_id long, "
@@ -171,9 +177,7 @@ def pattern_matches_stream(
     # cost; the update fn sorts each batch by (ts, event_id) so intra-
     # trigger file order is irrelevant
     src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_dir(sf_dir, "events", order_col="ts"))
+        _changelog_source(spark, replay_dir(sf_dir, "events", order_col="ts"))
         # NULL event-time contract (docs/USAGE.md): a row with no event
         # time cannot be sequenced — CEP drops it, exactly as Spark's own
         # event-time operators (window aggregation, stream-stream join)
@@ -270,8 +274,6 @@ def pattern_match_batch(
 
 
 # ---- typed-state variant with event-time timers (A22 + A17 discipline) ----
-
-from fs2_kafka_streams_spark.streaming.stateful import HAS_TWS  # noqa: E402
 
 if HAS_TWS:
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
@@ -403,15 +405,11 @@ def pattern_matches_stream_tws(
     ``client/RecordStream.scala:71-108`` + ``streams/Tables.scala``);
     default is the deterministic time-ordered file replay of
     ``{sf_dir}/events.parquet``."""
-    from fs2_kafka_streams_spark.streaming.stateful import _tws_prepare
-
     _tws_prepare(spark)
     gap_us = duration_us(gap)
     if source is None:
-        source = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(replay_dir(sf_dir, "events", order_col="ts"))
+        source = _changelog_source(
+            spark, replay_dir(sf_dir, "events", order_col="ts")
         )
     src = (
         # NULL event-time contract — see pattern_matches_stream (a NULL ts
@@ -448,46 +446,19 @@ def pattern_match_stream_tws(
     source: DataFrame | None = None,
 ) -> DataFrame:
     """Run the timer-expiring TWS pattern query to completion; returns the
-    match table (must equal :func:`pattern_match_batch` — the q57 oracle)."""
-    from fs2_kafka_streams_spark.streaming.conf import (
-        STREAM_PERF_CONF,
-        pinned_conf,
-    )
-    from fs2_kafka_streams_spark.streaming.run import run_to_memory
-    from fs2_kafka_streams_spark.streaming.stateful import _tws_prepare
-
+    match table (must equal :func:`pattern_match_batch` — the q57 oracle).
+    An explicit ``checkpoint`` is the crash-recovery path: the caller owns
+    the tree and restarts from it; without one the drain's throwaway
+    checkpoint is deleted after termination."""
     matches = pattern_matches_stream_tws(
         spark, sf_dir, base_type, trigger_type, gap, source=source
     )
-    if checkpoint is None:
-        # throwaway checkpoint: run_to_memory owns the tempdir and deletes
-        # the RocksDB tree after termination (a hand-rolled mkdtemp here
-        # used to leak one tree per run)
-        return run_to_memory(
-            spark, matches, "cep_tws", extra_conf=dict(_tws_prepare(spark))
-        )
-    # explicit checkpoint = the crash-recovery path: the caller owns the
-    # tree (it restarts from it), so no cleanup here. Conf layering matches
-    # run_to_memory's (_tws_prepare on top of STREAM_PERF_CONF) so both
-    # paths run under identical session confs.
-    import uuid as _uuid
-
-    conf = dict(STREAM_PERF_CONF)
-    conf.update(_tws_prepare(spark))
-    name = f"cep_tws_{_uuid.uuid4().hex[:8]}"
-    with pinned_conf(spark, conf):
-        q = (
-            matches.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from fs2_kafka_streams_spark.streaming.run import record_run
-
-    record_run(name, q)
+    name = f"cep_tws_{uuid.uuid4().hex[:8]}"
+    writer = (
+        matches.writeStream.outputMode("append").format("memory").queryName(name)
+    )
+    confs = {**STREAM_PERF_CONF, **_tws_prepare(spark)}
+    _drain(spark, writer, name, confs, checkpoint)
     return spark.table(name)
 
 
@@ -652,9 +623,7 @@ def funnel_matches_stream(
     gap_us = duration_us(gap)
     # 2 files/trigger — same rationale as pattern_matches_stream
     src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_dir(sf_dir, "events", order_col="ts"))
+        _changelog_source(spark, replay_dir(sf_dir, "events", order_col="ts"))
         # NULL event-time contract — see pattern_matches_stream
         .filter(F.col("ts").isNotNull())
         # column pruning through the opaque state boundary — see

@@ -11,8 +11,10 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from fs2_kafka_streams_spark.streaming.conf import (
     STREAM_PERF_CONF,
@@ -55,6 +57,43 @@ def record_run(name: str, query) -> None:
     del RUN_TRACE[:-_RUN_TRACE_MAX]
 
 
+def _drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    name: str,
+    confs: dict[str, str] | None = None,
+    checkpoint: str | None = None,
+) -> None:
+    """Run a configured ``DataStreamWriter`` to completion with an
+    ``availableNow`` trigger — the one drain every bounded streaming run in
+    the package goes through. ``confs`` are pinned (scoped, restored)
+    around start and termination; ``None`` pins nothing (a stateless
+    query's ``foreachBatch`` plans must see the session's own confs). The
+    completed run is appended to :data:`RUN_TRACE` under ``name``.
+
+    ``checkpoint=None`` drains on a fresh tempdir checkpoint that is
+    deleted afterwards, on failure too: availableNow ran the stream to
+    completion (or died), so nothing resumes from it, and a RocksDB tree
+    left per failing run fills the temp dir. A caller-passed checkpoint is the
+    caller's to restart from and is never touched."""
+    own = checkpoint is None
+    if own:
+        checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    try:
+        pin = pinned_conf(spark, confs) if confs is not None else nullcontext()
+        with pin:
+            q = (
+                writer.option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        record_run(name, q)
+    finally:
+        if own:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+
+
 def run_to_memory(
     spark: SparkSession,
     df: DataFrame,
@@ -65,37 +104,10 @@ def run_to_memory(
     """Returns the memory-sink table. The sink itself (small by design —
     every harness query aggregates before sinking) lives until the session
     ends or the caller drops it; the RocksDB checkpoint tree, which is NOT
-    small, is deleted here once the query has terminated — availableNow
-    ran the stream to completion, so nothing will resume from it."""
+    small, is deleted by :func:`_drain` once the query has terminated."""
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    try:
-        return _run(spark, df, name, checkpoint, output_mode, extra_conf)
-    finally:
-        # delete on failure too: a query that errors mid-replay must not
-        # leave its RocksDB tree behind (repeated failing runs fill /tmp)
-        shutil.rmtree(checkpoint, ignore_errors=True)
-
-
-def _run(
-    spark: SparkSession,
-    df: DataFrame,
-    name: str,
-    checkpoint: str,
-    output_mode: str,
-    extra_conf: dict[str, str] | None,
-) -> DataFrame:
-    confs = dict(STREAM_PERF_CONF)
-    confs.update(extra_conf or {})
-    with pinned_conf(spark, confs):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    record_run(name, q)
+    writer = (
+        df.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    )
+    _drain(spark, writer, name, {**STREAM_PERF_CONF, **(extra_conf or {})})
     return spark.table(name)

@@ -3,9 +3,12 @@
 Reference semantics (``streams/Tables.scala:110-138``): consume a keyed
 changelog in chunks, upsert latest value per key into a RocksDB-backed
 store, expose the materialized view. Here the same contract runs as a
-Structured Streaming query: per-key state via ``applyInPandasWithState``
-(Arrow-batched), the state store persisting between micro-batches, a
-foreachBatch upsert assembling the final view.
+Structured Streaming query on either state API — ``applyInPandasWithState``
+(:func:`_latest_update`) or ``transformWithStateInPandas``
+(:class:`LatestDeletesProcessor`) — and both run ONE fold,
+:func:`_fold_latest`: the ``(ts, event_id)``-max row per key across
+micro-batches, with an optional tombstone column. The state store persists
+between micro-batches; a foreachBatch upsert sink assembles the final view.
 
 At scale this is the right shape: state is partitioned by key across
 executors (RocksDB state store — configure
@@ -17,16 +20,26 @@ key domain churns.
 from __future__ import annotations
 
 import atexit
+import contextlib
+import os
 import shutil
 import tempfile
 import uuid
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from fs2_kafka_streams_spark.streaming.conf import duration_us
+from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
+from fs2_kafka_streams_spark.streaming.conf import (
+    STREAM_PERF_CONF,
+    duration_us,
+    pinned_conf,
+)
 from fs2_kafka_streams_spark.streaming.replay import replay_dir
+from fs2_kafka_streams_spark.streaming.run import _drain
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, "
@@ -53,13 +66,28 @@ _OUTPUT_SCHEMA = (
     "user_id long, event_id long, ts timestamp_ntz, "
     "event_type string, value double, props string"
 )
+_OUTPUT_SCHEMA_DEAD = _OUTPUT_SCHEMA + ", _dead boolean"
+
+
+def _changelog_source(
+    spark: SparkSession, path: str, schema: str = EVENTS_SCHEMA,
+    files_per_trigger: int = 2,
+) -> DataFrame:
+    """Parquet changelog directory replayed ``files_per_trigger`` files
+    per micro-batch. The default 2 still crosses micro-batch boundaries
+    (cross-batch state is the semantic under test — latest-by-key is
+    batching-insensitive) at half the per-batch machinery cost of 1."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(path)
+    )
 
 
 def _pick_latest(pdf: pd.DataFrame, tombstone_col: str | None = None):
     """(ts, event_id)-max row of ONE pandas micro-batch frame as a state
     tuple ``(event_id, ts_us, event_type, value, props[, dead])`` plus the
-    winning index — the single fold step every stateful engine here shares
-    (four near-identical copies of it had already been drifting).
+    winning index — the per-frame step of :func:`_fold_latest`.
 
     NULL-safe on the payload columns: a NULL event_type/props stays None
     (``str()`` would store the literal string ``'None'``, silently
@@ -78,8 +106,6 @@ def _pick_latest(pdf: pd.DataFrame, tombstone_col: str | None = None):
     # throwaway two-column DataFrame sort — this runs once per key per
     # micro-batch (measured 8.8× per call, byte-identical on the
     # randomized NULL/tie sweep in tests/test_fold_vectorized.py).
-    import numpy as np
-
     ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
     ids = pdf["event_id"].to_numpy()
     # max by (ts, id), NULLS FIRST on both: NaT is already the
@@ -111,43 +137,51 @@ def _fold_rank(cand) -> tuple:
     return (cand[1], cand[0] is not None, 0 if cand[0] is None else cand[0])
 
 
-def _latest_update(key, pdf_iter, state: GroupState):
-    """Keep the (ts, event_id)-max row per key across micro-batches.
-
-    Last-write-wins upsert exactly as the reference's in-memory table
-    (``streams/Table.scala:52-56``): state overwrite, ordered by changelog
-    position — here (ts, event_id).
-    """
-    best = tuple(state.get) if state.exists else None
-    for pdf in pdf_iter:
+def _fold_latest(best, frames, tombstone_col: str | None = None):
+    """The latest-by-key fold every engine here runs: fold one key's
+    micro-batch ``frames`` into its stored state tuple ``best`` (None for a
+    new key) by ``(ts, event_id)``-max. Returns the new best tuple and the
+    ``(frame, index)`` of the row that last displaced the stored one (None
+    when the stored tuple still wins)."""
+    won = None
+    for pdf in frames:
         if pdf.empty:
             continue
-        cand, _ = _pick_latest(pdf)
+        cand, idx = _pick_latest(pdf, tombstone_col)
         if best is None or _fold_rank(cand) > _fold_rank(best):
-            best = cand
-    if best is not None:
-        state.update(best)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "event_id": [best[0]],
-                "ts": [pd.to_datetime(best[1], unit="us")],
-                "event_type": [best[2]],
-                "value": [best[3]],
-                "props": [best[4]],
-            }
-        )
+            best, won = cand, (pdf, idx)
+    return best, won
 
 
-def _latest_update_deletes(tombstone_col: str):
-    """Last-write-wins upsert WITH tombstones: if a key's latest change (by
-    ``(ts, event_id)``) is a delete marker, a tombstone MARKER — carrying
-    the delete's own ``(ts, event_id)`` — is kept in state and a ``_dead``
-    row is emitted so the sink drops the key from the materialized view.
+def _view_row(key, best) -> pd.DataFrame:
+    """One-row view update for ``key`` from its state tuple; the tombstone
+    variant's 6th field becomes the ``_dead`` flag the sink drops keys by."""
+    row = {
+        "user_id": [key[0]],
+        "event_id": [best[0]],
+        "ts": [pd.to_datetime(best[1], unit="us")],
+        "event_type": [best[2]],
+        "value": [best[3]],
+        "props": [best[4]],
+    }
+    if len(best) > 5:
+        row["_dead"] = [best[5]]
+    return pd.DataFrame(row)
 
-    Keeping the marker (instead of ``state.remove()``) makes the fold
-    order-insensitive across micro-batches: a record OLDER than the
-    tombstone arriving in a LATER micro-batch loses the ``(ts, event_id)``
+
+def _latest_update(tombstone_col: str | None = None):
+    """``applyInPandasWithState`` update function keeping the (ts,
+    event_id)-max row per key across micro-batches: last-write-wins upsert
+    exactly as the reference's in-memory table (``streams/Table.scala:52-56``),
+    ordered by changelog position — here (ts, event_id). State schema is
+    ``_STATE_SCHEMA``, or ``_STATE_SCHEMA_DEAD`` with a ``tombstone_col``.
+
+    With ``tombstone_col``, a key whose latest change is a delete marker
+    keeps a tombstone MARKER — carrying the delete's own ``(ts, event_id)``
+    — in state and emits a ``_dead`` row so the sink drops the key from the
+    materialized view. Keeping the marker (instead of ``state.remove()``)
+    makes the fold order-insensitive across micro-batches: a record OLDER
+    than the tombstone arriving in a LATER micro-batch loses the
     comparison and stays dead — identical to the batch MERGE, which keeps
     the (ts, event_id)-max tombstone (``operators/incremental.py``). A
     record NEWER than the tombstone re-inserts the key, as on a compacted
@@ -164,28 +198,29 @@ def _latest_update_deletes(tombstone_col: str):
     """
 
     def update(key, pdf_iter, state: GroupState):
-        best = tuple(state.get) if state.exists else None
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            cand, _ = _pick_latest(pdf, tombstone_col)
-            if best is None or _fold_rank(cand) > _fold_rank(best):
-                best = cand
+        stored = tuple(state.get) if state.exists else None
+        best, _ = _fold_latest(stored, pdf_iter, tombstone_col)
         if best is not None:
             state.update(best)
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "event_id": [best[0]],
-                    "ts": [pd.to_datetime(best[1], unit="us")],
-                    "event_type": [best[2]],
-                    "value": [best[3]],
-                    "props": [best[4]],
-                    "_dead": [best[5]],
-                }
-            )
+            yield _view_row(key, best)
 
     return update
+
+
+def _apws_fold(
+    src: DataFrame, group_cols: list[str], tombstone_col: str | None = None
+) -> DataFrame:
+    """The applyInPandasWithState engine: :func:`_latest_update` over
+    ``src`` grouped by ``group_cols``, with the state and output schemas
+    of its tombstone mode."""
+    dead = tombstone_col is not None
+    return src.groupBy(*group_cols).applyInPandasWithState(
+        _latest_update(tombstone_col),
+        outputStructType=_OUTPUT_SCHEMA_DEAD if dead else _OUTPUT_SCHEMA,
+        stateStructType=_STATE_SCHEMA_DEAD if dead else _STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
@@ -202,51 +237,21 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
     from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    class LatestProcessor(StatefulProcessor):
+    class LatestDeletesProcessor(StatefulProcessor):
         """StatefulProcessor for ``transformWithStateInPandas``: the same
-        last-write-wins upsert as :func:`_latest_update`, on the newer
+        :func:`_fold_latest` upsert as :func:`_latest_update`, on the newer
         arbitrary-state API with a typed ValueState handle — the closest
         Spark analogue of the reference's typed RocksDB table
-        (``streams/Table.scala:115-137``, ``Key.scala:3-17``)."""
+        (``streams/Table.scala:115-137``, ``Key.scala:3-17``).
+        ``tombstone_col=None`` is the plain upsert; with a tombstone column
+        the (ts, event_id)-max change wins and a delete marker is KEPT in
+        the ValueState (with its ordering tuple) so a late older record
+        cannot resurrect the key — duality-tested against the
+        applyInPandasWithState engine and the batch MERGE (``Table.delete``,
+        ``streams/Table.scala:31``).
 
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("latest", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            best = tuple(self._state.get()) if self._state.exists() else None
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                cand, _ = _pick_latest(pdf)
-                if best is None or _fold_rank(cand) > _fold_rank(best):
-                    best = cand
-            if best is not None:
-                self._state.update(best)
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "event_id": [best[0]],
-                        "ts": [pd.to_datetime(best[1], unit="us")],
-                        "event_type": [best[2]],
-                        "value": [best[3]],
-                        "props": [best[4]],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    class LatestDeletesProcessor(StatefulProcessor):
-        """Tombstone-aware twin of :class:`LatestProcessor` on the typed-state
-        API: the (ts, event_id)-max change wins; when that change is a delete
-        marker the tombstone itself is KEPT in the ValueState (with its
-        ordering tuple) so a late older record cannot resurrect the key —
-        the same order-insensitive fold as :func:`_latest_update_deletes`,
-        duality-tested against it and against the batch MERGE
-        (``Table.delete``, ``streams/Table.scala:31``).
-
-        ``retention_us`` (requires event-time mode + a watermark, see
-        :func:`latest_by_key_tws_with_deletes`) is Kafka's
+        ``retention_us`` (requires a tombstone column, event-time mode and
+        a watermark, see :func:`latest_by_key_tws_with_deletes`) is Kafka's
         ``delete.retention.ms`` for the STATE STORE: storing a tombstone
         arms a timer at ``tombstone_ts + retention``; when the watermark
         passes it the marker is cleared, reclaiming the dead key's state
@@ -258,24 +263,27 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
         order-insensitive forever."""
 
         def __init__(
-            self, tombstone_col: str = "deleted",
+            self, tombstone_col: str | None = "deleted",
             retention_us: int | None = None,
         ):
+            if tombstone_col is None and retention_us is not None:
+                raise ValueError("retention_us needs a tombstone_col")
             self._tombstone_col = tombstone_col
             self._retention_us = retention_us
+            self._width = 5 if tombstone_col is None else 6
 
         def init(self, handle) -> None:
             self._handle = handle
-            # retention mode widens the state with tz_off_us (wall→UTC
-            # offset captured when the row was stored, for timer-clock
-            # conversion — see PatternTimerProcessor); without retention
-            # the schema stays the original 6 fields so durable
-            # checkpoints written by the pre-retention engine restart
-            # unchanged (a widened value schema would fail RocksDB's
-            # schema-compatibility check). A checkpoint written while the
+            # Each mode keeps its own state schema so durable checkpoints
+            # restart unchanged (a changed value schema fails RocksDB's
+            # schema-compatibility check). Retention mode widens the
+            # tombstone schema with tz_off_us (wall→UTC offset captured
+            # when the row was stored, for timer-clock conversion — see
+            # PatternTimerProcessor). A checkpoint written while the
             # widening was unconditional must be reopened with
             # ``tombstone_retention`` set (7-field schema) or rebuilt.
-            schema = _STATE_SCHEMA_DEAD
+            dead = self._tombstone_col is not None
+            schema = _STATE_SCHEMA_DEAD if dead else _STATE_SCHEMA
             if self._retention_us is not None:
                 schema = schema + ", tz_off_us long"
             self._state = handle.getValueState("latest", schema)
@@ -285,56 +293,33 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
 
         def handleInputRows(self, key, rows, timerValues):
             prev = tuple(self._state.get()) if self._state.exists() else None
-            best = prev[:6] if prev is not None else None
-            best_frame = None
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                cand, idx = _pick_latest(pdf, self._tombstone_col)
-                if best is None or _fold_rank(cand) > _fold_rank(best):
-                    best = cand
-                    best_frame = (pdf, idx)
-            if best is not None:
-                # off_us is consumed only in retention mode, where a
-                # changed `best` always came from a batch frame (best
-                # starts as prev[:6] and moves only via cand), so the
-                # branch below always recomputes it before any use
-                off_us = 0
-                if self._retention_us is not None and best_frame is not None:
-                    # _utc_us is the LAST column by construction (appended
-                    # by the retention-mode source projection; TWS renames
-                    # derived columns positionally) — offset of the stored
-                    # row itself, robust across DST-spanning batches
-                    pdf, idx = best_frame
-                    off_us = int(best[1]) - int(pdf.iloc[:, -1].loc[idx])
-                changed = prev is None or best != prev[:6]
-                if changed:
-                    self._state.update(
-                        best + (off_us,)
-                        if self._retention_us is not None
-                        else best
-                    )
-                    if self._retention_us is not None:
-                        wm = timerValues.getCurrentWatermarkInMs()
-                        if prev is not None and prev[5]:
-                            old_exp = self._expiry_ms(prev[1], prev[6])
-                            if old_exp > wm:
-                                self._handle.deleteTimer(old_exp)
-                        if best[5]:
-                            self._handle.registerTimer(
-                                self._expiry_ms(best[1], off_us)
-                            )
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "event_id": [best[0]],
-                        "ts": [pd.to_datetime(best[1], unit="us")],
-                        "event_type": [best[2]],
-                        "value": [best[3]],
-                        "props": [best[4]],
-                        "_dead": [best[5]],
-                    }
-                )
+            stored = prev[: self._width] if prev is not None else None
+            best, won = _fold_latest(stored, rows, self._tombstone_col)
+            if best is None:
+                return
+            if best != stored:
+                if self._retention_us is None:
+                    self._state.update(best)
+                else:
+                    self._store_with_timer(best, prev, won, timerValues)
+            yield _view_row(key, best)
+
+        def _store_with_timer(self, best, prev, won, timerValues) -> None:
+            # a changed `best` always came from a batch frame. _utc_us is
+            # that frame's LAST column by construction (appended by the
+            # retention-mode source projection; TWS renames derived columns
+            # positionally) — offset of the stored row itself, robust
+            # across DST-spanning batches
+            pdf, idx = won
+            off_us = int(best[1]) - int(pdf.iloc[:, -1].loc[idx])
+            self._state.update(best + (off_us,))
+            wm = timerValues.getCurrentWatermarkInMs()
+            if prev is not None and prev[5]:
+                old_exp = self._expiry_ms(prev[1], prev[6])
+                if old_exp > wm:
+                    self._handle.deleteTimer(old_exp)
+            if best[5]:
+                self._handle.registerTimer(self._expiry_ms(best[1], off_us))
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             # clear ONLY a tombstone whose retention is genuinely due —
@@ -389,23 +374,16 @@ def latest_by_key_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7/A9 on ``transformWithStateInPandas`` — returns the final view
     (must equal batch Q17; cross-checked by the driver oracle as q38b)."""
     conf = _tws_prepare(spark)
-    proc = LatestProcessor()
-
-    # 2 files/trigger — cross-batch typed state still exercised (q38's
-    # rationale) at half the micro-batch machinery cost
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_dir(sf_dir, "events"))
+    updates = (
+        _changelog_source(spark, replay_dir(sf_dir, "events"))
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            statefulProcessor=LatestDeletesProcessor(tombstone_col=None),
+            outputStructType=_OUTPUT_SCHEMA,
+            outputMode="Update",
+            timeMode="None",
+        )
     )
-    updates = src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    from fs2_kafka_streams_spark.streaming.conf import pinned_conf
-
     with pinned_conf(spark, conf):
         return _run_upsert_sink(spark, updates)
 
@@ -432,14 +410,9 @@ def latest_by_key_tws_with_deletes(
     materialized view is unchanged (the sink log keeps the tombstone head
     until :func:`compact_upsert_log` GCs it); only late records older than
     an EXPIRED tombstone can resurrect — Kafka's documented caveat."""
-    from pyspark.sql import functions as F
-
     conf = _tws_prepare(spark)
-    schema = EVENTS_SCHEMA + f", {tombstone_col} boolean"
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_path)
+    src = _changelog_source(
+        spark, replay_path, EVENTS_SCHEMA + f", {tombstone_col} boolean"
     )
     retention_us = None
     time_mode = "None"
@@ -462,16 +435,14 @@ def latest_by_key_tws_with_deletes(
         statefulProcessor=LatestDeletesProcessor(
             tombstone_col, retention_us=retention_us
         ),
-        outputStructType=_OUTPUT_SCHEMA + ", _dead boolean",
+        outputStructType=_OUTPUT_SCHEMA_DEAD,
         outputMode="Update",
         timeMode=time_mode,
     )
-    from fs2_kafka_streams_spark.streaming.conf import pinned_conf
-
     with pinned_conf(spark, conf):
         return _run_upsert_sink(
             spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-            row_schema=_OUTPUT_SCHEMA + ", _dead boolean", dead_col="_dead",
+            row_schema=_OUTPUT_SCHEMA_DEAD, dead_col="_dead",
         )
 
 
@@ -479,9 +450,6 @@ def latest_by_key_tws_with_deletes(
 #: becomes O(state partitions) so each bucket's compaction is an independent
 #: task; 8 matches the pinned local stream-state partition count.
 SINK_BUCKETS = 8
-
-
-import contextlib  # noqa: E402
 
 
 @contextlib.contextmanager
@@ -533,10 +501,6 @@ def _log_head(
     the data itself, ``("ts", "event_id")``, which is what makes the
     log-head aggregation the fold's associative second level.
     """
-    from pyspark.sql import functions as F
-
-    from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
-
     value_cols = ["event_id", "ts", "event_type", "value", "props"]
     if dead_col is not None:
         value_cols = value_cols + [dead_col]
@@ -587,13 +551,6 @@ def compact_upsert_log(
     transactional table format (Delta/Iceberg ``replaceWhere``) instead of
     a host-local lock.
     """
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
-
     row_schema = _OUTPUT_SCHEMA
     value_cols = ["event_id", "ts", "event_type", "value", "props", "_epoch"]
     if dead_col is not None:
@@ -647,8 +604,6 @@ _EXIT_REAP: list[str] = []
 
 
 def _reap_all() -> None:
-    import os
-
     for d in _EXIT_REAP:
         shutil.rmtree(d, ignore_errors=True)
         with contextlib.suppress(OSError):
@@ -682,18 +637,12 @@ def _run_upsert_sink(
     bottleneck growing with key cardinality. This shape survives 100×: the
     append log and the compaction read-back are both partitioned work.
     """
-    from pyspark.sql import functions as F
-
-    run_id = uuid.uuid4().hex[:8]
-    own_ckpt = checkpoint is None
-    if own_ckpt:
-        checkpoint = tempfile.mkdtemp(prefix=f"ckpt_upsert_{run_id}_")
     if sink_dir is None:
         # The returned DataFrame reads the sink LAZILY, so the directory
         # must outlive this call — clean it at interpreter exit instead
         # (an unmanaged mkdtemp here used to leak one O(events) log per
         # driver-gate/bench/test run).
-        sink_dir = tempfile.mkdtemp(prefix=f"sink_upsert_{run_id}_")
+        sink_dir = tempfile.mkdtemp(prefix=f"sink_upsert_{uuid.uuid4().hex[:8]}_")
         _reap_at_exit(sink_dir)
 
     # Epoch ids restart at 0 on a FRESH checkpoint; appending a re-run's
@@ -709,12 +658,10 @@ def _run_upsert_sink(
     # the pattern): two runs snapshotting the same base would interleave
     # epochs — same as the pre-base behavior, not a regression, but not
     # supported either.
-    import os as _os
-
     epoch_base = 0
     with _sink_lock(sink_dir, exclusive=False):
-        if _os.path.isdir(sink_dir) and any(
-            not f.startswith(".") for f in _os.listdir(sink_dir)
+        if os.path.isdir(sink_dir) and any(
+            not f.startswith(".") for f in os.listdir(sink_dir)
         ):
             prev_max = (
                 _read_upsert_log(spark, sink_dir, row_schema)
@@ -748,29 +695,15 @@ def _run_upsert_sink(
                 .parquet(sink_dir)
             )
 
-    from fs2_kafka_streams_spark.streaming.conf import (
+    # a checkpoint the drain creates is deleted after termination; only
+    # the sink must outlive this call (the returned view reads it lazily)
+    _drain(
+        spark,
+        updates.writeStream.outputMode("update").foreachBatch(upsert),
+        "upsert_sink",
         STREAM_PERF_CONF,
-        pinned_conf,
+        checkpoint,
     )
-
-    try:
-        with pinned_conf(spark, STREAM_PERF_CONF):
-            q = (
-                updates.writeStream.outputMode("update")
-                .foreachBatch(upsert)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            from fs2_kafka_streams_spark.streaming.run import record_run
-
-            record_run("upsert_sink", q)
-    finally:
-        if own_ckpt:
-            # availableNow ran to completion (or died): nothing resumes
-            # from a throwaway checkpoint — only the sink must outlive us
-            shutil.rmtree(checkpoint, ignore_errors=True)
 
     return _log_head(
         _read_upsert_log(spark, sink_dir, row_schema),
@@ -788,21 +721,8 @@ def latest_by_key_streaming(
     duality). Pass ``checkpoint`` to keep the state store inspectable
     afterwards via :func:`read_table_state` (A10 interactive reads); pass
     ``sink_dir`` to keep the upsert log for :func:`compact_upsert_log`."""
-    # 2 files/trigger: multiple micro-batches (cross-batch state is the
-    # semantic under test — latest-by-key is batching-insensitive) at half
-    # the per-batch machinery cost
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_dir(sf_dir, "events"))
-    )
-    updates = src.groupBy("user_id").applyInPandasWithState(
-        _latest_update,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    src = _changelog_source(spark, replay_dir(sf_dir, "events"))
+    updates = _apws_fold(src, ["user_id"])
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir
     )
@@ -863,12 +783,8 @@ def latest_by_key_streaming_salted(
     hot-key corpus. Reference anchor: the 4-hot-user fixture shape of
     ``ReadOnlyTableSpec.scala:41-54`` scaled to a skewed domain.
     """
-    from pyspark.sql import functions as F
-
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(replay_path)
+    src = _changelog_source(
+        spark, replay_path, files_per_trigger=files_per_trigger
     )
     # (event_id, ts) is the changelog position — unique per row, cheap to
     # hash, and NOT the grouping key (salting by a key-correlated value
@@ -886,13 +802,8 @@ def latest_by_key_streaming_salted(
             .otherwise(F.lit(0))
             .cast("int")
         )
-    src = src.withColumn("_salt", row_salt)
-    updates = src.groupBy("user_id", "_salt").applyInPandasWithState(
-        _latest_update,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = _apws_fold(
+        src.withColumn("_salt", row_salt), ["user_id", "_salt"]
     )
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
@@ -918,22 +829,13 @@ def latest_by_key_streaming_with_deletes(
     (events schema + the tombstone column), replayed 2 files/trigger so
     delete/re-insert sequences cross micro-batch boundaries.
     """
-    schema = EVENTS_SCHEMA + f", {tombstone_col} boolean"
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_path)
+    src = _changelog_source(
+        spark, replay_path, EVENTS_SCHEMA + f", {tombstone_col} boolean"
     )
-    updates = src.groupBy("user_id").applyInPandasWithState(
-        _latest_update_deletes(tombstone_col),
-        outputStructType=_OUTPUT_SCHEMA + ", _dead boolean",
-        stateStructType=_STATE_SCHEMA_DEAD,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    updates = _apws_fold(src, ["user_id"], tombstone_col)
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-        row_schema=_OUTPUT_SCHEMA + ", _dead boolean", dead_col="_dead",
+        row_schema=_OUTPUT_SCHEMA_DEAD, dead_col="_dead",
     )
 
 
@@ -948,8 +850,6 @@ def read_table_state(spark: SparkSession, checkpoint: str) -> DataFrame:
     schema as the materialized view; point lookups / multi-gets are filters
     over it (partition-pruned by the state store layout at scale).
     """
-    from pyspark.sql import functions as F
-
     raw = spark.read.format("statestore").load(checkpoint)
     # applyInPandasWithState persists (key struct, value struct) rows with
     # the user state nested under value.groupState; ts is epoch micros

@@ -46,17 +46,22 @@ def main() -> None:
                 time.sleep(40)
         print(f"attempt {k}: gate open {probes}; running bench", flush=True)
         t0 = time.time()
-        r = subprocess.run(
-            [sys.executable, "bench.py"], cwd=_REPO,
-            capture_output=True, text=True, timeout=3600,
-        )
+        try:
+            r = subprocess.run(
+                [sys.executable, "bench.py"], cwd=_REPO,
+                capture_output=True, text=True, timeout=3600,
+            )
+        except subprocess.TimeoutExpired:
+            # a hung bench is one rejected attempt, not the end of the loop
+            print(f"attempt {k} reject: bench timed out after 3600s",
+                  flush=True)
+            continue
         line = None
         for ln in r.stdout.splitlines():
             if ln.startswith('{"metric"'):
                 line = ln
         if line is None:
-            print(f"attempt {k}: bench died rc={r.rc if hasattr(r,'rc') else r.returncode}",
-                  flush=True)
+            print(f"attempt {k}: bench died rc={r.returncode}", flush=True)
             print(r.stdout[-2000:], r.stderr[-2000:], flush=True)
             continue
         d = json.loads(line)

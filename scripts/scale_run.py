@@ -287,7 +287,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
 
     def latest_updates(src):
         return src.groupBy("user_id").applyInPandasWithState(
-            stateful._latest_update,
+            stateful._latest_update(),
             outputStructType=stateful._OUTPUT_SCHEMA,
             stateStructType=stateful._STATE_SCHEMA,
             outputMode="update",
@@ -370,7 +370,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
                 )
             salted = src.withColumn("_salt", row_salt)
             return salted.groupBy("user_id", "_salt").applyInPandasWithState(
-                stateful._latest_update,
+                stateful._latest_update(),
                 outputStructType=stateful._OUTPUT_SCHEMA,
                 stateStructType=stateful._STATE_SCHEMA,
                 outputMode="update",

@@ -58,11 +58,15 @@ def main() -> None:
                 else:
                     C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] = v
                     key = f"{name}@{v}"
-                t0 = time.perf_counter()
-                df = fn(spark, SF)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] = default
+                try:
+                    t0 = time.perf_counter()
+                    df = fn(spark, SF)
+                    df.write.format("noop").mode("overwrite").save()
+                    dt = time.perf_counter() - t0
+                finally:
+                    # restored even when the run raises: the dict is the
+                    # process-wide default every later streaming query pins
+                    C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] = default
                 mins[key] = min(mins.get(key, 1e9), dt)
                 print(f"rep {r} {key}: {dt:.3f}s (min {mins[key]:.3f})",
                       flush=True)

@@ -50,7 +50,6 @@ SLOW_FILES = {
 #: deferred; every file keeps its quick cases in the default selection.
 SLOW_TESTS = {
     "test_asof_bucketed.py::test_bucketed_matches_default_on_q12_shape",
-    "test_cep_tws.py::test_tombstone_retention_reclaims_state",
     "test_cep_tws.py::test_tws_pattern_equals_batch_and_apws",
     "test_cep_tws.py::test_tws_timers_expire_base_state",
     "test_clusters.py::test_cc_long_chain_converges",

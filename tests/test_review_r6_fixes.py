@@ -393,7 +393,7 @@ def test_upsert_sink_epochs_monotone_across_runs(spark, tmp_path):
             .parquet(str(rep))
         )
         updates = src.groupBy("user_id").applyInPandasWithState(
-            _latest_update,
+            _latest_update(),
             outputStructType=_OUTPUT_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="update",

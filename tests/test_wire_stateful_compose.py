@@ -237,7 +237,7 @@ def test_stateful_fold_survives_topic_revocation(spark, tmp_path):
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
         upd = src.groupBy("user_id").applyInPandasWithState(
-            stateful._latest_update,
+            stateful._latest_update(),
             outputStructType=stateful._OUTPUT_SCHEMA,
             stateStructType=stateful._STATE_SCHEMA,
             outputMode="update",
