@@ -14,6 +14,12 @@ map in round 1)::
 The FULL per-query timing map is written to ``BENCH_FULL.json`` next to
 this script.
 
+``python bench.py NAME... [-n REPS]`` times only the named entries (same
+session, warm-up and per-run cleanup as the full run, ``REPS`` runs each,
+default 3) and prints one ``name: median=… reps=[…] tick=…`` line per
+entry; it writes no ``BENCH_FULL*.json``. ``scripts/ab_minloop.py`` runs
+its A/B arms through this mode.
+
 Execution is forced with the noop sink (full plan runs distributed; nothing
 is materialized on the driver), which is the scale-honest way to time a
 query — ``collect()`` would add a driver bottleneck that doesn't exist in
@@ -42,14 +48,23 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 from statistics import median as _median
 
 _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
-    sys.path.insert(0, _REPO)
+    # appended, not inserted: a caller that already put another tree's
+    # package first (scripts/ab_minloop.py's arms) times that tree
+    sys.path.append(_REPO)
+
+#: Row counts of the CPU probe: the run-bracketing probe, and its 10×
+#: cheaper per-entry tick.
+CALIB_ROWS = 200_000_000
+TICK_ROWS = 20_000_000
 
 #: Quiet-host wall-time band for the 200M-row calibrate() probe, measured
 #: in SCALE.md "Bench noise floor" (5 back-to-back quiet-window runs read
@@ -148,165 +163,232 @@ def flag_names(
     return names
 
 
+def cpu_probe(spark, rows: int) -> float:
+    """Fixed CPU-bound probe (``rows`` xxhash64 in whole-stage codegen, no
+    IO, no Python workers): its wall time measures HOST throughput at this
+    moment, nothing about this repo. Whole-run totals drift ~1.5× with
+    host load over hours (SCALE.md "Bench noise"); the :data:`CALIB_ROWS`
+    probe before AND after the query loop gives every BENCH file its own
+    drift denominator — compare totals across rounds as
+    ``value / mean(calib_sec)``, not raw. The :data:`TICK_ROWS` tick is
+    cheap enough to run between EVERY entry: r7's mid-run load ramp
+    inflated individual batch entries while both end probes could still
+    read quiet-ish, so the tick trace turns host noise into a per-entry,
+    in-artifact fact (an entry bracketed by hot ticks is flagged
+    ``noisy``) instead of a silent regression."""
+    t0 = time.perf_counter()
+    # bit_xor, not sum: the session is ANSI and 200M hash sums overflow
+    spark.range(0, rows, 1, 32).selectExpr(
+        "xxhash64(id) AS h"
+    ).selectExpr("bit_xor(h)").collect()
+    return round(time.perf_counter() - t0, 4)
+
+
+def fsync_probe(n_files: int) -> float:
+    """Small-file write+fsync latency in ms/op (n × 4 KB): the axis the
+    CPU probe cannot see. Streaming entries are dominated by
+    per-micro-batch checkpoint commits — many small fsyncs — so a
+    streaming-family swing with quiet CPU probes is attributable to host
+    IO iff this probe moved (r8 observation: streaming family 66→78 s
+    across two runs whose CPU probes both read quiet). 50 files bracket
+    the run; the 10-file per-entry tick attributes ONE inflated streaming
+    entry, since fsync latency is burstier than CPU throughput."""
+    d = tempfile.mkdtemp(prefix="bench_io_calib_")
+    t0 = time.perf_counter()
+    for i in range(n_files):
+        fd = os.open(os.path.join(d, f"f{i}"), os.O_CREAT | os.O_WRONLY)
+        os.write(fd, b"x" * 4096)
+        os.fsync(fd)
+        os.close(fd)
+    dt = (time.perf_counter() - t0) / n_files * 1000
+    shutil.rmtree(d, ignore_errors=True)
+    return round(dt, 3)
+
+
+def loadavg1() -> float:
+    """The host's 1-minute load average."""
+    with open("/proc/loadavg") as fh:
+        return float(fh.read().split()[0])
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Warm the JVM + parquet footer caches AND the Python UDF worker pool
+    outside the timed region so per-query numbers reflect steady-state
+    execution, not session startup (workers are reused across queries, so
+    the first pandas/udtf entry would otherwise absorb interpreter
+    spin-up that a long-running cluster amortizes away)."""
+    from pyspark.sql import functions as F
+
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    identity = F.pandas_udf(lambda s: s, "long")
+    spark.range(64).select(identity("id").alias("x")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+
+
+def warm_streaming(spark) -> dict:
+    """Warm the STREAMING machinery — RocksDB provider JNI + state-store
+    maintenance threads, the micro-batch engine, and (when the TWS gate
+    is open) the transformWithState state server + the protobuf shim
+    import in fresh workers. Measured: the first streaming entry
+    otherwise absorbs 3-8 s of one-time spin-up (q38b cold 12.9 s vs
+    warm 5 s) that a long-running cluster pays once per deployment, not
+    once per query. The full run calls it BETWEEN the batch block and the
+    streaming block — streaming entries are already ordered last
+    precisely because their session residue (maintenance threads, GC
+    pressure) inflates whatever runs after them, so the warm-up must not
+    run before the batch measurements either. A 4-row synthetic events
+    table keeps it cheap; failures are non-fatal (the bench then just
+    measures cold, as before).
+
+    Returns per-stage flags: a failure in one warm-up stage must not
+    misreport the stages that DID complete (q38/q38b warmed but q48/q72
+    cold, or vice versa, are different measurement conditions)."""
+    warm_ok = {"stateful": False, "tws": False, "join": False, "error": None}
+    try:
+        import pandas as pd
+
+        # FIXED name, not mkdtemp: the replay cache is keyed by this
+        # directory's basename, so a random name deposited one
+        # never-reusable cache dir per bench run; a stable name is
+        # rebuilt in place and the warm dir itself never accumulates
+        warm_sf = os.path.join(
+            tempfile.gettempdir(), "spark_graft_bench_warm_sf"
+        )
+        os.makedirs(warm_sf, exist_ok=True)
+        # written atomically below (tmp + os.replace) so an unlikely
+        # concurrent bench run never reads a half-written fixture —
+        # though overlapping bench runs skew each other's timings and
+        # are not a supported measurement anyway
+        pd.DataFrame(
+            {
+                "event_id": [1, 2, 3, 4],
+                "ts": pd.to_datetime([1, 2, 3, 4], unit="s").astype(
+                    "datetime64[us]"
+                ),
+                "user_id": [1, 1, 2, 2],
+                "event_type": ["view"] * 4,
+                "value": [1.0] * 4,
+                "props": ["{}"] * 4,
+            }
+        ).to_parquet(f"{warm_sf}/.events.tmp.parquet", index=False)
+        os.replace(
+            f"{warm_sf}/.events.tmp.parquet", f"{warm_sf}/events.parquet"
+        )
+        from fs2_kafka_streams_spark.streaming import stateful as st
+
+        st.latest_by_key_streaming(spark, warm_sf).collect()
+        warm_ok["stateful"] = True
+        if st.HAS_TWS:
+            st.latest_by_key_tws(spark, warm_sf).collect()
+            warm_ok["tws"] = True
+        # Also spin the SQL-native stream-stream join machinery
+        # (SymmetricHashJoin state manager + its per-store layout) —
+        # q48/q72 are the two most expensive streaming entries and the
+        # Python-stateful warm-ups above never touch their code path.
+        from fs2_kafka_streams_spark.queries import streaming_ext as sx
+
+        sx._stream_stream_join(
+            spark, warm_sf, watermark="10 minutes"
+        ).collect()
+        warm_ok["join"] = True
+    except Exception as e:  # pragma: no cover - must never fail the bench
+        warm_ok["error"] = str(e)[:200]
+        print(f"streaming warm-up skipped: {e}", file=sys.stderr)
+    return warm_ok
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def run_entry(
+    spark, spec, sf_dir: str
+) -> tuple[float, dict[str, str], list[dict]]:
+    """One timed execution of an entry (plan build + noop write).
+
+    Returns the wall seconds, the union of every conf map the run pinned
+    via ``pinned_conf`` — the artifact's per-entry proof of which
+    streaming confs were live — and the ``streaming/run.py::RUN_TRACE``
+    records of the streaming queries it drained (trigger count and
+    per-trigger durations), in run order."""
+    from fs2_kafka_streams_spark.streaming import conf as sconf
+    from fs2_kafka_streams_spark.streaming import run as srun
+
+    pin_start = sconf.PIN_SEQ  # monotonic: survives PIN_TRACE trimming
+    run_start = srun.RUN_SEQ
+    views_before = _temp_views(spark)
+    t0 = time.perf_counter()
+    df = spec.build(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    dt = round(time.perf_counter() - t0, 3)
+    # drop persisted intermediates (shared shingle/pair tables) so no
+    # run's cache residue distorts the next measurement
+    spark.catalog.clearCache()
+    # drop memory-sink tables the run registered: with median re-runs
+    # each streaming rep would otherwise pin another full sink table in
+    # driver memory for the rest of the bench (clearCache does not
+    # touch memory sinks), inflating later entries with GC residue
+    for name in _temp_views(spark) - views_before:
+        try:
+            spark.catalog.dropTempView(name)
+        except Exception:
+            pass
+    n_new = min(sconf.PIN_SEQ - pin_start, len(sconf.PIN_TRACE))
+    pinned: dict[str, str] = {}
+    for m in sconf.PIN_TRACE[-n_new:] if n_new > 0 else []:
+        pinned.update(m)
+    n_runs = min(srun.RUN_SEQ - run_start, len(srun.RUN_TRACE))
+    runs = list(srun.RUN_TRACE[-n_runs:]) if n_runs > 0 else []
+    return dt, pinned, runs
+
+
+def time_named(
+    spark, registry, names: list[str], reps: int, sf_dir: str
+) -> None:
+    """Subset mode: ``reps`` timed runs of each named entry, one
+    ``name: median=… reps=[…] tick=…`` line each (``tick`` is the CPU
+    tick read right after the entry)."""
+    import fs2_kafka_streams_spark as pkg
+
+    # which tree's package is being timed (the A/B arms record it)
+    print(f"package: {Path(pkg.__file__).resolve().parent}", flush=True)
+    if any("streaming" in registry[n].tags for n in names):
+        warm_streaming(spark)
+    cpu_probe(spark, TICK_ROWS)  # untimed: absorb the tick's codegen JIT
+    for name in names:
+        spec = registry[name]
+        ts = [run_entry(spark, spec, sf_dir)[0] for _ in range(reps)]
+        print(
+            f"{name}: median={round(_median(ts), 3)} reps={ts} "
+            f"tick={cpu_probe(spark, TICK_ROWS)}",
+            flush=True,
+        )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    args = sys.argv[1:]
+    reps = 3
+    if "-n" in args:
+        i = args.index("-n")
+        reps = int(args[i + 1])
+        del args[i : i + 2]
 
     from fs2_kafka_streams_spark.queries import driver_registry
     from fs2_kafka_streams_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
     registry = driver_registry()
+    warm_session(spark, sf_dir)
+    if args:
+        time_named(spark, registry, args, reps, sf_dir)
+        return
 
-    # Warm the JVM + parquet footer caches AND the Python UDF worker pool
-    # outside the timed region so per-query numbers reflect steady-state
-    # execution, not session startup (workers are reused across queries, so
-    # the first pandas/udtf entry would otherwise absorb interpreter
-    # spin-up that a long-running cluster amortizes away).
-    from pyspark.sql import functions as _F
-
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    _identity = _F.pandas_udf(lambda s: s, "long")
-    spark.range(64).select(_identity("id").alias("x")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # per-stage flags: a failure in one warm-up stage must not misreport
-    # the stages that DID complete (q38/q38b warmed but q48/q72 cold, or
-    # vice versa, are different measurement conditions)
-    warm_ok = {"stateful": False, "tws": False, "join": False, "error": None}
-
-    def warm_streaming() -> None:
-        """Warm the STREAMING machinery — RocksDB provider JNI + state-store
-        maintenance threads, the micro-batch engine, and (when the TWS gate
-        is open) the transformWithState state server + the protobuf shim
-        import in fresh workers. Measured: the first streaming entry
-        otherwise absorbs 3-8 s of one-time spin-up (q38b cold 12.9 s vs
-        warm 5 s) that a long-running cluster pays once per deployment, not
-        once per query. Called BETWEEN the batch block and the streaming
-        block — streaming entries are already ordered last precisely
-        because their session residue (maintenance threads, GC pressure)
-        inflates whatever runs after them, so the warm-up must not run
-        before the batch measurements either. A 4-row synthetic events
-        table keeps it cheap; failures are non-fatal (the bench then just
-        measures cold, as before)."""
-        try:
-            import os as _os
-            import tempfile as _tf
-
-            import pandas as _pd
-
-            # FIXED name, not mkdtemp: the replay cache is keyed by this
-            # directory's basename, so a random name deposited one
-            # never-reusable cache dir per bench run; a stable name is
-            # rebuilt in place and the warm dir itself never accumulates
-            _warm_sf = _os.path.join(
-                _tf.gettempdir(), "spark_graft_bench_warm_sf"
-            )
-            _os.makedirs(_warm_sf, exist_ok=True)
-            # written atomically below (tmp + os.replace) so an unlikely
-            # concurrent bench run never reads a half-written fixture —
-            # though overlapping bench runs skew each other's timings and
-            # are not a supported measurement anyway
-            _pd.DataFrame(
-                {
-                    "event_id": [1, 2, 3, 4],
-                    "ts": _pd.to_datetime([1, 2, 3, 4], unit="s").astype(
-                        "datetime64[us]"
-                    ),
-                    "user_id": [1, 1, 2, 2],
-                    "event_type": ["view"] * 4,
-                    "value": [1.0] * 4,
-                    "props": ["{}"] * 4,
-                }
-            ).to_parquet(f"{_warm_sf}/.events.tmp.parquet", index=False)
-            _os.replace(
-                f"{_warm_sf}/.events.tmp.parquet",
-                f"{_warm_sf}/events.parquet",
-            )
-            from fs2_kafka_streams_spark.streaming import stateful as _st
-
-            _st.latest_by_key_streaming(spark, _warm_sf).collect()
-            warm_ok["stateful"] = True
-            if _st.HAS_TWS:
-                _st.latest_by_key_tws(spark, _warm_sf).collect()
-                warm_ok["tws"] = True
-            # Also spin the SQL-native stream-stream join machinery
-            # (SymmetricHashJoin state manager + its per-store layout) —
-            # q48/q72 are the two most expensive streaming entries and the
-            # Python-stateful warm-ups above never touch their code path.
-            from fs2_kafka_streams_spark.queries import streaming_ext as _sx
-
-            _sx._stream_stream_join(
-                spark, _warm_sf, watermark="10 minutes"
-            ).collect()
-            warm_ok["join"] = True
-        except Exception as e:  # pragma: no cover - must never fail the bench
-            warm_ok["error"] = str(e)[:200]
-            print(f"streaming warm-up skipped: {e}", file=sys.stderr)
-
-    def calibrate() -> float:
-        """Fixed CPU-bound probe (200M xxhash64 in whole-stage codegen, no
-        IO, no Python workers): its wall time measures HOST throughput at
-        this moment, nothing about this repo. Whole-run totals drift ~1.5×
-        with host load over hours (SCALE.md "Bench noise"); recording the
-        probe before AND after the query loop gives every BENCH file its
-        own drift denominator — compare totals across rounds as
-        ``value / mean(calib_sec)``, not raw."""
-        t0 = time.perf_counter()
-        # bit_xor, not sum: the session is ANSI and 200M hash sums overflow
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "xxhash64(id) AS h"
-        ).selectExpr("bit_xor(h)").collect()
-        return round(time.perf_counter() - t0, 3)
-
-    def calib_tick() -> float:
-        """10× cheaper sibling of ``calibrate`` (20M rows, same codegen
-        shape): cheap enough to run between EVERY entry. The run-level
-        probes bracket only the RUN — r7's mid-run load ramp inflated
-        individual batch entries while both end probes could still read
-        quiet-ish. The tick trace turns host noise into a per-entry,
-        in-artifact fact: an entry bracketed by hot ticks is flagged
-        ``noisy`` below instead of silently reading as a regression."""
-        t0 = time.perf_counter()
-        spark.range(0, 20_000_000, 1, 32).selectExpr(
-            "xxhash64(id) AS h"
-        ).selectExpr("bit_xor(h)").collect()
-        return round(time.perf_counter() - t0, 4)
-
-    def io_calib(n_files: int = 50) -> float:
-        """Small-file write+fsync latency in ms/op (n × 4 KB): the axis
-        the CPU probe cannot see. Streaming entries are dominated by
-        per-micro-batch checkpoint commits — many small fsyncs — so a
-        streaming-family swing with quiet CPU probes is attributable to
-        host IO iff this probe moved (r8 observation: streaming family
-        66→78 s across two runs whose CPU probes both read quiet)."""
-        import tempfile as _tf
-
-        d = _tf.mkdtemp(prefix="bench_io_calib_")
-        t0 = time.perf_counter()
-        for i in range(n_files):
-            p = os.path.join(d, f"f{i}")
-            fd = os.open(p, os.O_CREAT | os.O_WRONLY)
-            os.write(fd, b"x" * 4096)
-            os.fsync(fd)
-            os.close(fd)
-        dt = (time.perf_counter() - t0) / n_files * 1000
-        import shutil as _sh
-
-        _sh.rmtree(d, ignore_errors=True)
-        return round(dt, 3)
-
-    def io_tick() -> float:
-        """5×-cheaper per-entry sibling of ``io_calib`` (10 files, ~10 ms):
-        fsync latency is burstier than CPU throughput, so the per-entry IO
-        trace is what attributes ONE inflated streaming entry (vs the
-        run-bracketing probes, which only see the ends)."""
-        return io_calib(n_files=10)
-
-    calibrate()  # untimed: absorb the probe's own one-time codegen JIT
-    calib_tick()  # same for the tick's plan shape
-    calib_before = calibrate()
-    io_before = io_calib()
+    cpu_probe(spark, CALIB_ROWS)  # untimed: absorb the probe's codegen JIT
+    cpu_probe(spark, TICK_ROWS)  # same for the tick's plan shape
+    calib_before = cpu_probe(spark, CALIB_ROWS)
+    io_before = fsync_probe(50)
 
     # Measure real Structured Streaming entries LAST: their micro-batch
     # machinery leaves session residue (RocksDB state-store maintenance,
@@ -318,42 +400,6 @@ def main() -> None:
     ordered = sorted(
         registry.items(), key=lambda kv: "streaming" in kv[1].tags
     )
-
-    from fs2_kafka_streams_spark.streaming import conf as _sconf
-    from fs2_kafka_streams_spark.streaming import run as _srun
-
-    def _temp_views() -> set[str]:
-        return {
-            t.name for t in spark.catalog.listTables() if t.isTemporary
-        }
-
-    def run_entry(spec) -> tuple[float, dict[str, str]]:
-        """One timed execution of an entry (plan build + noop write), plus
-        the union of every conf map the run pinned via ``pinned_conf`` —
-        the artifact's per-entry proof of which streaming confs were live."""
-        pin_start = _sconf.PIN_SEQ  # monotonic: survives PIN_TRACE trimming
-        views_before = _temp_views()
-        t0 = time.perf_counter()
-        df = spec.build(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = round(time.perf_counter() - t0, 3)
-        # drop persisted intermediates (shared shingle/pair tables) so no
-        # run's cache residue distorts the next measurement
-        spark.catalog.clearCache()
-        # drop memory-sink tables the run registered: with median re-runs
-        # each streaming rep would otherwise pin another full sink table in
-        # driver memory for the rest of the bench (clearCache does not
-        # touch memory sinks), inflating later entries with GC residue
-        for name in _temp_views() - views_before:
-            try:
-                spark.catalog.dropTempView(name)
-            except Exception:
-                pass
-        n_new = min(_sconf.PIN_SEQ - pin_start, len(_sconf.PIN_TRACE))
-        pinned: dict[str, str] = {}
-        for m in _sconf.PIN_TRACE[-n_new:] if n_new > 0 else []:
-            pinned.update(m)
-        return dt, pinned
 
     # Entries above the threshold get two immediate warm re-runs and report
     # the MEDIAN — single-shot numbers on expensive entries carry a 2-6 s
@@ -372,38 +418,33 @@ def main() -> None:
     timings: dict[str, float] = {}
     reps_map: dict[str, list[float]] = {}
     pinned_map: dict[str, dict[str, str]] = {}
-    # per-entry micro-batch counts (first rep only — the canonical
-    # execution): the streaming family's fsync volume is ∝ triggers ×
-    # state partitions, so a trigger-count change between rounds must be
-    # an in-artifact fact, not an inference (VERDICT r8 #6)
+    # per-entry micro-batch counts and per-trigger durations (first rep
+    # only — the canonical execution): the streaming family's fsync volume
+    # is ∝ triggers × state partitions, so a trigger-count change between
+    # rounds must be an in-artifact fact, not an inference (VERDICT r8 #6)
     triggers_map: dict[str, list[int]] = {}
+    trigger_ms_map: dict[str, list[list[dict]]] = {}
     stream_names: set[str] = set()
-    calib_trace: list[float] = [calib_tick()]
-    io_trace: list[float] = [io_tick()]
-    warmed_streaming = False
+    calib_trace: list[float] = [cpu_probe(spark, TICK_ROWS)]
+    io_trace: list[float] = [fsync_probe(10)]
+    warm_ok: dict | None = None
     for name, spec in ordered:
         if "streaming" in spec.tags:
             stream_names.add(name)
-            if not warmed_streaming:
+            if warm_ok is None:
                 # batch block done; spin up streaming machinery
-                warm_streaming()
-                warmed_streaming = True
-        run_seq_before = _srun.RUN_SEQ
-        dt, pinned = run_entry(spec)
-        n_new_runs = min(
-            _srun.RUN_SEQ - run_seq_before, len(_srun.RUN_TRACE)
-        )
-        if n_new_runs > 0:
-            triggers_map[name] = [
-                r["n_triggers"] for r in _srun.RUN_TRACE[-n_new_runs:]
-            ]
+                warm_ok = warm_streaming(spark)
+        dt, pinned, runs = run_entry(spark, spec, sf_dir)
+        if runs:
+            triggers_map[name] = [r["n_triggers"] for r in runs]
+            trigger_ms_map[name] = [r.get("triggers") for r in runs]
         reps = [dt]
         while (
             dt >= RERUN_THRESHOLD_SEC
             and len(reps) < RERUN_REPS
             and rerun_spent < RERUN_BUDGET_SEC
         ):
-            extra, rep_pins = run_entry(spec)
+            extra, rep_pins, _runs = run_entry(spark, spec, sf_dir)
             reps.append(extra)
             rerun_spent += extra
             # the artifact documents pinned_conf as the per-entry UNION
@@ -413,11 +454,11 @@ def main() -> None:
             reps_map[name] = reps
         if pinned:
             pinned_map[name] = pinned
-        calib_trace.append(calib_tick())
-        io_trace.append(io_tick())
+        calib_trace.append(cpu_probe(spark, TICK_ROWS))
+        io_trace.append(fsync_probe(10))
 
-    calib_after = calibrate()
-    io_after = io_calib()
+    calib_after = cpu_probe(spark, CALIB_ROWS)
+    io_after = fsync_probe(50)
 
     names = [name for name, _spec in ordered]
     noisy, calib_median = noise_flags(names, calib_trace)
@@ -525,6 +566,10 @@ def main() -> None:
         # per streaming query the entry ran): trigger-count changes are
         # cross-round-visible facts, and fsync volume ∝ triggers
         "n_triggers": triggers_map,
+        # per-entry, per-query, per-trigger records (first rep): the
+        # durationMs phases (wall ms) and the state-store commit time
+        # summed over store instances (a task sum, not wall time)
+        "trigger_durations": trigger_ms_map,
     }
     (Path(_REPO) / "BENCH_FULL.json").write_text(json.dumps(full, indent=1))
     # Per-cpu-count twin (r11 verdict "What's wrong #4"): the driver runs
@@ -554,7 +599,9 @@ def main() -> None:
                 "n_queries": len(timings),
                 "calib_sec": [calib_before, calib_after],
                 "policy": f"median-of-{RERUN_REPS} over {RERUN_THRESHOLD_SEC}s",
-                "warm": warm_ok["stateful"] and warm_ok["join"],
+                "warm": bool(
+                    warm_ok and warm_ok["stateful"] and warm_ok["join"]
+                ),
                 "noisy_n": len(noisy),
                 "noisy_io_n": len(noisy_io),
                 # flagged-entry NAMES (hottest first, capped), so the

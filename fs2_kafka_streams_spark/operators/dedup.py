@@ -217,7 +217,6 @@ def minhash_lsh_pairs(
     bands: int = MINHASH_BANDS,
     max_bucket_size: int | None = None,
     portable: bool = False,
-    shingle_storage: str = "checkpoint",
 ) -> DataFrame:
     """Near-duplicate pairs at scale: LSH-banded MinHash candidates, then
     exact Jaccard verification of candidates only.
@@ -236,30 +235,15 @@ def minhash_lsh_pairs(
     """
     # One shingle materialization feeds both the signatures and the exact
     # verification — re-tokenizing + re-shingling the corpus is the
-    # dominant repeated cost. Default "checkpoint" = localCheckpoint, not
-    # persist: a persisted plan stays in the CacheManager until an explicit
+    # dominant repeated cost. A checkpoint (``materialize``), not persist:
+    # a persisted plan stays in the CacheManager until an explicit
     # unpersist, which a function returning a LAZY result can never safely
     # issue — repeated sweeps would leak one O(tokens) cached table per
     # call. The checkpointed blocks are GC-reclaimed with the returned
     # DataFrame (ContextCleaner), and the truncated lineage is the same
-    # trick clusters.py uses. Production clusters: reliable .checkpoint().
-    # ``shingle_storage="disk_persist"`` (StorageLevel.DISK_ONLY) is the
-    # ops/measurement seam for memory-tight executors: the CALLER owns the
-    # unpersist (spark.catalog.clearCache() or dropping the session) after
-    # consuming the result. The 100×-corpus A/B between the two variants is
-    # recorded in SCALE.md "Measured scaling".
-    sh_base = _doc_shingles(df, text_col, id_col, n, portable)
-    if shingle_storage == "disk_persist":
-        from pyspark import StorageLevel
-
-        sh_shared = sh_base.persist(StorageLevel.DISK_ONLY)
-    elif shingle_storage == "checkpoint":
-        sh_shared = materialize(sh_base)
-    else:
-        raise ValueError(
-            f"unknown shingle_storage {shingle_storage!r}: "
-            "expected 'checkpoint' or 'disk_persist'"
-        )
+    # trick clusters.py uses. A DISK_ONLY persist also lost the
+    # 100×-corpus A/B, 235.2 s to 152.1 s (SCALE.md "Measured scaling").
+    sh_shared = materialize(_doc_shingles(df, text_col, id_col, n, portable))
     sig = minhash_signatures(
         df, text_col, id_col, n, k, shingle_df=sh_shared, portable=portable
     )

@@ -5,15 +5,22 @@ tables and compares row count, (normalized) schema, and the order-insensitive
 multiset of canonicalized values — the same contract the driver applies at
 sf0.01. Used by the test suite so every query is verified before the driver
 ever sees it.
+
+:func:`driver_gate` is the driver's own canonicalize-and-hash shape (pandas
+``sort_values`` over the raw cells, 2-decimal float hash) — the one compare
+``scripts/driver_sim.py``, the hostile sweeps and the hostile-corpus tests
+run.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import math
 from dataclasses import dataclass
 
 import duckdb
+import pandas as pd
 
 from fs2_kafka_streams_spark.catalog import TABLES
 
@@ -178,3 +185,89 @@ def run_compare(spark, sf_dir: str, spec,
             con.close()
     return compare_rows(spec.name, spark_cols, spark_types, spark_rows,
                         duck_cols, duck_types, duck_rows)
+
+
+def driver_canon(df: pd.DataFrame) -> pd.DataFrame:
+    """The driver's canonicalizer: sort columns by name, then sort_values
+    over the RAW cells (this is what factorizes each column and dies on
+    lists — round-1 q25/q29)."""
+    df = df[sorted(df.columns)]
+    if len(df.columns):
+        df = df.sort_values(by=list(df.columns), kind="mergesort")
+    return df.reset_index(drop=True)
+
+
+def driver_hash(df: pd.DataFrame) -> str:
+    """Value hash of a :func:`driver_canon` frame, floats rounded to 2
+    decimals (SURVEY §2 contract)."""
+    def cell(v):
+        if v is None or v is pd.NaT or (isinstance(v, float) and pd.isna(v)):
+            return "NULL"
+        if isinstance(v, float):
+            # + 0.0 normalizes -0.0: round(-0.001, 2) is -0.0, which
+            # formats as '-0.00' and would spuriously hash-mismatch '0.00'
+            return format(round(v, 2) + 0.0, ".2f")
+        # DATE columns come back as datetime.date from Spark but midnight
+        # datetime64 Timestamps from DuckDB's .df() — same value; round-1
+        # evidence (q21/q26/q28 green) shows the driver normalizes these.
+        if isinstance(v, (pd.Timestamp, _dt.datetime)):
+            if (v.hour, v.minute, v.second, v.microsecond) == (0, 0, 0, 0):
+                return v.date().isoformat()
+            return v.isoformat()
+        if isinstance(v, _dt.date):
+            return v.isoformat()
+        return str(v)
+
+    h = hashlib.sha256()
+    for row in df.itertuples(index=False):
+        h.update(("|".join(cell(v) for v in row) + "\n").encode())
+    return h.hexdigest()
+
+
+@dataclass
+class GateResult:
+    """Outcome of :func:`driver_gate`; truthy iff all three checks hold."""
+
+    spark_rows: int
+    oracle_rows: int | None
+    rows_match: bool
+    schema_match: bool
+    hash_match: bool
+
+    def __bool__(self):
+        return self.rows_match and self.schema_match and self.hash_match
+
+    @property
+    def why(self) -> str:
+        """The first check that failed."""
+        if not self.rows_match:
+            return f"rows {self.spark_rows} vs {self.oracle_rows}"
+        return "hash" if self.schema_match else "cols"
+
+
+def driver_gate(spark, sf_dir: str, spec,
+                con: duckdb.DuckDBPyConnection | None = None) -> GateResult:
+    """Build ``spec`` on Spark, read its oracle from DuckDB over the same
+    ``sf_dir`` and compare row count, sorted column names and
+    :func:`driver_hash` of both :func:`driver_canon` frames. Without an
+    oracle the check is rows-only, and 0 rows fails (see
+    :func:`run_compare`)."""
+    sdf = driver_canon(spec.build(spark, sf_dir).toPandas())
+    if spec.oracle is None:
+        ok = len(sdf) > 0
+        return GateResult(len(sdf), None, ok, ok, ok)
+    own_con = con is None
+    if own_con:
+        con = duck_connect(sf_dir)
+    try:
+        ddf = driver_canon(con.sql(spec.oracle).df())
+    finally:
+        if own_con:
+            con.close()
+    return GateResult(
+        spark_rows=len(sdf),
+        oracle_rows=len(ddf),
+        rows_match=len(sdf) == len(ddf),
+        schema_match=sorted(sdf.columns) == sorted(ddf.columns),
+        hash_match=driver_hash(sdf) == driver_hash(ddf),
+    )

@@ -15,7 +15,6 @@ BENCH_LOCAL_r12.json) and the loop exits; rejected artifacts are left in
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import subprocess
 import sys
@@ -23,8 +22,8 @@ import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
-sys.path.insert(0, os.path.join(_REPO, "scripts"))
-from ab_gate import fsync_ms, loadavg1  # noqa: E402
+sys.path.insert(0, _REPO)
+from bench import fsync_probe, loadavg1  # noqa: E402
 
 
 def main() -> None:
@@ -35,7 +34,7 @@ def main() -> None:
     for k in range(attempts):
         probes = []
         while len(probes) < 3:
-            p = fsync_ms()
+            p = fsync_probe(60)
             if p < 0.65 and loadavg1() < 2.0:
                 probes.append(p)
                 time.sleep(3)

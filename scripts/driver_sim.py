@@ -8,87 +8,55 @@ the driver's shape as closely as the round-1 evidence allows:
 
 - loads ``__spark_entry__`` exactly as the driver does (queries()/oracle_sql());
 - runs every query at sf0.01 on the engine session;
-- canonicalizes via ``pandas.DataFrame.sort_values`` over ALL columns of the raw
-  (un-stringified) frame — so any driver-crashing cell type crashes here first;
-- compares row count, sorted column names, and a value hash after rounding
-  floats to 2 decimals (SURVEY §2 contract);
-- writes ``CORRECTNESS_SIM.json`` in the same row format as CORRECTNESS_r01.
+- compares each through ``testing.driver_gate``: ``sort_values`` over ALL
+  columns of the raw (un-stringified) frame — so any driver-crashing cell
+  type crashes here first — then row count, sorted column names, and a
+  value hash after rounding floats to 2 decimals (SURVEY §2 contract);
+- writes ``CORRECTNESS_SIM.json`` in the same row format as CORRECTNESS_r01,
+  on a full run only.
 
 Usage: python scripts/driver_sim.py [sf_dir]  (default /root/testdata/sf0.01)
+       python scripts/driver_sim.py [sf_dir] NAME ...
+Each NAME is a substring filter on the entry names; a filtered run writes
+no CORRECTNESS_SIM.json.
 """
 
 from __future__ import annotations
 
-import datetime
-import hashlib
 import json
+import os
 import sys
 import time
 import traceback
+from dataclasses import asdict
 from pathlib import Path
-
-import duckdb
-import pandas as pd
 
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    # The driver's canonicalizer: sort columns by name, then sort_values over
-    # the RAW cells (this is what factorizes each column and dies on lists).
-    df = df[sorted(df.columns)]
-    if len(df.columns):
-        df = df.sort_values(by=list(df.columns), kind="mergesort")
-    return df.reset_index(drop=True)
-
-
-def _hash(df: pd.DataFrame) -> str:
-    def cell(v):
-        if v is None or v is pd.NaT or (isinstance(v, float) and pd.isna(v)):
-            return "NULL"
-        if isinstance(v, float):
-            # + 0.0 normalizes -0.0: round(-0.001, 2) is -0.0, which
-            # formats as '-0.00' and would spuriously hash-mismatch '0.00'
-            return format(round(v, 2) + 0.0, ".2f")
-        # DATE columns come back as datetime.date from Spark but midnight
-        # datetime64 Timestamps from DuckDB's .df() — same value; round-1
-        # evidence (q21/q26/q28 green) shows the driver normalizes these.
-        if isinstance(v, (pd.Timestamp, datetime.datetime)):
-            if (v.hour, v.minute, v.second, v.microsecond) == (0, 0, 0, 0):
-                return v.date().isoformat()
-            return v.isoformat()
-        if isinstance(v, datetime.date):
-            return v.isoformat()
-        return str(v)
-
-    h = hashlib.sha256()
-    for row in df.itertuples(index=False):
-        h.update(("|".join(cell(v) for v in row) + "\n").encode())
-    return h.hexdigest()
-
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    args = sys.argv[1:]
+    sf_dir = "/root/testdata/sf0.01"
+    if args and os.path.isdir(args[0]):
+        sf_dir = args.pop(0)
+    pats = args
 
     import __spark_entry__ as ent
+    from fs2_kafka_streams_spark.queries import QuerySpec
     from fs2_kafka_streams_spark.session import get_spark
+    from fs2_kafka_streams_spark.testing import driver_gate, duck_connect
 
     spark = get_spark(app_name="driver-sim")
-    qs = ent.queries()
+    qs = {
+        n: b for n, b in ent.queries().items()
+        if not pats or any(p in n for p in pats)
+    }
+    if not qs:
+        print(f"no entries match {pats}")
+        sys.exit(2)
     oracles = ent.oracle_sql()
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_connect(sf_dir)
 
     out: dict[str, dict] = {}
     t_start = time.perf_counter()
@@ -97,18 +65,8 @@ def main() -> None:
                "spark_rows": None, "oracle_rows": None, "err": None, "sec": None}
         t0 = time.perf_counter()
         try:
-            sdf = _canon(build(spark, sf_dir).toPandas())
-            row["spark_rows"] = len(sdf)
-            if name in oracles:
-                ddf = _canon(con.sql(oracles[name]).df())
-                row["oracle_rows"] = len(ddf)
-                row["rows_match"] = len(sdf) == len(ddf)
-                row["schema_match"] = sorted(sdf.columns) == sorted(ddf.columns)
-                row["hash_match"] = _hash(sdf) == _hash(ddf)
-            else:
-                row["rows_match"] = row["schema_match"] = row["hash_match"] = (
-                    row["spark_rows"] >= 0
-                )
+            spec = QuerySpec(name, build, oracles.get(name))
+            row.update(asdict(driver_gate(spark, sf_dir, spec, con=con)))
         except Exception:
             row["err"] = traceback.format_exc()[-1500:]
         row["sec"] = round(time.perf_counter() - t0, 2)
@@ -118,7 +76,8 @@ def main() -> None:
               f"rows={row['spark_rows']}", flush=True)
 
     total = round(time.perf_counter() - t_start, 1)
-    (_REPO / "CORRECTNESS_SIM.json").write_text(json.dumps(out, indent=1))
+    if not pats:
+        (_REPO / "CORRECTNESS_SIM.json").write_text(json.dumps(out, indent=1))
     n_ok = sum(1 for r in out.values() if r["hash_match"] and not r["err"])
     print(f"\n{n_ok}/{len(out)} green, total {total}s")
     if n_ok < len(out):

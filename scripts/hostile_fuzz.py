@@ -38,7 +38,6 @@ import pyarrow.parquet as pq
 
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
-sys.path.insert(0, str(_REPO / "scripts"))
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -193,35 +192,28 @@ def build_corpus(seed: int, base: str, dest: str) -> list[str]:
 
 
 def sweep(corpus: str) -> tuple[int, int, list[str]]:
-    import duckdb
-    from driver_sim import TABLES as DTABLES, _canon, _hash
     from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.session import get_spark
+    from fs2_kafka_streams_spark.testing import driver_gate, duck_connect
 
     spark = get_spark(app_name="hostile-fuzz")
-    con = duckdb.connect()
-    for t in DTABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{corpus}/{t}.parquet')"
-        )
+    con = duck_connect(corpus)
     ok = fail = 0
     bad = []
     for name, spec in load_all().items():
         if not spec.oracle:
             continue
         try:
-            sdf = _canon(spec.build(spark, corpus).toPandas())
-            ddf = _canon(con.sql(spec.oracle).df())
-            good = (len(sdf) == len(ddf)
-                    and sorted(sdf.columns) == sorted(ddf.columns)
-                    and _hash(sdf) == _hash(ddf))
+            res = driver_gate(spark, corpus, spec, con=con)
+            good = bool(res)
         except Exception as ex:  # noqa: BLE001 - report, keep sweeping
             good = False
             bad.append(f"ERR  {name}: {type(ex).__name__}: {str(ex)[:200]}")
         else:
             if not good:
-                bad.append(f"FAIL {name}: spark={len(sdf)} duck={len(ddf)}")
+                bad.append(
+                    f"FAIL {name}: spark={res.spark_rows} duck={res.oracle_rows}"
+                )
         if good:
             ok += 1
         else:

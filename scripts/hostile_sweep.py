@@ -24,13 +24,8 @@ import time
 import traceback
 from pathlib import Path
 
-import duckdb
-
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
-sys.path.insert(0, str(_REPO / "scripts"))
-
-from driver_sim import TABLES, _canon, _hash  # noqa: E402
 
 
 def main() -> None:
@@ -42,6 +37,7 @@ def main() -> None:
 
     from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.session import get_spark
+    from fs2_kafka_streams_spark.testing import driver_gate, duck_connect
 
     specs = {
         n: s
@@ -53,44 +49,26 @@ def main() -> None:
         sys.exit(2)
 
     spark = get_spark(app_name="hostile-sweep")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{corpus}/{t}.parquet')"
-        )
+    con = duck_connect(corpus)
 
     n_ok = n_fail = n_err = 0
     for name in sorted(specs):
         spec = specs[name]
         t0 = time.perf_counter()
         try:
-            sdf = _canon(spec.build(spark, corpus).toPandas())
-            ddf = _canon(con.sql(spec.oracle).df())
-            ok = (
-                len(sdf) == len(ddf)
-                and sorted(sdf.columns) == sorted(ddf.columns)
-                and _hash(sdf) == _hash(ddf)
-            )
-            if ok:
+            res = driver_gate(spark, corpus, spec, con=con)
+            if res:
                 n_ok += 1
                 print(
                     f"OK   {name:40s} {time.perf_counter() - t0:6.2f}s "
-                    f"rows={len(sdf)}",
+                    f"rows={res.spark_rows}",
                     flush=True,
                 )
             else:
                 n_fail += 1
-                why = (
-                    f"rows {len(sdf)} vs {len(ddf)}"
-                    if len(sdf) != len(ddf)
-                    else "cols"
-                    if sorted(sdf.columns) != sorted(ddf.columns)
-                    else "hash"
-                )
                 print(
                     f"FAIL {name:40s} {time.perf_counter() - t0:6.2f}s "
-                    f"({why})",
+                    f"({res.why})",
                     flush=True,
                 )
         except Exception:

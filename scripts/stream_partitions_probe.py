@@ -9,13 +9,13 @@ Python-stateful entries at 16; the SQL-native window aggregations
 This probe interleaves each entry at candidate partition counts (min-of-N
 per variant, same-window pairing) to decide whether their per-trigger
 store open/commit cost also wants fewer, larger stores — the q48/q72
-rationale — or whether aggregation parallelism pays for 16.
+rationale — or whether aggregation parallelism pays for 16. Every rep is
+timed by ``bench.run_entry``, which also drops the rep's memory sink.
 """
 
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -27,42 +27,29 @@ SF = "/root/testdata/sf0.1"
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
+    from bench import run_entry
+    from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.session import get_spark
     import fs2_kafka_streams_spark.streaming.conf as C
 
     spark = get_spark(app_name="stream-partitions-probe")
     spark.read.parquet(f"{SF}/region.parquet").count()
-
-    from fs2_kafka_streams_spark.queries.stateful import (
-        q36_watermark_late_drop,
-    )
-    from fs2_kafka_streams_spark.queries.streaming_ext import (
-        q33b_tumbling_window_streaming,
-        q72_stream_outer_join,
-    )
+    specs = load_all()
 
     default = C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"]
 
     cases = [
-        ("q33b", q33b_tumbling_window_streaming, ["16", "8", "4"]),
-        ("q36", q36_watermark_late_drop, ["16", "8", "4"]),
-        ("q72", q72_stream_outer_join, [None, None]),  # entry pins 8 itself
+        ("q33b_tumbling_window_streaming", ["16", "8", "4"]),
+        ("q36_watermark_late_drop", ["16", "8", "4"]),
     ]
     mins: dict[str, float] = {}
     for r in range(reps):
-        for name, fn, variants in cases:
+        for name, variants in cases:
             for v in variants:
-                if name == "q72" and v is None:
-                    # no variant knob exposed; just collect rep volume
-                    key = f"{name}@8"
-                else:
-                    C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] = v
-                    key = f"{name}@{v}"
+                C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] = v
+                key = f"{name.split('_')[0]}@{v}"
                 try:
-                    t0 = time.perf_counter()
-                    df = fn(spark, SF)
-                    df.write.format("noop").mode("overwrite").save()
-                    dt = time.perf_counter() - t0
+                    dt, _pinned, _runs = run_entry(spark, specs[name], SF)
                 finally:
                     # restored even when the run raises: the dict is the
                     # process-wide default every later streaming query pins
@@ -70,7 +57,6 @@ def main() -> None:
                 mins[key] = min(mins.get(key, 1e9), dt)
                 print(f"rep {r} {key}: {dt:.3f}s (min {mins[key]:.3f})",
                       flush=True)
-        spark.catalog.clearCache()
     print("\nmins:", {k: round(v, 3) for k, v in sorted(mins.items())})
 
 

@@ -85,7 +85,6 @@ SLOW_TESTS = {
     "test_review_r11_fixes.py::test_similarity_duplicate_vec_ids[q54_semantic_dedup]",
     "test_review_r6_fixes.py::test_upsert_sink_epochs_monotone_across_runs",
     "test_review_r7_fixes.py::test_decode_and_pipeline_boundary_contracts",
-    "test_review_r7_fixes.py::test_minhash_disk_persist_parity",
     "test_review_r8_fixes.py::test_upsert_sink_files_bounded_by_buckets",
     "test_salted_fold.py::test_streaming_salted_detected_equals_manual",
     "test_salted_fold.py::test_streaming_salted_restart_appends_to_same_sink",

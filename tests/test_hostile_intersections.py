@@ -44,13 +44,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
-from pathlib import Path
 
 import pandas as pd
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from fs2_kafka_streams_spark.queries import load_all
+from fs2_kafka_streams_spark.testing import driver_gate
+
 SRC_SMOKE = "/root/testdata/sf0.001"
 SRC_CORRECT = "/root/testdata/sf0.01"
 
@@ -239,25 +239,7 @@ def hot_fardate_events_dir(tmp_path_factory):
 
 
 def _assert_oracle_match(spark, sf_dir, name):
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, sf_dir, load_all()[name])
 
 
 @pytest.mark.parametrize("name", SIMILARITY_ENTRIES)

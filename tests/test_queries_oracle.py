@@ -11,7 +11,11 @@ import os
 import pytest
 
 from fs2_kafka_streams_spark.queries import load_all
-from fs2_kafka_streams_spark.testing import duck_connect, run_compare
+from fs2_kafka_streams_spark.testing import (
+    driver_gate,
+    duck_connect,
+    run_compare,
+)
 
 from tests.conftest import SF_SMOKE
 
@@ -48,3 +52,24 @@ def test_array_output_column_is_rejected(spark):
     )
     res = run_compare(spark, SF, spec)
     assert not res.ok and "canonicalizer" in res.detail
+
+
+def test_driver_gate_fails_on_one_value_off(spark):
+    """The driver-gate compare must catch a single differing cell: same
+    row count, same columns, one value off in the oracle -> hash mismatch
+    (and the faithful oracle passes)."""
+    from fs2_kafka_streams_spark.queries import QuerySpec
+
+    def spec(oracle):
+        return QuerySpec(
+            name="_one_value_off",
+            build=lambda sp, _sf: sp.range(3).selectExpr("id", "id * 2 AS v"),
+            oracle=oracle,
+        )
+
+    good = "SELECT range AS id, range * 2 AS v FROM range(3)"
+    bad = "SELECT range AS id, range * 2 + (range = 2)::BIGINT AS v FROM range(3)"
+    assert driver_gate(spark, SF, spec(good))
+    res = driver_gate(spark, SF, spec(bad))
+    assert res.rows_match and res.schema_match
+    assert not res.hash_match and not res and res.why == "hash"

@@ -7,14 +7,18 @@ the fix must be observable behavior, not a comment.
 from __future__ import annotations
 
 import os
-import sys
 from pathlib import Path
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-REPO = Path(__file__).resolve().parent.parent
+from fs2_kafka_streams_spark.queries import load_all
+from fs2_kafka_streams_spark.testing import (
+    driver_canon,
+    driver_gate,
+    driver_hash,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -111,6 +115,7 @@ def test_record_run_unknown_trigger_count_is_none():
     rec = srun.RUN_TRACE[-1]
     assert rec["name"] == "probe_none"
     assert rec["n_triggers"] is None
+    assert rec["triggers"] is None  # and no per-trigger durations
 
 
 # ---------------------------------------------------------------------------
@@ -391,7 +396,6 @@ def test_q72_executes_four_triggers(spark):
     second sentinel file came back (or the replay shape changed) — each
     extra trigger is a full round of state-store commits across every
     join store."""
-    from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.streaming import run as srun
 
     spec = load_all()["q72_stream_outer_join"]
@@ -407,13 +411,17 @@ def test_q72_executes_four_triggers(spark):
 
 def test_no_cwd_relative_bench_open():
     """tests must resolve bench.py via the module, never open('bench.py')
-    relative to the CWD (pytest may be invoked from anywhere)."""
+    relative to the CWD (pytest may be invoked from anywhere). Nor may a
+    test import from scripts/: the harness lives in bench.py and the
+    driver-gate compare in fs2_kafka_streams_spark/testing.py."""
     import pathlib
 
     here = pathlib.Path(__file__).parent
-    needle = "open(" + '"bench.py")'  # split so this file never matches
+    # needles split so this file never matches
+    needles = ("open(" + '"bench.py")', "REPO / " + '"scripts"')
     for p in here.glob("test_*.py"):
-        assert needle not in p.read_text(), p.name
+        for needle in needles:
+            assert needle not in p.read_text(), (p.name, needle)
 
 
 # ---------------------------------------------------------------------------
@@ -476,25 +484,7 @@ def null_ts_sf_dir(tmp_path_factory):
 def test_null_event_time_contract(spark, null_ts_sf_dir, name):
     """Every affected entry hash-matches its oracle on the NULL-bearing
     corpus — the same canonicalize-and-hash the driver gate runs."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, null_ts_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_ts_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, null_ts_sf_dir, load_all()[name])
 
 
 def test_wire_source_null_timestamp_in_band(spark, null_ts_sf_dir):
@@ -602,25 +592,7 @@ def null_key_sf_dir(tmp_path_factory):
 def test_null_key_contract(spark, null_key_sf_dir, name):
     """Every affected entry hash-matches its oracle on the NULL-key
     corpus — same driver-gate canonicalize-and-hash as the ts axis."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, null_key_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_key_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, null_key_sf_dir, load_all()[name])
 
 
 def test_wire_source_null_key_round_robin(spark, null_key_sf_dir):
@@ -706,23 +678,7 @@ def hostile_docs_sf_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("name", ["q43b_text_metrics", "q44c_embedding_neardup"])
 def test_hostile_text_embedding_corpus(spark, hostile_docs_sf_dir, name):
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, hostile_docs_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{hostile_docs_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf) and _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, hostile_docs_sf_dir, load_all()[name])
 
 
 # ---------------------------------------------------------------------------
@@ -760,24 +716,9 @@ def test_empty_topic_contract(spark, empty_sf_dir, name):
     crash timing itself off max(ts) of zero rows (None + timedelta), and
     the IVF trainer crashed in np.stack on an empty sample — both now
     yield the exact empty result on both engines."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, empty_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{empty_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == 0 and len(ddf) == 0
-    assert sorted(sdf.columns) == sorted(ddf.columns)
+    res = driver_gate(spark, empty_sf_dir, load_all()[name])
+    assert res.spark_rows == 0 and res.oracle_rows == 0
+    assert res.schema_match
 
 
 def test_ivf_small_corpus_exhaustive_fallback(spark):
@@ -856,24 +797,7 @@ def nan_value_sf_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("name", NAN_VALUE_ENTRIES)
 def test_measure_domain_contract(spark, nan_value_sf_dir, name):
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, nan_value_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{nan_value_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, nan_value_sf_dir, load_all()[name])
 
 
 def test_measure_predicate_classes(spark):
@@ -992,23 +916,8 @@ def test_gopher_metrics_null_text(spark, null_doc_sf_dir):
     the engines' implicit behaviors disagreed per-column: Spark emitted
     dup_frac 0.0 where DuckDB gave NULL, DuckDB mean_word_len 0.0 where
     Spark gave NULL, and pass_quality flipped NULL/False)."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
     spec = load_all()["q43f_quality_filter"]
-    sdf = _canon(spec.build(spark, null_doc_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_doc_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf) and _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, null_doc_sf_dir, spec)
     # and the NULL-text rows really are all-NULL across the family
     out = spec.build(spark, null_doc_sf_dir).toPandas()
     nulls = out[out.doc_id.isin([max(out.doc_id) - 4, max(out.doc_id) - 3])]
@@ -1055,13 +964,6 @@ def test_q37_null_id_rows_are_unkeyed(spark, null_id_sf_dir):
     ARBITRARY payload — nondeterministic and divergent from the oracle.
     Post-fix both engines keep every NULL-id copy (doubled stream => the
     two copies stay), hash-equal under the driver gate."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
     spec = load_all()["q37_dedup"]
     out = spec.build(spark, null_id_sf_dir).toPandas()
     # both distinct NULL-id payloads survive, doubled (2 copies each)
@@ -1071,18 +973,7 @@ def test_q37_null_id_rows_are_unkeyed(spark, null_id_sf_dir):
     # keyed rows still dedup back to exactly one copy per id
     keyed = out[out.event_id.notna()]
     assert keyed.event_id.is_unique
-
-    sdf = _canon(out)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_id_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf)
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, null_id_sf_dir, spec)
 
 
 # ---------------------------------------------------------------------------
@@ -1208,25 +1099,7 @@ def test_hostile_tpch_contract(spark, null_tpch_sf_dir, name):
     """Every entry the hostile-TPCH sweep flagged hash-matches its oracle
     on the NULL-bearing relational corpus — the same driver-gate
     canonicalize-and-hash as the events/documents axes."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, null_tpch_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_tpch_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, null_tpch_sf_dir, load_all()[name])
 
 
 # ---------------------------------------------------------------------------
@@ -1447,28 +1320,10 @@ def test_null_id_tie_contract(spark, null_id_ties_sf_dir, name):
     """Every entry the NULL-id-tie sweep flagged (and the CEP family that
     crashed) hash-matches its oracle on the tie-bearing corpus — the same
     driver-gate canonicalize-and-hash as the earlier axes."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
     specs = load_all()
     if name not in specs:  # q57b exists only where TWS's protobuf does
         pytest.skip(f"{name} not registered in this environment")
-    spec = specs[name]
-    sdf = _canon(spec.build(spark, null_id_ties_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_id_ties_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, null_id_ties_sf_dir, specs[name])
 
 
 def test_wire_source_null_id_in_band(spark, null_id_ties_sf_dir):
@@ -1553,25 +1408,7 @@ def far_date_sf_dir(tmp_path_factory):
 def test_far_date_contract(spark, far_date_sf_dir, name):
     """The watermarked entries (and two far-date-sensitive controls)
     hash-match their oracles on the calendar-extreme corpus."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, far_date_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{far_date_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, far_date_sf_dir, load_all()[name])
 
 
 def test_watermark_epoch_floor_boundary(spark, tmp_path):
@@ -1765,25 +1602,7 @@ def test_nonfinite_tpch_contract(spark, nonfinite_tpch_sf_dir, name):
     oracle on the hostile corpus — same driver-gate canonicalize-and-hash
     as the NULL-TPCH / events axes. (Full-registry confirmation: 146/146
     via scripts/hostile_sweep.py on this corpus.)"""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, nonfinite_tpch_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{nonfinite_tpch_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, nonfinite_tpch_sf_dir, load_all()[name])
 
 
 def test_double_to_decimal_engine_boundary(spark):
@@ -1932,25 +1751,7 @@ def test_nanvec_similarity_contract(spark, nanvec_sf_dir, name):
     """Every oracled similarity entry hash-matches its oracle on the
     ill-formed-vector corpus (full family confirmation: 8/8 via
     scripts/hostile_sweep.py, including the NULL-element row)."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, nanvec_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{nanvec_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, nanvec_sf_dir, load_all()[name])
 
 
 # ---------------------------------------------------------------------------
@@ -2067,33 +1868,13 @@ def test_reldates_unicode_contract(spark, reldates_sf_dir, name):
     141/146 via scripts/hostile_sweep.py; the 5 exceptions were the q14/
     q26 Arrow ns-floor crash fixed here and the pinned ß case-mapping
     boundary)."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, reldates_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{reldates_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, reldates_sf_dir, load_all()[name])
 
 
 def test_month_trunc_below_ns_floor_collects(spark, reldates_sf_dir):
     """The specific crash the axis found, pinned: a truncated month below
     the parquet-ns floor must survive Arrow collection (DATE output), and
     the 1677-09-22 ship date must land in bucket 1677-09-01."""
-    from fs2_kafka_streams_spark.queries import load_all
-
     sdf = (
         load_all()["q14_count_distinct"]
         .build(spark, reldates_sf_dir)
@@ -2150,25 +1931,7 @@ def test_tiny_corpus_contract(spark, tiny_sf_dir, name):
     """The four previously-diverging entries hash-match their oracles on
     the 5-row corpus (full-registry confirmation: 146/146 via
     scripts/hostile_sweep.py)."""
-    import duckdb
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import TABLES, _canon, _hash
-
-    from fs2_kafka_streams_spark.queries import load_all
-
-    spec = load_all()[name]
-    sdf = _canon(spec.build(spark, tiny_sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{tiny_sf_dir}/{t}.parquet')"
-        )
-    ddf = _canon(con.sql(spec.oracle).df())
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    assert _hash(sdf) == _hash(ddf)
+    assert driver_gate(spark, tiny_sf_dir, load_all()[name])
 
 
 def test_ivf_degenerate_corpus_is_exhaustive(spark, tiny_sf_dir):
@@ -2195,17 +1958,12 @@ def test_month_trunc_date_is_timezone_proof(spark, reldates_sf_dir):
     by the DATE cast): same hash under UTC and a negative-offset zone.
     The process-TZ variant is the verify skill's TZ=America/New_York
     sweep — 83/83 green at this head."""
-    from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.streaming.conf import pinned_conf
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from driver_sim import _canon, _hash
 
     spec = load_all()["q14_count_distinct"]
     hashes = []
     for tz in ("UTC", "America/New_York"):
         with pinned_conf(spark, {"spark.sql.session.timeZone": tz}):
-            hashes.append(
-                _hash(_canon(spec.build(spark, reldates_sf_dir).toPandas()))
-            )
+            frame = spec.build(spark, reldates_sf_dir).toPandas()
+            hashes.append(driver_hash(driver_canon(frame)))
     assert hashes[0] == hashes[1]

@@ -4,10 +4,6 @@
   and take the last ``PIN_SEQ - snapshot`` entries; a length-based
   snapshot silently returns nothing once the rolling trim engages (the
   regression a round-7 review caught in bench.py's first version).
-- The minhash ``shingle_storage`` seam: the DISK_ONLY persist variant
-  must produce byte-identical results to the default localCheckpoint
-  (storage is a measurement/ops knob, never semantics), and an unknown
-  value must fail loudly at the API boundary.
 """
 
 from __future__ import annotations
@@ -248,28 +244,3 @@ def test_decode_and_pipeline_boundary_contracts(spark):
     )
     with _pytest.raises(ValueError, match="every_ms"):
         frame_sample(media, every_ms=0)
-
-
-def test_minhash_disk_persist_parity(spark):
-    from fs2_kafka_streams_spark.catalog import Catalog
-    from fs2_kafka_streams_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = Catalog(spark, SF_SMOKE).documents
-    kwargs = dict(text_col="text", id_col="doc_id", threshold=0.5)
-    a = sorted(
-        map(tuple, minhash_lsh_pairs(docs, **kwargs).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            minhash_lsh_pairs(
-                docs, shingle_storage="disk_persist", **kwargs
-            ).collect(),
-        )
-    )
-    spark.catalog.clearCache()  # the disk_persist contract: caller unpersists
-    assert a == b
-    assert len(a) > 0
-
-    with pytest.raises(ValueError, match="shingle_storage"):
-        minhash_lsh_pairs(docs, shingle_storage="nope", **kwargs)

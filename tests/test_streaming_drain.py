@@ -14,7 +14,7 @@ import pytest
 from fs2_kafka_streams_spark.streaming import conf as sconf
 from fs2_kafka_streams_spark.streaming.run import _drain
 from fs2_kafka_streams_spark.streaming.stateful import EVENTS_SCHEMA
-from tests.conftest import write_replay_files
+from tests.conftest import SF_SMOKE, write_replay_files
 
 
 def _source(spark, tmp_path, n_files=2):
@@ -75,3 +75,26 @@ def test_caller_checkpoint_survives_and_redrain_commits_nothing(
     run()
     assert epochs == [0, 1]
     assert sorted(os.listdir(os.path.join(ckpt, "commits"))) == commits
+
+
+def test_bench_run_entry_cleans_up_and_reports_triggers(spark):
+    """bench.run_entry on a streaming entry drops the memory sink it
+    registered and returns the confs the drain pinned plus one trace
+    record per drained query, each trigger carrying its durationMs."""
+    import bench
+    from fs2_kafka_streams_spark.queries import load_all
+
+    spec = load_all()["q45_stream_table_join"]
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    dt, pinned, runs = bench.run_entry(spark, spec, SF_SMOKE)
+    after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert after <= views, after - views
+    assert dt > 0
+    assert set(sconf.STREAM_PERF_CONF) <= set(pinned)
+    assert runs and all(r["n_triggers"] >= 1 for r in runs)
+    for r in runs:
+        assert len(r["triggers"]) == r["n_triggers"]
+        for t in r["triggers"]:
+            assert t["durationMs"]["triggerExecution"] >= 0
+            assert t["durationMs"]["addBatch"] >= 0
+            assert t["state_commit_ms_tasksum"] >= 0
