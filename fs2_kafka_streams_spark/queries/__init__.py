@@ -47,8 +47,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side effect: fills REGISTRY).
 
-    Returns the FULL fine-grained registry (86+ entries) — the local pytest
-    gate checks every one. The driver sees the curated
+    Returns the FULL registry (124 entries: the exported entries plus the
+    fine-grained variants behind the union and keyed merges) — the local
+    pytest gate checks every one. The driver sees the curated
     :func:`driver_registry` instead.
     """
     from fs2_kafka_streams_spark.queries import (  # noqa: F401
@@ -137,7 +138,7 @@ def driver_registry() -> dict[str, QuerySpec]:
     The first 50 entries (DRIVER_ORDER) are the driver's correctness
     window; extras — including the env-gated q38b when
     ``transformWithStateInPandas`` is available — are appended after it so
-    they never displace a checked entry (82 entries total when the TWS
+    they never displace a checked entry (83 entries total when the TWS
     gate is open).
     """
     reg = load_all()

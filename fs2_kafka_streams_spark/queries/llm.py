@@ -561,9 +561,30 @@ _HITS = {
 }
 
 
+def _redact_sql(expr: str) -> str:
+    """Nest DuckDB regexp_replace(..., 'g') calls byte-identically to
+    :func:`operators.text.redact`'s pattern chain."""
+    from fs2_kafka_streams_spark.operators.text import REDACT_PATTERNS
+
+    for pat, tag in REDACT_PATTERNS:
+        expr = f"regexp_replace({expr}, '{pat}', '{tag}', 'g')"
+    return expr
+
+
+def _md5_bucket_sql(seed: str, n: int) -> str:
+    """DuckDB twin of :func:`operators.pipeline.seeded_bucket`."""
+    return (
+        f"CAST(concat('0x', substr(md5('{seed}' || CAST(doc_id AS VARCHAR)),"
+        f" 1, 8)) AS BIGINT) % {n}"
+    )
+
+
 @query(
-    "q43b_text_analysis",
-    oracle=f"""
+    "q43b_text_metrics",
+    # the BPE tokenizer class is spelled out (not \s): Java's \s includes
+    # \x0b, RE2's does not — BPE_RE in operators/text.py is the one
+    # definition
+    oracle=rf"""
     WITH toks AS (
       SELECT doc_id, lang, text,
              regexp_extract_all(lower(text), '[a-z0-9]+') AS t
@@ -572,7 +593,12 @@ _HITS = {
       SELECT doc_id, lang, text, t,
              {_HITS['en']} AS h_en, {_HITS['es']} AS h_es,
              {_HITS['de']} AS h_de, {_HITS['fr']} AS h_fr,
-             {_HITS['zh']} AS h_zh
+             {_HITS['zh']} AS h_zh,
+             substr(text, 1, 40) || ' reach user' || CAST(doc_id AS VARCHAR)
+               || '@example.com or 555-867-5309 at 10.0.'
+               || CAST(doc_id % 256 AS VARCHAR) || '.7 ssn 123-45-6789' AS pii,
+             {_md5_bucket_sql('split-v1', 10000)} AS bucket,
+             {_md5_bucket_sql('sample-v1', 10000)} AS sample_bucket
       FROM toks
     )
     SELECT doc_id, lang,
@@ -599,107 +625,77 @@ _HITS = {
              list_prepend(CAST(0 AS BIGINT),
                list_transform(t, x ->
                  ('0x' || substr(md5(x), 1, 15))::BIGINT % 2147483647)),
-             (acc, x) -> (acc * 1000003 + x) % 2147483647) END AS fingerprint
-    FROM scored
-    """,
-    tags=("llm", "text"),
-)
-def q43b_text_analysis(spark, sf_dir):
-    """Full text-analysis family: token count, stopword-voting language ID,
-    quality score, rolling-hash fingerprint — all exact integer / single-IEEE
-    arithmetic, hash-checkable cross-engine."""
-    d = Catalog(spark, sf_dir).documents
-    return analyze(d, "text").select(
-        "doc_id", "lang", "n_tokens", "lang_pred", "quality", "fingerprint"
-    )
-
-
-@query(
-    "q43c_token_budget",
-    # the tokenizer class is spelled out (not \s): Java's \s includes \x0b,
-    # RE2's does not — BPE_RE in operators/text.py is the one definition
-    oracle=r"""
-    SELECT doc_id,
+             (acc, x) -> (acc * 1000003 + x) % 2147483647) END AS fingerprint,
            CAST(len(string_split(text, ' ')) AS INTEGER) AS n_ws_tokens,
            CAST(len(regexp_extract_all(lower(text),
-                '[a-z]+|[0-9]{1,3}|[^a-z0-9 \t\n\x0b\f\r]+|[ \t\n\x0b\f\r]+'))
-             AS INTEGER) AS n_bpe_tokens
-    FROM documents
-    """,
-    tags=("llm", "text"),
-)
-def q43c_token_budget(spark, sf_dir):
-    """Token budgeting: whitespace count + BPE-ish pre-tokenizer count per
-    document — the two token-count estimators every training-data pipeline
-    carries (fast regex tier; a real BPE plugs in as a pandas UDF over the
-    same plan)."""
-    from fs2_kafka_streams_spark.operators.text import (
-        bpe_token_count,
-        whitespace_token_count,
-    )
-
-    d = Catalog(spark, sf_dir).documents
-    return d.select(
-        "doc_id",
-        whitespace_token_count("text").alias("n_ws_tokens"),
-        bpe_token_count("text").alias("n_bpe_tokens"),
-    )
-
-
-def _redact_sql(expr: str) -> str:
-    """Nest DuckDB regexp_replace(..., 'g') calls byte-identically to
-    :func:`operators.text.redact`'s pattern chain."""
-    from fs2_kafka_streams_spark.operators.text import REDACT_PATTERNS
-
-    for pat, tag in REDACT_PATTERNS:
-        expr = f"regexp_replace({expr}, '{pat}', '{tag}', 'g')"
-    return expr
-
-
-@query(
-    "q43d_scrub_split",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id,
-             substr(text, 1, 40) || ' reach user' || CAST(doc_id AS VARCHAR)
-               || '@example.com or 555-867-5309 at 10.0.'
-               || CAST(doc_id % 256 AS VARCHAR) || '.7 ssn 123-45-6789' AS pii,
-             regexp_extract_all(lower(text), '[a-z0-9]+') AS t,
-             CAST(concat('0x', substr(md5('split-v1' ||
-                 CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 AS bucket
-      FROM documents
-    )
-    SELECT doc_id,
+                '[a-z]+|[0-9]{{1,3}}|[^a-z0-9 \t\n\x0b\f\r]+|[ \t\n\x0b\f\r]+'))
+             AS INTEGER) AS n_bpe_tokens,
            md5({_redact_sql('pii')}) AS scrub_sig,
            CAST(len(t) - len(list_distinct(t)) AS DOUBLE)
              / CAST(greatest(len(t), 1) AS DOUBLE) AS rep_ratio,
            CASE WHEN bucket < 8000 THEN 'train'
                 WHEN bucket < 9000 THEN 'val'
-                ELSE 'test' END AS split
-    FROM base
+                ELSE 'test' END AS split,
+           sample_bucket < (CASE lang WHEN 'en' THEN 5000
+                                      WHEN 'de' THEN 2500
+                                      ELSE 1000 END) AS sampled,
+           md5('shuffle-v1' || CAST(doc_id AS VARCHAR)) AS shuffle_key,
+           {_md5_bucket_sql('shard-v1', 65536)} AS shard_bucket
+    FROM scored
     """,
-    tags=("llm", "scrub", "split"),
+    tags=("llm", "text", "pipeline"),
 )
-def q43d_scrub_split(spark, sf_dir):
-    """PII scrubbing + repetition scoring + deterministic train/val/test
-    split — the post-cleaning stage of a training-data pipeline.
+def q43b_text_metrics(spark, sf_dir):
+    """Text-analysis + training-data pipeline metrics per document — pure
+    column expressions over one documents scan, scan-speed at 100 TB:
 
-    Each document gets a synthetic PII tail (email, phone, IP, SSN — the
-    fixture corpus has none) so the redaction chain is actually exercised;
-    the oracle applies the byte-identical regex chain and compares the md5
-    of the scrubbed text. The split is :func:`operators.pipeline.hash_split`
-    (seeded md5 bucket — deterministic, disjoint, stable under corpus
-    growth); repetition is the Gopher-style duplicate-token ratio. All pure
-    column expressions — scan-speed at 100 TB.
+    - :func:`operators.text.analyze`: token count, stopword-voting
+      language ID, quality score, rolling-hash fingerprint (exact integer /
+      single-IEEE arithmetic, hash-checkable cross-engine);
+    - token budgets: whitespace count + BPE-ish pre-tokenizer count (the
+      fast regex tier; a real BPE plugs in as a pandas UDF over the same
+      plan);
+    - PII scrubbing: each document gets a synthetic PII tail (email, phone,
+      IP, SSN — the fixture corpus has none) so the redaction chain is
+      exercised; the oracle applies the byte-identical regex chain and
+      compares the md5 of the scrubbed text. Plus the Gopher-style
+      duplicate-token ratio;
+    - ``operators/pipeline.py`` stages as verifiable columns: the
+      deterministic train/val/test split (:func:`hash_split`, seeded md5
+      bucket — disjoint, stable under corpus growth), stratified-sample
+      membership (keep 50% of en, 25% of de, 10% of everything else —
+      seeded hash buckets, never ``rand()``), the seeded global-shuffle
+      sort key (range-sorting by it IS the shuffle — exposed as a column
+      so the permutation is order-insensitively checkable without a
+      single-task global ``row_number``), and the 64k-bucket shard
+      assignment ``sharded_export`` repartitions by.
+
+    The sample flag comes from :func:`stratified_sample_flag` — the exact
+    predicate :func:`stratified_sample` filters on — as a zero-join column:
+    the kept set is ~50% of the corpus, so semi-joining against it with a
+    broadcast is a driver OOM at scale.
     """
-    from fs2_kafka_streams_spark.operators.pipeline import hash_split
+    from fs2_kafka_streams_spark.operators.pipeline import (
+        deterministic_shuffle,
+        hash_split,
+        seeded_bucket,
+        stratified_sample_flag,
+    )
     from fs2_kafka_streams_spark.operators.text import (
+        bpe_token_count,
         redact,
         repetition_ratio,
         tokens,
+        whitespace_token_count,
     )
 
-    d = Catalog(spark, sf_dir).documents
+    # the range sort runs on the raw documents: under the text metrics its
+    # boundary-sampling job would evaluate every metric twice. The staged
+    # token column is the one regex pass repetition_ratio reads three
+    # times (analyze() stages its own the same way).
+    d = deterministic_shuffle(
+        Catalog(spark, sf_dir).documents, "doc_id", expose_key="shuffle_key"
+    ).withColumn("_tok", tokens("text"))
     pii = F.concat(
         F.substring("text", 1, 40),
         F.lit(" reach user"),
@@ -708,73 +704,27 @@ def q43d_scrub_split(spark, sf_dir):
         F.pmod(F.col("doc_id"), F.lit(256)).cast("string"),
         F.lit(".7 ssn 123-45-6789"),
     )
-    out = d.select(
+    out = analyze(d, "text").select(
         "doc_id",
+        "lang",
+        "n_tokens",
+        "lang_pred",
+        "quality",
+        "fingerprint",
+        whitespace_token_count("text").alias("n_ws_tokens"),
+        bpe_token_count("text").alias("n_bpe_tokens"),
         F.md5(redact(pii)).alias("scrub_sig"),
-        repetition_ratio(tokens("text")).alias("rep_ratio"),
+        repetition_ratio(F.col("_tok")).alias("rep_ratio"),
+        "shuffle_key",
     )
-    return hash_split(
-        out, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
-    )
-
-
-@query(
-    "q43e_sample_shuffle_shard",
-    oracle="""
-    WITH bk AS (
-      SELECT doc_id, lang,
-             CAST(concat('0x', substr(md5('sample-v1' ||
-                 CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000
-               AS sample_bucket,
-             CAST(concat('0x', substr(md5('shard-v1' ||
-                 CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 65536
-               AS shard_bucket
-      FROM documents
-    )
-    SELECT doc_id,
-           sample_bucket < (CASE lang WHEN 'en' THEN 5000
-                                      WHEN 'de' THEN 2500
-                                      ELSE 1000 END) AS sampled,
-           md5('shuffle-v1' || CAST(doc_id AS VARCHAR)) AS shuffle_key,
-           shard_bucket
-    FROM bk
-    """,
-    tags=("llm", "pipeline", "sample", "shard"),
-)
-def q43e_sample_shuffle_shard(spark, sf_dir):
-    """Training-mix assembly stages as verifiable per-document columns
-    (``operators/pipeline.py``): deterministic stratified-sample membership
-    (keep 50% of en, 25% of de, 10% of everything else — seeded hash
-    buckets, never ``rand()``, so membership is stable across task retries
-    and corpus growth), the seeded global-shuffle sort key (range-sorting
-    by it IS the shuffle — exposed as a column so the permutation is
-    order-insensitively checkable without a single-task global
-    ``row_number``), and the 64k-bucket shard assignment
-    ``sharded_export`` repartitions by.
-
-    All three are pure scan-stage projections; the sample membership flag
-    comes from :func:`stratified_sample_flag` — the exact predicate
-    :func:`stratified_sample` filters on — as a zero-join column. (An
-    earlier version semi-joined against the sampled set with a broadcast;
-    the kept set is ~50% of the corpus, so at scale that broadcast is a
-    driver OOM. The projection is the only 100 TB-safe realization.)
-    """
-    from fs2_kafka_streams_spark.operators.pipeline import (
-        deterministic_shuffle,
-        seeded_bucket,
-        stratified_sample_flag,
-    )
-
-    d = Catalog(spark, sf_dir).documents
-    out = d.select(
-        "doc_id",
-        stratified_sample_flag(
-            "lang", "doc_id", {"en": 0.5, "de": 0.25}, default=0.1
-        ).alias("sampled"),
-    )
-    out = deterministic_shuffle(out, "doc_id", expose_key="shuffle_key")
-    return out.withColumn(
-        "shard_bucket", seeded_bucket("doc_id", "shard-v1", 65_536)
+    out = hash_split(out, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
+    return out.withColumns(
+        {
+            "sampled": stratified_sample_flag(
+                "lang", "doc_id", {"en": 0.5, "de": 0.25}, default=0.1
+            ),
+            "shard_bucket": seeded_bucket("doc_id", "shard-v1", 65_536),
+        }
     )
 
 

@@ -5,16 +5,19 @@ entries, leaving every streaming/UDF/LLM query unverified. This module merges
 variant queries of the same operator family into single multi-operator
 entries so the whole surface fits inside the driver's 50-entry window:
 
-- *join merges*: variants keyed by the same unique column are joined
-  (``USING (key)``) — every column of every variant survives, so operator
-  coverage is unchanged;
+- *keyed merges* (q29, q13b, q32): variants whose arms are distinct
+  queries over one key, built in one builder (q29 and q13b as one fused
+  aggregation) and checked against the variants' own oracles joined on
+  the key;
 - *union merges*: variants with union-compatible shapes are stacked with a
   discriminator ``tag`` column.
 
-The original fine-grained queries stay registered (the local pytest gate
-still checks each one individually); only the curated
-:data:`fs2_kafka_streams_spark.queries.DRIVER_ORDER` is exported to the
-driver via ``__spark_entry__``.
+Entries whose variants were projections or window passes over one scan
+(q07, q16c, q19, q20, q25, q26, q28, q43b) are single queries in
+:mod:`.relational` and :mod:`.llm`. The merged variants stay registered
+(the local pytest gate still checks each one individually); only the
+curated :data:`fs2_kafka_streams_spark.queries.DRIVER_ORDER` is exported to
+the driver via ``__spark_entry__``.
 """
 
 from __future__ import annotations
@@ -30,9 +33,9 @@ from fs2_kafka_streams_spark.canonical import (
 )
 from fs2_kafka_streams_spark.catalog import Catalog
 from fs2_kafka_streams_spark.queries import (  # noqa: F401 — the variant
-    REGISTRY,  # modules must be imported BEFORE the module-level
-    query,  # _register_* calls below look their specs up in REGISTRY;
-)  # without these imports, importing merged directly raises KeyError
+    REGISTRY,  # modules must be imported BEFORE the module-level oracle
+    query,  # f-strings below look their specs up in REGISTRY; without
+)  # these imports, importing merged directly raises KeyError
 from fs2_kafka_streams_spark.queries import (  # noqa: F401
     analytics,
     llm,
@@ -49,100 +52,18 @@ def _spec(name: str):
     return REGISTRY[name]
 
 
-def _join_oracle(key_cols: list[str], names: list[str]) -> str:
-    """Chain the variants' oracle SQL as ``SELECT * FROM a JOIN b USING …``.
-
-    DuckDB (like Spark's ``df.join(other, key)``) emits the USING key once,
-    so the merged schemas line up column-for-column.
-    """
-    parts = [f"({_spec(n).oracle.strip()}) q{i}" for i, n in enumerate(names)]
-    using = ", ".join(key_cols)
-    sql = f"SELECT * FROM {parts[0]}"
-    for p in parts[1:]:
-        sql += f"\nJOIN {p} USING ({using})"
-    return sql
-
-
-def _join_build(key_cols: list[str], names: list[str]):
-    def build(spark, sf_dir):
-        dfs = [_spec(n).build(spark, sf_dir) for n in names]
-        # loud guard (r10 cold review): a non-key column shared by two
-        # variants would survive the USING join TWICE under the same name
-        # on both engines — the driver's sort-columns-by-name hash then
-        # compares ambiguous orderings and any future variant edit could
-        # flip green to red non-obviously. Fail at build time instead.
-        seen: dict[str, str] = {c: names[0] for c in dfs[0].columns}
-        for n, d in zip(names[1:], dfs[1:]):
-            for c in d.columns:
-                if c in key_cols:
-                    continue
-                if c in seen:
-                    raise ValueError(
-                        f"join-merge of {names}: column {c!r} appears in "
-                        f"both {seen[c]!r} and {n!r}; rename one side"
-                    )
-                seen[c] = n
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.join(d, key_cols)
-        return out
-
-    return build
-
-
-def _register_join_merge(name, key_cols, sources, tags, doc):
-    spec_builder = _join_build(key_cols, sources)
-    spec_builder.__doc__ = doc
-    query(name, oracle=_join_oracle(key_cols, sources), tags=tags)(spec_builder)
-
-
 # --------------------------------------------------------------------------
-# Join merges — same key domain, disjoint value columns
+# Keyed merges — distinct variant queries over one key
 # --------------------------------------------------------------------------
 
-_register_join_merge(
-    "q25_string_hash_functions",
-    ["c_custkey"],
-    ["q25_string_functions", "q25b_string_functions_ext", "q31b_hash_functions"],
-    ("scalar", "hash"),
-    """String + hash scalar surface in one entry (merge of q25/q25b/q31b):
-    upper/lower/substring/trim/concat_ws/like/regexp_extract/split/length,
-    levenshtein/translate/lpad/reverse/repeat, md5/sha256 — one row per
-    customer, joined on the primary key.""",
-)
-
-_register_join_merge(
-    "q26_date_math_functions",
-    ["o_orderkey"],
-    ["q26_date_functions", "q26b_date_arithmetic", "q27_math_functions"],
-    ("scalar", "date", "math"),
-    """Date + math scalar surface (merge of q26/q26b/q27): year/month/day/
-    date_add/datediff/date_trunc/last_day, add_months/date_sub/quarter/
-    dayofweek/weekofyear, abs/ceil/floor/pow/ln/sqrt/pmod — one row per
-    order.""",
-)
-
-_register_join_merge(
-    "q28_conditional_json",
-    ["o_orderkey"],
-    [
-        "q28_conditional_null",
-        "q28b_null_semantics",
-        "q28c_try_cast",
-        "q31_json_functions",
-    ],
-    ("scalar", "null", "json"),
-    """Conditional/null/cast/json surface (merge of q28/q28b/q28c/q31):
-    CASE WHEN, coalesce/nullif, null-safe equality (<=>), count-skips-NULL,
-    try_cast, to_json/get_json_object/from_json — one row per order.""",
-)
 
 @query(
     "q29_array_hof_agg",
-    oracle=_join_oracle(
-        ["l_orderkey"],
-        ["q29_array_functions", "q29c_array_hof", "q29d_string_agg"],
-    ),
+    oracle=f"""
+    SELECT * FROM ({_spec('q29_array_functions').oracle.strip()}) a
+    JOIN ({_spec('q29c_array_hof').oracle.strip()}) b USING (l_orderkey)
+    JOIN ({_spec('q29d_string_agg').oracle.strip()}) c USING (l_orderkey)
+    """,
     tags=("array", "hof", "agg"),
 )
 def q29_array_hof_agg(spark, sf_dir):
@@ -233,63 +154,6 @@ def q29_array_hof_agg(spark, sf_dir):
         "lines",
         "n",
     )
-
-_register_join_merge(
-    "q19_window_ranking_dist",
-    ["o_custkey", "o_orderkey"],
-    ["q19_window_ranking", "q19b_window_distribution"],
-    ("window",),
-    """Ranking + distribution window functions (merge of q19/q19b):
-    row_number/rank/dense_rank + ntile/percent_rank/cume_dist.""",
-)
-
-_register_join_merge(
-    "q20_window_analytic_value",
-    ["o_custkey", "o_orderkey"],
-    ["q20_window_analytic", "q20b_window_value_functions"],
-    ("window",),
-    """Analytic + value window functions (merge of q20/q20b): lag/lead/
-    running sum + first_value/last_value/nth_value.""",
-)
-
-_register_join_merge(
-    "q16c_pivot_map",
-    ["o_orderpriority"],
-    ["q16c_pivot", "q30_map_functions"],
-    ("agg", "pivot", "map"),
-    """Pivot + map functions (merge of q16c/q30), both keyed by order
-    priority: long→wide conditional aggregation and map_from_entries/
-    element_at/map_keys extraction.""",
-)
-
-_register_join_merge(
-    "q07_join_multiway_broadcast",
-    ["n_name"],
-    ["q07_join_multiway", "q06_join_broadcast"],
-    ("join", "agg"),
-    """Multiway fact join + broadcast dim join (merge of q07/q06): lineitem ⋈
-    orders ⋈ customer ⋈ broadcast(nation) revenue rollup, then the
-    nation ⋈ broadcast(region) dim join keyed on the same nation name.""",
-)
-
-_register_join_merge(
-    "q43b_text_metrics",
-    ["doc_id"],
-    [
-        "q43b_text_analysis",
-        "q43c_token_budget",
-        "q43d_scrub_split",
-        "q43e_sample_shuffle_shard",
-    ],
-    ("llm", "text", "pipeline"),
-    """Text-analysis + pipeline metrics per document (merge of
-    q43b/q43c/q43d/q43e): token count, stopword-voting language ID, quality
-    score, rolling-hash fingerprint, whitespace + BPE-ish token budgets, PII
-    redaction signature, repetition ratio, the deterministic train/val/test
-    split assignment, stratified-sample membership, the seeded global-shuffle
-    sort key, and the 64k-bucket shard assignment.""",
-)
-
 
 @query(
     "q13b_stats_percentiles",

@@ -28,6 +28,7 @@ from fs2_kafka_streams_spark.canonical import (
 )
 from fs2_kafka_streams_spark.operators.asof_join import asof_join
 from fs2_kafka_streams_spark.operators.util import materialize as _materialize
+from fs2_kafka_streams_spark.operators.util import spread
 from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
 from fs2_kafka_streams_spark.queries import query
 
@@ -130,50 +131,44 @@ def q05_join_inner(spark, sf_dir):
 
 
 @query(
-    "q06_join_broadcast",
-    oracle="""
-    SELECT n_nationkey, n_name, r_name
-    FROM nation JOIN region ON n_regionkey = r_regionkey
-    """,
-    tags=("join",),
-)
-def q06_join_broadcast(spark, sf_dir):
-    """Broadcast hash join: the small dim ships to every task — no shuffle of
-    the big side. At 100 TB this is the only sane plan for dim joins."""
-    c = _cat(spark, sf_dir)
-    return c.nation.join(
-        F.broadcast(c.region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select("n_nationkey", "n_name", "r_name")
-
-
-@query(
-    "q07_join_multiway",
+    "q07_join_multiway_broadcast",
     oracle=f"""
     SELECT n_name, {sql_dsum_expr(SQL_REVENUE)} AS revenue,
-           CAST(count(*) AS BIGINT) AS n_items
+           CAST(count(*) AS BIGINT) AS n_items,
+           n_nationkey, r_name
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey
     JOIN nation ON c_nationkey = n_nationkey
-    GROUP BY n_name
+    JOIN region ON n_regionkey = r_regionkey
+    GROUP BY n_name, n_nationkey, r_name
     """,
     tags=("join", "agg"),
 )
-def q07_join_multiway(spark, sf_dir):
-    """lineitem ⋈ orders ⋈ customer ⋈ nation → revenue per nation.
+def q07_join_multiway_broadcast(spark, sf_dir):
+    """Multiway fact join + broadcast dim join: lineitem ⋈ orders ⋈
+    customer ⋈ broadcast(nation ⋈ broadcast(region)) → revenue per nation,
+    with the nation's key and region name.
 
-    Fact-to-fact joins shuffle on their keys; the nation dim is broadcast.
+    Fact-to-fact joins shuffle on their keys; both dims are broadcast — the
+    small dim ships to every task, no shuffle of the big side (at 100 TB
+    the only sane plan for dim joins). The region name rides on the nation
+    dim before the multiway join, so ``nation`` is read once.
     """
     c = _cat(spark, sf_dir)
+    nation = c.nation.join(
+        F.broadcast(c.region), F.col("n_regionkey") == F.col("r_regionkey")
+    ).select("n_nationkey", "n_name", "r_name")
     return (
         c.lineitem.join(c.orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(c.nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
+        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .groupBy("n_name", "n_nationkey", "r_name")
         .agg(
             dsum_expr(revenue_expr()).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
+        .select("n_name", "revenue", "n_items", "n_nationkey", "r_name")
     )
 
 
@@ -603,7 +598,7 @@ def q13b_percentiles(spark, sf_dir):
 
 
 @query(
-    "q16c_pivot",
+    "q16c_pivot_map",
     oracle=f"""
     SELECT o_orderpriority,
            cast(cast(sum({sql_dec2('o_totalprice')})
@@ -611,20 +606,72 @@ def q13b_percentiles(spark, sf_dir):
            cast(cast(sum({sql_dec2('o_totalprice')})
                 FILTER (WHERE o_orderstatus = 'O') as string) as double) AS O,
            cast(cast(sum({sql_dec2('o_totalprice')})
-                FILTER (WHERE o_orderstatus = 'P') as string) as double) AS P
+                FILTER (WHERE o_orderstatus = 'P') as string) as double) AS P,
+           nullif(CAST(count(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT), 0)
+             AS n_f,
+           nullif(CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS BIGINT), 0)
+             AS n_o,
+           nullif(CAST(count(*) FILTER (WHERE o_orderstatus = 'P') AS BIGINT), 0)
+             AS n_p,
+           coalesce(
+             string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus),
+             '') AS statuses
     FROM orders GROUP BY o_orderpriority
     """,
-    tags=("agg", "pivot"),
+    tags=("agg", "pivot", "map"),
 )
-def q16c_pivot(spark, sf_dir):
-    """Pivot (long→wide conditional aggregation). The pivot values are
-    declared explicitly — at scale an undeclared pivot needs an extra
-    distinct pass to discover columns."""
-    o = _cat(spark, sf_dir).orders
-    return (
-        o.groupBy("o_orderpriority")
+def q16c_pivot_map(spark, sf_dir):
+    """Pivot (long→wide conditional aggregation) + map_from_entries /
+    element_at / map_keys over per-priority status counts.
+
+    The pivot values are declared explicitly — at scale an undeclared
+    pivot needs an extra distinct pass to discover columns. Both halves
+    work at the (priority, status) grain Spark's pivot rewrite aggregates
+    at anyway, so one scan and one partial aggregation feed both: the
+    status entries are collected per priority by a window and ride along
+    as a grouping column of the pivot (one more exchange, on priority).
+
+    The oracle mirrors the *extracted* map values (missing key → NULL),
+    since MAP column ordering is not comparable across engines.
+
+    NULL-key contract (r10 hostile-TPCH sweep, same class as q30b/q32):
+    Spark maps reject NULL keys by definition ([NULL_MAP_KEY] crash), so a
+    NULL status never becomes a map entry — the ``when`` guard makes
+    collect_list skip it while the GROUP itself survives (an
+    all-NULL-status priority still emits a row with an empty map, which is
+    why the oracle coalesces its statuses string to '').
+    """
+    o = Catalog(spark, sf_dir).orders
+    counts = o.groupBy("o_orderpriority", "o_orderstatus").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(dec2("o_totalprice")).alias("_sum"),
+    )
+    entries = F.sort_array(
+        F.collect_list(
+            F.when(
+                F.col("o_orderstatus").isNotNull(),
+                F.struct("o_orderstatus", "cnt"),
+            )
+        ).over(W.partitionBy("o_orderpriority"))
+    )
+    wide = (
+        counts.withColumn("_entries", entries)
+        .groupBy("o_orderpriority", "_entries")
         .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(dsum("o_totalprice"))
+        .agg(F.sum("_sum").cast("double"))
+    )
+    status_map = F.map_from_entries("_entries")
+    return wide.select(
+        "o_orderpriority",
+        "F",
+        "O",
+        "P",
+        F.element_at(status_map, "F").alias("n_f"),
+        F.element_at(status_map, "O").alias("n_o"),
+        F.element_at(status_map, "P").alias("n_p"),
+        F.array_join(F.sort_array(F.map_keys(status_map)), ",").alias(
+            "statuses"
+        ),
     )
 
 
@@ -738,21 +785,31 @@ def q18_multi_get(spark, sf_dir):
 
 
 @query(
-    "q19_window_ranking",
+    "q19_window_ranking_dist",
     oracle="""
     SELECT o_custkey, o_orderkey,
            CAST(row_number() OVER w1 AS INTEGER) AS rn,
            CAST(rank() OVER w2 AS INTEGER) AS rnk,
-           CAST(dense_rank() OVER w2 AS INTEGER) AS drnk
+           CAST(dense_rank() OVER w2 AS INTEGER) AS drnk,
+           CAST(ntile(4) OVER w3 AS INTEGER) AS quartile,
+           percent_rank() OVER w3 AS pr,
+           cume_dist() OVER w3 AS cd
     FROM orders
     WINDOW w1 AS (PARTITION BY o_custkey
                   ORDER BY o_orderdate NULLS FIRST, o_orderkey NULLS FIRST),
-           w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate NULLS FIRST)
+           w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate NULLS FIRST),
+           w3 AS (PARTITION BY o_custkey
+                  ORDER BY o_totalprice NULLS FIRST, o_orderkey NULLS FIRST)
     """,
     tags=("window",),
 )
-def q19_window_ranking(spark, sf_dir):
-    """ROW_NUMBER / RANK / DENSE_RANK per customer by order date.
+def q19_window_ranking_dist(spark, sf_dir):
+    """Ranking + distribution window functions per customer: ROW_NUMBER /
+    RANK / DENSE_RANK by order date, NTILE / PERCENT_RANK / CUME_DIST by
+    price. Every window shares ``PARTITION BY o_custkey``, so the orders
+    shuffle once; the two orderings only re-sort within partitions. Both
+    engines compute pr = (rank-1)/(n-1) and cd = rank_from_end/n as single
+    IEEE divisions of exact ints.
 
     NULL-order contract (r10 hostile-TPCH sweep): Spark's default ASC null
     ordering is NULLS FIRST, DuckDB's is NULLS LAST — every oracle window
@@ -761,17 +818,21 @@ def q19_window_ranking(spark, sf_dir):
     o = Catalog(spark, sf_dir).orders
     w1 = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w2 = W.partitionBy("o_custkey").orderBy("o_orderdate")
+    w3 = W.partitionBy("o_custkey").orderBy("o_totalprice", "o_orderkey")
     return o.select(
         "o_custkey",
         "o_orderkey",
         F.row_number().over(w1).alias("rn"),
         F.rank().over(w2).alias("rnk"),
         F.dense_rank().over(w2).alias("drnk"),
+        F.ntile(4).over(w3).alias("quartile"),
+        F.percent_rank().over(w3).alias("pr"),
+        F.cume_dist().over(w3).alias("cd"),
     )
 
 
 @query(
-    "q20_window_analytic",
+    "q20_window_analytic_value",
     oracle=f"""
     SELECT o_custkey, o_orderkey, o_orderdate,
            lag(o_totalprice) OVER w AS prev_price,
@@ -781,19 +842,31 @@ def q19_window_ranking(spark, sf_dir):
              ORDER BY o_orderdate NULLS FIRST, o_orderkey NULLS FIRST
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
              as string) as double)
-             AS running_total
+             AS running_total,
+           first_value(o_totalprice) OVER wa AS first_price,
+           last_value(o_totalprice) OVER wa AS last_price,
+           nth_value(o_totalprice, 2) OVER wa AS second_price
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey
-                 ORDER BY o_orderdate NULLS FIRST, o_orderkey NULLS FIRST)
+                 ORDER BY o_orderdate NULLS FIRST, o_orderkey NULLS FIRST),
+           wa AS (PARTITION BY o_custkey
+                  ORDER BY o_orderdate NULLS FIRST, o_orderkey NULLS FIRST
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
     """,
     tags=("window",),
 )
-def q20_window_analytic(spark, sf_dir):
-    """LAG / LEAD and a running SUM with an explicit rows frame (NULLS
-    FIRST in the oracle ORDER BY — q19's NULL-order contract)."""
+def q20_window_analytic_value(spark, sf_dir):
+    """Analytic + value window functions per customer by order date:
+    LAG / LEAD, a running SUM with an explicit rows frame, and FIRST_VALUE
+    / LAST_VALUE / NTH_VALUE over an explicit full-partition frame (the
+    default frame differs between engines for last_value — the explicit
+    frame removes the ambiguity). One partitioning and one ordering: one
+    shuffle, one sort. NULLS FIRST in the oracle ORDER BY — q19's
+    NULL-order contract."""
     o = Catalog(spark, sf_dir).orders
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    wa = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     return o.select(
         "o_custkey",
         "o_orderkey",
@@ -801,6 +874,9 @@ def q20_window_analytic(spark, sf_dir):
         F.lag("o_totalprice").over(w).alias("prev_price"),
         F.lead("o_totalprice").over(w).alias("next_price"),
         F.sum(dec2("o_totalprice")).over(wf).cast("double").alias("running_total"),
+        F.first("o_totalprice").over(wa).alias("first_price"),
+        F.last("o_totalprice").over(wa).alias("last_price"),
+        F.nth_value("o_totalprice", 2).over(wa).alias("second_price"),
     )
 
 
@@ -962,7 +1038,7 @@ def q24d_except_all(spark, sf_dir):
 
 
 @query(
-    "q25_string_functions",
+    "q25_string_hash_functions",
     oracle="""
     SELECT c_custkey,
            upper(c_name) AS up_name,
@@ -972,13 +1048,25 @@ def q24d_except_all(spark, sf_dir):
            trim(concat_ws('-', c_name, c_mktsegment)) AS joined,
            (c_name LIKE '%001%') AS has_001,
            regexp_extract(c_name, '([0-9]+)', 1) AS digits,
-           array_to_string(string_split(c_name, '#'), '|') AS parts
+           array_to_string(string_split(c_name, '#'), '|') AS parts,
+           levenshtein(c_mktsegment, 'BUILDING') AS lev,
+           translate(c_name, '#0', '_O') AS translated,
+           lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
+           reverse(c_mktsegment) AS rev,
+           repeat(substr(c_mktsegment, 1, 2), 3) AS rep,
+           md5(c_name) AS md5_hex,
+           sha256(c_name) AS sha_hex,
+           CAST(length(md5(c_name)) AS INTEGER) AS md5_len
     FROM customer
     """,
-    tags=("scalar",),
+    tags=("scalar", "hash"),
 )
-def q25_string_functions(spark, sf_dir):
-    """upper/lower/substring/trim/concat_ws/like/regexp_extract/split/length.
+def q25_string_hash_functions(spark, sf_dir):
+    """String + hash scalar surface, one row per customer:
+    upper/lower/substring/trim/concat_ws/like/regexp_extract/split/length,
+    levenshtein/translate/lpad/reverse/repeat (all exact string/integer
+    ops, identical cross-engine) and md5/sha256 (byte-identical
+    cross-engine — the fingerprint/dedup building blocks).
 
     ``parts`` is array_join-ed to a string: top-level array columns crash the
     driver's pandas canonicalizer (round-1 q25 failure)."""
@@ -993,12 +1081,20 @@ def q25_string_functions(spark, sf_dir):
         F.col("c_name").like("%001%").alias("has_001"),
         F.regexp_extract("c_name", "([0-9]+)", 1).alias("digits"),
         F.array_join(F.split("c_name", "#"), "|").alias("parts"),
+        F.levenshtein("c_mktsegment", F.lit("BUILDING")).alias("lev"),
+        F.translate("c_name", "#0", "_O").alias("translated"),
+        F.lpad(F.col("c_custkey").cast("string"), 8, "0").alias("padded"),
+        F.reverse("c_mktsegment").alias("rev"),
+        F.repeat(F.substring("c_mktsegment", 1, 2), 3).alias("rep"),
+        F.md5("c_name").alias("md5_hex"),
+        F.sha2("c_name", 256).alias("sha_hex"),
+        F.length(F.md5("c_name")).alias("md5_len"),
     )
 
 
 @query(
-    "q26_date_functions",
-    oracle="""
+    "q26_date_math_functions",
+    oracle=f"""
     SELECT o_orderkey,
            CAST(year(o_orderdate) AS INTEGER) AS yr,
            CAST(month(o_orderdate) AS INTEGER) AS mo,
@@ -1007,33 +1103,12 @@ def q25_string_functions(spark, sf_dir):
            CAST(datediff('day', DATE '1995-01-01', cast(o_orderdate as date))
                 AS INTEGER) AS days_since,
            CAST(date_trunc('month', o_orderdate) AS DATE) AS order_month,
-           last_day(cast(o_orderdate as date)) AS month_end
-    FROM orders
-    """,
-    tags=("scalar",),
-)
-def q26_date_functions(spark, sf_dir):
-    """year/month/day/date_add/datediff/date_trunc/last_day."""
-    o = Catalog(spark, sf_dir).orders
-    od = F.col("o_orderdate").cast("date")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.month("o_orderdate").alias("mo"),
-        F.dayofmonth("o_orderdate").alias("dom"),
-        F.date_add(od, 30).alias("plus30"),
-        F.datediff(od, F.lit("1995-01-01").cast("date")).alias("days_since"),
-        # DATE, not NTZ timestamp — same Arrow ns-floor rationale as q14;
-        # F.trunc is DATE->DATE, no TZ roundtrip (r10 advisory)
-        F.trunc(od, "month").alias("order_month"),
-        F.last_day(od).alias("month_end"),
-    )
-
-
-@query(
-    "q27_math_functions",
-    oracle=f"""
-    SELECT o_orderkey,
+           last_day(cast(o_orderdate as date)) AS month_end,
+           CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3mo,
+           CAST(o_orderdate AS DATE) - 90 AS minus90d,
+           CAST(quarter(o_orderdate) AS INTEGER) AS qtr,
+           CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
+           CAST(weekofyear(o_orderdate) AS INTEGER) AS woy,
            abs({sql_measure('o_totalprice')} - 100000.0) AS abs_diff,
            CAST(ceil({sql_measure('o_totalprice')}) AS BIGINT) AS ceil_price,
            CAST(floor({sql_measure('o_totalprice')}) AS BIGINT)
@@ -1047,10 +1122,14 @@ def q26_date_functions(spark, sf_dir):
            CAST(o_orderkey % 7 AS BIGINT) AS pmod7
     FROM orders
     """,
-    tags=("scalar",),
+    tags=("scalar", "date", "math"),
 )
-def q27_math_functions(spark, sf_dir):
-    """abs/ceil/floor/pow/ln/sqrt/pmod.
+def q26_date_math_functions(spark, sf_dir):
+    """Date + math scalar surface, one row per order:
+    year/month/day/date_add/datediff/date_trunc/last_day; add_months
+    (end-of-month clamping matches INTERVAL MONTH), date_sub, quarter,
+    dayofweek (Spark is 1=Sunday; DuckDB 0=Sunday — oracle adds 1), ISO
+    week; abs/ceil/floor/pow/ln/sqrt/pmod.
 
     ln is not bit-identical across libm implementations (~1% of values differ
     by 1 ulp), so the hashed contract is floor(ln*100) — stable under ulp
@@ -1065,9 +1144,24 @@ def q27_math_functions(spark, sf_dir):
     raises — so the oracle spells the same total function.
     """
     o = Catalog(spark, sf_dir).orders
+    od = F.col("o_orderdate").cast("date")
     m = measure("o_totalprice")
     return o.select(
         "o_orderkey",
+        F.year("o_orderdate").alias("yr"),
+        F.month("o_orderdate").alias("mo"),
+        F.dayofmonth("o_orderdate").alias("dom"),
+        F.date_add(od, 30).alias("plus30"),
+        F.datediff(od, F.lit("1995-01-01").cast("date")).alias("days_since"),
+        # DATE, not NTZ timestamp — same Arrow ns-floor rationale as q14;
+        # F.trunc is DATE->DATE, no TZ roundtrip (r10 advisory)
+        F.trunc(od, "month").alias("order_month"),
+        F.last_day(od).alias("month_end"),
+        F.add_months(od, 3).alias("plus3mo"),
+        F.date_sub(od, 90).alias("minus90d"),
+        F.quarter(od).alias("qtr"),
+        F.dayofweek(od).alias("dow"),
+        F.weekofyear(od).alias("woy"),
         F.abs(m - 100000.0).alias("abs_diff"),
         F.ceil(m).alias("ceil_price"),
         F.floor(m).alias("floor_price"),
@@ -1078,23 +1172,85 @@ def q27_math_functions(spark, sf_dir):
     )
 
 
+_Q28_JSON = """to_json(struct_pack(o_orderkey := o_orderkey,
+                               o_orderstatus := o_orderstatus))"""
+
+
 @query(
-    "q28_conditional_null",
-    oracle="""
+    "q28_conditional_json",
+    oracle=f"""
+    WITH t AS (
+      SELECT *,
+             nullif(o_orderstatus, 'P') AS maybe_status,
+             nullif(o_orderpriority, '3-MEDIUM') AS maybe_prio
+      FROM orders
+    )
     SELECT o_orderkey,
            CASE WHEN o_totalprice > 150000 THEN 'big'
                 WHEN o_totalprice > 50000 THEN 'mid'
                 ELSE 'small' END AS bucket,
            coalesce(nullif(o_orderstatus, 'O'), 'open') AS status_or_open,
-           (o_orderstatus = 'F') AS is_filled
-    FROM orders
+           (o_orderstatus = 'F') AS is_filled,
+           CAST(maybe_status IS NOT DISTINCT FROM 'F' AS BOOLEAN) AS eqns_f,
+           CAST(maybe_status IS DISTINCT FROM maybe_status AS BOOLEAN)
+             AS self_distinct,
+           coalesce(maybe_status, 'unknown') AS status_filled,
+           CASE WHEN maybe_prio IS NULL THEN 'was-medium'
+                ELSE 'has-prio' END AS prio_class,
+           CAST(count(maybe_status) OVER () AS BIGINT) AS n_nonnull,
+           CAST(count(*) OVER () AS BIGINT) AS n_all,
+           TRY_CAST(o_orderpriority AS INTEGER) AS prio_int,
+           TRY_CAST(substr(o_orderpriority, 1, 1) AS INTEGER) AS prio_digit,
+           TRY_CAST(o_orderdate AS DATE) AS as_date,
+           {_Q28_JSON}::VARCHAR AS j,
+           CAST(json_extract_string({_Q28_JSON}, '$.o_orderkey') AS BIGINT)
+             AS jk,
+           json_extract_string({_Q28_JSON}, '$.o_orderstatus') AS js
+    FROM t
     """,
-    tags=("scalar",),
+    tags=("scalar", "null", "json"),
 )
-def q28_conditional_null(spark, sf_dir):
-    """CASE WHEN / coalesce / nullif / boolean projection."""
+def q28_conditional_json(spark, sf_dir):
+    """Conditional / null / cast / json surface, one row per order:
+    CASE WHEN / coalesce / nullif / boolean projection; null semantics
+    end-to-end (nullif to create NULLs, null-safe equality <=> ≙ IS NOT
+    DISTINCT FROM, coalesce, NULL-aware CASE, and the count(col)-skips-NULLs
+    vs count(*) distinction); try_cast (failed casts yield NULL instead of
+    errors — the ANSI-safe ingestion path: '1-URGENT' is not an int, its
+    first char is); to_json / get_json_object / from_json round-trip — the
+    decode path (A3, ``client/RecordStream.scala:277-278``) in JSON form.
+
+    ``ignoreNullFields=false``: Spark's default to_json OMITS null struct
+    fields while DuckDB renders ``"s":null`` — with the option both engines
+    emit byte-identical JSON for NULL-bearing rows (r10 hostile-TPCH
+    sweep)."""
     o = Catalog(spark, sf_dir).orders
-    return o.select(
+    t = o.select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        "o_orderpriority",
+        "o_orderdate",
+        F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("maybe_status"),
+        F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM")).alias("maybe_prio"),
+    )
+    # Global counts as a 1-row aggregate broadcast-cross-joined back in,
+    # instead of count() OVER () — an unpartitioned window moves every row
+    # to a single task, which is a non-starter at 100 TB; the partial-agg
+    # + broadcast shape keeps the scan fully parallel.
+    totals = t.agg(
+        F.count("maybe_status").alias("n_nonnull"),
+        F.count(F.lit(1)).alias("n_all"),
+    )
+    j = F.to_json(
+        F.struct("o_orderkey", "o_orderstatus"),
+        {"ignoreNullFields": "false"},
+    )
+    # spread: this one projection (JSON round-trip, try_casts) is the
+    # entry's whole CPU cost, and a single-row-group scan would run it in
+    # ONE task. (r12 refused a spread of the json columns alone while they
+    # were one of several concurrently running per-variant scans.)
+    return spread(t).crossJoin(F.broadcast(totals)).select(
         "o_orderkey",
         F.when(F.col("o_totalprice") > 150000, "big")
         .when(F.col("o_totalprice") > 50000, "mid")
@@ -1104,11 +1260,31 @@ def q28_conditional_null(spark, sf_dir):
             "status_or_open"
         ),
         (F.col("o_orderstatus") == "F").alias("is_filled"),
+        F.col("maybe_status").eqNullSafe(F.lit("F")).alias("eqns_f"),
+        (~F.col("maybe_status").eqNullSafe(F.col("maybe_status"))).alias(
+            "self_distinct"
+        ),
+        F.coalesce("maybe_status", F.lit("unknown")).alias("status_filled"),
+        F.when(F.col("maybe_prio").isNull(), "was-medium")
+        .otherwise("has-prio")
+        .alias("prio_class"),
+        "n_nonnull",
+        "n_all",
+        F.col("o_orderpriority").try_cast("int").alias("prio_int"),
+        F.substring("o_orderpriority", 1, 1).try_cast("int").alias(
+            "prio_digit"
+        ),
+        F.col("o_orderdate").try_cast("date").alias("as_date"),
+        j.alias("j"),
+        F.get_json_object(j, "$.o_orderkey").cast("bigint").alias("jk"),
+        F.from_json(
+            j, "o_orderkey bigint, o_orderstatus string"
+        )["o_orderstatus"].alias("js"),
     )
 
 
 # --------------------------------------------------------------------------
-# Q29–Q32: array / map / json functions and the dead-letter split
+# Q29–Q32: array functions and the dead-letter split
 # --------------------------------------------------------------------------
 
 
@@ -1185,109 +1361,6 @@ def q29b_explode_roundtrip(spark, sf_dir):
 
 
 @query(
-    "q30_map_functions",
-    oracle="""
-    SELECT o_orderpriority,
-           nullif(CAST(count(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT), 0)
-             AS n_f,
-           nullif(CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS BIGINT), 0)
-             AS n_o,
-           nullif(CAST(count(*) FILTER (WHERE o_orderstatus = 'P') AS BIGINT), 0)
-             AS n_p,
-           coalesce(
-             string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus),
-             '') AS statuses
-    FROM orders GROUP BY o_orderpriority
-    """,
-    tags=("map",),
-)
-def q30_map_functions(spark, sf_dir):
-    """map_from_entries / element_at / map_keys over per-group status counts.
-
-    The oracle mirrors the *extracted* values (missing key → NULL), since
-    MAP column ordering is not comparable across engines.
-
-    NULL-key contract (r10 hostile-TPCH sweep, same class as q30b/q32):
-    Spark maps reject NULL keys by definition ([NULL_MAP_KEY] crash), so a
-    NULL status never becomes a map entry — the ``when`` guard makes
-    collect_list skip it while the GROUP itself survives (an
-    all-NULL-status priority still emits a row with an empty map, which is
-    why the oracle coalesces its statuses string to '').
-    """
-    o = Catalog(spark, sf_dir).orders
-    counts = o.groupBy("o_orderpriority", "o_orderstatus").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    maps = counts.groupBy("o_orderpriority").agg(
-        F.map_from_entries(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("o_orderstatus").isNotNull(),
-                        F.struct("o_orderstatus", "cnt"),
-                    )
-                )
-            )
-        ).alias("status_map")
-    )
-    return maps.select(
-        "o_orderpriority",
-        F.element_at("status_map", "F").alias("n_f"),
-        F.element_at("status_map", "O").alias("n_o"),
-        F.element_at("status_map", "P").alias("n_p"),
-        F.array_join(F.sort_array(F.map_keys("status_map")), ",").alias(
-            "statuses"
-        ),
-    )
-
-
-@query(
-    "q31_json_functions",
-    oracle="""
-    SELECT o_orderkey,
-           to_json(struct_pack(o_orderkey := o_orderkey,
-                               o_orderstatus := o_orderstatus))::VARCHAR AS j,
-           CAST(json_extract_string(
-             to_json(struct_pack(o_orderkey := o_orderkey,
-                                 o_orderstatus := o_orderstatus)),
-             '$.o_orderkey') AS BIGINT) AS jk,
-           json_extract_string(
-             to_json(struct_pack(o_orderkey := o_orderkey,
-                                 o_orderstatus := o_orderstatus)),
-             '$.o_orderstatus') AS js
-    FROM orders
-    """,
-    tags=("json",),
-)
-def q31_json_functions(spark, sf_dir):
-    """to_json / get_json_object / from_json round-trip — the decode path
-    (A3, ``client/RecordStream.scala:277-278``) in JSON form.
-
-    ``ignoreNullFields=false``: Spark's default to_json OMITS null struct
-    fields while DuckDB renders ``"s":null`` — with the option both engines
-    emit byte-identical JSON for NULL-bearing rows (r10 hostile-TPCH
-    sweep)."""
-    o = Catalog(spark, sf_dir).orders
-    # NO _spread here (r12 measured refusal): the isolated from_json probe
-    # won with a spread (0.57 → 0.38 s, r11), but inside the q28 merged
-    # entry the added exchange LOSES end-to-end — interleaved A/B mins
-    # 2.03 s (plain) vs 2.21 s (spread) over 6 rounds; see
-    # OPTIMIZATION_r12.md "left alone"
-    j = F.to_json(
-        F.struct("o_orderkey", "o_orderstatus"),
-        {"ignoreNullFields": "false"},
-    )
-    return o.select(
-        "o_orderkey",
-        j.alias("j"),
-        F.get_json_object(j, "$.o_orderkey").cast("bigint").alias("jk"),
-        F.from_json(
-            j, "o_orderkey bigint, o_orderstatus string"
-        )["o_orderstatus"].alias("js"),
-    )
-
-
-@query(
     "q32_dead_letter_split",
     oracle=f"""
     WITH payloads AS (
@@ -1360,36 +1433,8 @@ def q32_dead_letter_split(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Extended SQL surface: distribution windows, SQL front-end, unpivot
+# Extended SQL surface: SQL front-end, unpivot
 # --------------------------------------------------------------------------
-
-
-@query(
-    "q19b_window_distribution",
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           CAST(ntile(4) OVER w1 AS INTEGER) AS quartile,
-           percent_rank() OVER w1 AS pr,
-           cume_dist() OVER w1 AS cd
-    FROM orders
-    WINDOW w1 AS (PARTITION BY o_custkey
-                  ORDER BY o_totalprice NULLS FIRST, o_orderkey NULLS FIRST)
-    """,
-    tags=("window",),
-)
-def q19b_window_distribution(spark, sf_dir):
-    """Distribution window functions: NTILE / PERCENT_RANK / CUME_DIST per
-    customer by price. Both engines compute pr = (rank-1)/(n-1) and
-    cd = rank_from_end/n as single IEEE divisions of exact ints."""
-    o = Catalog(spark, sf_dir).orders
-    w1 = W.partitionBy("o_custkey").orderBy("o_totalprice", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.ntile(4).over(w1).alias("quartile"),
-        F.percent_rank().over(w1).alias("pr"),
-        F.cume_dist().over(w1).alias("cd"),
-    )
 
 
 _Q49_SQL = """
@@ -1487,66 +1532,6 @@ def q16d_unpivot(spark, sf_dir):
         )
         .unpivot("c_custkey", ["acctbal", "nationkey"], "metric", "val")
         .where(F.col("val").isNotNull())
-    )
-
-
-@query(
-    "q20b_window_value_functions",
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           first_value(o_totalprice) OVER w AS first_price,
-           last_value(o_totalprice) OVER w AS last_price,
-           nth_value(o_totalprice, 2) OVER w AS second_price
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey
-                 ORDER BY o_orderdate NULLS FIRST, o_orderkey NULLS FIRST
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-    """,
-    tags=("window",),
-)
-def q20b_window_value_functions(spark, sf_dir):
-    """FIRST_VALUE / LAST_VALUE / NTH_VALUE over an explicit full-partition
-    frame (the default frame differs between engines for last_value — the
-    explicit frame removes the ambiguity)."""
-    o = Catalog(spark, sf_dir).orders
-    w = (
-        W.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.first("o_totalprice").over(w).alias("first_price"),
-        F.last("o_totalprice").over(w).alias("last_price"),
-        F.nth_value("o_totalprice", 2).over(w).alias("second_price"),
-    )
-
-
-@query(
-    "q25b_string_functions_ext",
-    oracle="""
-    SELECT c_custkey,
-           levenshtein(c_mktsegment, 'BUILDING') AS lev,
-           translate(c_name, '#0', '_O') AS translated,
-           lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
-           reverse(c_mktsegment) AS rev,
-           repeat(substr(c_mktsegment, 1, 2), 3) AS rep
-    FROM customer
-    """,
-    tags=("scalar",),
-)
-def q25b_string_functions_ext(spark, sf_dir):
-    """Extended string surface: levenshtein / translate / lpad / reverse /
-    repeat — all exact string/integer ops, identical cross-engine."""
-    c = Catalog(spark, sf_dir).customer
-    return c.select(
-        "c_custkey",
-        F.levenshtein("c_mktsegment", F.lit("BUILDING")).alias("lev"),
-        F.translate("c_name", "#0", "_O").alias("translated"),
-        F.lpad(F.col("c_custkey").cast("string"), 8, "0").alias("padded"),
-        F.reverse("c_mktsegment").alias("rev"),
-        F.repeat(F.substring("c_mktsegment", 1, 2), 3).alias("rep"),
     )
 
 
@@ -1665,90 +1650,6 @@ def q29c_array_hof(spark, sf_dir):
 
 
 @query(
-    "q26b_date_arithmetic",
-    oracle="""
-    SELECT o_orderkey,
-           CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3mo,
-           CAST(o_orderdate AS DATE) - 90 AS minus90d,
-           CAST(quarter(o_orderdate) AS INTEGER) AS qtr,
-           CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-           CAST(weekofyear(o_orderdate) AS INTEGER) AS woy
-    FROM orders
-    """,
-    tags=("scalar", "date"),
-)
-def q26b_date_arithmetic(spark, sf_dir):
-    """Extended date arithmetic: add_months (end-of-month clamping matches
-    INTERVAL MONTH), date_sub, quarter, dayofweek (Spark is 1=Sunday;
-    DuckDB 0=Sunday — oracle adds 1), ISO week."""
-    o = Catalog(spark, sf_dir).orders
-    od = F.col("o_orderdate").cast("date")
-    return o.select(
-        "o_orderkey",
-        F.add_months(od, 3).alias("plus3mo"),
-        F.date_sub(od, 90).alias("minus90d"),
-        F.quarter(od).alias("qtr"),
-        F.dayofweek(od).alias("dow"),
-        F.weekofyear(od).alias("woy"),
-    )
-
-
-@query(
-    "q28b_null_semantics",
-    oracle="""
-    WITH t AS (
-      SELECT o_orderkey,
-             nullif(o_orderstatus, 'P') AS maybe_status,
-             nullif(o_orderpriority, '3-MEDIUM') AS maybe_prio
-      FROM orders
-    )
-    SELECT o_orderkey,
-           CAST(maybe_status IS NOT DISTINCT FROM 'F' AS BOOLEAN) AS eqns_f,
-           CAST(maybe_status IS DISTINCT FROM maybe_status AS BOOLEAN)
-             AS self_distinct,
-           coalesce(maybe_status, 'unknown') AS status_filled,
-           CASE WHEN maybe_prio IS NULL THEN 'was-medium'
-                ELSE 'has-prio' END AS prio_class,
-           CAST(count(maybe_status) OVER () AS BIGINT) AS n_nonnull,
-           CAST(count(*) OVER () AS BIGINT) AS n_all
-    FROM t
-    """,
-    tags=("scalar", "null"),
-)
-def q28b_null_semantics(spark, sf_dir):
-    """Null semantics end-to-end: nullif to create NULLs, null-safe equality
-    (<=> ≙ IS NOT DISTINCT FROM), coalesce, NULL-aware CASE, and the
-    count(col)-skips-NULLs vs count(*) distinction."""
-    o = Catalog(spark, sf_dir).orders
-    t = o.select(
-        "o_orderkey",
-        F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("maybe_status"),
-        F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM")).alias("maybe_prio"),
-    )
-    # Global counts as a 1-row aggregate broadcast-cross-joined back in,
-    # instead of count() OVER () — an unpartitioned window moves every row
-    # to a single task, which is a non-starter at 100 TB; the partial-agg
-    # + broadcast shape keeps the scan fully parallel.
-    totals = t.agg(
-        F.count("maybe_status").alias("n_nonnull"),
-        F.count(F.lit(1)).alias("n_all"),
-    )
-    return t.crossJoin(F.broadcast(totals)).select(
-        "o_orderkey",
-        F.col("maybe_status").eqNullSafe(F.lit("F")).alias("eqns_f"),
-        (~F.col("maybe_status").eqNullSafe(F.col("maybe_status"))).alias(
-            "self_distinct"
-        ),
-        F.coalesce("maybe_status", F.lit("unknown")).alias("status_filled"),
-        F.when(F.col("maybe_prio").isNull(), "was-medium")
-        .otherwise("has-prio")
-        .alias("prio_class"),
-        "n_nonnull",
-        "n_all",
-    )
-
-
-@query(
     "q07b_tpch_q5_shape",
     oracle=f"""
     SELECT n_name, {sql_dsum_expr(SQL_REVENUE)} AS revenue
@@ -1824,31 +1725,6 @@ def q24e_except_distinct(spark, sf_dir):
 
 
 @query(
-    "q28c_try_cast",
-    oracle="""
-    SELECT o_orderkey,
-           TRY_CAST(o_orderpriority AS INTEGER) AS prio_int,
-           TRY_CAST(substr(o_orderpriority, 1, 1) AS INTEGER) AS prio_digit,
-           TRY_CAST(o_orderdate AS DATE) AS as_date
-    FROM orders
-    """,
-    tags=("scalar", "cast"),
-)
-def q28c_try_cast(spark, sf_dir):
-    """try_cast: failed casts yield NULL instead of errors (ANSI-safe
-    ingestion path — '1-URGENT' is not an int, its first char is)."""
-    o = Catalog(spark, sf_dir).orders
-    return o.select(
-        "o_orderkey",
-        F.col("o_orderpriority").try_cast("int").alias("prio_int"),
-        F.substring("o_orderpriority", 1, 1).try_cast("int").alias(
-            "prio_digit"
-        ),
-        F.col("o_orderdate").try_cast("date").alias("as_date"),
-    )
-
-
-@query(
     "q29d_string_agg",
     oracle="""
     SELECT l_orderkey,
@@ -1875,29 +1751,6 @@ def q29d_string_agg(spark, sf_dir):
             ",",
         ).alias("lines"),
         F.count(F.lit(1)).alias("n"),
-    )
-
-
-@query(
-    "q31b_hash_functions",
-    oracle="""
-    SELECT c_custkey,
-           md5(c_name) AS md5_hex,
-           sha256(c_name) AS sha_hex,
-           CAST(length(md5(c_name)) AS INTEGER) AS md5_len
-    FROM customer
-    """,
-    tags=("scalar", "hash"),
-)
-def q31b_hash_functions(spark, sf_dir):
-    """Cryptographic hash functions over strings — byte-identical
-    cross-engine (the fingerprint/dedup building blocks)."""
-    c = Catalog(spark, sf_dir).customer
-    return c.select(
-        "c_custkey",
-        F.md5("c_name").alias("md5_hex"),
-        F.sha2("c_name", 256).alias("sha_hex"),
-        F.length(F.md5("c_name")).alias("md5_len"),
     )
 
 

@@ -4,7 +4,10 @@
 Usage: python scripts/capture_plans.py <tag> [suffix] [name ...]
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix default "before") for each
-named query (default: every driver-registry entry). Batch entries capture
+named query (default: every driver-registry entry) and prints, per entry,
+the number of parquet scans, shuffle exchanges (``Exchange``; broadcasts
+are not counted) and join nodes in the plan. The tag is required so a bare
+run cannot overwrite committed evidence. Batch entries capture
 the plan of the DataFrame the driver would execute. Streaming entries
 execute their replay (build() runs the stream to completion) and capture
 the plan of the memory-sink table — which is a plain in-memory scan — so
@@ -17,7 +20,9 @@ against these files.
 
 from __future__ import annotations
 
+import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -27,8 +32,24 @@ if _REPO not in sys.path:
 SF = "/root/testdata/sf0.1"
 
 
+def plan_counts(txt: str) -> dict[str, int]:
+    """Scan / exchange / join node counts of a formatted plan, read from
+    its numbered node headers (``(3) Exchange``)."""
+    nodes = Counter(re.findall(r"^\(\d+\) (\w+)", txt, re.M))
+    return {
+        "scans": nodes["Scan"],
+        "exchanges": nodes["Exchange"],
+        "joins": sum(
+            n for k, n in nodes.items()
+            if k.endswith("Join") or k == "CartesianProduct"
+        ),
+    }
+
+
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r11"
+    if len(sys.argv) < 2:
+        sys.exit("usage: capture_plans.py <tag> [suffix] [name ...]")
+    tag = sys.argv[1]
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
 
@@ -59,7 +80,8 @@ def main() -> None:
         except Exception as e:  # capture must keep going
             txt = f"ERROR capturing plan: {e}"
         (out_dir / f"{name}_{suffix}.txt").write_text(txt)
-        print(f"{name}: {len(txt)} chars")
+        counts = " ".join(f"{k}={v}" for k, v in plan_counts(txt).items())
+        print(f"{name}: {len(txt)} chars {counts}")
     spark.catalog.clearCache()
 
 

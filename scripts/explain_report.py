@@ -31,6 +31,8 @@ HEADLINERS: dict[str, list[str]] = {
     ],
     "q07_join_multiway_broadcast": [
         "dimension joins are BroadcastHashJoin (no shuffle for small dims)",
+        "region joins the nation dim inside its broadcast, so each of the "
+        "five tables is scanned once",
         "no CartesianProduct / BroadcastNestedLoopJoin",
     ],
     "q13_agg_tpch_q1": [

@@ -102,11 +102,7 @@ TEXT_ENTRIES = [
     "q42c_simhash",
     "q42d_dedup_clusters",
     "q43_top_terms",
-    "q43b_text_analysis",
     "q43b_text_metrics",
-    "q43c_token_budget",
-    "q43d_scrub_split",
-    "q43e_sample_shuffle_shard",
     "q43f_quality_filter",
     "q43g_source_mix",
     "q43h_boilerplate",

@@ -40,12 +40,49 @@ def test_column_pruning_narrows_read_schema(spark):
 
 
 def test_small_dims_broadcast(spark):
-    """q06 (nation ⋈ region) and q07 (multiway) must use broadcast joins for
-    dims — never a shuffle of the big side against a tiny table."""
-    reg = _registry()
-    assert "BroadcastHashJoin" in _plan(reg["q06_join_broadcast"].build(spark, SF_SMOKE))
-    q07 = _plan(reg["q07_join_multiway"].build(spark, SF_SMOKE))
+    """q07 (multiway fact join + nation ⋈ region dim) must use broadcast
+    joins for dims — never a shuffle of the big side against a tiny
+    table."""
+    q07 = _plan(
+        _registry()["q07_join_multiway_broadcast"].build(spark, SF_SMOKE)
+    )
     assert "BroadcastHashJoin" in q07
+
+
+def _node_counts(plan: str) -> dict[str, int]:
+    """Parquet scans, hash exchanges and join nodes of an executed plan."""
+    import re
+
+    nodes = re.findall(r"^[\s:+-]*(?:\*\(\d+\) )?(\w+)", plan, re.M)
+    return {
+        "scans": sum(n == "FileScan" for n in nodes),
+        "hash_exchanges": len(re.findall(r"Exchange hashpartitioning", plan)),
+        "joins": sum(
+            n.endswith("Join") or n == "CartesianProduct" for n in nodes
+        ),
+    }
+
+
+def test_single_scan_entries(spark):
+    """Driver entries whose columns are projections or window passes over
+    one table read that table once: no self-join of the table against
+    itself, and the windows sharing one PARTITION BY shuffle once."""
+    reg = _registry()
+    shapes = {
+        "q25_string_hash_functions": {"scans": 1, "joins": 0},
+        "q26_date_math_functions": {"scans": 1, "joins": 0},
+        "q19_window_ranking_dist": {
+            "scans": 1, "joins": 0, "hash_exchanges": 1,
+        },
+        "q20_window_analytic_value": {
+            "scans": 1, "joins": 0, "hash_exchanges": 1,
+        },
+        "q16c_pivot_map": {"scans": 1},
+        "q43b_text_metrics": {"scans": 1, "joins": 0},
+    }
+    for name, want in shapes.items():
+        got = _node_counts(_plan(reg[name].build(spark, SF_SMOKE)))
+        assert {k: got[k] for k in want} == want, (name, got)
 
 
 def test_partial_aggregation_before_shuffle(spark):
@@ -255,7 +292,7 @@ def test_registrywide_no_accidental_nested_loops(spark):
     """Regression net over EVERY batch registry entry: no CartesianProduct
     anywhere, and BroadcastNestedLoopJoin only where it is the documented
     bounded-broadcast pattern — a 1-row global-stats aggregate crossed
-    into the scan (q13b/q28/q28b/q43g/q43h) or the tiny fixed query set
+    into the scan (q13b/q28/q43g/q43h) or the tiny fixed query set
     of the brute-force similarity oracle tier (q44/q44e). Any OTHER entry
     growing a nested loop is a scale regression and fails here."""
     from fs2_kafka_streams_spark.queries import load_all
@@ -265,7 +302,6 @@ def test_registrywide_no_accidental_nested_loops(spark):
         # replacement for single-partition `count() OVER ()` windows)
         "q13b_stats_percentiles",
         "q28_conditional_json",
-        "q28b_null_semantics",
         "q43g_source_mix",
         "q43h_boilerplate",
         # fixed 3-vector query set broadcast against the corpus (the
