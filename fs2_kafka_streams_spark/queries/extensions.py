@@ -463,6 +463,13 @@ def q74_observe_metrics(spark, sf_dir):
     )
 
 
+#: Engine tag in q75's checkpoint cache key. A restart needs the state
+#: layout the checkpoint was written with (Spark's state-schema check
+#: fails the query otherwise), so a new latest-by-key engine gets a new
+#: tag and a fresh checkpoint; stale ones are never restarted.
+STATE_CKPT_ENGINE = "max_by"
+
+
 @query(
     "q75_state_reader",
     oracle=LATEST_BY_KEY_ORACLE,
@@ -483,10 +490,11 @@ def q75_state_reader(spark, sf_dir):
     (partition-pruned by key layout at scale); point lookups are filters
     over it.
 
-    The checkpoint lives under the repo cache root keyed by the source
-    parquet's (path, size, mtime) — reusable across runs like the replay
-    cache (no /tmp leak per driver-gate run), re-materialized when the
-    fixture changes. The streaming query always STARTS on the cached
+    The checkpoint lives under the repo cache root keyed by the fold
+    engine (:data:`STATE_CKPT_ENGINE`) and the source parquet's (path,
+    size, mtime) — reusable across runs like the replay cache (no /tmp
+    leak per driver-gate run), re-materialized when the fixture or the
+    engine's state layout changes. The streaming query always STARTS on the cached
     checkpoint: on a completed checkpoint it is a ~1s no-op resume (no
     unread files), on a crashed one it completes the replay (recovery
     semantics proven in tests/test_cep_recovery.py) — and, crucially, a
@@ -506,7 +514,8 @@ def q75_state_reader(spark, sf_dir):
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     key = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_size}:{int(st.st_mtime)}".encode()
+        f"{STATE_CKPT_ENGINE}:{os.path.abspath(src)}:{st.st_size}:"
+        f"{int(st.st_mtime)}".encode()
     ).hexdigest()
     ckpt = os.path.join(CACHE_ROOT, "state_ckpt", key)
     os.makedirs(ckpt, exist_ok=True)

@@ -50,9 +50,11 @@ LATEST_BY_KEY_ORACLE = """
     tags=("streaming", "stateful", "core"),
 )
 def q38_stateful_latest(spark, sf_dir):
-    """Streaming latest-by-key via applyInPandasWithState equals batch Q17 —
-    stream-table duality, the reference's core claim (A7/A9,
-    ``streams/Tables.scala:110-138``)."""
+    """Streaming latest-by-key equals batch Q17 — stream-table duality,
+    the reference's core claim (A7/A9, ``streams/Tables.scala:110-138``).
+    The fold is Spark's native streaming ``max_by`` aggregation on the
+    RocksDB state store, the batch twin's plan run across micro-batches
+    (``streaming/stateful.py::_native_fold``)."""
     return latest_by_key_streaming(spark, sf_dir)
 
 

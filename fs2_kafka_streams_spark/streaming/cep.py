@@ -39,6 +39,7 @@ from fs2_kafka_streams_spark.streaming.run import _drain, run_to_memory
 from fs2_kafka_streams_spark.streaming.stateful import (
     HAS_TWS,
     _changelog_source,
+    _id_sort_keys,
     _tws_prepare,
 )
 
@@ -77,10 +78,10 @@ def _fold_pattern(
     et = pdf["event_type"]
     is_base_u = (et == base_type).to_numpy()
     is_trig_u = (et == trigger_type).to_numpy()
-    # sort by (ts, id); NaN event_ids sort LAST among ts ties (np.lexsort
-    # native NaN placement = pandas na_position default) — exactly
-    # DuckDB's ASC NULLS LAST, so the oracle needs no spelling
-    order = np.lexsort((ids, ts_us))
+    # sort by (ts, id); NULL event_ids sort LAST among ts ties (pandas'
+    # na_position default) — exactly DuckDB's ASC NULLS LAST, so the
+    # oracle needs no spelling
+    order = np.lexsort((*_id_sort_keys(ids, nulls_first=False), ts_us))
     ts_us = ts_us[order]
     ids = ids[order]
     is_base = is_base_u[order]
@@ -501,8 +502,8 @@ def _funnel_update_fn(stages: tuple[str, str, str], gap_us: int):
         is_base_u = (et == base_t).to_numpy()
         is_mid_u = (et == mid_t).to_numpy()
         is_fin_u = (et == fin_t).to_numpy()
-        # NaN ids sort LAST among ts ties — DuckDB's ASC NULLS LAST
-        order = np.lexsort((ids, tss))
+        # NULL ids sort LAST among ts ties — DuckDB's ASC NULLS LAST
+        order = np.lexsort((*_id_sort_keys(ids, nulls_first=False), tss))
         tss = tss[order]
         ids = ids[order]
         is_base = is_base_u[order]

@@ -16,14 +16,21 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-# Streaming state partition count. Python-stateful ops (applyInPandasWithState)
-# are parallelism-bound — one Arrow round-trip per key group, spread across
-# state partitions — so this wants O(cores/2), not the minimum that covers
-# state volume: measured at sf0.1 on 32 cores, 16 vs 4 halves the CEP query
-# (13.5s -> 6.7s) and cuts stateful latest 5.6s -> 3.9s, and is neutral-to-
-# faster for SQL-native state (stream-stream join 11.2 -> 10.2s). A real
-# cluster sets O(total cores).
-STREAM_STATE_PARTITIONS = "16"
+from fs2_kafka_streams_spark.session import default_parallelism
+
+# Streaming state partition count: one state-store instance (and, for the
+# Python-stateful CEP and TWS operators, one Python worker) per partition
+# and trigger, so no more partitions than the slots that run them — more
+# only adds waves of per-instance load/commit/fsync. On a 4-core host, 4
+# instead of 16 cut the changelog upsert's trigger p50 from 3.2 s to 2.2 s
+# on the applyInPandasWithState engine it then ran, and from 1.7 s to
+# 1.1 s on the native max_by aggregation (perfbench changelog_upsert,
+# seed 1). Capped at 16, the count measured at sf0.1 on 32 cores (16 vs 4
+# halved the CEP query, 13.5 s -> 6.7 s, and was neutral-to-faster for
+# SQL-native state). A real cluster sets O(total cores). A stateful
+# checkpoint keeps the count it first started with: Spark restores it
+# from the offset log on restart.
+STREAM_STATE_PARTITIONS = str(min(default_parallelism(), 16))
 
 #: Confs pinned (scoped) around every harness streaming query. RocksDB
 #: changelog checkpointing uploads the per-batch CHANGELOG instead of

@@ -48,13 +48,17 @@ TRIGGER_PHASES = (
 def _trigger_record(progress) -> dict:
     """One trigger's wall phases, plus its state-store commit time summed
     over every store instance — a task sum (8 partitions × 4 stores is 32
-    instances for a stream-stream join), never to be read as wall time."""
+    instances for a stream-stream join), never to be read as wall time —
+    and that instance count, ``state_instances`` (0 for a stateless
+    query)."""
     dm = progress["durationMs"] or {}
+    ops = progress["stateOperators"] or []
     return {
         "batchId": progress["batchId"],
         "durationMs": {k: dm[k] for k in TRIGGER_PHASES if k in dm},
-        "state_commit_ms_tasksum": sum(
-            s["commitTimeMs"] for s in progress["stateOperators"] or []
+        "state_commit_ms_tasksum": sum(s["commitTimeMs"] for s in ops),
+        "state_instances": sum(
+            s.get("numStateStoreInstances", 0) for s in ops
         ),
     }
 

@@ -2,13 +2,21 @@
 
 Reference semantics (``streams/Tables.scala:110-138``): consume a keyed
 changelog in chunks, upsert latest value per key into a RocksDB-backed
-store, expose the materialized view. Here the same contract runs as a
-Structured Streaming query on either state API — ``applyInPandasWithState``
-(:func:`_latest_update`) or ``transformWithStateInPandas``
-(:class:`LatestDeletesProcessor`) — and both run ONE fold,
-:func:`_fold_latest`: the ``(ts, event_id)``-max row per key across
-micro-batches, with an optional tombstone column. The state store persists
-between micro-batches; a foreachBatch upsert sink assembles the final view.
+store, expose the materialized view. Here the same contract — the
+``(ts, event_id)``-max row per key across micro-batches, with an optional
+tombstone column — runs as a Structured Streaming query on one of two
+engines:
+
+- :func:`_native_fold`, Spark's built-in streaming aggregation
+  (``max_by`` in update mode, the batch twin's plan), behind
+  :func:`latest_by_key_streaming`, its salted form and
+  :func:`latest_by_key_streaming_with_deletes`;
+- ``transformWithStateInPandas`` (:class:`LatestDeletesProcessor`, which
+  runs the Python fold :func:`_fold_latest`), behind the ``*_tws``
+  entries and the only engine with a state-store tombstone retention.
+
+The state store persists between micro-batches; a foreachBatch upsert sink
+assembles the final view.
 
 At scale this is the right shape: state is partitioned by key across
 executors (RocksDB state store — configure
@@ -30,7 +38,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
 from fs2_kafka_streams_spark.streaming.conf import (
@@ -45,6 +52,7 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, "
     "event_type string, value double, props string"
 )
+# State schema of LatestDeletesProcessor's ValueState.
 _STATE_SCHEMA = "event_id long, ts_us long, event_type string, value double, props string"
 # deletes-variant state carries the tombstone flag: a tombstone is KEPT in
 # state (with its (ts, event_id)) rather than removed, so a record OLDER
@@ -58,8 +66,8 @@ _STATE_SCHEMA = "event_id long, ts_us long, event_type string, value double, pro
 # engine's ``tombstone_retention`` (event-time timers clear a tombstone
 # once the watermark passes its ts + retention: Kafka's delete.retention.ms,
 # with Kafka's own caveat that a record older than the tombstone arriving
-# AFTER retention can resurrect the key). The applyInPandasWithState
-# engine has no retention hook here; on an unbounded churning key domain
+# AFTER retention can resurrect the key). The native aggregation engine
+# (_native_fold) has no retention hook; on an unbounded churning key domain
 # use the TWS engine with retention, or accept O(keys-ever) state.
 _STATE_SCHEMA_DEAD = _STATE_SCHEMA + ", dead boolean"
 _OUTPUT_SCHEMA = (
@@ -82,6 +90,18 @@ def _changelog_source(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(path)
     )
+
+
+def _id_sort_keys(ids: np.ndarray, nulls_first: bool) -> tuple:
+    """``np.lexsort`` keys (minor first) ordering an ``event_id`` column by
+    value, NULLs first or last, for every dtype a fold is handed: int64,
+    float64 with NaN for NULL, or object holding ints and None (which
+    lexsort cannot compare)."""
+    if ids.dtype.kind in "iu":
+        return (ids,)
+    null = pd.isna(ids)
+    vals = np.where(null, 0, ids).astype("int64")
+    return (vals, ~null if nulls_first else null)
 
 
 def _pick_latest(pdf: pd.DataFrame, tombstone_col: str | None = None):
@@ -109,10 +129,8 @@ def _pick_latest(pdf: pd.DataFrame, tombstone_col: str | None = None):
     ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
     ids = pdf["event_id"].to_numpy()
     # max by (ts, id), NULLS FIRST on both: NaT is already the
-    # most-negative int64; a NaN id must order SMALLEST among ts ties
-    # (lexsort places NaN last, so map it to -inf first)
-    idkey = np.where(np.isnan(ids), -np.inf, ids) if ids.dtype.kind == "f" else ids
-    i = int(np.lexsort((idkey, ts_us))[-1])
+    # most-negative int64; a NULL id must order SMALLEST among ts ties
+    i = int(np.lexsort((*_id_sort_keys(ids, nulls_first=True), ts_us))[-1])
 
     def _opt(v, conv):
         return None if pd.isna(v) else conv(v)
@@ -138,9 +156,10 @@ def _fold_rank(cand) -> tuple:
 
 
 def _fold_latest(best, frames, tombstone_col: str | None = None):
-    """The latest-by-key fold every engine here runs: fold one key's
-    micro-batch ``frames`` into its stored state tuple ``best`` (None for a
-    new key) by ``(ts, event_id)``-max. Returns the new best tuple and the
+    """The Python latest-by-key fold of :class:`LatestDeletesProcessor`:
+    fold one key's micro-batch ``frames`` into its stored state tuple
+    ``best`` (None for a new key) by ``(ts, event_id)``-max, the order
+    :func:`_native_fold` keeps in Spark. Returns the new best tuple and the
     ``(frame, index)`` of the row that last displaced the stored one (None
     when the stored tuple still wins)."""
     won = None
@@ -169,63 +188,47 @@ def _view_row(key, best) -> pd.DataFrame:
     return pd.DataFrame(row)
 
 
-def _latest_update(tombstone_col: str | None = None):
-    """``applyInPandasWithState`` update function keeping the (ts,
-    event_id)-max row per key across micro-batches: last-write-wins upsert
-    exactly as the reference's in-memory table (``streams/Table.scala:52-56``),
-    ordered by changelog position — here (ts, event_id). State schema is
-    ``_STATE_SCHEMA``, or ``_STATE_SCHEMA_DEAD`` with a ``tombstone_col``.
-
-    With ``tombstone_col``, a key whose latest change is a delete marker
-    keeps a tombstone MARKER — carrying the delete's own ``(ts, event_id)``
-    — in state and emits a ``_dead`` row so the sink drops the key from the
-    materialized view. Keeping the marker (instead of ``state.remove()``)
-    makes the fold order-insensitive across micro-batches: a record OLDER
-    than the tombstone arriving in a LATER micro-batch loses the
-    comparison and stays dead — identical to the batch MERGE, which keeps
-    the (ts, event_id)-max tombstone (``operators/incremental.py``). A
-    record NEWER than the tombstone re-inserts the key, as on a compacted
-    topic. The kept marker makes dead-key state O(keys-ever-seen) on this
-    engine (see the ``_STATE_SCHEMA_DEAD`` retention note — the typed-state
-    engine's ``tombstone_retention`` is the state GC;
-    :func:`compact_upsert_log` reclaims the SINK log only).
-
-    This drives the API the reference exposes but never itself emits
-    (``Table.delete``, ``streams/Table.scala:31``; its ``Tables.scala``
-    changelog is upsert-only — SURVEY invariant 6). Duality-tested —
-    including the out-of-order late-record case — in
-    tests/test_streaming_duality.py::test_streaming_deletes_match_batch_merge.
-    """
-
-    def update(key, pdf_iter, state: GroupState):
-        stored = tuple(state.get) if state.exists else None
-        best, _ = _fold_latest(stored, pdf_iter, tombstone_col)
-        if best is not None:
-            state.update(best)
-            yield _view_row(key, best)
-
-    return update
-
-
-def _apws_fold(
+def _native_fold(
     src: DataFrame, group_cols: list[str], tombstone_col: str | None = None
 ) -> DataFrame:
-    """The applyInPandasWithState engine: :func:`_latest_update` over
-    ``src`` grouped by ``group_cols``, with the state and output schemas
-    of its tombstone mode."""
-    dead = tombstone_col is not None
-    return src.groupBy(*group_cols).applyInPandasWithState(
-        _latest_update(tombstone_col),
-        outputStructType=_OUTPUT_SCHEMA_DEAD if dead else _OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA_DEAD if dead else _STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """The upsert engine of the latest-by-key streaming queries: Spark's
+    built-in streaming aggregation, ``max_by`` of the row by
+    ``(ts, event_id)`` per ``group_cols`` in update mode — the batch twin's
+    plan (``operators/latest_by_key.py``) kept across micro-batches in the
+    state store, with no Python worker on the path. The state holds one
+    ``max_by`` buffer per group (``read_table_state`` reads it back); each
+    trigger emits the current best row of every group it touched.
+
+    NULL ordering is the batch fold's: the ``struct(ts, event_id)``
+    comparison puts a NULL ts or a NULL (unkeyed) event_id FIRST, so it
+    loses every tie against a real value.
+
+    With ``tombstone_col``, the delete flag rides in the picked row as
+    ``_dead`` (a NULL flag is live, as in the batch MERGE), so a tombstone
+    stays in state with its own ``(ts, event_id)``: a record OLDER than the
+    tombstone arriving in a LATER micro-batch loses the comparison and the
+    key stays dead, while a NEWER record re-inserts it, as on a compacted
+    topic. This drives ``Table.delete`` (``streams/Table.scala:31``), which
+    the reference exposes but its upsert-only ``Tables.scala`` changelog
+    never emits. Duality-tested against the batch MERGE, out-of-order late
+    records included, in tests/test_streaming_duality.py.
+
+    Output is ``_OUTPUT_SCHEMA`` (plus ``_dead``): group columns other than
+    ``user_id`` — the salt — are dropped."""
+    value_cols = ["event_id", "ts", "event_type", "value", "props"]
+    if tombstone_col is not None:
+        src = src.withColumn(
+            "_dead", F.coalesce(F.col(tombstone_col), F.lit(False))
+        )
+        value_cols.append("_dead")
+    return latest_by_key(
+        src, group_cols, ["ts", "event_id"], value_cols, unique_order=True
+    ).drop(*[c for c in group_cols if c != "user_id"])
 
 
 try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
     # The API's state server speaks protobuf — require it up front so an
-    # environment without it degrades to applyInPandasWithState instead of
+    # environment without it keeps the native aggregation (q38) instead of
     # crashing the driver worker. When the real distribution is absent the
     # vendored pure-Python wire-format shim (vendor/protobuf_shim) takes
     # over — PB_MODE records which one is active ("real" | "shim" | "none").
@@ -238,16 +241,16 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class LatestDeletesProcessor(StatefulProcessor):
-        """StatefulProcessor for ``transformWithStateInPandas``: the same
-        :func:`_fold_latest` upsert as :func:`_latest_update`, on the newer
-        arbitrary-state API with a typed ValueState handle — the closest
+        """StatefulProcessor for ``transformWithStateInPandas``: the
+        :func:`_fold_latest` upsert, on the newer arbitrary-state API with
+        a typed ValueState handle — the closest
         Spark analogue of the reference's typed RocksDB table
         (``streams/Table.scala:115-137``, ``Key.scala:3-17``).
         ``tombstone_col=None`` is the plain upsert; with a tombstone column
         the (ts, event_id)-max change wins and a delete marker is KEPT in
         the ValueState (with its ordering tuple) so a late older record
         cannot resurrect the key — duality-tested against the
-        applyInPandasWithState engine and the batch MERGE (``Table.delete``,
+        native aggregation engine and the batch MERGE (``Table.delete``,
         ``streams/Table.scala:31``).
 
         ``retention_us`` (requires a tombstone column, event-time mode and
@@ -448,7 +451,8 @@ def latest_by_key_tws_with_deletes(
 
 #: Key-bucket count for the upsert sink's partitioned layout. At 100 TB this
 #: becomes O(state partitions) so each bucket's compaction is an independent
-#: task; 8 matches the pinned local stream-state partition count.
+#: task. Locally 8 bounds the files one epoch appends (≤ 8, whatever the
+#: state-partition count ``conf.STREAM_STATE_PARTITIONS`` picks).
 SINK_BUCKETS = 8
 
 
@@ -722,7 +726,7 @@ def latest_by_key_streaming(
     afterwards via :func:`read_table_state` (A10 interactive reads); pass
     ``sink_dir`` to keep the upsert log for :func:`compact_upsert_log`."""
     src = _changelog_source(spark, replay_dir(sf_dir, "events"))
-    updates = _apws_fold(src, ["user_id"])
+    updates = _native_fold(src, ["user_id"])
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir
     )
@@ -741,9 +745,11 @@ def latest_by_key_streaming_salted(
     SCALE.md "Skew axis" prescribes, as a real operator.
 
     The single-state fold (:func:`latest_by_key_streaming`) funnels EVERY
-    row of a key through one state group per trigger — on a Zipf-tail
-    corpus the hot key's group is the whole trigger's critical path (one
-    Arrow round-trip carrying 95% of the batch, measured in SCALE.md).
+    row of a key into one state group per trigger. Its native aggregation
+    already pre-reduces a hot key to one partial row per input task before
+    the state shuffle; on the ``applyInPandasWithState`` engine it replaced,
+    the hot group was the whole trigger's critical path (one Arrow
+    round-trip carrying 95% of the batch, measured in SCALE.md).
     Here each row scatters to one of ``salt`` sub-groups by a
     DETERMINISTIC row hash (``operators/joins.py::deterministic_salt`` on
     ``(event_id, ts)``; never ``spark_partition_id`` — retry-safe), the
@@ -768,12 +774,13 @@ def latest_by_key_streaming_salted(
     celebrity users; the production pattern, since a changelog's hot keys
     are stable and observable): everything else keeps ``_salt = 0``, so
     the state-group count stays ≈ O(keys) + salt × |hot_keys|. This
-    matters, measured: full-row salting multiplies the PER-GROUP Arrow
-    round-trip overhead across every cold key each trigger — at 6M
-    events / hot95 the full-salt fold was 2.6× SLOWER per trigger (p50
-    2.3 s → 5.9 s) than unsalted because 1,500 key groups became 12,000,
-    while hot-only salting spreads the one hot group without touching the
-    cold 1,499 (numbers in SCALE.md "Skew axis"). ``None`` salts every
+    mattered, measured on the ``applyInPandasWithState`` engine: full-row
+    salting multiplied the PER-GROUP Arrow round-trip overhead across
+    every cold key each trigger — at 6M events / hot95 the full-salt fold
+    was 2.6× SLOWER per trigger (p50 2.3 s → 5.9 s) than unsalted because
+    1,500 key groups became 12,000, while hot-only salting spreads the one
+    hot group without touching the cold 1,499 (numbers in SCALE.md "Skew
+    axis"). ``None`` salts every
     row — only sensible when most keys are hot or the key domain is tiny.
     Pick ``salt`` ≈ the per-executor core count the hot key should fan
     out to.
@@ -802,7 +809,7 @@ def latest_by_key_streaming_salted(
             .otherwise(F.lit(0))
             .cast("int")
         )
-    updates = _apws_fold(
+    updates = _native_fold(
         src.withColumn("_salt", row_salt), ["user_id", "_salt"]
     )
     return _run_upsert_sink(
@@ -832,7 +839,7 @@ def latest_by_key_streaming_with_deletes(
     src = _changelog_source(
         spark, replay_path, EVENTS_SCHEMA + f", {tombstone_col} boolean"
     )
-    updates = _apws_fold(src, ["user_id"], tombstone_col)
+    updates = _native_fold(src, ["user_id"], tombstone_col)
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
         row_schema=_OUTPUT_SCHEMA_DEAD, dead_col="_dead",
@@ -851,20 +858,7 @@ def read_table_state(spark: SparkSession, checkpoint: str) -> DataFrame:
     over it (partition-pruned by the state store layout at scale).
     """
     raw = spark.read.format("statestore").load(checkpoint)
-    # applyInPandasWithState persists (key struct, value struct) rows with
-    # the user state nested under value.groupState; ts is epoch micros
-    # (state schema, _STATE_SCHEMA).
-    st = F.col("value.groupState")
-    # NTZ via timestampadd on an NTZ epoch literal — timestamp_micros()
-    # would build an instant whose NTZ cast shifts by the session TZ
-    return raw.select(
-        F.col("key.user_id").alias("user_id"),
-        st.getField("event_id").alias("event_id"),
-        F.expr(
-            "timestampadd(MICROSECOND, value.groupState.ts_us, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-        ).alias("ts"),
-        st.getField("event_type").alias("event_type"),
-        st.getField("value").alias("value"),
-        st.getField("props").alias("props"),
-    )
+    # the aggregation persists (key struct, value struct) rows; the value
+    # is the max_by buffer, whose picked row (already typed: ts is NTZ)
+    # sits under valueWithExtremumOrdering (see _native_fold)
+    return raw.select("key.user_id", "value.valueWithExtremumOrdering.*")

@@ -286,13 +286,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
         }
 
     def latest_updates(src):
-        return src.groupBy("user_id").applyInPandasWithState(
-            stateful._latest_update(),
-            outputStructType=stateful._OUTPUT_SCHEMA,
-            stateStructType=stateful._STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return stateful._native_fold(src, ["user_id"])
 
     def funnel_updates(src):
         return src.groupBy("user_id").applyInPandasWithState(
@@ -369,13 +363,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
                     .cast("int")
                 )
             salted = src.withColumn("_salt", row_salt)
-            return salted.groupBy("user_id", "_salt").applyInPandasWithState(
-                stateful._latest_update(),
-                outputStructType=stateful._OUTPUT_SCHEMA,
-                stateStructType=stateful._STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+            return stateful._native_fold(salted, ["user_id", "_salt"])
 
         return build
 

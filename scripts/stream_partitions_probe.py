@@ -5,7 +5,8 @@ Usage: python scripts/stream_partitions_probe.py [reps]
 
 r11 measured the stream-stream joins best at 8 state partitions and the
 Python-stateful entries at 16; the SQL-native window aggregations
-(q33b complete-mode, q36 append+watermark) still run at the global 16.
+(q33b complete-mode, q36 append+watermark) ran at the global 16, now
+``conf.STREAM_STATE_PARTITIONS`` (min(cores, 16)).
 This probe interleaves each entry at candidate partition counts (min-of-N
 per variant, same-window pairing) to decide whether their per-trigger
 store open/commit cost also wants fewer, larger stores — the q48/q72

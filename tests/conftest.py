@@ -84,7 +84,7 @@ SLOW_TESTS = {
     "test_salted_fold.py::test_streaming_salted_detected_equals_manual",
     "test_salted_fold.py::test_streaming_salted_restart_appends_to_same_sink",
     "test_streaming_duality.py::test_compaction_concurrent_appends",
-    "test_streaming_duality.py::test_random_changelog_duality[0-apply_in_pandas_with_state]",
+    "test_streaming_duality.py::test_random_changelog_duality[0-native_aggregate]",
     "test_streaming_duality.py::test_random_changelog_duality[0-transform_with_state]",
     "test_streaming_duality.py::test_random_changelog_duality[1-transform_with_state]",
     "test_streaming_duality.py::test_random_changelog_duality[2-transform_with_state]",

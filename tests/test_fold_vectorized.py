@@ -220,7 +220,8 @@ class MockState:
 
 
 def mk(n, rng, null_ids=0.0, null_uid=0.0, null_type=0.0, null_ts=0.0,
-       tie_frac=0.0, unit="us", extreme=False, payload=False):
+       tie_frac=0.0, unit="us", extreme=False, payload=False,
+       obj_ids=False):
     ts_i = rng.integers(1_600_000_000_000_000, 1_600_000_600_000_000, n)
     if extreme:
         # epoch boundary, DuckDB min/max-era, and a normal value — far
@@ -248,8 +249,15 @@ def mk(n, rng, null_ids=0.0, null_uid=0.0, null_type=0.0, null_ts=0.0,
     ts = pd.Series(ts)
     if null_ts:
         ts[rng.random(n) < null_ts] = pd.NaT
+    eid = ids if null_ids else ids.astype("int64")
+    if obj_ids:
+        # object dtype, Python ints and None: what a state API may hand a
+        # fold for a nullable long column
+        eid = np.array(
+            [None if np.isnan(x) else int(x) for x in ids], dtype=object
+        )
     d = {
-        "event_id": ids if null_ids else ids.astype("int64"),
+        "event_id": eid,
         "ts": ts,
         "user_id": uid if null_uid else uid.astype("int64"),
         "event_type": et,
@@ -274,6 +282,7 @@ def _rand_kw(rng):
         tie_frac=float(rng.choice([0, 0.5, 1.0])),
         unit=str(rng.choice(["us", "ns"])),
         extreme=bool(rng.choice([False, False, True])),
+        obj_ids=bool(rng.choice([False, True])),
     )
 
 

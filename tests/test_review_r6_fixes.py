@@ -364,12 +364,9 @@ def test_upsert_sink_epochs_monotone_across_runs(spark, tmp_path):
     from tests.conftest import write_replay_files
     from fs2_kafka_streams_spark.streaming.stateful import (
         _run_upsert_sink,
-        _latest_update,
-        _STATE_SCHEMA,
-        _OUTPUT_SCHEMA,
+        _native_fold,
         EVENTS_SCHEMA,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     def mk(eid, us, val):
         return {
@@ -392,13 +389,7 @@ def test_upsert_sink_epochs_monotone_across_runs(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(rep))
         )
-        updates = src.groupBy("user_id").applyInPandasWithState(
-            _latest_update(),
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        updates = _native_fold(src, ["user_id"])
         return _run_upsert_sink(spark, updates, sink_dir=sink)
 
     # run 1: five micro-batches -> epochs 0..4, head ts=50us

@@ -98,3 +98,65 @@ def test_bench_run_entry_cleans_up_and_reports_triggers(spark):
             assert t["durationMs"]["triggerExecution"] >= 0
             assert t["durationMs"]["addBatch"] >= 0
             assert t["state_commit_ms_tasksum"] >= 0
+            # a stream-static join keeps no state store
+            assert t["state_instances"] == 0
+
+
+def test_checkpoint_keeps_its_state_partitions_on_restart(
+    spark, tmp_path, monkeypatch
+):
+    """The partition rule sizes NEW stateful checkpoints only: one first
+    started at 16 state partitions restarts with 16 under the rule — Spark
+    restores ``spark.sql.shuffle.partitions`` from the offset log — and
+    the view still folds both runs' changes."""
+    from fs2_kafka_streams_spark.streaming import run as srun
+    from fs2_kafka_streams_spark.streaming.stateful import (
+        _native_fold,
+        _run_upsert_sink,
+    )
+
+    def frame(i):
+        return pd.DataFrame({
+            "event_id": [i, 100 + i],
+            "ts": pd.to_datetime([1_000_000 * i] * 2, unit="us"),
+            "user_id": [i % 2, 2],
+            "event_type": ["view", "click"],
+            "value": [float(i), float(100 + i)],
+            "props": ["{}", "{}"],
+        })
+
+    rep = tmp_path / "rep"
+    ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "sink")
+
+    def drain():
+        src = (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .option("maxFilesPerTrigger", 2)
+            .parquet(str(rep))
+        )
+        view = _run_upsert_sink(
+            spark, _native_fold(src, ["user_id"]), checkpoint=ckpt,
+            sink_dir=sink,
+        )
+        triggers = srun.RUN_TRACE[-1]["triggers"]
+        return view, {t["state_instances"] for t in triggers}
+
+    write_replay_files(rep, [frame(0), frame(1)])
+    with monkeypatch.context() as m:
+        m.setitem(sconf.STREAM_PERF_CONF, "spark.sql.shuffle.partitions", "16")
+        _, first = drain()
+    assert first == {16}
+
+    # two more changes arrive; the restart runs under the rule
+    for i in (2, 3):
+        frame(i).astype({"ts": "datetime64[us]"}).to_parquet(
+            rep / f"part-{i:02d}.parquet", index=False
+        )
+    assert sconf.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] == (
+        sconf.STREAM_STATE_PARTITIONS
+    )
+    view, second = drain()
+    assert second == {16}
+    assert sorted((r.user_id, r.event_id) for r in view.collect()) == [
+        (0, 2), (1, 3), (2, 103),
+    ]

@@ -145,6 +145,78 @@ def test_statestore_interactive_read(spark, tmp_path):
     assert s_rows == b_rows and len(s_rows) > 0
 
 
+def test_q75_cache_key_skips_other_engine_checkpoint(spark, tmp_path):
+    """q75 restarts the checkpoint cached for its source parquet. The cache
+    key carries the fold engine, so a checkpoint cached under the untagged
+    key — written by an earlier engine, with a state layout the
+    aggregation's state-schema check rejects — is left alone, and the
+    entry still matches its oracle."""
+    import hashlib
+    import os
+    import shutil
+
+    from fs2_kafka_streams_spark.queries import load_all
+    from fs2_kafka_streams_spark.queries.extensions import STATE_CKPT_ENGINE
+    from fs2_kafka_streams_spark.streaming.conf import STREAM_PERF_CONF
+    from fs2_kafka_streams_spark.streaming.replay import (
+        CACHE_ROOT,
+        replay_dir,
+    )
+    from fs2_kafka_streams_spark.streaming.run import _drain
+    from fs2_kafka_streams_spark.streaming.stateful import EVENTS_SCHEMA
+    from fs2_kafka_streams_spark.testing import driver_gate
+
+    sf = tmp_path / f"sf_q75key_{uuid.uuid4().hex[:8]}"
+    sf.mkdir()
+    for f in os.listdir(SF_SMOKE):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(SF_SMOKE, f), sf / f)
+    src = os.path.abspath(sf / "events.parquet")
+    st = os.stat(src)
+    ident = f"{src}:{st.st_size}:{int(st.st_mtime)}"
+    root = os.path.join(CACHE_ROOT, "state_ckpt")
+    stale = os.path.join(root, hashlib.md5(ident.encode()).hexdigest())
+    fresh = os.path.join(
+        root, hashlib.md5(f"{STATE_CKPT_ENGINE}:{ident}".encode()).hexdigest()
+    )
+    replay = replay_dir(str(sf), "events")
+    try:
+        # a real checkpoint of another state layout (a per-key count)
+        # over the same changelog, under the untagged key
+        counts = (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .option("maxFilesPerTrigger", 2)
+            .parquet(replay)
+            .groupBy("user_id")
+            .count()
+        )
+        _drain(
+            spark,
+            counts.writeStream.outputMode("update").format("noop"),
+            "stale_engine",
+            STREAM_PERF_CONF,
+            stale,
+        )
+
+        def snapshot():
+            return sorted(
+                (os.path.relpath(os.path.join(d, n), stale),
+                 os.path.getmtime(os.path.join(d, n)))
+                for d, _, names in os.walk(stale)
+                for n in names
+            )
+
+        before = snapshot()
+        assert before
+        gate = driver_gate(spark, str(sf), load_all()["q75_state_reader"])
+        assert gate, gate.why
+        assert snapshot() == before
+        assert os.path.isdir(os.path.join(fresh, "offsets"))
+    finally:
+        for d in (stale, fresh, replay):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_upsert_log_compaction(spark, tmp_path):
     """Kafka-style compaction of the upsert sink log: the materialized view
     is identical before and after, the log shrinks to one row per key, and
@@ -308,7 +380,7 @@ def _deletes_engine(name):
     typed-state one when the TWS gate is closed."""
     from fs2_kafka_streams_spark.streaming import stateful
 
-    if name == "apply_in_pandas_with_state":
+    if name == "native_aggregate":
         return stateful.latest_by_key_streaming_with_deletes
     if not stateful.HAS_TWS:
         pytest.skip("transformWithStateInPandas gate closed (no protobuf)")
@@ -316,13 +388,13 @@ def _deletes_engine(name):
 
 
 @pytest.mark.parametrize(
-    "engine", ["apply_in_pandas_with_state", "transform_with_state"]
+    "engine", ["native_aggregate", "transform_with_state"]
 )
 def test_streaming_deletes_match_batch_merge(spark, tmp_path, engine):
     """Tombstoned changelog: streaming latest-by-key keeping a tombstone
     marker in state ≡ the batch MERGE's tombstone branch
-    (``operators/incremental.py``) — on BOTH state APIs
-    (``applyInPandasWithState`` and ``transformWithStateInPandas``).
+    (``operators/incremental.py``) — on BOTH engines (the native
+    ``max_by`` aggregation and ``transformWithStateInPandas``).
     Covers keys whose head is a tombstone (dropped), keys re-inserted after
     a tombstone, and delete/re-insert sequences crossing micro-batch
     boundaries (2-file triggers over a 5-file replay)."""
@@ -387,15 +459,15 @@ def test_streaming_deletes_match_batch_merge(spark, tmp_path, engine):
 
 
 @pytest.mark.parametrize(
-    "engine", ["apply_in_pandas_with_state", "transform_with_state"]
+    "engine", ["native_aggregate", "transform_with_state"]
 )
 def test_late_old_record_cannot_resurrect_deleted_key(spark, tmp_path, engine):
     """Out-of-order replay: a record OLDER (by (ts, event_id)) than a key's
     tombstone arriving in a LATER micro-batch must NOT resurrect the key —
     the tombstone marker kept in state wins the comparison, exactly as the
     batch MERGE keeps the (ts, event_id)-max tombstone. A record NEWER than
-    the tombstone still re-inserts (compacted-topic semantics). Both state
-    APIs."""
+    the tombstone still re-inserts (compacted-topic semantics). Both
+    engines."""
     import pandas as pd
 
     from fs2_kafka_streams_spark.operators.incremental import apply_changes
@@ -585,14 +657,14 @@ def test_compaction_concurrent_appends(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "engine", ["apply_in_pandas_with_state", "transform_with_state"]
+    "engine", ["native_aggregate", "transform_with_state"]
 )
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_random_changelog_duality(spark, tmp_path, engine, seed):
     """Seeded fuzz of the tombstone-aware streaming fold: a RANDOM
     changelog — duplicate timestamps (event_id tie-breaks), ~25%
     tombstones, rows shuffled into files with no ordering at all — must
-    fold to exactly the batch MERGE's answer on both state APIs. This is
+    fold to exactly the batch MERGE's answer on both engines. This is
     the property the handcrafted cases sample: the (ts, event_id)-max
     comparison with a kept tombstone marker is delivery-order-invariant,
     so ANY permutation of the log across micro-batches converges to the

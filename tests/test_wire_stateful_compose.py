@@ -213,7 +213,6 @@ def test_stateful_fold_survives_topic_revocation(spark, tmp_path):
         STREAM_PERF_CONF,
         pinned_conf,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     t = pq.read_table(f"{SF_SMOKE}/events.parquet").to_pandas()
     broker = tmp_path / "broker"
@@ -236,13 +235,7 @@ def test_stateful_fold_survives_topic_revocation(spark, tmp_path):
         src = decode_wire(wire).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-        upd = src.groupBy("user_id").applyInPandasWithState(
-            stateful._latest_update(),
-            outputStructType=stateful._OUTPUT_SCHEMA,
-            stateStructType=stateful._STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        upd = stateful._native_fold(src, ["user_id"])
         with pinned_conf(spark, dict(STREAM_PERF_CONF)):
             q = (
                 upd.writeStream.outputMode("update")
