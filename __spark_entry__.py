@@ -31,12 +31,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator family from SURVEY.md §2.
 
     The curated registry: its first 50 entries are the driver's
-    correctness window, and variant queries of the same family are merged
-    (see ``fs2_kafka_streams_spark/queries/merged.py``) or written as one
-    query over one scan so the whole surface — including every
-    streaming/UDF/LLM operator — fits inside it; the variants behind the
-    union and keyed merges remain in ``load_all()`` and are pytest-checked
-    individually.
+    correctness window, and the operators of one family are merged into a
+    multi-operator entry (a tagged union or key join of their arms, built
+    next to those arms) or written as one query over one scan, so the
+    whole surface — including every streaming/UDF/LLM operator — fits
+    inside it. ``load_all()`` additionally holds the ``"local"``-tagged
+    specs (the keyed-merge arms and local-only checks), which only the
+    local pytest gate runs.
     """
     return {name: spec.build for name, spec in driver_registry().items()}
 

@@ -7,6 +7,9 @@ come for free. No RDDs, no Python row loops.
 
 from __future__ import annotations
 
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -53,22 +56,29 @@ def q01_scan_project(spark, sf_dir):
 
 
 @query(
-    "q02_filter_conjunctive",
-    oracle="""
-    SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_extendedprice
+    "q02_filter_project",
+    oracle=f"""
+    SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_extendedprice,
+           cast(cast({SQL_REVENUE} as string) as double) AS revenue
     FROM lineitem
     WHERE l_quantity > 30 AND l_discount BETWEEN 0.02 AND 0.08
     """,
-    tags=("filter",),
+    tags=("filter", "project"),
 )
-def q02_filter_conjunctive(spark, sf_dir):
-    """Conjunctive predicates, pushed down to the parquet scan."""
+def q02_filter_project(spark, sf_dir):
+    """Conjunctive pushed-down filter + derived-column projection (merge of
+    q02/q04): the predicate reaches the parquet scan, the revenue expression
+    is computed exactly in decimal."""
     li = _cat(spark, sf_dir).lineitem
     return li.filter(
-        (F.col("l_quantity") > 30)
-        & F.col("l_discount").between(0.02, 0.08)
+        (F.col("l_quantity") > 30) & F.col("l_discount").between(0.02, 0.08)
     ).select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_discount", "l_extendedprice"
+        "l_orderkey",
+        "l_linenumber",
+        "l_quantity",
+        "l_discount",
+        "l_extendedprice",
+        revenue_expr().cast("double").alias("revenue"),
     )
 
 
@@ -97,10 +107,12 @@ def q03_filter_in_null(spark, sf_dir):
            cast(cast({SQL_REVENUE} as string) as double) AS revenue
     FROM lineitem
     """,
-    tags=("project",),
+    tags=("project", "local"),
 )
 def q04_project_expression(spark, sf_dir):
-    """Derived-column projection (revenue), computed exactly in decimal."""
+    """Derived-column projection (revenue), computed exactly in decimal.
+    Local-only: it checks revenue on every lineitem row, q02 only on the
+    rows its filter keeps."""
     li = _cat(spark, sf_dir).lineitem
     return li.select(
         "l_orderkey",
@@ -114,20 +126,59 @@ def q04_project_expression(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
+_JOIN_TYPE_COLS = "c_custkey, c_name, o_orderkey, o_totalprice"
+
+
 @query(
-    "q05_join_inner",
-    oracle="""
-    SELECT o_orderkey, o_totalprice, c_custkey, c_name
-    FROM orders JOIN customer ON o_custkey = c_custkey
+    "q05_join_types",
+    oracle=f"""
+    SELECT 'inner' AS join_type, {_JOIN_TYPE_COLS}
+    FROM customer JOIN orders ON c_custkey = o_custkey
+    UNION ALL
+    SELECT 'left', {_JOIN_TYPE_COLS}
+    FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+    UNION ALL
+    SELECT 'full', {_JOIN_TYPE_COLS}
+    FROM customer FULL OUTER JOIN orders ON c_custkey = o_custkey
+    UNION ALL
+    SELECT 'semi', c_custkey, c_name, NULL, NULL FROM customer
+    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+    UNION ALL
+    SELECT 'anti', c_custkey, c_name, NULL, NULL FROM customer
+    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
     """,
     tags=("join",),
 )
-def q05_join_inner(spark, sf_dir):
-    """Inner equi-join; Catalyst/AQE picks broadcast vs sort-merge by size."""
+def q05_join_types(spark, sf_dir):
+    """The equi-join type family in one entry (merge of q05/q08/q08b/q09/
+    q10): inner, left outer (enrichment misses stay NULL — the reference's
+    ``Option[V] = None``, ``ReadOnlyTableSpec.scala:77-79``), full outer,
+    left semi (EXISTS), left anti (NOT EXISTS), discriminated by
+    ``join_type``. Catalyst/AQE picks broadcast vs sort-merge by size."""
     c = _cat(spark, sf_dir)
-    return c.orders.join(
-        c.customer, F.col("o_custkey") == F.col("c_custkey")
-    ).select("o_orderkey", "o_totalprice", "c_custkey", "c_name")
+    cond = F.col("c_custkey") == F.col("o_custkey")
+    sel = ["c_custkey", "c_name", "o_orderkey", "o_totalprice"]
+
+    def arm(join_type, spark_type):
+        df = c.customer.join(c.orders, cond, spark_type)
+        if spark_type in ("left_semi", "left_anti"):
+            df = df.select(
+                "c_custkey",
+                "c_name",
+                F.lit(None).cast("long").alias("o_orderkey"),
+                F.lit(None).cast("double").alias("o_totalprice"),
+            )
+        else:
+            df = df.select(*sel)
+        return df.select(F.lit(join_type).alias("join_type"), *sel)
+
+    return (
+        arm("inner", "inner")
+        .unionAll(arm("left", "left"))
+        .unionAll(arm("full", "full"))
+        .unionAll(arm("semi", "left_semi"))
+        .unionAll(arm("anti", "left_anti"))
+    )
 
 
 @query(
@@ -170,71 +221,6 @@ def q07_join_multiway_broadcast(spark, sf_dir):
         )
         .select("n_name", "revenue", "n_items", "n_nationkey", "r_name")
     )
-
-
-@query(
-    "q08_join_left_outer",
-    oracle="""
-    SELECT c_custkey, c_name, o_orderkey, o_totalprice
-    FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-    """,
-    tags=("join",),
-)
-def q08_join_left_outer(spark, sf_dir):
-    """Left outer join — customers without orders survive with NULLs
-    (the reference's enrichment-miss semantics: Option[V] = None,
-    ``ReadOnlyTableSpec.scala:77-79``)."""
-    c = _cat(spark, sf_dir)
-    return c.customer.join(
-        c.orders, F.col("c_custkey") == F.col("o_custkey"), "left"
-    ).select("c_custkey", "c_name", "o_orderkey", "o_totalprice")
-
-
-@query(
-    "q08b_join_full_outer",
-    oracle="""
-    SELECT c_custkey, o_orderkey
-    FROM customer FULL OUTER JOIN orders ON c_custkey = o_custkey
-    """,
-    tags=("join",),
-)
-def q08b_join_full_outer(spark, sf_dir):
-    c = _cat(spark, sf_dir)
-    return c.customer.join(
-        c.orders, F.col("c_custkey") == F.col("o_custkey"), "full"
-    ).select("c_custkey", "o_orderkey")
-
-
-@query(
-    "q09_join_semi",
-    oracle="""
-    SELECT c_custkey, c_name FROM customer
-    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """,
-    tags=("join",),
-)
-def q09_join_semi(spark, sf_dir):
-    """Left semi join (EXISTS)."""
-    c = _cat(spark, sf_dir)
-    return c.customer.join(
-        c.orders, F.col("c_custkey") == F.col("o_custkey"), "left_semi"
-    ).select("c_custkey", "c_name")
-
-
-@query(
-    "q10_join_anti",
-    oracle="""
-    SELECT c_custkey, c_name FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """,
-    tags=("join",),
-)
-def q10_join_anti(spark, sf_dir):
-    """Left anti join (NOT EXISTS)."""
-    c = _cat(spark, sf_dir)
-    return c.customer.join(
-        c.orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti"
-    ).select("c_custkey", "c_name")
 
 
 @query(
@@ -387,14 +373,17 @@ def q14_count_distinct(spark, sf_dir):
     )
 
 
-@query(
-    "q15_approx_count_distinct",
-    oracle="""
+_Q15_SQL = """
     SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_exact,
            true AS within_tol
     FROM orders
-    """,
-    tags=("agg", "approx"),
+    """
+
+
+@query(
+    "q15_approx_count_distinct",
+    oracle=_Q15_SQL,
+    tags=("agg", "approx", "local"),
 )
 def q15_approx_count_distinct(spark, sf_dir):
     """HLL++ approximate distinct. The sketch differs between engines, so the
@@ -412,9 +401,7 @@ def q15_approx_count_distinct(spark, sf_dir):
     )
 
 
-@query(
-    "q13c_stats_aggregates",
-    oracle=f"""
+_Q13C_SQL = f"""
     WITH s AS (
       SELECT l_returnflag,
              CAST(count(*) AS BIGINT) AS n,
@@ -435,8 +422,13 @@ def q15_approx_count_distinct(spark, sf_dir):
            CASE WHEN n > 1
                 THEN (sxy - sx * sy / n) / (n - 1) END AS covar_qty_disc
     FROM s
-    """,
-    tags=("agg", "stats"),
+    """
+
+
+@query(
+    "q13c_stats_aggregates",
+    oracle=_Q13C_SQL,
+    tags=("agg", "stats", "local"),
 )
 def q13c_stats_aggregates(spark, sf_dir):
     """Statistics aggregates (variance/stddev/covariance) computed from
@@ -469,16 +461,19 @@ def q13c_stats_aggregates(spark, sf_dir):
     )
 
 
-@query(
-    "q15b_approx_percentile",
-    oracle="""
+_Q15B_SQL = """
     SELECT l_returnflag,
            quantile_cont(l_quantity, 0.5) AS median_exact,
            CASE WHEN quantile_cont(l_quantity, 0.5) IS NOT NULL
                 THEN true END AS within_tol
     FROM lineitem GROUP BY l_returnflag
-    """,
-    tags=("agg", "approx", "percentile"),
+    """
+
+
+@query(
+    "q15b_approx_percentile",
+    oracle=_Q15B_SQL,
+    tags=("agg", "approx", "percentile", "local"),
 )
 def q15b_approx_percentile(spark, sf_dir):
     """Sketch-based percentile (the one-pass mergeable 100 TB path; exact
@@ -518,58 +513,7 @@ def q15b_approx_percentile(spark, sf_dir):
     )
 
 
-@query(
-    "q16_rollup",
-    oracle=f"""
-    SELECT r_name, n_name,
-           {sql_dsum('c_acctbal')} AS sum_bal,
-           CAST(count(*) AS BIGINT) AS n_cust
-    FROM customer
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    GROUP BY ROLLUP (r_name, n_name)
-    """,
-    tags=("agg",),
-)
-def q16_rollup(spark, sf_dir):
-    """ROLLUP grouping sets (region → nation hierarchy)."""
-    c = _cat(spark, sf_dir)
-    return (
-        c.customer.join(
-            F.broadcast(c.nation), F.col("c_nationkey") == F.col("n_nationkey")
-        )
-        .join(F.broadcast(c.region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .rollup("r_name", "n_name")
-        .agg(
-            dsum("c_acctbal").alias("sum_bal"),
-            F.count(F.lit(1)).alias("n_cust"),
-        )
-    )
-
-
-@query(
-    "q16b_cube",
-    oracle=f"""
-    SELECT o_orderstatus, o_orderpriority,
-           {sql_dsum('o_totalprice')} AS sum_price,
-           CAST(count(*) AS BIGINT) AS n_orders
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    """,
-    tags=("agg",),
-)
-def q16b_cube(spark, sf_dir):
-    """CUBE grouping sets."""
-    o = _cat(spark, sf_dir).orders
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        dsum("o_totalprice").alias("sum_price"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-
-
-@query(
-    "q13b_percentiles",
-    oracle="""
+_Q13B_SQL = """
     SELECT l_returnflag,
            quantile_cont(l_quantity, 0.25) AS p25_qty,
            quantile_cont(l_quantity, 0.50) AS median_qty,
@@ -577,8 +521,13 @@ def q16b_cube(spark, sf_dir):
            min(l_extendedprice) AS min_price,
            max(l_extendedprice) AS max_price
     FROM lineitem GROUP BY l_returnflag
-    """,
-    tags=("agg", "percentile"),
+    """
+
+
+@query(
+    "q13b_percentiles",
+    oracle=_Q13B_SQL,
+    tags=("agg", "percentile", "local"),
 )
 def q13b_percentiles(spark, sf_dir):
     """Exact percentiles (sort-based) per group. Cross-engine determinism:
@@ -594,6 +543,141 @@ def q13b_percentiles(spark, sf_dir):
         F.expr("percentile(l_quantity, 0.75)").alias("p75_qty"),
         F.min("l_extendedprice").alias("min_price"),
         F.max("l_extendedprice").alias("max_price"),
+    )
+
+
+@query(
+    "q13b_stats_percentiles",
+    oracle=f"""
+    SELECT * FROM ({_Q13B_SQL.strip()}) a
+    JOIN ({_Q13C_SQL.strip()}) b USING (l_returnflag)
+    JOIN ({_Q15B_SQL.strip()}) c USING (l_returnflag)
+    CROSS JOIN (SELECT n_exact AS acd_exact, within_tol AS acd_within_tol
+                FROM ({_Q15_SQL.strip()})) d
+    """,
+    tags=("agg", "stats", "percentile", "approx"),
+)
+def q13b_stats_percentiles(spark, sf_dir):
+    """Statistics + percentile + approx-sketch aggregates in one entry
+    (merge of q13b/q13c/q15b/q15): exact percentiles, variance/stddev/
+    covariance from exact decimal cross-sums, approx_percentile-within-
+    tolerance, and the global approx_count_distinct-within-tolerance
+    (cross-joined single row, columns renamed acd_*).
+
+    FUSED single-aggregation build (r11 optimization, guide §2.4): the
+    a/b/c variants are all ``groupBy(l_returnflag)`` aggregations of the
+    same lineitem scan — one scan + one shuffle carries every buffer
+    instead of three of each plus two joins. The three exact percentiles
+    and q15b's exact median share ONE sort buffer via
+    ``percentile(col, array(...))`` (same Percentile expression, same
+    interpolation — bit-identical to the scalar calls). Equivalence with
+    the join-merge oracle is total: grouped keys are unique, and the
+    inner join's drop of the NULL-returnflag group is replayed by the
+    pre-aggregation filter. All other expressions are verbatim from the
+    variants (q13c's exact decimal cross-sums and n=1 NULL guard, q15b's
+    discrete-median tolerance contract)."""
+    li = _cat(spark, sf_dir).lineitem.filter(F.col("l_returnflag").isNotNull())
+    q, d_ = dec2("l_quantity"), dec2("l_discount")
+    agg = li.groupBy("l_returnflag").agg(
+        # q13b: one shared sort buffer for all three exact percentiles
+        # (and q15b's median_exact, which is the same 0.5 probe)
+        F.expr("percentile(l_quantity, array(0.25, 0.5, 0.75))").alias(
+            "_pcts"
+        ),
+        F.min("l_extendedprice").alias("min_price"),
+        F.max("l_extendedprice").alias("max_price"),
+        # q13c: exact decimal cross-sums
+        F.count(F.lit(1)).alias("n"),
+        F.sum(q).cast("double").alias("sx"),
+        F.sum(q * q).cast("double").alias("sxx"),
+        F.sum(d_).cast("double").alias("sy"),
+        F.sum(q * d_).cast("double").alias("sxy"),
+        # q15b: bounded sketches (see the variant's accuracy rationale)
+        F.expr("approx_percentile(l_quantity, 0.5, 1000)").alias("_approx"),
+        F.expr("approx_percentile(l_quantity, 0.5, 1000000)").alias(
+            "_exact_disc"
+        ),
+    )
+    n, sx, sxx, sy, sxy = (F.col(c) for c in ["n", "sx", "sxx", "sy", "sxy"])
+    # sample variance undefined for n = 1: explicit NULL on both engines
+    # (q13c's contract — ANSI Spark would throw DIVIDE_BY_ZERO)
+    var = F.when(n > 1, (sxx - sx * sx / n) / (n - 1))
+    abc = agg.select(
+        "l_returnflag",
+        F.col("_pcts")[0].alias("p25_qty"),
+        F.col("_pcts")[1].alias("median_qty"),
+        F.col("_pcts")[2].alias("p75_qty"),
+        "min_price",
+        "max_price",
+        "n",
+        var.alias("var_qty"),
+        F.sqrt(var).alias("stddev_qty"),
+        F.when(n > 1, (sxy - sx * sy / n) / (n - 1)).alias("covar_qty_disc"),
+        F.col("_pcts")[1].alias("median_exact"),
+        (
+            F.abs(F.col("_approx") - F.col("_exact_disc"))
+            <= 0.05 * F.greatest(F.abs(F.col("_exact_disc")), F.lit(1.0))
+        ).alias("within_tol"),
+    )
+    d = q15_approx_count_distinct(spark, sf_dir).select(
+        F.col("n_exact").alias("acd_exact"),
+        F.col("within_tol").alias("acd_within_tol"),
+    )
+    return abc.crossJoin(F.broadcast(d))
+
+
+@query(
+    "q16_rollup_cube",
+    oracle=f"""
+    SELECT 'rollup' AS tag, r_name AS k1, n_name AS k2,
+           {sql_dsum('c_acctbal')} AS agg_sum,
+           CAST(count(*) AS BIGINT) AS agg_n
+    FROM customer
+    JOIN nation ON c_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    GROUP BY ROLLUP (r_name, n_name)
+    UNION ALL
+    SELECT 'cube', o_orderstatus, o_orderpriority,
+           {sql_dsum('o_totalprice')}, CAST(count(*) AS BIGINT)
+    FROM orders
+    GROUP BY CUBE (o_orderstatus, o_orderpriority)
+    """,
+    tags=("agg", "groupingsets"),
+)
+def q16_rollup_cube(spark, sf_dir):
+    """ROLLUP (region → nation hierarchy) + CUBE grouping sets in one entry
+    (merge of q16/q16b), with generic (k1, k2, agg_sum, agg_n) columns and
+    a discriminator tag."""
+    c = _cat(spark, sf_dir)
+    rollup = (
+        c.customer.join(
+            F.broadcast(c.nation), F.col("c_nationkey") == F.col("n_nationkey")
+        )
+        .join(F.broadcast(c.region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .rollup("r_name", "n_name")
+        .agg(
+            dsum("c_acctbal").alias("sum_bal"),
+            F.count(F.lit(1)).alias("n_cust"),
+        )
+    )
+    cube = c.orders.cube("o_orderstatus", "o_orderpriority").agg(
+        dsum("o_totalprice").alias("sum_price"),
+        F.count(F.lit(1)).alias("n_orders"),
+    )
+    return rollup.select(
+        F.lit("rollup").alias("tag"),
+        F.col("r_name").alias("k1"),
+        F.col("n_name").alias("k2"),
+        F.col("sum_bal").alias("agg_sum"),
+        F.col("n_cust").alias("agg_n"),
+    ).unionAll(
+        cube.select(
+            F.lit("cube").alias("tag"),
+            F.col("o_orderstatus").alias("k1"),
+            F.col("o_orderpriority").alias("k2"),
+            F.col("sum_price").alias("agg_sum"),
+            F.col("n_orders").alias("agg_n"),
+        )
     )
 
 
@@ -950,28 +1034,40 @@ def q22_topk_per_group(spark, sf_dir):
     )
 
 
-@query(
-    "q23_sort_limit",
-    oracle="""
+_BY_PRICE_SQL = """
     SELECT l_orderkey, l_linenumber, l_extendedprice
     FROM lineitem
     ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
-    LIMIT 100
+"""
+
+
+@query(
+    "q23_sort_limit_pagination",
+    oracle=f"""
+    SELECT 'top100' AS page, * FROM ({_BY_PRICE_SQL} LIMIT 100)
+    UNION ALL
+    SELECT 'page3', * FROM ({_BY_PRICE_SQL} LIMIT 50 OFFSET 100)
     """,
-    tags=("sort",),
+    tags=("sort", "pagination"),
 )
-def q23_sort_limit(spark, sf_dir):
-    """Global top-100 — Spark plans a TakeOrderedAndProject: each task keeps
-    its local top-100, the driver merges. No global sort materialized."""
+def q23_sort_limit_pagination(spark, sf_dir):
+    """Global top-100 + keyset-free OFFSET/LIMIT pagination in one entry
+    (merge of q23/q23b). Spark plans both as TakeOrderedAndProject: each
+    task keeps its local top-k, the driver merges, and offset() pushes
+    into the same machinery (top-150 kept, 100 skipped). No global sort
+    is materialized; the total order makes both pages deterministic."""
     li = Catalog(spark, sf_dir).lineitem
-    return (
-        li.select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .orderBy(
-            F.col("l_extendedprice").desc(),
-            F.col("l_orderkey"),
-            F.col("l_linenumber"),
-        )
-        .limit(100)
+    by_price = li.select(
+        "l_orderkey", "l_linenumber", "l_extendedprice"
+    ).orderBy(
+        F.col("l_extendedprice").desc(),
+        F.col("l_orderkey"),
+        F.col("l_linenumber"),
+    )
+    top = by_price.limit(100)
+    page = by_price.offset(100).limit(50)
+    return top.select(F.lit("top100").alias("page"), "*").unionAll(
+        page.select(F.lit("page3").alias("page"), "*")
     )
 
 
@@ -982,6 +1078,16 @@ def q23_sort_limit(spark, sf_dir):
 _SETOP_A = "SELECT c_custkey FROM customer WHERE c_acctbal > 5000"
 _SETOP_B = "SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'"
 
+#: (tag, SQL keyword, DataFrame method) per set operation over the same
+#: two customer subsets
+_SETOPS = [
+    ("union_all", "UNION ALL", DataFrame.unionAll),  # bag, no shuffle
+    ("union", "UNION", lambda a, b: a.union(b).distinct()),
+    ("intersect", "INTERSECT", DataFrame.intersect),
+    ("except_all", "EXCEPT ALL", DataFrame.exceptAll),  # multiset
+    ("except", "EXCEPT", DataFrame.subtract),  # set difference, dedup
+]
+
 
 def _setop_sides(spark, sf_dir):
     c = Catalog(spark, sf_dir).customer
@@ -991,45 +1097,26 @@ def _setop_sides(spark, sf_dir):
 
 
 @query(
-    "q24_union_all",
-    oracle=f"{_SETOP_A} UNION ALL {_SETOP_B}",
+    "q24_set_ops",
+    oracle="\nUNION ALL\n".join(
+        f"SELECT '{tag}' AS setop, c_custkey FROM ({_SETOP_A} {kw} {_SETOP_B})"
+        for tag, kw, _ in _SETOPS
+    ),
     tags=("setop",),
 )
-def q24_union_all(spark, sf_dir):
-    """UNION ALL (bag semantics, no shuffle)."""
-    a, b = _setop_sides(spark, sf_dir)
-    return a.unionAll(b)
-
-
-@query(
-    "q24b_union_distinct",
-    oracle=f"{_SETOP_A} UNION {_SETOP_B}",
-    tags=("setop",),
-)
-def q24b_union_distinct(spark, sf_dir):
-    """UNION (distinct)."""
-    a, b = _setop_sides(spark, sf_dir)
-    return a.union(b).distinct()
-
-
-@query(
-    "q24c_intersect",
-    oracle=f"{_SETOP_A} INTERSECT {_SETOP_B}",
-    tags=("setop",),
-)
-def q24c_intersect(spark, sf_dir):
-    a, b = _setop_sides(spark, sf_dir)
-    return a.intersect(b)
-
-
-@query(
-    "q24d_except_all",
-    oracle=f"{_SETOP_A} EXCEPT ALL {_SETOP_B}",
-    tags=("setop",),
-)
-def q24d_except_all(spark, sf_dir):
-    a, b = _setop_sides(spark, sf_dir)
-    return a.exceptAll(b)
+def q24_set_ops(spark, sf_dir):
+    """All five set operations in one entry (merge of q24/q24b/q24c/q24d/
+    q24e): UNION ALL / UNION / INTERSECT / EXCEPT ALL / EXCEPT over the same
+    two customer subsets, discriminated by ``setop``."""
+    return reduce(
+        DataFrame.unionAll,
+        [
+            op(*_setop_sides(spark, sf_dir)).select(
+                F.lit(tag).alias("setop"), "c_custkey"
+            )
+            for tag, _, op in _SETOPS
+        ],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1288,9 +1375,7 @@ def q28_conditional_json(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@query(
-    "q29_array_functions",
-    oracle="""
+_Q29_SQL = """
     WITH per_order AS (
       SELECT l_orderkey,
              coalesce(list(l_linenumber)
@@ -1302,8 +1387,13 @@ def q28_conditional_json(spark, sf_dir):
            CAST(len(lns_raw) AS INTEGER) AS n_lines,
            list_contains(lns_raw, 3) AS has_line3
     FROM per_order
-    """,
-    tags=("array",),
+    """
+
+
+@query(
+    "q29_array_functions",
+    oracle=_Q29_SQL,
+    tags=("array", "local"),
 )
 def q29_array_functions(spark, sf_dir):
     """collect_list + sort_array/size/array_contains (arrays canonicalized
@@ -1332,238 +1422,7 @@ def q29_array_functions(spark, sf_dir):
     )
 
 
-@query(
-    "q29b_explode_roundtrip",
-    oracle="""
-    SELECT l_orderkey, l_linenumber FROM lineitem
-    WHERE l_linenumber IS NOT NULL
-    """,
-    tags=("array", "udtf"),
-)
-def q29b_explode_roundtrip(spark, sf_dir):
-    """explode(collect_list(x)) round-trips to the original rows — the
-    UDTF-shaped lateral view. NULL elements never enter the array
-    (collect_list skips them, q29's contract), so the round-trip is over
-    the non-NULL rows on both engines; a group whose every element is
-    NULL collects to an empty array, which explode drops entirely —
-    exactly the rows the oracle's WHERE excludes."""
-    li = Catalog(spark, sf_dir).lineitem
-    # NO _spread here (r12 measured refusal): unlike q29/q50, the
-    # collect_list partial agg is cheap enough that the added round-robin
-    # exchange LOSES — interleaved A/B mins 1.40 s (plain) vs 1.85 s
-    # (spread) over 6 rounds; see OPTIMIZATION_r12.md "left alone"
-    arrs = li.select("l_orderkey", "l_linenumber").groupBy("l_orderkey").agg(
-        F.collect_list("l_linenumber").alias("lns")
-    )
-    return arrs.select(
-        "l_orderkey", F.explode("lns").alias("l_linenumber")
-    )
-
-
-@query(
-    "q32_dead_letter_split",
-    oracle=f"""
-    WITH payloads AS (
-      SELECT event_type,
-             CASE WHEN event_id % 20 = 0 THEN 'x' || props ELSE props END
-               AS payload
-      FROM events
-    )
-    SELECT event_type,
-           CAST(count(*) FILTER (WHERE {sql_json_strict('payload')}) AS BIGINT)
-             AS n_good,
-           CAST(count(*) FILTER (WHERE NOT {sql_json_strict('payload')}) AS BIGINT)
-             AS n_bad,
-           -- TRY_CAST (r11 cold review): a VALID-JSON payload whose $.k
-           -- is non-numeric ('{{"k": "abc"}}') is a good record with a
-           -- NULL metric, not a crash — the plain CAST threw
-           -- ConversionException here and CAST_INVALID_INPUT on the
-           -- Spark half (ANSI), the exact jagged boundary the decode
-           -- family exists to absorb
-           CAST(sum(CASE WHEN {sql_json_strict('payload')}
-                         THEN TRY_CAST(json_extract_string(payload, '$.k')
-                                       AS INTEGER)
-                    END) AS BIGINT) AS sum_k
-    FROM payloads GROUP BY event_type
-    """,
-    tags=("dlq",),
-)
-def q32_dead_letter_split(spark, sf_dir):
-    """Dead-letter split (A5/``Result[A]``): decode errors stay in-band and
-    are counted, never dropped silently (reference ``model/package.scala:16``,
-    ``streams/Tables.scala:24-27``).
-
-    A deterministic 5% of payloads are mangled (leading garbage — Spark's
-    parser tolerates *trailing* garbage that DuckDB rejects) to exercise the
-    corrupt path. Good/bad is decided by JSON *validity*
-    (``try_parse_json`` ≡ DuckDB ``json_valid``), not by presence of the
-    ``$.k`` field — valid JSON without ``k`` is a good record with a NULL
-    metric, and a NULL payload (like SQL's NULL ``json_valid``) counts in
-    neither bucket.
-    """
-    e = Catalog(spark, sf_dir).events
-    payload = F.when(
-        F.col("event_id") % 20 == 0, F.concat(F.lit("x"), F.col("props"))
-    ).otherwise(F.col("props"))
-    valid = F.try_parse_json(payload).isNotNull()
-    # try_cast mirrors the oracle's TRY_CAST: valid JSON with a
-    # non-numeric $.k is a good record with a NULL metric (r11 cold
-    # review — the plain cast threw under ANSI)
-    k = F.when(valid, F.get_json_object(payload, "$.k").try_cast("int"))
-    return (
-        e.select(
-            "event_type",
-            valid.alias("ok"),
-            payload.isNotNull().alias("present"),
-            k.alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("ok"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_good"),
-            F.sum(
-                F.when(F.col("present") & ~F.col("ok"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_bad"),
-            F.sum("k").alias("sum_k"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Extended SQL surface: SQL front-end, unpivot
-# --------------------------------------------------------------------------
-
-
-_Q49_SQL = """
-SELECT c_custkey, c_name
-FROM customer c
-WHERE EXISTS (
-  SELECT 1 FROM orders o
-  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000
-)
-AND NOT EXISTS (
-  SELECT 1 FROM orders o
-  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-)
-"""
-
-
-@query("q49_exists_subquery", oracle=_Q49_SQL, tags=("sql", "subquery"))
-def q49_exists_subquery(spark, sf_dir):
-    """SQL front-end parity: correlated EXISTS / NOT EXISTS run through
-    ``spark.sql`` verbatim — Catalyst decorrelates both into semi/anti
-    joins (the same physical plan as Q09/Q10)."""
-    Catalog(spark, sf_dir).register_views()
-    return spark.sql(_Q49_SQL)
-
-
-#: The ``big_orders`` CTE body, shared by the oracle string and the Spark
-#: build's one-time materialization (one fragment — no drift possible).
-_Q49B_BIG_SQL = f"""SELECT o_custkey, {sql_dsum('o_totalprice')} AS total_spend
-  FROM orders GROUP BY o_custkey"""
-
-#: Main query with the big_orders relation name templated: the oracle
-#: inlines the CTE; the Spark build points both references (join side AND
-#: the scalar avg subquery) at the materialized temp view.
-_Q49B_MAIN_SQL = """
-SELECT c.c_mktsegment,
-       CAST(count(*) AS BIGINT) AS n_big_spenders
-FROM customer c JOIN {big} b ON c.c_custkey = b.o_custkey
-WHERE b.total_spend > (SELECT avg(total_spend) FROM {big})
-GROUP BY c.c_mktsegment
-"""
-
-_Q49B_SQL = (
-    "\nWITH big_orders AS (\n  "
-    + _Q49B_BIG_SQL
-    + "\n)"
-    + _Q49B_MAIN_SQL.format(big="big_orders")
-)
-
-
-@query("q49b_cte_scalar_subquery", oracle=_Q49B_SQL, tags=("sql", "subquery"))
-def q49b_cte_scalar_subquery(spark, sf_dir):
-    """CTE + uncorrelated scalar subquery through ``spark.sql``: the scalar
-    aggregate becomes a one-row broadcast; the CTE is inlined and optimized
-    like any DataFrame expression. The spend sums are exact decimals, so the
-    avg threshold compare is deterministic cross-engine.
-
-    The CTE is referenced twice (join side + the scalar avg subquery) and
-    Spark inlines CTEs, so the r11 plan ran the orders aggregation TWICE
-    (plan nodes 16-20 and 30-34 in ``plans/r11/q49_subqueries_before.txt``).
-    r12 materializes ``big_orders`` once (guide §2.4) and points both
-    references at the O(customers)-row proxy table; the per-key spend sums
-    are deterministic exact decimals, so computing them once vs twice
-    cannot change any value (oracle unchanged, hash-checked)."""
-    Catalog(spark, sf_dir).register_views()
-    big = spark.sql(_Q49B_BIG_SQL)
-    _materialize(big).createOrReplaceTempView("q49b_big_orders_mat")
-    return spark.sql(_Q49B_MAIN_SQL.format(big="q49b_big_orders_mat"))
-
-
-@query(
-    "q16d_unpivot",
-    oracle="""
-    SELECT c_custkey, metric, val FROM (
-      SELECT c_custkey,
-             CAST(c_acctbal AS DOUBLE) AS acctbal,
-             CAST(c_nationkey AS DOUBLE) AS nationkey
-      FROM customer
-    ) UNPIVOT (val FOR metric IN (acctbal, nationkey))
-    """,
-    tags=("reshape",),
-)
-def q16d_unpivot(spark, sf_dir):
-    """Unpivot (wide→long melt) — the inverse of Q16c's pivot. SQL UNPIVOT
-    (DuckDB) EXCLUDES NULL cells; Spark's DataFrame.unpivot is a melt that
-    KEEPS them (measured on a NULL-bearing corpus, r10 hostile-TPCH
-    sweep) — the explicit filter pins the SQL-standard exclusion on both
-    engines. The unpivoted columns are pre-cast to a common type as
-    unpivot requires."""
-    c = Catalog(spark, sf_dir).customer
-    return (
-        c.select(
-            "c_custkey",
-            F.col("c_acctbal").cast("double").alias("acctbal"),
-            F.col("c_nationkey").cast("double").alias("nationkey"),
-        )
-        .unpivot("c_custkey", ["acctbal", "nationkey"], "metric", "val")
-        .where(F.col("val").isNotNull())
-    )
-
-
-@query(
-    "q27b_bitwise",
-    oracle="""
-    SELECT o_orderstatus,
-           CAST(bit_and(o_orderkey) AS BIGINT) AS all_and,
-           CAST(bit_or(o_orderkey) AS BIGINT) AS all_or,
-           CAST(bit_xor(o_orderkey) AS BIGINT) AS all_xor,
-           CAST(sum(o_orderkey & 255) AS BIGINT) AS sum_low_byte,
-           CAST(sum(o_orderkey >> 4) AS BIGINT) AS sum_shifted
-    FROM orders GROUP BY o_orderstatus
-    """,
-    tags=("scalar", "agg"),
-)
-def q27b_bitwise(spark, sf_dir):
-    """Bitwise scalar ops + bitwise aggregates — exact integer semantics."""
-    o = Catalog(spark, sf_dir).orders
-    k = F.col("o_orderkey")
-    return o.groupBy("o_orderstatus").agg(
-        F.bit_and(k).alias("all_and"),
-        F.bit_or(k).alias("all_or"),
-        F.bit_xor(k).alias("all_xor"),
-        F.sum(k.bitwiseAND(F.lit(255))).alias("sum_low_byte"),
-        F.sum(F.shiftright(k, 4)).alias("sum_shifted"),
-    )
-
-
-@query(
-    "q29c_array_hof",
-    oracle="""
+_Q29C_SQL = """
     WITH per_order AS (
       SELECT l_orderkey,
              coalesce(list(l_quantity
@@ -1585,8 +1444,13 @@ def q27b_bitwise(spark, sf_dir):
            list_reduce(list_prepend(CAST(0 AS DOUBLE), qtys),
                        (acc, x) -> acc + x) AS total
     FROM per_order
-    """,
-    tags=("array", "hof"),
+    """
+
+
+@query(
+    "q29c_array_hof",
+    oracle=_Q29C_SQL,
+    tags=("array", "hof", "local"),
 )
 def q29c_array_hof(spark, sf_dir):
     """Array higher-order functions — transform / filter / exists / forall /
@@ -1649,6 +1513,468 @@ def q29c_array_hof(spark, sf_dir):
     )
 
 
+_Q29D_SQL = """
+    SELECT l_orderkey,
+           string_agg(CAST(l_linenumber AS VARCHAR), ','
+                      ORDER BY l_linenumber, l_quantity) AS lines,
+           CAST(count(*) AS BIGINT) AS n
+    FROM lineitem GROUP BY l_orderkey
+    """
+
+
+@query(
+    "q29d_string_agg",
+    oracle=_Q29D_SQL,
+    tags=("array", "agg", "local"),
+)
+def q29d_string_agg(spark, sf_dir):
+    """Ordered string aggregation (listagg shape): collect, sort by
+    (linenumber, quantity) for determinism under duplicate line numbers,
+    join with a delimiter."""
+    li = Catalog(spark, sf_dir).lineitem
+    return li.groupBy("l_orderkey").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("l_linenumber", "l_quantity"))
+                ),
+                lambda p: p["l_linenumber"].cast("string"),
+            ),
+            ",",
+        ).alias("lines"),
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+@query(
+    "q29_array_hof_agg",
+    oracle=f"""
+    SELECT * FROM ({_Q29_SQL.strip()}) a
+    JOIN ({_Q29C_SQL.strip()}) b USING (l_orderkey)
+    JOIN ({_Q29D_SQL.strip()}) c USING (l_orderkey)
+    """,
+    tags=("array", "hof", "agg"),
+)
+def q29_array_hof_agg(spark, sf_dir):
+    """Array surface (merge of q29/q29c/q29d): collect_list + sort_array/
+    size/array_contains, transform/filter/exists/forall/aggregate, ordered
+    string_agg — one row per order (arrays rendered as joined strings; raw
+    array columns crash the driver canonicalizer).
+
+    FUSED single-aggregation build (r11 optimization, guide §2.4): the
+    three variants are all ``groupBy(l_orderkey)`` aggregations of the
+    same lineitem scan, so the USING join of their outputs is exactly one
+    grouped aggregation carrying all three variants' buffers — one scan +
+    one shuffle instead of three of each plus two joins. Equivalence with
+    the join-merge oracle is total for EVERY corpus: grouped outputs are
+    unique per key, and the inner join's drop of the NULL-key group is
+    replayed by the pre-aggregation ``isNotNull`` filter (pinned on the
+    NULL-bearing corpus in tests/test_review_r10_fixes.py). Every
+    aggregate/post-projection expression is verbatim from the variants
+    (q29's NULL-skip contract, q29c's measure-domain element guard and
+    trunc() casts, q29d's (linenumber, quantity) sort tie-break).
+
+    ``spread`` (guide §2.5) parallelizes the partial collect buffers —
+    a single-row-group scan would otherwise build all four buffers in ONE
+    task; at 100 TB the scan has enough splits and spread is a no-op. The
+    shuffle ships only the three pruned input columns, and every output
+    array is explicitly sorted, so collect order cannot leak through."""
+    li = spread(
+        Catalog(spark, sf_dir)
+        .lineitem.select("l_orderkey", "l_linenumber", "l_quantity")
+        .filter(F.col("l_orderkey").isNotNull())
+    )
+    agg = li.groupBy("l_orderkey").agg(
+        # q29: one collected+sorted linenumber array buffer
+        F.sort_array(F.collect_list("l_linenumber")).alias("_lns"),
+        # q29c: (linenumber, quantity) pairs, measure-domain guarded
+        F.array_sort(
+            F.collect_list(
+                F.when(
+                    measure("l_quantity").isNotNull(),
+                    F.struct("l_linenumber", "l_quantity"),
+                )
+            )
+        ).alias("_pairs"),
+        # q29d: ordered string_agg + group count
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("l_linenumber", "l_quantity"))
+                ),
+                lambda p: p["l_linenumber"].cast("string"),
+            ),
+            ",",
+        ).alias("lines"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    # separate projection so the quantity array materializes once (the
+    # same CollapseProject-keeps-non-cheap-aliases discipline as q43b)
+    qtys = agg.withColumn(
+        "_qtys", F.transform("_pairs", lambda p: p["l_quantity"])
+    )
+    return qtys.select(
+        "l_orderkey",
+        F.array_join(
+            F.transform("_lns", lambda x: x.cast("string")), "|"
+        ).alias("lns"),
+        F.size("_lns").alias("n_lines"),
+        F.array_contains("_lns", 3).alias("has_line3"),
+        F.array_join(
+            F.transform(
+                "_qtys", lambda x: (x * 2).cast("bigint").cast("string")
+            ),
+            "|",
+        ).alias("doubled"),
+        F.array_join(
+            F.transform(
+                F.filter("_qtys", lambda x: x > 25),
+                lambda x: x.cast("bigint").cast("string"),
+            ),
+            "|",
+        ).alias("big"),
+        F.exists("_qtys", lambda x: x > 45).alias("any_huge"),
+        F.forall("_qtys", lambda x: x > 0).alias("all_positive"),
+        F.aggregate(
+            "_qtys", F.lit(0.0), lambda acc, x: acc + x
+        ).alias("total"),
+        "lines",
+        "n",
+    )
+
+
+@query(
+    "q29b_explode_lateral",
+    oracle="""
+    SELECT 'explode' AS src, l_orderkey AS key,
+           CAST(l_linenumber AS VARCHAR) AS val
+    FROM lineitem WHERE l_linenumber IS NOT NULL
+    UNION ALL
+    SELECT 'lateral', o_orderkey, tag
+    FROM (SELECT o_orderkey, unnest([o_orderstatus, o_orderpriority]) AS tag
+          FROM orders)
+    """,
+    tags=("array", "udtf", "sql"),
+)
+def q29b_explode_lateral(spark, sf_dir):
+    """UDTF-shaped row generators (merge of q29b/q49c): explode(collect_list)
+    round-trips to the original rows, and LATERAL VIEW explode runs through
+    the SQL front-end (the UDTF join shape; the oracle is DuckDB's unnest).
+
+    NULL elements never enter the array (collect_list skips them, q29's
+    contract), so the round-trip is over the non-NULL rows on both
+    engines; a group whose every element is NULL collects to an empty
+    array, which explode drops entirely — exactly the rows the oracle's
+    WHERE excludes."""
+    c = Catalog(spark, sf_dir)
+    # NO spread here (r12 measured refusal): unlike q29/q50, the
+    # collect_list partial agg is cheap enough that the added round-robin
+    # exchange LOSES — interleaved A/B mins 1.40 s (plain) vs 1.85 s
+    # (spread) over 6 rounds; see OPTIMIZATION_r12.md "left alone"
+    arrs = c.lineitem.select("l_orderkey", "l_linenumber").groupBy(
+        "l_orderkey"
+    ).agg(F.collect_list("l_linenumber").alias("lns"))
+    ex = arrs.select(
+        "l_orderkey", F.explode("lns").alias("l_linenumber")
+    ).select(
+        F.lit("explode").alias("src"),
+        F.col("l_orderkey").alias("key"),
+        F.col("l_linenumber").cast("string").alias("val"),
+    )
+    c.register_views()
+    lat = spark.sql(
+        """
+        SELECT o_orderkey, tag
+        FROM orders
+        LATERAL VIEW explode(array(o_orderstatus, o_orderpriority)) t AS tag
+        """
+    ).select(
+        F.lit("lateral").alias("src"),
+        F.col("o_orderkey").alias("key"),
+        F.col("tag").alias("val"),
+    )
+    return ex.unionAll(lat)
+
+
+_Q32_SQL = f"""
+    WITH payloads AS (
+      SELECT event_type,
+             CASE WHEN event_id % 20 = 0 THEN 'x' || props ELSE props END
+               AS payload
+      FROM events
+    )
+    SELECT event_type,
+           CAST(count(*) FILTER (WHERE {sql_json_strict('payload')}) AS BIGINT)
+             AS n_good,
+           CAST(count(*) FILTER (WHERE NOT {sql_json_strict('payload')}) AS BIGINT)
+             AS n_bad,
+           -- TRY_CAST (r11 cold review): a VALID-JSON payload whose $.k
+           -- is non-numeric ('{{"k": "abc"}}') is a good record with a
+           -- NULL metric, not a crash — the plain CAST threw
+           -- ConversionException here and CAST_INVALID_INPUT on the
+           -- Spark half (ANSI), the exact jagged boundary the decode
+           -- family exists to absorb
+           CAST(sum(CASE WHEN {sql_json_strict('payload')}
+                         THEN TRY_CAST(json_extract_string(payload, '$.k')
+                                       AS INTEGER)
+                    END) AS BIGINT) AS sum_k
+    FROM payloads GROUP BY event_type
+    """
+
+
+@query(
+    "q32_dead_letter_split",
+    oracle=_Q32_SQL,
+    tags=("dlq", "local"),
+)
+def q32_dead_letter_split(spark, sf_dir):
+    """Dead-letter split (A5/``Result[A]``): decode errors stay in-band and
+    are counted, never dropped silently (reference ``model/package.scala:16``,
+    ``streams/Tables.scala:24-27``).
+
+    A deterministic 5% of payloads are mangled (leading garbage — Spark's
+    parser tolerates *trailing* garbage that DuckDB rejects) to exercise the
+    corrupt path. Good/bad is decided by JSON *validity*
+    (``try_parse_json`` ≡ DuckDB ``json_valid``), not by presence of the
+    ``$.k`` field — valid JSON without ``k`` is a good record with a NULL
+    metric, and a NULL payload (like SQL's NULL ``json_valid``) counts in
+    neither bucket.
+    """
+    e = Catalog(spark, sf_dir).events
+    payload = F.when(
+        F.col("event_id") % 20 == 0, F.concat(F.lit("x"), F.col("props"))
+    ).otherwise(F.col("props"))
+    valid = F.try_parse_json(payload).isNotNull()
+    # try_cast mirrors the oracle's TRY_CAST: valid JSON with a
+    # non-numeric $.k is a good record with a NULL metric (r11 cold
+    # review — the plain cast threw under ANSI)
+    k = F.when(valid, F.get_json_object(payload, "$.k").try_cast("int"))
+    return (
+        e.select(
+            "event_type",
+            valid.alias("ok"),
+            payload.isNotNull().alias("present"),
+            k.alias("k"),
+        )
+        .groupBy("event_type")
+        .agg(
+            F.sum(F.when(F.col("ok"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_good"),
+            F.sum(
+                F.when(F.col("present") & ~F.col("ok"), 1).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_bad"),
+            F.sum("k").alias("sum_k"),
+        )
+    )
+
+
+_Q30B_SQL = """
+    SELECT event_type, CAST(count(*) * 2 AS BIGINT) AS doubled
+    FROM events WHERE event_type IS NOT NULL
+    GROUP BY event_type HAVING count(*) * 2 > 100
+    """
+
+
+@query(
+    "q30b_map_hof",
+    oracle=_Q30B_SQL,
+    tags=("map", "hof", "local"),
+)
+def q30b_map_hof(spark, sf_dir):
+    """Map higher-order functions: build a status→count map, double the
+    values (transform_values), drop small entries (map_filter), explode
+    back to rows. The oracle computes the same result relationally — the
+    HOFs are the Spark surface under test.
+
+    A NULL status cannot ride the map: Spark maps reject NULL keys by
+    definition ([NULL_MAP_KEY] at runtime, found by the r10 NULL-key
+    sweep) — the exclusion is explicit here and replayed in the oracle."""
+    e = Catalog(spark, sf_dir).events.filter(F.col("event_type").isNotNull())
+    counts = e.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    as_map = counts.agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("event_type", "n"))
+        ).alias("m")
+    )
+    transformed = as_map.select(
+        F.map_filter(
+            F.transform_values("m", lambda k, v: v * 2),
+            lambda k, v: v > 100,
+        ).alias("m")
+    )
+    return transformed.select(
+        F.explode(F.map_entries("m")).alias("e")
+    ).select(
+        F.col("e.key").alias("event_type"),
+        F.col("e.value").alias("doubled"),
+    )
+
+
+@query(
+    "q32_dlq_map_hof",
+    oracle=f"""
+    SELECT * FROM ({_Q32_SQL.strip()}) a
+    LEFT JOIN ({_Q30B_SQL.strip()}) b USING (event_type)
+    """,
+    tags=("dlq", "map", "hof"),
+)
+def q32_dlq_map_hof(spark, sf_dir):
+    """Dead-letter split + map higher-order functions (merge of q32/q30b),
+    both keyed by event_type. The map_filter drops small types, so the
+    left join surfaces them as NULL doubled — the HOF semantics survive
+    the merge."""
+    return q32_dead_letter_split(spark, sf_dir).join(
+        q30b_map_hof(spark, sf_dir), ["event_type"], "left"
+    )
+
+
+# --------------------------------------------------------------------------
+# Extended SQL surface: SQL front-end, unpivot
+# --------------------------------------------------------------------------
+
+
+_Q49_SQL = """
+SELECT c_custkey, c_name
+FROM customer c
+WHERE EXISTS (
+  SELECT 1 FROM orders o
+  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000
+)
+AND NOT EXISTS (
+  SELECT 1 FROM orders o
+  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
+)
+"""
+
+
+#: The ``big_orders`` CTE body, shared by the oracle string and the Spark
+#: build's one-time materialization (one fragment — no drift possible).
+_Q49B_BIG_SQL = f"""SELECT o_custkey, {sql_dsum('o_totalprice')} AS total_spend
+  FROM orders GROUP BY o_custkey"""
+
+#: Main query with the big_orders relation name templated: the oracle
+#: inlines the CTE; the Spark build points both references (join side AND
+#: the scalar avg subquery) at the materialized temp view.
+_Q49B_MAIN_SQL = """
+SELECT c.c_mktsegment,
+       CAST(count(*) AS BIGINT) AS n_big_spenders
+FROM customer c JOIN {big} b ON c.c_custkey = b.o_custkey
+WHERE b.total_spend > (SELECT avg(total_spend) FROM {big})
+GROUP BY c.c_mktsegment
+"""
+
+_Q49B_SQL = (
+    "\nWITH big_orders AS (\n  "
+    + _Q49B_BIG_SQL
+    + "\n)"
+    + _Q49B_MAIN_SQL.format(big="big_orders")
+)
+
+
+@query(
+    "q49_subqueries",
+    oracle=f"""
+    SELECT 'exists' AS tag, c_name AS k, CAST(c_custkey AS BIGINT) AS n
+    FROM ({_Q49_SQL})
+    UNION ALL
+    SELECT 'cte_scalar', c_mktsegment, n_big_spenders
+    FROM ({_Q49B_SQL})
+    """,
+    tags=("sql", "subquery"),
+)
+def q49_subqueries(spark, sf_dir):
+    """SQL front-end subquery surface (merge of q49/q49b), both arms run
+    through ``spark.sql`` verbatim:
+
+    - correlated EXISTS / NOT EXISTS: Catalyst decorrelates both into
+      semi/anti joins (the same physical plan as q05's semi/anti arms);
+    - a CTE with an uncorrelated scalar subquery: the scalar aggregate
+      becomes a one-row broadcast. The spend sums are exact decimals, so
+      the avg threshold compare is deterministic cross-engine.
+
+    The CTE is referenced twice (join side + the scalar avg subquery) and
+    Spark inlines CTEs, so the r11 plan ran the orders aggregation TWICE
+    (plan nodes 16-20 and 30-34 in ``plans/r11/q49_subqueries_before.txt``).
+    r12 materializes ``big_orders`` once (guide §2.4) and points both
+    references at the O(customers)-row proxy table; the per-key spend sums
+    are deterministic exact decimals, so computing them once vs twice
+    cannot change any value (oracle unchanged, hash-checked)."""
+    Catalog(spark, sf_dir).register_views()
+    exists = spark.sql(_Q49_SQL).select(
+        F.lit("exists").alias("tag"),
+        F.col("c_name").alias("k"),
+        F.col("c_custkey").cast("long").alias("n"),
+    )
+    big = spark.sql(_Q49B_BIG_SQL)
+    _materialize(big).createOrReplaceTempView("q49b_big_orders_mat")
+    cte = spark.sql(_Q49B_MAIN_SQL.format(big="q49b_big_orders_mat")).select(
+        F.lit("cte_scalar").alias("tag"),
+        F.col("c_mktsegment").alias("k"),
+        F.col("n_big_spenders").alias("n"),
+    )
+    return exists.unionAll(cte)
+
+
+@query(
+    "q16d_unpivot",
+    oracle="""
+    SELECT c_custkey, metric, val FROM (
+      SELECT c_custkey,
+             CAST(c_acctbal AS DOUBLE) AS acctbal,
+             CAST(c_nationkey AS DOUBLE) AS nationkey
+      FROM customer
+    ) UNPIVOT (val FOR metric IN (acctbal, nationkey))
+    """,
+    tags=("reshape",),
+)
+def q16d_unpivot(spark, sf_dir):
+    """Unpivot (wide→long melt) — the inverse of Q16c's pivot. SQL UNPIVOT
+    (DuckDB) EXCLUDES NULL cells; Spark's DataFrame.unpivot is a melt that
+    KEEPS them (measured on a NULL-bearing corpus, r10 hostile-TPCH
+    sweep) — the explicit filter pins the SQL-standard exclusion on both
+    engines. The unpivoted columns are pre-cast to a common type as
+    unpivot requires."""
+    c = Catalog(spark, sf_dir).customer
+    return (
+        c.select(
+            "c_custkey",
+            F.col("c_acctbal").cast("double").alias("acctbal"),
+            F.col("c_nationkey").cast("double").alias("nationkey"),
+        )
+        .unpivot("c_custkey", ["acctbal", "nationkey"], "metric", "val")
+        .where(F.col("val").isNotNull())
+    )
+
+
+@query(
+    "q27b_bitwise",
+    oracle="""
+    SELECT o_orderstatus,
+           CAST(bit_and(o_orderkey) AS BIGINT) AS all_and,
+           CAST(bit_or(o_orderkey) AS BIGINT) AS all_or,
+           CAST(bit_xor(o_orderkey) AS BIGINT) AS all_xor,
+           CAST(sum(o_orderkey & 255) AS BIGINT) AS sum_low_byte,
+           CAST(sum(o_orderkey >> 4) AS BIGINT) AS sum_shifted
+    FROM orders GROUP BY o_orderstatus
+    """,
+    tags=("scalar", "agg"),
+)
+def q27b_bitwise(spark, sf_dir):
+    """Bitwise scalar ops + bitwise aggregates — exact integer semantics."""
+    o = Catalog(spark, sf_dir).orders
+    k = F.col("o_orderkey")
+    return o.groupBy("o_orderstatus").agg(
+        F.bit_and(k).alias("all_and"),
+        F.bit_or(k).alias("all_or"),
+        F.bit_xor(k).alias("all_xor"),
+        F.sum(k.bitwiseAND(F.lit(255))).alias("sum_low_byte"),
+        F.sum(F.shiftright(k, 4)).alias("sum_shifted"),
+    )
+
+
 @query(
     "q07b_tpch_q5_shape",
     oracle=f"""
@@ -1683,133 +2009,3 @@ def q07b_tpch_q5_shape(spark, sf_dir):
         .groupBy("n_name")
         .agg(dsum_expr(revenue_expr()).alias("revenue"))
     )
-
-
-@query(
-    "q23b_pagination",
-    oracle="""
-    SELECT l_orderkey, l_linenumber, l_extendedprice
-    FROM lineitem
-    ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
-    LIMIT 50 OFFSET 100
-    """,
-    tags=("sort", "pagination"),
-)
-def q23b_pagination(spark, sf_dir):
-    """Keyset-free pagination: total ORDER BY + OFFSET + LIMIT. Spark's
-    offset() pushes into the same TakeOrdered machinery (top-150 kept, 100
-    skipped) — no full sort. Deterministic because the order is total."""
-    li = Catalog(spark, sf_dir).lineitem
-    return (
-        li.select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .orderBy(
-            F.col("l_extendedprice").desc(),
-            F.col("l_orderkey"),
-            F.col("l_linenumber"),
-        )
-        .offset(100)
-        .limit(50)
-    )
-
-
-@query(
-    "q24e_except_distinct",
-    oracle=f"{_SETOP_A} EXCEPT {_SETOP_B}",
-    tags=("setop",),
-)
-def q24e_except_distinct(spark, sf_dir):
-    """EXCEPT (distinct) — set difference with dedup, vs q24d's EXCEPT ALL
-    multiset semantics."""
-    a, b = _setop_sides(spark, sf_dir)
-    return a.subtract(b)
-
-
-@query(
-    "q29d_string_agg",
-    oracle="""
-    SELECT l_orderkey,
-           string_agg(CAST(l_linenumber AS VARCHAR), ','
-                      ORDER BY l_linenumber, l_quantity) AS lines,
-           CAST(count(*) AS BIGINT) AS n
-    FROM lineitem GROUP BY l_orderkey
-    """,
-    tags=("array", "agg"),
-)
-def q29d_string_agg(spark, sf_dir):
-    """Ordered string aggregation (listagg shape): collect, sort by
-    (linenumber, quantity) for determinism under duplicate line numbers,
-    join with a delimiter."""
-    li = Catalog(spark, sf_dir).lineitem
-    return li.groupBy("l_orderkey").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("l_linenumber", "l_quantity"))
-                ),
-                lambda p: p["l_linenumber"].cast("string"),
-            ),
-            ",",
-        ).alias("lines"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@query(
-    "q30b_map_hof",
-    oracle="""
-    SELECT event_type, CAST(count(*) * 2 AS BIGINT) AS doubled
-    FROM events WHERE event_type IS NOT NULL
-    GROUP BY event_type HAVING count(*) * 2 > 100
-    """,
-    tags=("map", "hof"),
-)
-def q30b_map_hof(spark, sf_dir):
-    """Map higher-order functions: build a status→count map, double the
-    values (transform_values), drop small entries (map_filter), explode
-    back to rows. The oracle computes the same result relationally — the
-    HOFs are the Spark surface under test.
-
-    A NULL status cannot ride the map: Spark maps reject NULL keys by
-    definition ([NULL_MAP_KEY] at runtime, found by the r10 NULL-key
-    sweep) — the exclusion is explicit here and replayed in the oracle."""
-    e = Catalog(spark, sf_dir).events.filter(F.col("event_type").isNotNull())
-    counts = e.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    as_map = counts.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("event_type", "n"))
-        ).alias("m")
-    )
-    transformed = as_map.select(
-        F.map_filter(
-            F.transform_values("m", lambda k, v: v * 2),
-            lambda k, v: v > 100,
-        ).alias("m")
-    )
-    return transformed.select(
-        F.explode(F.map_entries("m")).alias("e")
-    ).select(
-        F.col("e.key").alias("event_type"),
-        F.col("e.value").alias("doubled"),
-    )
-
-
-_Q49C_SQL_SPARK = """
-SELECT o_orderkey, tag
-FROM orders
-LATERAL VIEW explode(array(o_orderstatus, o_orderpriority)) t AS tag
-"""
-
-
-@query(
-    "q49c_lateral_view",
-    oracle="""
-    SELECT o_orderkey, unnest([o_orderstatus, o_orderpriority]) AS tag
-    FROM orders
-    """,
-    tags=("sql", "udtf"),
-)
-def q49c_lateral_view(spark, sf_dir):
-    """LATERAL VIEW explode through the SQL front-end (the UDTF join
-    shape); the oracle is DuckDB's unnest."""
-    Catalog(spark, sf_dir).register_views()
-    return spark.sql(_Q49C_SQL_SPARK)

@@ -17,9 +17,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fs2_kafka_streams_spark.canonical import clamp_ts, sql_clamp_ts
 from fs2_kafka_streams_spark.catalog import Catalog
 from fs2_kafka_streams_spark.queries import query
+from fs2_kafka_streams_spark.queries.windows import (
+    _SESSION_SQL,
+    _TUMBLING_SQL,
+    _sessions,
+    _tumbling,
+)
 from fs2_kafka_streams_spark.streaming.replay import replay_dir
 from fs2_kafka_streams_spark.streaming.run import _drain, run_to_memory
 from fs2_kafka_streams_spark.streaming.stateful import EVENTS_SCHEMA
@@ -68,104 +73,62 @@ def q45_stream_table_join(spark, sf_dir):
 
 
 @query(
-    "q35b_session_window_streaming",
+    "q33b_windows_streaming",
     oracle=f"""
-    WITH gaps AS (
-      SELECT user_id, ts,
-             CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL '30 minutes'
-                  OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events WHERE ts IS NOT NULL
-    ), sessions AS (
-      SELECT user_id, ts,
-             sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM gaps
-    )
-    SELECT user_id,
-           min(ts) AS session_start,
-           {sql_clamp_ts("max(ts) + INTERVAL '30 minutes'")} AS session_end,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM sessions GROUP BY user_id, sid
+    SELECT 'tumbling' AS kind, window_start, window_end, user_id, n, sum_value
+    FROM ({_TUMBLING_SQL})
+    UNION ALL
+    SELECT 'session', session_start, session_end, user_id, n_events,
+           CAST(NULL AS DOUBLE)
+    FROM ({_SESSION_SQL})
     """,
     tags=("streaming", "window", "session"),
 )
-def q35b_session_window_streaming(spark, sf_dir):
-    """Sessionization as a REAL streaming query: `session_window` state
-    merges sessions across micro-batches; complete output mode (no
-    watermark, full state) makes the final table equal batch
-    sessionization exactly — the streaming-batch duality check for session
-    state. At scale the same plan runs in append mode with a watermark
-    bounding state; complete mode here isolates the session-merge logic
-    from watermark-trajectory modeling (that part is covered by q36)."""
-    src = _events_stream(spark, sf_dir, files_per_trigger=2)
-    agg = (
-        src.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), F.col("user_id")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            clamp_ts(F.col("w.end")).alias("session_end"),
-            "n_events",
-        )
-    )
-    # 8 state partitions (r12 probe, scripts/stream_partitions_probe.py):
-    # SQL-native window state pays per-trigger store open/commit per
-    # partition and has no Python round-trips to spread — mins 1.79 s
-    # @16 vs 1.59 s @8 (4 loses: 1.83 s, session-merge parallelism pays
-    # here). Same fewer-larger-stores rationale as the q48/q72 joins;
-    # a real cluster sets this higher before first start (conf.py note).
-    return run_to_memory(
-        spark, agg, "q35b_sink", output_mode="complete",
-        extra_conf={"spark.sql.shuffle.partitions": "8"},
-    )
+def q33b_windows_streaming(spark, sf_dir):
+    """REAL streaming windowed aggregations in one entry (merge of
+    q33b/q35b): tumbling-window and session-window state accumulated
+    across micro-batches, each equal to its batch twin in q33 — the
+    stream-batch duality check for window state.
 
+    Complete output mode (no watermark, full state) makes each final table
+    equal the batch result exactly; session state merges sessions across
+    micro-batches. At scale the same plans run in append mode with a
+    watermark bounding state; complete mode here isolates the window and
+    session-merge logic from watermark-trajectory modeling (that part is
+    covered by q36, the append-mode late-drop entry).
 
-@query(
-    "q33b_tumbling_window_streaming",
-    oracle=f"""
-    SELECT {sql_clamp_ts("bk")} AS window_start,
-           {sql_clamp_ts("bk + INTERVAL '5 minutes'")} AS window_end,
-           user_id, n, sum_value
-    FROM (
-      SELECT time_bucket(INTERVAL '5 minutes', ts) AS bk, user_id,
-             CAST(count(*) AS BIGINT) AS n,
-             cast(cast(sum(cast((CASE WHEN abs(value) < 1e14 THEN value END)
-                      as decimal(18,2))) as string) as double) AS sum_value
-      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-    )
-    """,
-    tags=("streaming", "window"),
-)
-def q33b_tumbling_window_streaming(spark, sf_dir):
-    """Tumbling windows as a REAL streaming aggregation (complete mode —
-    window state accumulates across micro-batches; the final table equals
-    the batch q33 exactly). The append-mode + watermark variant with
-    late-data drops is q36."""
-    from fs2_kafka_streams_spark.canonical import dsum, measure
+    8 state partitions (r12 probe, scripts/stream_partitions_probe.py):
+    SQL-native window state pays per-trigger store open/commit per
+    partition and has no Python round-trips to spread — tumbling mins
+    2.16 s @16 vs 1.69 s @8 (4 loses at 1.87 s); session mins 1.79 s @16
+    vs 1.59 s @8 (4 loses: 1.83 s, session-merge parallelism pays here).
+    Same fewer-larger-stores rationale as the q48/q72 joins; a real
+    cluster sets this higher before first start (conf.py note)."""
 
-    src = _events_stream(spark, sf_dir, files_per_trigger=2)
-    agg = (
-        src.groupBy(F.window("ts", "5 minutes").alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             dsum(measure("value")).alias("sum_value"))
-        .select(
-            clamp_ts(F.col("w.start")).alias("window_start"),
-            clamp_ts(F.col("w.end")).alias("window_end"),
-            "user_id",
-            "n",
-            "sum_value",
+    def run(windows, sink):
+        src = _events_stream(spark, sf_dir, files_per_trigger=2)
+        return run_to_memory(
+            spark, windows(src), sink, output_mode="complete",
+            extra_conf={"spark.sql.shuffle.partitions": "8"},
         )
+
+    tumb = run(_tumbling, "q33b_sink").select(
+        F.lit("tumbling").alias("kind"),
+        "window_start",
+        "window_end",
+        "user_id",
+        "n",
+        "sum_value",
     )
-    # 8 state partitions (r12 probe): mins 2.16 s @16 vs 1.69 s @8
-    # (1.28×; 4 loses at 1.87 s) — see q35b's note for the rationale.
-    return run_to_memory(
-        spark, agg, "q33b_sink", output_mode="complete",
-        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    sess = run(_sessions, "q35b_sink").select(
+        F.lit("session").alias("kind"),
+        F.col("session_start").alias("window_start"),
+        F.col("session_end").alias("window_end"),
+        "user_id",
+        F.col("n_events").alias("n"),
+        F.lit(None).cast("double").alias("sum_value"),
     )
+    return tumb.unionAll(sess)
 
 
 _Q48_ORACLE = """
@@ -387,8 +350,8 @@ def stream_stream_join_bucketed(
 
 def session_window_append(spark, sf_dir, delay: str = "10 minutes"):
     """Watermarked APPEND-mode session windows — the 100 TB deployment shape
-    of q35b (complete mode holds all session state forever; append+watermark
-    evicts a session once the watermark passes its end).
+    of q33b's session arm (complete mode holds all session state forever;
+    append+watermark evicts a session once the watermark passes its end).
 
     Time-ordered replay + watermark ⇒ no late data, so the emitted rows are
     exactly the batch sessions whose ``session_end`` ≤ the final watermark

@@ -23,12 +23,10 @@ from fs2_kafka_streams_spark.canonical import (
 from fs2_kafka_streams_spark.queries import query
 
 
-@query(
-    "q33_tumbling_window",
-    oracle=f"""
-    -- group on the RAW bucket, clamp bounds only in the projection:
-    -- bounds past the Arrow ns range are saturated (canonical.clamp_ts,
-    -- r11 fuzz seed 6)
+#: Tumbling-window oracle, shared with the streaming twin (q33b): group on
+#: the RAW bucket, clamp bounds only in the projection — bounds past the
+#: Arrow ns range are saturated (canonical.clamp_ts, r11 fuzz seed 6)
+_TUMBLING_SQL = f"""
     SELECT {sql_clamp_ts("bk")} AS window_start,
            {sql_clamp_ts("bk + INTERVAL '5 minutes'")} AS window_end,
            user_id, n, sum_value
@@ -39,76 +37,10 @@ from fs2_kafka_streams_spark.queries import query
                       as decimal(18,2))) as string) as double) AS sum_value
       FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
     )
-    """,
-    tags=("window", "streaming-shape"),
-)
-def q33_tumbling_window(spark, sf_dir):
-    """Count + sum per 5-minute tumbling window per user.
+"""
 
-    NULL event-time contract (docs/USAGE.md): ``F.window`` generates zero
-    windows for a NULL timestamp, so Spark drops such rows implicitly; the
-    filter makes the drop explicit and the oracle replays it — without it
-    DuckDB's ``time_bucket(NULL)`` emits a NULL-window group Spark never
-    produces (caught by the r10 NULL-corpus sweep)."""
-    e = Catalog(spark, sf_dir).events.filter(F.col("ts").isNotNull())
-    return (
-        e.groupBy(F.window("ts", "5 minutes").alias("w"), F.col("user_id"))
-        # measure(): non-finite/overflow metric values are NULL measures
-        # on both engines (canonical.py) — r10 extreme-numerics sweep
-        .agg(F.count(F.lit(1)).alias("n"),
-             dsum(measure("value")).alias("sum_value"))
-        .select(
-            clamp_ts(F.col("w.start")).alias("window_start"),
-            clamp_ts(F.col("w.end")).alias("window_end"),
-            "user_id",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-@query(
-    "q34_sliding_window",
-    oracle=f"""
-    WITH two AS (SELECT 0 AS off UNION ALL SELECT 1)
-    SELECT {sql_clamp_ts("ws")} AS window_start,
-           {sql_clamp_ts("ws + INTERVAL '10 minutes'")} AS window_end,
-           event_type, n
-    FROM (
-      SELECT time_bucket(INTERVAL '5 minutes', ts)
-               - off * INTERVAL '5 minutes' AS ws,
-             event_type,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events CROSS JOIN two
-      WHERE ts IS NOT NULL
-      GROUP BY 1, 2
-    )
-    """,
-    tags=("window", "streaming-shape"),
-)
-def q34_sliding_window(spark, sf_dir):
-    """Count per 10-minute window sliding every 5 — each event lands in
-    exactly two windows (the oracle materializes both membership copies).
-    NULL event-time rows drop on both engines (q33's contract)."""
-    e = Catalog(spark, sf_dir).events.filter(F.col("ts").isNotNull())
-    return (
-        e.groupBy(
-            F.window("ts", "10 minutes", "5 minutes").alias("w"),
-            F.col("event_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            clamp_ts(F.col("w.start")).alias("window_start"),
-            clamp_ts(F.col("w.end")).alias("window_end"),
-            "event_type",
-            "n",
-        )
-    )
-
-
-@query(
-    "q35_session_window",
-    oracle=f"""
+#: Sessionization oracle (classic gaps-and-islands), shared with q33b
+_SESSION_SQL = f"""
     WITH gaps AS (
       SELECT user_id, ts,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -127,16 +59,46 @@ def q34_sliding_window(spark, sf_dir):
            {sql_clamp_ts("max(ts) + INTERVAL '30 minutes'")} AS session_end,
            CAST(count(*) AS BIGINT) AS n_events
     FROM sessions GROUP BY user_id, sid
-    """,
-    tags=("window", "streaming-shape"),
-)
-def q35_session_window(spark, sf_dir):
-    """Sessionization with a 30-minute inactivity gap (`session_window`);
-    the oracle is the classic gaps-and-islands formulation.
-    NULL event-time rows drop on both engines (q33's contract)."""
-    e = Catalog(spark, sf_dir).events.filter(F.col("ts").isNotNull())
+"""
+
+
+def _timed_events(spark, sf_dir):
+    """The events table without NULL event-time rows.
+
+    NULL event-time contract (docs/USAGE.md): ``F.window`` generates zero
+    windows for a NULL timestamp, so Spark drops such rows implicitly; the
+    filter makes the drop explicit and the oracles replay it — without it
+    DuckDB's ``time_bucket(NULL)`` emits a NULL-window group Spark never
+    produces (caught by the r10 NULL-corpus sweep)."""
+    return Catalog(spark, sf_dir).events.filter(F.col("ts").isNotNull())
+
+
+def _tumbling(events):
+    """Count + sum per 5-minute tumbling window per user (batch or
+    streaming ``events``)."""
     return (
-        e.groupBy(
+        events.groupBy(
+            F.window("ts", "5 minutes").alias("w"), F.col("user_id")
+        )
+        # measure(): non-finite/overflow metric values are NULL measures
+        # on both engines (canonical.py) — r10 extreme-numerics sweep
+        .agg(F.count(F.lit(1)).alias("n"),
+             dsum(measure("value")).alias("sum_value"))
+        .select(
+            clamp_ts(F.col("w.start")).alias("window_start"),
+            clamp_ts(F.col("w.end")).alias("window_end"),
+            "user_id",
+            "n",
+            "sum_value",
+        )
+    )
+
+
+def _sessions(events):
+    """Sessionization with a 30-minute inactivity gap (``session_window``;
+    batch or streaming ``events``)."""
+    return (
+        events.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), F.col("user_id")
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -147,6 +109,75 @@ def q35_session_window(spark, sf_dir):
             "n_events",
         )
     )
+
+
+@query(
+    "q33_time_windows",
+    oracle=f"""
+    SELECT 'tumbling' AS kind, window_start, window_end,
+           CAST(user_id AS VARCHAR) AS key, n, sum_value
+    FROM ({_TUMBLING_SQL})
+    UNION ALL
+    SELECT 'sliding', {sql_clamp_ts("ws")},
+           {sql_clamp_ts("ws + INTERVAL '10 minutes'")}, event_type, n,
+           CAST(NULL AS DOUBLE)
+    FROM (
+      SELECT time_bucket(INTERVAL '5 minutes', ts)
+               - off * INTERVAL '5 minutes' AS ws,
+             event_type,
+             CAST(count(*) AS BIGINT) AS n
+      FROM events CROSS JOIN (SELECT 0 AS off UNION ALL SELECT 1)
+      WHERE ts IS NOT NULL
+      GROUP BY 1, 2
+    )
+    UNION ALL
+    SELECT 'session', session_start, session_end,
+           CAST(user_id AS VARCHAR), n_events, CAST(NULL AS DOUBLE)
+    FROM ({_SESSION_SQL})
+    """,
+    tags=("window", "streaming-shape"),
+)
+def q33_time_windows(spark, sf_dir):
+    """Tumbling + sliding + session time windows in one entry (merge of
+    q33/q34/q35), batch-replayed with the same `F.window` /
+    `F.session_window` expressions Structured Streaming uses for its
+    windowed state (stream-batch duality). The sliding arm counts per
+    10-minute window sliding every 5 — each event lands in exactly two
+    windows (the oracle materializes both membership copies). NULL
+    event-time rows drop on every arm (:func:`_timed_events`)."""
+    tumb = _tumbling(_timed_events(spark, sf_dir)).select(
+        F.lit("tumbling").alias("kind"),
+        "window_start",
+        "window_end",
+        F.col("user_id").cast("string").alias("key"),
+        "n",
+        "sum_value",
+    )
+    slide = (
+        _timed_events(spark, sf_dir)
+        .groupBy(
+            F.window("ts", "10 minutes", "5 minutes").alias("w"),
+            F.col("event_type"),
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.lit("sliding").alias("kind"),
+            clamp_ts(F.col("w.start")).alias("window_start"),
+            clamp_ts(F.col("w.end")).alias("window_end"),
+            F.col("event_type").alias("key"),
+            "n",
+            F.lit(None).cast("double").alias("sum_value"),
+        )
+    )
+    sess = _sessions(_timed_events(spark, sf_dir)).select(
+        F.lit("session").alias("kind"),
+        F.col("session_start").alias("window_start"),
+        F.col("session_end").alias("window_end"),
+        F.col("user_id").cast("string").alias("key"),
+        F.col("n_events").alias("n"),
+        F.lit(None).cast("double").alias("sum_value"),
+    )
+    return tumb.unionAll(slide).unionAll(sess)
 
 
 @query(

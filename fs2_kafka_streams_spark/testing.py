@@ -10,6 +10,9 @@ ever sees it.
 ``sort_values`` over the raw cells, 2-decimal float hash) — the one compare
 ``scripts/driver_sim.py``, the hostile sweeps and the hostile-corpus tests
 run.
+
+:data:`UNION_ARMS` names each arm of a union-merged entry, so the gate can
+check (and name) one arm at a time.
 """
 
 from __future__ import annotations
@@ -270,4 +273,73 @@ def driver_gate(spark, sf_dir: str, spec,
         rows_match=len(sdf) == len(ddf),
         schema_match=sorted(sdf.columns) == sorted(ddf.columns),
         hash_match=driver_hash(sdf) == driver_hash(ddf),
+    )
+
+
+#: The arms of the union-merged entries, each checked on its own under its
+#: former spec name so a failing arm is named: arm -> (merged entry,
+#: discriminator column, value). The merged oracles embed each arm's
+#: oracle verbatim, so an arm is the entry's rows with that value on both
+#: halves. q02 has no discriminator: its conjunctive-filter arm is the
+#: whole entry, which adds one derived column to the filtered rows.
+UNION_ARMS: dict[str, tuple[str, str | None, str | None]] = {
+    "q02_filter_conjunctive": ("q02_filter_project", None, None),
+    "q05_join_inner": ("q05_join_types", "join_type", "inner"),
+    "q08_join_left_outer": ("q05_join_types", "join_type", "left"),
+    "q08b_join_full_outer": ("q05_join_types", "join_type", "full"),
+    "q09_join_semi": ("q05_join_types", "join_type", "semi"),
+    "q10_join_anti": ("q05_join_types", "join_type", "anti"),
+    "q16_rollup": ("q16_rollup_cube", "tag", "rollup"),
+    "q16b_cube": ("q16_rollup_cube", "tag", "cube"),
+    "q23_sort_limit": ("q23_sort_limit_pagination", "page", "top100"),
+    "q23b_pagination": ("q23_sort_limit_pagination", "page", "page3"),
+    "q24_union_all": ("q24_set_ops", "setop", "union_all"),
+    "q24b_union_distinct": ("q24_set_ops", "setop", "union"),
+    "q24c_intersect": ("q24_set_ops", "setop", "intersect"),
+    "q24d_except_all": ("q24_set_ops", "setop", "except_all"),
+    "q24e_except_distinct": ("q24_set_ops", "setop", "except"),
+    "q29b_explode_roundtrip": ("q29b_explode_lateral", "src", "explode"),
+    "q49c_lateral_view": ("q29b_explode_lateral", "src", "lateral"),
+    "q49_exists_subquery": ("q49_subqueries", "tag", "exists"),
+    "q49b_cte_scalar_subquery": ("q49_subqueries", "tag", "cte_scalar"),
+    "q33_tumbling_window": ("q33_time_windows", "kind", "tumbling"),
+    "q34_sliding_window": ("q33_time_windows", "kind", "sliding"),
+    "q35_session_window": ("q33_time_windows", "kind", "session"),
+    "q33b_tumbling_window_streaming": (
+        "q33b_windows_streaming", "kind", "tumbling"),
+    "q35b_session_window_streaming": (
+        "q33b_windows_streaming", "kind", "session"),
+    "q41_exact_dedup": ("q41_dedup_decontaminate", "tag", "exact_dedup"),
+    "q41b_decontaminate": ("q41_dedup_decontaminate", "tag", "decontaminate"),
+    "q42b_minhash_lsh": ("q42b_minhash_simhash", "method", "minhash"),
+    "q42c_simhash": ("q42b_minhash_simhash", "method", "simhash"),
+    "q44b_lsh_ann": ("q44b_lsh_ann_neardup", "method", "ann"),
+    "q44d_embedding_neardup_lsh": ("q44b_lsh_ann_neardup", "method", "neardup"),
+}
+
+
+def arm_rows(name: str, cols: list[str], rows: list[tuple]) -> list[tuple]:
+    """The rows of a merged entry's result that belong to arm ``name``."""
+    _, column, value = UNION_ARMS[name]
+    if column is None:
+        return rows
+    i = cols.index(column)
+    return [r for r in rows if r[i] == value]
+
+
+def arm_spec(name: str):
+    """The :class:`QuerySpec` of one arm: its merged entry's builder and
+    oracle, both cut to the arm's rows."""
+    from pyspark.sql import functions as F
+
+    from fs2_kafka_streams_spark.queries import QuerySpec, load_all
+
+    entry, column, value = UNION_ARMS[name]
+    spec = load_all()[entry]
+    if column is None:
+        return QuerySpec(name=name, build=spec.build, oracle=spec.oracle)
+    return QuerySpec(
+        name=name,
+        build=lambda sp, sf: spec.build(sp, sf).filter(F.col(column) == value),
+        oracle=f"SELECT * FROM ({spec.oracle}) WHERE {column} = '{value}'",
     )

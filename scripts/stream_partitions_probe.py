@@ -40,7 +40,7 @@ def main() -> None:
     default = C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"]
 
     cases = [
-        ("q33b_tumbling_window_streaming", ["16", "8", "4"]),
+        ("q33b_windows_streaming", ["16", "8", "4"]),
         ("q36_watermark_late_drop", ["16", "8", "4"]),
     ]
     mins: dict[str, float] = {}

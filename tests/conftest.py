@@ -64,7 +64,6 @@ SLOW_TESTS = {
     "test_python_datasource.py::test_starting_offsets_seek_without_checkpoint",
     "test_python_datasource.py::test_stream_multi_batch_and_exactly_once_recovery",
     "test_queries_oracle.py::test_query_matches_oracle[q38b_stateful_latest_tws]",
-    "test_queries_oracle.py::test_query_matches_oracle[q42b_minhash_simhash]",
     "test_queries_oracle.py::test_query_matches_oracle[q54_semantic_dedup]",
     "test_review_r10_fixes.py::test_far_date_contract[q72_stream_outer_join]",
     "test_review_r10_fixes.py::test_ivf_small_corpus_exhaustive_fallback",

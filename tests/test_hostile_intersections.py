@@ -56,8 +56,6 @@ SRC_CORRECT = "/root/testdata/sf0.01"
 
 STREAMING_ENTRIES = [
     "q33b_windows_streaming",
-    "q33b_tumbling_window_streaming",
-    "q35b_session_window_streaming",
     "q36_watermark_late_drop",
     "q37_dedup",
     "q38_stateful_latest",
@@ -84,22 +82,16 @@ HOT_ENTRIES = [
 
 SIMILARITY_ENTRIES = [
     "q44_cosine_topk",
-    "q44b_lsh_ann",
     "q44b_lsh_ann_neardup",
     "q44c_embedding_neardup",
-    "q44d_embedding_neardup_lsh",
     "q44e_ivf_ann",
     "q54_semantic_dedup",
 ]
 
 TEXT_ENTRIES = [
     "q41_dedup_decontaminate",
-    "q41_exact_dedup",
-    "q41b_decontaminate",
     "q42_ngram_jaccard",
-    "q42b_minhash_lsh",
     "q42b_minhash_simhash",
-    "q42c_simhash",
     "q42d_dedup_clusters",
     "q43_top_terms",
     "q43b_text_metrics",

@@ -42,8 +42,6 @@ SRC = "/root/testdata/sf0.001"
 # streaming-shape dedup) — the set the axes must hold for
 STREAMING_ENTRIES = [
     "q33b_windows_streaming",
-    "q33b_tumbling_window_streaming",
-    "q35b_session_window_streaming",
     "q36_watermark_late_drop",
     "q37_dedup",
     "q38_stateful_latest",

@@ -22,7 +22,7 @@ def test_filter_pushdown_reaches_scan(spark):
     """q02's conjunctive predicates must appear as PushedFilters on the
     parquet scan (at 100 TB this is the difference between reading row
     groups and skipping them)."""
-    plan = _plan(_registry()["q02_filter_conjunctive"].build(spark, SF_SMOKE))
+    plan = _plan(_registry()["q02_filter_project"].build(spark, SF_SMOKE))
     assert "PushedFilters: [" in plan
     assert "IsNotNull(l_quantity)" in plan or "GreaterThan(l_quantity" in plan
 
@@ -95,7 +95,8 @@ def test_partial_aggregation_before_shuffle(spark):
 def test_topk_avoids_global_sort(spark):
     """q23 (ORDER BY ... LIMIT 100) must plan TakeOrderedAndProject — a
     per-partition top-k then merge, never a full global sort."""
-    plan = _plan(_registry()["q23_sort_limit"].build(spark, SF_SMOKE))
+    q23 = _registry()["q23_sort_limit_pagination"]
+    plan = _plan(q23.build(spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
 

@@ -12,12 +12,15 @@ import pytest
 
 from fs2_kafka_streams_spark.queries import load_all
 from fs2_kafka_streams_spark.testing import (
+    UNION_ARMS,
+    arm_rows,
+    compare_rows,
     driver_gate,
     duck_connect,
     run_compare,
 )
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", SF_SMOKE)
 
@@ -31,10 +34,63 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
+#: merged entry -> its collected (cols, types, rows) on Spark and DuckDB,
+#: built once for all of its arms
+_MERGED: dict[str, tuple] = {}
+
+
+def _arm_compare(spark, duck, name):
+    entry = UNION_ARMS[name][0]
+    if entry not in _MERGED:
+        spec = REGISTRY[entry]
+        df = spec.build(spark, SF)
+        rel = duck.sql(spec.oracle)
+        spark_rows = [tuple(r) for r in df.collect()]
+        _MERGED[entry] = (
+            (df.columns, [t for _, t in df.dtypes], spark_rows),
+            (list(rel.columns), [str(t) for t in rel.types], rel.fetchall()),
+        )
+    halves = []
+    for cols, types, rows in _MERGED[entry]:
+        halves += [cols, types, arm_rows(name, cols, rows)]
+    return compare_rows(name, *halves)
+
+
+@pytest.mark.parametrize("name", sorted([*REGISTRY, *UNION_ARMS]))
 def test_query_matches_oracle(spark, duck, name):
-    res = run_compare(spark, SF, REGISTRY[name], con=duck)
+    """Every registered spec, and each arm of a union-merged entry on its
+    own, cut from the entry's results."""
+    if name in UNION_ARMS:
+        res = _arm_compare(spark, duck, name)
+    else:
+        res = run_compare(spark, SF, REGISTRY[name], con=duck)
     assert res.ok, f"{name}: {res.detail}"
+
+
+def test_driver_export_is_pinned():
+    """The exported entries, in order, are exactly the committed driver-sim
+    rows; only the ``"local"`` specs stay out of the export — the
+    keyed-merge arms (their merged oracles join USING (key), which drops
+    keys) and two checks an exported entry covers on fewer rows."""
+    import json
+
+    from fs2_kafka_streams_spark.queries import driver_registry
+
+    sim = json.loads((REPO / "CORRECTNESS_SIM.json").read_text())
+    assert list(driver_registry()) == list(sim)
+    assert sorted(n for n, s in REGISTRY.items() if "local" in s.tags) == [
+        "q04_project_expression",
+        "q13b_percentiles",
+        "q13c_stats_aggregates",
+        "q15_approx_count_distinct",
+        "q15b_approx_percentile",
+        "q29_array_functions",
+        "q29c_array_hof",
+        "q29d_string_agg",
+        "q30b_map_hof",
+        "q32_dead_letter_split",
+        "q42d_dedup_clusters",
+    ]
 
 
 def test_array_output_column_is_rejected(spark):

@@ -314,9 +314,12 @@ def test_session_window_append_recovers_mid_replay(spark, tmp_path):
     )
     # expectation = the duality test's: batch sessions closed by the
     # final watermark (max ts - delay); open sessions stay withheld
-    from fs2_kafka_streams_spark.queries import load_all
+    from fs2_kafka_streams_spark.queries.windows import (
+        _sessions,
+        _timed_events,
+    )
 
-    batch = load_all()["q35_session_window"].build(spark, SF_SMOKE)
+    batch = _sessions(_timed_events(spark, SF_SMOKE))
     max_ts = Catalog(spark, SF_SMOKE).events.agg(F.max("ts")).collect()[0][0]
     final_wm = max_ts - datetime.timedelta(minutes=10)
     want = sorted(

@@ -1476,7 +1476,7 @@ NONFINITE_TPCH_ENTRIES = [
     "q11_join_range",
     "q13_agg_tpch_q1",
     "q13c_stats_aggregates",
-    "q16_rollup",
+    "q16_rollup_cube",
     "q16c_pivot_map",
     "q20_window_analytic_value",
     "q21_window_range_frame",
@@ -1485,7 +1485,7 @@ NONFINITE_TPCH_ENTRIES = [
     "q29c_array_hof",
     "q39_udf_pandas",
     "q40_udaf_grouped_map",
-    "q49b_cte_scalar_subquery",
+    "q49_subqueries",
     "q61_histogram",
     "q68_salted_join",
     "q74_observe_metrics",

@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 
 from fs2_kafka_streams_spark.queries import load_all
-from fs2_kafka_streams_spark.testing import driver_gate
+from fs2_kafka_streams_spark.testing import UNION_ARMS, arm_spec, driver_gate
 
 
 def _write_parquet(path, frame):
@@ -285,7 +285,8 @@ _SRC = "/root/testdata/sf0.001"
 
 
 def _oracle_match(spark, sf_dir, name):
-    assert driver_gate(spark, sf_dir, load_all()[name])
+    spec = arm_spec(name) if name in UNION_ARMS else load_all()[name]
+    assert driver_gate(spark, sf_dir, spec)
 
 
 @pytest.fixture(scope="session")
@@ -528,7 +529,7 @@ def dupdoc_sf_dir(tmp_path_factory):
         "q47_multimodal_features",
         "q66_python_udtf",
         "q43b_text_metrics",   # control: per-row semantics, was green
-        "q41_exact_dedup",     # control
+        "q41_dedup_decontaminate",  # control
     ],
 )
 def test_entity_entries_duplicate_doc_ids(spark, dupdoc_sf_dir, name):

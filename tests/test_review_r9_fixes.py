@@ -4,7 +4,7 @@ Covers (a) the three round-8 advisory items (scd reserved name, bucket
 expression quoting, bench IO-noise floor) and (b) findings from the r9
 cold-file review campaign (queries/windows.py, catalog.py,
 streaming/watermark.py, streaming/replay.py, and the DuckDB oracle halves
-of queries/relational.py / queries/merged.py).
+of queries/relational.py and of the multi-operator entries).
 """
 
 from __future__ import annotations

@@ -271,15 +271,16 @@ def test_session_window_append_mode(spark):
     """Watermarked append-mode sessions emit exactly the batch sessions
     closed by the final watermark (max ts - delay); open sessions are
     withheld — bounded state, no losses."""
-    from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.queries.streaming_ext import (
         session_window_append,
     )
-
-    reg = load_all()
+    from fs2_kafka_streams_spark.queries.windows import (
+        _sessions,
+        _timed_events,
+    )
     from fs2_kafka_streams_spark.catalog import Catalog
 
-    batch = reg["q35_session_window"].build(spark, SF_SMOKE)
+    batch = _sessions(_timed_events(spark, SF_SMOKE))
     max_ts = (
         Catalog(spark, SF_SMOKE).events.agg(F.max("ts")).collect()[0][0]
     )
