@@ -35,9 +35,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     multi-operator entry (a tagged union or key join of their arms, built
     next to those arms) or written as one query over one scan, so the
     whole surface — including every streaming/UDF/LLM operator — fits
-    inside it. ``load_all()`` additionally holds the ``"local"``-tagged
-    specs (the keyed-merge arms and local-only checks), which only the
-    local pytest gate runs.
+    inside it. ``load_all()`` additionally holds two ``"local"``-tagged
+    checks (q04, q42d), which only the local pytest gate runs.
     """
     return {name: spec.build for name, spec in driver_registry().items()}
 

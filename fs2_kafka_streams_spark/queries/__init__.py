@@ -47,9 +47,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side effect: fills REGISTRY).
 
-    Returns the FULL registry (94 entries: the exported entries plus the
-    ``"local"``-tagged keyed-merge arms and local-only checks) — the local
-    pytest gate checks every one. The driver sees the curated
+    Returns the FULL registry (85 entries: the exported entries plus two
+    ``"local"``-tagged checks an exported entry covers on fewer rows) —
+    the local pytest gate checks every one. The driver sees the curated
     :func:`driver_registry` instead. The import order is the registration
     order, which fixes the order of the driver's appended extras.
     """
@@ -141,9 +141,8 @@ def driver_registry() -> dict[str, QuerySpec]:
     after it in registration order, so it never displaces a checked entry
     — including the env-gated q38b when ``transformWithStateInPandas`` is
     available (83 entries total when the TWS gate is open). ``"local"``
-    specs are checked by the local gate only: the keyed-merge arms (their
-    merged oracles join ``USING (key)``, which drops keys) and checks an
-    exported entry covers on fewer rows.
+    specs are checked by the local gate only: each checks rows an
+    exported entry covers on fewer of them (q04, q42d).
     """
     reg = load_all()
     out = {name: reg[name] for name in DRIVER_ORDER}

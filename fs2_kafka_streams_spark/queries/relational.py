@@ -373,6 +373,8 @@ def q14_count_distinct(spark, sf_dir):
     )
 
 
+# HLL++ approximate distinct: the sketch differs between engines, so the
+# hash-checked contract is (exact count, approx within 5% of exact).
 _Q15_SQL = """
     SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_exact,
            true AS within_tol
@@ -380,27 +382,14 @@ _Q15_SQL = """
     """
 
 
-@query(
-    "q15_approx_count_distinct",
-    oracle=_Q15_SQL,
-    tags=("agg", "approx", "local"),
-)
-def q15_approx_count_distinct(spark, sf_dir):
-    """HLL++ approximate distinct. The sketch differs between engines, so the
-    hash-checked contract is (exact count, approx-within-5%-of-exact)."""
-    o = _cat(spark, sf_dir).orders
-    return o.agg(
-        F.countDistinct("o_custkey").alias("n_exact"),
-        F.approx_count_distinct("o_custkey", rsd=0.02).alias("_approx"),
-    ).select(
-        "n_exact",
-        (
-            F.abs(F.col("_approx") - F.col("n_exact"))
-            <= 0.05 * F.col("n_exact")
-        ).alias("within_tol"),
-    )
-
-
+# Statistics aggregates (variance/stddev/covariance) from EXACT decimal
+# cross-sums, so each final value is a single IEEE chain — hash-checkable
+# cross-engine. The built-in var_samp/covar_samp accumulate in floats
+# (partial-aggregation order changes the last ulps); the decimal sums are
+# associative, so partial aggregation cannot perturb them at any scale.
+# Sample variance is undefined for n = 1: NULL on both engines by an
+# explicit guard — ANSI Spark throws DIVIDE_BY_ZERO on (n - 1) while
+# DuckDB silently yields a value (r10 tiny-corpus sweep).
 _Q13C_SQL = f"""
     WITH s AS (
       SELECT l_returnflag,
@@ -425,42 +414,12 @@ _Q13C_SQL = f"""
     """
 
 
-@query(
-    "q13c_stats_aggregates",
-    oracle=_Q13C_SQL,
-    tags=("agg", "stats", "local"),
-)
-def q13c_stats_aggregates(spark, sf_dir):
-    """Statistics aggregates (variance/stddev/covariance) computed from
-    EXACT decimal cross-sums, so the final values are single IEEE chains —
-    hash-checkable cross-engine. The built-in `var_samp`/`covar_samp`
-    accumulate in floats (partial-aggregation order changes last ulps), so
-    the exact-sum formulation is also the 100 TB-correct one: the decimal
-    sums are associative, partial aggregation can't perturb them."""
-    li = _cat(spark, sf_dir).lineitem
-    q, d = dec2("l_quantity"), dec2("l_discount")
-    agg = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q).cast("double").alias("sx"),
-        F.sum(q * q).cast("double").alias("sxx"),
-        F.sum(d).cast("double").alias("sy"),
-        F.sum(q * d).cast("double").alias("sxy"),
-    )
-    n, sx, sxx, sy, sxy = (F.col(c) for c in ["n", "sx", "sxx", "sy", "sxy"])
-    # sample variance is undefined for n = 1: NULL on both engines by an
-    # EXPLICIT guard — ANSI Spark throws DIVIDE_BY_ZERO on (n - 1) while
-    # DuckDB silently yields a value, so neither engine default is usable
-    # (r10 tiny-corpus sweep)
-    var = F.when(n > 1, (sxx - sx * sx / n) / (n - 1))
-    return agg.select(
-        "l_returnflag",
-        "n",
-        var.alias("var_qty"),
-        F.sqrt(var).alias("stddev_qty"),
-        F.when(n > 1, (sxy - sx * sy / n) / (n - 1)).alias("covar_qty_disc"),
-    )
-
-
+# Sketch-based percentile (the one-pass mergeable 100 TB path; an exact
+# percentile needs a per-group sort). Sketches differ across engines, so
+# the hash-checked contract mirrors q15's: (exact median, approx within
+# 5%). An all-NULL-quantity group has a NULL median on both engines, and
+# its tolerance flag is NULL too (a NULL comparison), not a literal true
+# (r10 hostile-TPCH sweep).
 _Q15B_SQL = """
     SELECT l_returnflag,
            quantile_cont(l_quantity, 0.5) AS median_exact,
@@ -470,49 +429,10 @@ _Q15B_SQL = """
     """
 
 
-@query(
-    "q15b_approx_percentile",
-    oracle=_Q15B_SQL,
-    tags=("agg", "approx", "percentile", "local"),
-)
-def q15b_approx_percentile(spark, sf_dir):
-    """Sketch-based percentile (the one-pass mergeable 100 TB path; exact
-    percentile needs a per-group sort). Sketches differ across engines, so
-    the hash-checked contract mirrors q15: (exact median, approx within 5%).
-    An all-NULL-quantity group has a NULL median on both engines, and its
-    tolerance flag is NULL too (NULL comparison), not a literal true —
-    r10 hostile-TPCH sweep."""
-    li = _cat(spark, sf_dir).lineitem
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.expr("percentile(l_quantity, 0.5)").alias("median_exact"),
-            F.expr("approx_percentile(l_quantity, 0.5, 1000)").alias("_approx"),
-            # the sketch's reference point: a DISCRETE median (a group
-            # member). The interpolated median is the wrong yardstick for
-            # tiny groups — a 2-row group interpolates to a value no
-            # sketch can return, failing the 5% claim spuriously (r10
-            # tiny-corpus sweep). Accuracy 1e6 keeps the sketch buffer
-            # BOUNDED (r10 advisory: int32-max accuracy ≈ exact aggregate
-            # whose buffer grows with the group, contradicting the
-            # one-pass-mergeable rationale): exact for groups ≤ 1M rows,
-            # rank error ≤ 1e-6 beyond — orders of magnitude inside the
-            # 5% tolerance band either way
-            F.expr(
-                "approx_percentile(l_quantity, 0.5, 1000000)"
-            ).alias("_exact_disc"),
-        )
-        .select(
-            "l_returnflag",
-            "median_exact",
-            (
-                F.abs(F.col("_approx") - F.col("_exact_disc"))
-                <= 0.05 * F.greatest(F.abs(F.col("_exact_disc")), F.lit(1.0))
-            ).alias("within_tol"),
-        )
-    )
-
-
+# Exact (sort-based) percentiles. Cross-engine determinism: the probes are
+# power-of-two fractions and l_quantity is integer-valued, so linear
+# interpolation is exact IEEE on both engines whatever algebraic form each
+# uses.
 _Q13B_SQL = """
     SELECT l_returnflag,
            quantile_cont(l_quantity, 0.25) AS p25_qty,
@@ -525,33 +445,14 @@ _Q13B_SQL = """
 
 
 @query(
-    "q13b_percentiles",
-    oracle=_Q13B_SQL,
-    tags=("agg", "percentile", "local"),
-)
-def q13b_percentiles(spark, sf_dir):
-    """Exact percentiles (sort-based) per group. Cross-engine determinism:
-    the probes are power-of-two fractions and l_quantity is integer-valued,
-    so linear interpolation is exact IEEE on both engines regardless of the
-    algebraic form each uses. At 100 TB prefer `approx_percentile`
-    (t-digest-style sketch, one pass, mergeable) — exact percentile
-    requires a per-group sort."""
-    li = _cat(spark, sf_dir).lineitem
-    return li.groupBy("l_returnflag").agg(
-        F.expr("percentile(l_quantity, 0.25)").alias("p25_qty"),
-        F.expr("percentile(l_quantity, 0.50)").alias("median_qty"),
-        F.expr("percentile(l_quantity, 0.75)").alias("p75_qty"),
-        F.min("l_extendedprice").alias("min_price"),
-        F.max("l_extendedprice").alias("max_price"),
-    )
-
-
-@query(
     "q13b_stats_percentiles",
     oracle=f"""
-    SELECT * FROM ({_Q13B_SQL.strip()}) a
-    JOIN ({_Q13C_SQL.strip()}) b USING (l_returnflag)
-    JOIN ({_Q15B_SQL.strip()}) c USING (l_returnflag)
+    SELECT a.*, b.* EXCLUDE (l_returnflag), c.* EXCLUDE (l_returnflag), d.*
+    FROM ({_Q13B_SQL.strip()}) a
+    JOIN ({_Q13C_SQL.strip()}) b
+      ON a.l_returnflag IS NOT DISTINCT FROM b.l_returnflag
+    JOIN ({_Q15B_SQL.strip()}) c
+      ON a.l_returnflag IS NOT DISTINCT FROM c.l_returnflag
     CROSS JOIN (SELECT n_exact AS acd_exact, within_tol AS acd_within_tol
                 FROM ({_Q15_SQL.strip()})) d
     """,
@@ -564,43 +465,39 @@ def q13b_stats_percentiles(spark, sf_dir):
     tolerance, and the global approx_count_distinct-within-tolerance
     (cross-joined single row, columns renamed acd_*).
 
-    FUSED single-aggregation build (r11 optimization, guide §2.4): the
-    a/b/c variants are all ``groupBy(l_returnflag)`` aggregations of the
-    same lineitem scan — one scan + one shuffle carries every buffer
-    instead of three of each plus two joins. The three exact percentiles
-    and q15b's exact median share ONE sort buffer via
+    One ``groupBy(l_returnflag)`` aggregation of one lineitem scan carries
+    every buffer (r11 optimization, guide §2.4). The exact percentiles
+    and the sketch check's exact median share ONE sort buffer via
     ``percentile(col, array(...))`` (same Percentile expression, same
-    interpolation — bit-identical to the scalar calls). Equivalence with
-    the join-merge oracle is total: grouped keys are unique, and the
-    inner join's drop of the NULL-returnflag group is replayed by the
-    pre-aggregation filter. All other expressions are verbatim from the
-    variants (q13c's exact decimal cross-sums and n=1 NULL guard, q15b's
-    discrete-median tolerance contract)."""
-    li = _cat(spark, sf_dir).lineitem.filter(F.col("l_returnflag").isNotNull())
+    interpolation — bit-identical to the scalar calls). The oracle joins
+    its per-flag pieces NULL-safely, so the NULL-l_returnflag group is
+    checked like any other."""
+    cat = _cat(spark, sf_dir)
     q, d_ = dec2("l_quantity"), dec2("l_discount")
-    agg = li.groupBy("l_returnflag").agg(
-        # q13b: one shared sort buffer for all three exact percentiles
-        # (and q15b's median_exact, which is the same 0.5 probe)
+    agg = cat.lineitem.groupBy("l_returnflag").agg(
         F.expr("percentile(l_quantity, array(0.25, 0.5, 0.75))").alias(
             "_pcts"
         ),
         F.min("l_extendedprice").alias("min_price"),
         F.max("l_extendedprice").alias("max_price"),
-        # q13c: exact decimal cross-sums
         F.count(F.lit(1)).alias("n"),
         F.sum(q).cast("double").alias("sx"),
         F.sum(q * q).cast("double").alias("sxx"),
         F.sum(d_).cast("double").alias("sy"),
         F.sum(q * d_).cast("double").alias("sxy"),
-        # q15b: bounded sketches (see the variant's accuracy rationale)
         F.expr("approx_percentile(l_quantity, 0.5, 1000)").alias("_approx"),
+        # the sketch's reference point is a DISCRETE median (a group
+        # member): a 2-row group interpolates to a value no sketch can
+        # return, failing the 5% claim spuriously (r10 tiny-corpus
+        # sweep). Accuracy 1e6 keeps the buffer BOUNDED (an int32-max
+        # accuracy is an exact aggregate whose buffer grows with the
+        # group): exact for groups ≤ 1M rows, rank error ≤ 1e-6 beyond —
+        # far inside the 5% band either way
         F.expr("approx_percentile(l_quantity, 0.5, 1000000)").alias(
             "_exact_disc"
         ),
     )
     n, sx, sxx, sy, sxy = (F.col(c) for c in ["n", "sx", "sxx", "sy", "sxy"])
-    # sample variance undefined for n = 1: explicit NULL on both engines
-    # (q13c's contract — ANSI Spark would throw DIVIDE_BY_ZERO)
     var = F.when(n > 1, (sxx - sx * sx / n) / (n - 1))
     abc = agg.select(
         "l_returnflag",
@@ -619,11 +516,17 @@ def q13b_stats_percentiles(spark, sf_dir):
             <= 0.05 * F.greatest(F.abs(F.col("_exact_disc")), F.lit(1.0))
         ).alias("within_tol"),
     )
-    d = q15_approx_count_distinct(spark, sf_dir).select(
-        F.col("n_exact").alias("acd_exact"),
-        F.col("within_tol").alias("acd_within_tol"),
+    acd = cat.orders.agg(
+        F.countDistinct("o_custkey").alias("acd_exact"),
+        F.approx_count_distinct("o_custkey", rsd=0.02).alias("_approx"),
+    ).select(
+        "acd_exact",
+        (
+            F.abs(F.col("_approx") - F.col("acd_exact"))
+            <= 0.05 * F.col("acd_exact")
+        ).alias("acd_within_tol"),
     )
-    return abc.crossJoin(F.broadcast(d))
+    return abc.crossJoin(F.broadcast(acd))
 
 
 @query(
@@ -1375,6 +1278,14 @@ def q28_conditional_json(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
+# collect_list + sort_array/size/array_contains. Arrays are canonicalized
+# by sorting (collect order is partition-dependent) and rendered with
+# array_join: top-level array columns crash the driver's pandas
+# canonicalizer (the round-1 q29 failure). NULL elements: Spark's
+# collect_list SKIPS NULL inputs while DuckDB's list() keeps them, so the
+# oracle replays the skip with FILTER, coalescing an all-NULL group to []
+# (collect_list of zero rows is an empty array, never NULL; r10
+# hostile-TPCH sweep).
 _Q29_SQL = """
     WITH per_order AS (
       SELECT l_orderkey,
@@ -1390,38 +1301,21 @@ _Q29_SQL = """
     """
 
 
-@query(
-    "q29_array_functions",
-    oracle=_Q29_SQL,
-    tags=("array", "local"),
-)
-def q29_array_functions(spark, sf_dir):
-    """collect_list + sort_array/size/array_contains (arrays canonicalized
-    by sorting — collect order is partition-dependent; the array is then
-    array_join-ed to a string because top-level array columns crash the
-    driver's pandas canonicalizer, the round-1 q29 failure).
-
-    NULL-element contract (r10 hostile-TPCH sweep): Spark's collect_list
-    SKIPS NULL inputs while DuckDB's list() keeps them — the oracle
-    replays the skip with FILTER, coalescing an all-NULL group to []
-    (collect_list of zero rows is an empty array, never NULL)."""
-    li = Catalog(spark, sf_dir).lineitem
-    # One collect_list buffer per group, not three — size/contains are
-    # derived from the single collected array in a post-agg projection.
-    return (
-        li.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_linenumber")).alias("_lns"))
-        .select(
-            "l_orderkey",
-            F.array_join(
-                F.transform(F.col("_lns"), lambda x: x.cast("string")), "|"
-            ).alias("lns"),
-            F.size("_lns").alias("n_lines"),
-            F.array_contains("_lns", 3).alias("has_line3"),
-        )
-    )
-
-
+# Array higher-order functions (transform / filter / exists / forall /
+# aggregate) over per-order quantity lists, ordered by (line number,
+# quantity): the synthetic data has duplicate line numbers, so the
+# tie-break makes the arrays deterministic; quantities are integer-valued
+# doubles, so the fold is exact. The int casts go through trunc(): Spark's
+# double->int cast TRUNCATES while DuckDB's ROUNDS — invisible on
+# integer-valued fixtures, divergent on fractional hostile quantities
+# (r11 fuzz, seed 9: 123456.789). Only measure-domain quantities enter the
+# list (abs(x) < 1e14 is false for NULL, NaN and ±inf): the BIGINT casts
+# inside the HOFs throw on DuckDB and saturate or throw on ANSI Spark for
+# non-finite elements (r10 non-finite sweep), and a NULL element would
+# poison exists/forall with three-valued logic list_filter cannot mirror.
+# A NULL line number rides as an ordering key only, NULLS FIRST as in
+# Spark's struct comparator. An empty list renders '' on both engines
+# (DuckDB's array_to_string([]) is NULL, hence the coalesce).
 _Q29C_SQL = """
     WITH per_order AS (
       SELECT l_orderkey,
@@ -1447,72 +1341,8 @@ _Q29C_SQL = """
     """
 
 
-@query(
-    "q29c_array_hof",
-    oracle=_Q29C_SQL,
-    tags=("array", "hof", "local"),
-)
-def q29c_array_hof(spark, sf_dir):
-    """Array higher-order functions — transform / filter / exists / forall /
-    aggregate over per-order quantity lists (ordered by (line number,
-    quantity) — the synthetic data has duplicate line numbers, so the
-    tie-break makes the arrays deterministic; quantities are integer-valued
-    doubles so the fold is exact). Array outputs are array_join-ed to
-    strings: top-level array columns crash the driver's canonicalizer.
-    The oracle's int casts go through trunc(): Spark's double->int cast
-    TRUNCATES while DuckDB's ROUNDS — invisible on integer-valued
-    fixtures, divergent on fractional hostile quantities (r11 fuzz,
-    seed 9: 123456.789).
-
-    NULL contract (r10 hostile-TPCH sweep): NULL quantities never enter
-    qtys (the ``when`` guard makes collect_list skip them — a NULL element
-    would also poison exists/forall with three-valued logic DuckDB's
-    list_filter can't mirror); a NULL line number rides as an ordering key
-    only, sorted NULLS FIRST by Spark's struct comparator and spelled
-    explicitly in the oracle's ORDER BY."""
-    li = _cat(spark, sf_dir).lineitem
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(
-            F.collect_list(
-                # measure-domain element guard: out-of-domain quantities
-                # (NaN/±inf/overflow) never enter the array — the BIGINT
-                # casts inside the HOFs throw on DuckDB and
-                # saturate/throw on ANSI Spark for non-finite elements
-                # (r10 non-finite sweep); abs(x) < bound is also false
-                # for NULL, subsuming the original isNotNull guard
-                F.when(
-                    measure("l_quantity").isNotNull(),
-                    F.struct("l_linenumber", "l_quantity"),
-                )
-            )
-        ).alias("_pairs")
-    ).select(
-        "l_orderkey",
-        F.transform("_pairs", lambda p: p["l_quantity"]).alias("qtys"),
-    )
-    return per_order.select(
-        "l_orderkey",
-        F.array_join(
-            F.transform(
-                "qtys", lambda x: (x * 2).cast("bigint").cast("string")
-            ),
-            "|",
-        ).alias("doubled"),
-        F.array_join(
-            F.transform(
-                F.filter("qtys", lambda x: x > 25),
-                lambda x: x.cast("bigint").cast("string"),
-            ),
-            "|",
-        ).alias("big"),
-        F.exists("qtys", lambda x: x > 45).alias("any_huge"),
-        F.forall("qtys", lambda x: x > 0).alias("all_positive"),
-        F.aggregate(
-            "qtys", F.lit(0.0), lambda acc, x: acc + x
-        ).alias("total"),
-    )
-
-
+# Ordered string aggregation (the listagg shape): sorted by (linenumber,
+# quantity) for determinism under duplicate line numbers.
 _Q29D_SQL = """
     SELECT l_orderkey,
            string_agg(CAST(l_linenumber AS VARCHAR), ','
@@ -1523,35 +1353,14 @@ _Q29D_SQL = """
 
 
 @query(
-    "q29d_string_agg",
-    oracle=_Q29D_SQL,
-    tags=("array", "agg", "local"),
-)
-def q29d_string_agg(spark, sf_dir):
-    """Ordered string aggregation (listagg shape): collect, sort by
-    (linenumber, quantity) for determinism under duplicate line numbers,
-    join with a delimiter."""
-    li = Catalog(spark, sf_dir).lineitem
-    return li.groupBy("l_orderkey").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("l_linenumber", "l_quantity"))
-                ),
-                lambda p: p["l_linenumber"].cast("string"),
-            ),
-            ",",
-        ).alias("lines"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@query(
     "q29_array_hof_agg",
     oracle=f"""
-    SELECT * FROM ({_Q29_SQL.strip()}) a
-    JOIN ({_Q29C_SQL.strip()}) b USING (l_orderkey)
-    JOIN ({_Q29D_SQL.strip()}) c USING (l_orderkey)
+    SELECT a.*, b.* EXCLUDE (l_orderkey), c.* EXCLUDE (l_orderkey)
+    FROM ({_Q29_SQL.strip()}) a
+    JOIN ({_Q29C_SQL.strip()}) b
+      ON a.l_orderkey IS NOT DISTINCT FROM b.l_orderkey
+    JOIN ({_Q29D_SQL.strip()}) c
+      ON a.l_orderkey IS NOT DISTINCT FROM c.l_orderkey
     """,
     tags=("array", "hof", "agg"),
 )
@@ -1561,18 +1370,10 @@ def q29_array_hof_agg(spark, sf_dir):
     string_agg — one row per order (arrays rendered as joined strings; raw
     array columns crash the driver canonicalizer).
 
-    FUSED single-aggregation build (r11 optimization, guide §2.4): the
-    three variants are all ``groupBy(l_orderkey)`` aggregations of the
-    same lineitem scan, so the USING join of their outputs is exactly one
-    grouped aggregation carrying all three variants' buffers — one scan +
-    one shuffle instead of three of each plus two joins. Equivalence with
-    the join-merge oracle is total for EVERY corpus: grouped outputs are
-    unique per key, and the inner join's drop of the NULL-key group is
-    replayed by the pre-aggregation ``isNotNull`` filter (pinned on the
-    NULL-bearing corpus in tests/test_review_r10_fixes.py). Every
-    aggregate/post-projection expression is verbatim from the variants
-    (q29's NULL-skip contract, q29c's measure-domain element guard and
-    trunc() casts, q29d's (linenumber, quantity) sort tie-break).
+    One ``groupBy(l_orderkey)`` aggregation of one lineitem scan carries
+    all three families' buffers (r11 optimization, guide §2.4). The
+    oracle joins its per-order pieces NULL-safely, so the NULL-l_orderkey
+    group is checked like any other.
 
     ``spread`` (guide §2.5) parallelizes the partial collect buffers —
     a single-row-group scan would otherwise build all four buffers in ONE
@@ -1580,14 +1381,13 @@ def q29_array_hof_agg(spark, sf_dir):
     shuffle ships only the three pruned input columns, and every output
     array is explicitly sorted, so collect order cannot leak through."""
     li = spread(
-        Catalog(spark, sf_dir)
-        .lineitem.select("l_orderkey", "l_linenumber", "l_quantity")
-        .filter(F.col("l_orderkey").isNotNull())
+        Catalog(spark, sf_dir).lineitem.select(
+            "l_orderkey", "l_linenumber", "l_quantity"
+        )
     )
     agg = li.groupBy("l_orderkey").agg(
-        # q29: one collected+sorted linenumber array buffer
         F.sort_array(F.collect_list("l_linenumber")).alias("_lns"),
-        # q29c: (linenumber, quantity) pairs, measure-domain guarded
+        # (linenumber, quantity) pairs, measure-domain guarded
         F.array_sort(
             F.collect_list(
                 F.when(
@@ -1596,7 +1396,6 @@ def q29_array_hof_agg(spark, sf_dir):
                 )
             )
         ).alias("_pairs"),
-        # q29d: ordered string_agg + group count
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -1722,12 +1521,7 @@ _Q32_SQL = f"""
     """
 
 
-@query(
-    "q32_dead_letter_split",
-    oracle=_Q32_SQL,
-    tags=("dlq", "local"),
-)
-def q32_dead_letter_split(spark, sf_dir):
+def _dead_letter_split(spark, sf_dir):
     """Dead-letter split (A5/``Result[A]``): decode errors stay in-band and
     are counted, never dropped silently (reference ``model/package.scala:16``,
     ``streams/Tables.scala:24-27``).
@@ -1778,12 +1572,7 @@ _Q30B_SQL = """
     """
 
 
-@query(
-    "q30b_map_hof",
-    oracle=_Q30B_SQL,
-    tags=("map", "hof", "local"),
-)
-def q30b_map_hof(spark, sf_dir):
+def _map_hof(spark, sf_dir):
     """Map higher-order functions: build a status→count map, double the
     values (transform_values), drop small entries (map_filter), explode
     back to rows. The oracle computes the same result relationally — the
@@ -1825,9 +1614,11 @@ def q32_dlq_map_hof(spark, sf_dir):
     """Dead-letter split + map higher-order functions (merge of q32/q30b),
     both keyed by event_type. The map_filter drops small types, so the
     left join surfaces them as NULL doubled — the HOF semantics survive
-    the merge."""
-    return q32_dead_letter_split(spark, sf_dir).join(
-        q30b_map_hof(spark, sf_dir), ["event_type"], "left"
+    the merge. The left join keeps every key either half checks: the
+    dead-letter half has every event type, the NULL type included, and
+    the map half's types are a subset of them."""
+    return _dead_letter_split(spark, sf_dir).join(
+        _map_hof(spark, sf_dir), ["event_type"], "left"
     )
 
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """State-partition-count probe for the SQL-native streaming entries.
 
-Usage: python scripts/stream_partitions_probe.py [reps]
+Usage: python scripts/stream_partitions_probe.py [reps] [sf_dir]
 
 r11 measured the stream-stream joins best at 8 state partitions and the
 Python-stateful entries at 16; the SQL-native window aggregations
@@ -12,11 +12,20 @@ per variant, same-window pairing) to decide whether their per-trigger
 store open/commit cost also wants fewer, larger stores — the q48/q72
 rationale — or whether aggregation parallelism pays for 16. Every rep is
 timed by ``bench.run_entry``, which also drops the rep's memory sink.
+
+Both entries pin their own count (q33b 8, q36 4), so a variant overrides
+the pin in ``streaming/run.py::_drain`` itself, the one drain every
+bounded run goes through. Each entry has one state operator with one
+store per partition, so every trigger that opened a store must report
+the variant's count as its ``state_instances`` (a trigger with no state
+work reports 0); a variant that did not take effect stops the probe
+instead of printing a number.
 """
 
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -26,18 +35,36 @@ if _REPO not in sys.path:
 SF = "/root/testdata/sf0.1"
 
 
+@contextmanager
+def drains_at(partitions: str):
+    """Drain every streaming query at ``partitions`` shuffle (= state)
+    partitions, over any conf the entry pins; the drain is restored on
+    exit, on failure too."""
+    import fs2_kafka_streams_spark.streaming.run as srun
+
+    drain = srun._drain
+
+    def pinned(spark, writer, name, confs=None, checkpoint=None):
+        confs = {**(confs or {}), "spark.sql.shuffle.partitions": partitions}
+        drain(spark, writer, name, confs, checkpoint)
+
+    srun._drain = pinned
+    try:
+        yield
+    finally:
+        srun._drain = drain
+
+
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
+    sf = sys.argv[2] if len(sys.argv) > 2 else SF
     from bench import run_entry
     from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.session import get_spark
-    import fs2_kafka_streams_spark.streaming.conf as C
 
     spark = get_spark(app_name="stream-partitions-probe")
-    spark.read.parquet(f"{SF}/region.parquet").count()
+    spark.read.parquet(f"{sf}/region.parquet").count()
     specs = load_all()
-
-    default = C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"]
 
     cases = [
         ("q33b_windows_streaming", ["16", "8", "4"]),
@@ -47,14 +74,19 @@ def main() -> None:
     for r in range(reps):
         for name, variants in cases:
             for v in variants:
-                C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] = v
                 key = f"{name.split('_')[0]}@{v}"
-                try:
-                    dt, _pinned, _runs = run_entry(spark, specs[name], SF)
-                finally:
-                    # restored even when the run raises: the dict is the
-                    # process-wide default every later streaming query pins
-                    C.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] = default
+                with drains_at(v):
+                    dt, _pinned, runs = run_entry(spark, specs[name], sf)
+                seen = {
+                    t["state_instances"]
+                    for run in runs
+                    for t in run["triggers"] or []
+                }
+                if seen - {0} != {int(v)}:
+                    sys.exit(
+                        f"{key}: state_instances {sorted(seen)} over "
+                        f"{len(runs)} drained runs, not {v}"
+                    )
                 mins[key] = min(mins.get(key, 1e9), dt)
                 print(f"rep {r} {key}: {dt:.3f}s (min {mins[key]:.3f})",
                       flush=True)

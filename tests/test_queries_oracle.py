@@ -69,9 +69,8 @@ def test_query_matches_oracle(spark, duck, name):
 
 def test_driver_export_is_pinned():
     """The exported entries, in order, are exactly the committed driver-sim
-    rows; only the ``"local"`` specs stay out of the export — the
-    keyed-merge arms (their merged oracles join USING (key), which drops
-    keys) and two checks an exported entry covers on fewer rows."""
+    rows; only the ``"local"`` specs stay out of the export — two checks
+    an exported entry covers on fewer rows."""
     import json
 
     from fs2_kafka_streams_spark.queries import driver_registry
@@ -80,15 +79,6 @@ def test_driver_export_is_pinned():
     assert list(driver_registry()) == list(sim)
     assert sorted(n for n, s in REGISTRY.items() if "local" in s.tags) == [
         "q04_project_expression",
-        "q13b_percentiles",
-        "q13c_stats_aggregates",
-        "q15_approx_count_distinct",
-        "q15b_approx_percentile",
-        "q29_array_functions",
-        "q29c_array_hof",
-        "q29d_string_agg",
-        "q30b_map_hof",
-        "q32_dead_letter_split",
         "q42d_dedup_clusters",
     ]
 

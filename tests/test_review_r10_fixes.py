@@ -18,6 +18,7 @@ from fs2_kafka_streams_spark.testing import (
     driver_canon,
     driver_gate,
     driver_hash,
+    duck_connect,
 )
 
 
@@ -209,10 +210,12 @@ def test_join_merges_have_disjoint_value_columns(spark):
     load_all()  # standalone runs must not depend on import order
 
     for name in [
+        "q13b_stats_percentiles",
         "q25_string_hash_functions",
         "q26_date_math_functions",
         "q28_conditional_json",
         "q29_array_hof_agg",
+        "q32_dlq_map_hof",
         "q19_window_ranking_dist",
         "q20_window_analytic_value",
         "q16c_pivot_map",
@@ -986,7 +989,7 @@ def test_q37_null_id_rows_are_unkeyed(spark, null_id_sf_dir):
 # ---------------------------------------------------------------------------
 
 HOSTILE_TPCH_ENTRIES = [
-    "q15b_approx_percentile",
+    "q13b_stats_percentiles",
     "q16c_pivot_map",
     "q16d_unpivot",
     "q19_window_ranking_dist",
@@ -994,7 +997,6 @@ HOSTILE_TPCH_ENTRIES = [
     "q28_conditional_json",
     "q29_array_hof_agg",
     "q29b_explode_lateral",
-    "q29c_array_hof",
     "q40_udaf_grouped_map",
     "q70_listagg",
 ]
@@ -1082,6 +1084,30 @@ def test_hostile_tpch_contract(spark, null_tpch_sf_dir, name):
     on the NULL-bearing relational corpus — the same driver-gate
     canonicalize-and-hash as the events/documents axes."""
     assert driver_gate(spark, null_tpch_sf_dir, load_all()[name])
+
+
+@pytest.mark.parametrize(
+    "name,key",
+    [("q13b_stats_percentiles", "l_returnflag"),
+     ("q29_array_hof_agg", "l_orderkey")],
+)
+def test_keyed_merge_checks_the_null_key_group(
+    spark, null_tpch_sf_dir, name, key
+):
+    """A keyed merge checks every key its pieces group by: the NULL-key
+    group is one row on both halves (the oracle joins its pieces with
+    IS NOT DISTINCT FROM; a plain equi-join would drop it). The hash
+    compare on this corpus is test_hostile_tpch_contract's."""
+    spec = load_all()[name]
+    nulls = spec.build(spark, null_tpch_sf_dir).filter(F.col(key).isNull())
+    con = duck_connect(null_tpch_sf_dir)
+    try:
+        n_duck = con.sql(
+            f"SELECT count(*) FROM ({spec.oracle}) WHERE {key} IS NULL"
+        ).fetchone()[0]
+    finally:
+        con.close()
+    assert (nulls.count(), n_duck) == (1, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -1475,14 +1501,13 @@ NONFINITE_TPCH_ENTRIES = [
     "q02_filter_project",
     "q11_join_range",
     "q13_agg_tpch_q1",
-    "q13c_stats_aggregates",
+    "q13b_stats_percentiles",
     "q16_rollup_cube",
     "q16c_pivot_map",
     "q20_window_analytic_value",
     "q21_window_range_frame",
     "q26_date_math_functions",
     "q29_array_hof_agg",
-    "q29c_array_hof",
     "q39_udf_pandas",
     "q40_udaf_grouped_map",
     "q49_subqueries",
@@ -1582,8 +1607,8 @@ def nonfinite_tpch_sf_dir(tmp_path_factory):
 def test_nonfinite_tpch_contract(spark, nonfinite_tpch_sf_dir, name):
     """Every entry the non-finite money sweep flagged hash-matches its
     oracle on the hostile corpus — same driver-gate canonicalize-and-hash
-    as the NULL-TPCH / events axes. (Full-registry confirmation: 146/146
-    via scripts/hostile_sweep.py on this corpus.)"""
+    as the NULL-TPCH / events axes. (scripts/hostile_sweep.py sweeps the
+    full registry on this corpus.)"""
     assert driver_gate(spark, nonfinite_tpch_sf_dir, load_all()[name])
 
 
@@ -1888,8 +1913,6 @@ def test_month_trunc_below_ns_floor_collects(spark, reldates_sf_dir):
 
 TINY_ENTRIES = [
     "q13b_stats_percentiles",
-    "q13c_stats_aggregates",
-    "q15b_approx_percentile",
     "q44e_ivf_ann",
 ]
 
@@ -1910,9 +1933,9 @@ def tiny_sf_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("name", TINY_ENTRIES)
 def test_tiny_corpus_contract(spark, tiny_sf_dir, name):
-    """The four previously-diverging entries hash-match their oracles on
-    the 5-row corpus (full-registry confirmation: 146/146 via
-    scripts/hostile_sweep.py)."""
+    """The previously-diverging entries hash-match their oracles on the
+    5-row corpus (scripts/hostile_sweep.py sweeps the full registry on
+    it)."""
     assert driver_gate(spark, tiny_sf_dir, load_all()[name])
 
 

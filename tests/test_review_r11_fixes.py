@@ -199,7 +199,8 @@ def test_q15b_tiny_group_still_within_tol(spark, tmp_path):
     """The r10 tiny-corpus property the int32-max accuracy existed for —
     a 2-row group's discrete reference point is a group member, so the
     5% claim holds — must survive the bounded accuracy (exact for groups
-    ≤ 1M rows)."""
+    ≤ 1M rows). Checked on q13b's sketch columns, whose builder also
+    reads prices, discounts and the orders table."""
     from fs2_kafka_streams_spark.queries import load_all
 
     li = pd.DataFrame(
@@ -207,10 +208,16 @@ def test_q15b_tiny_group_still_within_tol(spark, tmp_path):
             "l_orderkey": [1, 2, 3, 4],
             "l_returnflag": ["A", "A", "B", "B"],
             "l_quantity": [1.0, 100.0, 7.0, 7.0],
+            "l_extendedprice": [10.0, 20.0, 30.0, 40.0],
+            "l_discount": [0.01, 0.02, 0.03, 0.04],
         }
     )
     _write_parquet(tmp_path / "lineitem.parquet", li)
-    spec = load_all()["q15b_approx_percentile"]
+    _write_parquet(
+        tmp_path / "orders.parquet",
+        pd.DataFrame({"o_orderkey": [1, 2], "o_custkey": [7, 8]}),
+    )
+    spec = load_all()["q13b_stats_percentiles"]
     got = {
         r["l_returnflag"]: r["within_tol"]
         for r in spec.build(spark, str(tmp_path)).collect()
@@ -341,7 +348,7 @@ def badprops_sf_dir(tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "name", ["q65_variant_json", "q32_dead_letter_split", "q32_dlq_map_hof"]
+    "name", ["q65_variant_json", "q32_dlq_map_hof"]
 )
 def test_json_decode_total_on_source_corrupt_props(
     spark, badprops_sf_dir, name
