@@ -13,8 +13,10 @@ enough:
   explode the small side's hot keys into S salted copies and scatter the
   big side's hot rows across the S salts, turning one straggler partition
   into S even ones. (AQE's skew-join split handles sort-merge cases
-  automatically; explicit salting covers aggregations and the cases AQE
-  can't re-plan, e.g. a skewed stream-side stateful op.)
+  automatically; explicit salting covers the cases AQE can't re-plan. An
+  aggregation whose state can be pre-combined, such as the latest-by-key
+  fold, needs none: its map-side partial aggregation already cuts a hot
+  key to one row per task.)
 
 The reference has no distributed shuffle at all (single-consumer,
 per-partition streams — ``client/RecordStream.scala:14-18``), so both are
@@ -60,9 +62,7 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
 
 
-def deterministic_salt(
-    df: DataFrame, salt: int, op_name: str = "deterministic_salt"
-):
+def deterministic_salt(df: DataFrame, salt: int):
     """A Column scattering each row of ``df`` to one of ``salt`` sub-keys,
     as a DETERMINISTIC function of the row: ``pmod(xxhash64(<hashable
     columns>), salt)``. Task/stage retries after a shuffle-fetch failure
@@ -70,7 +70,7 @@ def deterministic_salt(
     ``spark_partition_id``/``monotonically_increasing_id`` salts are
     nondeterministic across recomputation, the classic
     nondeterministic-repartition hazard, exactly in the at-scale regime
-    the salting operators target.
+    :func:`salted_join` targets.
 
     Map-typed columns are skipped (Spark forbids hash/xxhash64 over
     MapType at any nesting depth); the salt only needs to vary per row,
@@ -92,7 +92,7 @@ def deterministic_salt(
     salt_cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
     if not salt_cols:
         raise ValueError(
-            f"{op_name}: every column is map-typed; xxhash64 cannot "
+            "salted_join: every column is map-typed; xxhash64 cannot "
             "derive a deterministic salt — add a hashable column"
         )
     return F.pmod(F.xxhash64(*salt_cols), F.lit(salt)).cast("int")
@@ -106,12 +106,14 @@ def detect_hot_keys(
 ) -> list:
     """The key VALUES carrying more than ``share`` of ``df``'s rows —
     hottest first, at most ``top_n``, as plain Python values ready for
-    the salted operators' ``hot_keys`` argument.
+    :func:`salted_join`'s ``hot_keys`` argument.
 
-    The r8 measurement made targeting mandatory (full-domain salting is a
-    2.6× per-trigger REGRESSION; ``hot_keys`` targeting −26% wall on
-    hot95 — SCALE.md "Skew axis"), but the list was manual. This is the
-    detector: ONE map-side-combined count aggregation over ``df`` (each
+    Salting pays only for state that cannot be pre-combined, such as a
+    join's hot-key output; the latest-by-key fold pre-combines on its own
+    and takes no hot-key list (SCALE.md "Hot keys on the native fold").
+    Salting every key multiplies the small side by the salt count, so
+    salt the hot keys only. This is the detector: ONE map-side-combined
+    count aggregation over ``df`` (each
     task pre-aggregates per key before the shuffle, so shuffle volume is
     O(distinct keys), not O(rows)), cached across the two reads (and
     released before returning) so the total-row sum and the share filter
@@ -121,7 +123,7 @@ def detect_hot_keys(
     a literal predicate (broadcast-equivalent) on the salting side.
 
     A NULL key is a real skew candidate (the classic unset-field
-    hot spot) and is returned as ``None``; the salted operators'
+    hot spot) and is returned as ``None``; the salting
     targeting treats ``None`` as "salt the NULL-key rows"
     (:func:`hot_key_condition`).
 
@@ -167,11 +169,8 @@ def detect_hot_keys(
 def hot_key_condition(key_col, hot_keys) -> "F.Column":
     """Boolean Column: does this row's ``key_col`` belong to ``hot_keys``?
 
-    The ONE targeting predicate every salted operator shares
-    (:func:`salted_join`, ``operators/latest_by_key.py::
-    latest_by_key_salted``, ``streaming/stateful.py::
-    latest_by_key_streaming_salted``), so their hot/cold split can never
-    drift apart. ``None`` in the list means the NULL key group —
+    The targeting predicate of :func:`salted_join`'s ``hot_keys`` form.
+    ``None`` in the list means the NULL key group —
     ``isin`` alone never matches NULL (SQL ``=`` semantics), which would
     silently leave the one key :func:`detect_hot_keys` flagged as hot
     unsalted."""
@@ -219,10 +218,9 @@ def salted_join(
     whole table. ``None`` (default) salts everything: simpler, no extra
     pass over the big side, right when the small side is genuinely small.
 
-    ``hot_keys`` is the PRE-DETECTED form of the same targeting (the
-    other salted operators' shape, unified in r9): an explicit key-value
-    list — typically :func:`detect_hot_keys` output, computed once on a
-    stable changelog and reused — salted via the shared
+    ``hot_keys`` is the PRE-DETECTED form of the same targeting: an
+    explicit key-value list — typically :func:`detect_hot_keys` output,
+    computed once on a stable changelog and reused — salted via the shared
     :func:`hot_key_condition` literal predicate, skipping the count pass
     entirely. Mutually exclusive with ``hot_threshold``.
     """
@@ -245,7 +243,7 @@ def salted_join(
             "the conflicting input column(s)"
         )
 
-    salt_expr = deterministic_salt(big, salt, op_name="salted_join")
+    salt_expr = deterministic_salt(big, salt)
     if hot_keys is not None:
         # literal hot set: no count pass, no broadcast join — the list is
         # tiny by detect_hot_keys construction (≤ 1/share keys)

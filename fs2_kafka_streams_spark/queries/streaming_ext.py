@@ -280,14 +280,20 @@ def stream_stream_join_bucketed(
     tests/test_hostile_streaming.py). A hot key's pairs now hash across
     ``span / bucket`` distinct join keys → that many state partitions /
     tasks. Cost: 3× state and shuffle on the replicated side — the
-    standard replication-for-parallelism trade (same as the salted-fold
-    operator's salt factor). Use when a hot key's per-trigger pair
+    standard replication-for-parallelism trade (same as ``salted_join``'s
+    salt factor). Use when a hot key's per-trigger pair
     volume serializes a task; the plain q48 shape is otherwise cheaper.
 
     Reference anchor: the deliberately hot-user fixture this guards
     against is the reference's own test shape
     (``ReadOnlyTableSpec.scala:41-54``)."""
-    assert bucket_minutes >= 5, "bucket must be >= the join range (5 min)"
+    if bucket_minutes < 5:
+        # a narrower bucket puts pairs two buckets apart, past the three
+        # replicas, and silently drops them
+        raise ValueError(
+            f"bucket_minutes={bucket_minutes}: the bucket must be >= the "
+            "join range (5 minutes)"
+        )
     a = _events_stream(
         spark, sf_dir, files_per_trigger=2, time_ordered=True,
         ts_type="timestamp",

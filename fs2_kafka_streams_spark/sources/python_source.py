@@ -164,6 +164,22 @@ def _key_array(col):
     return vals, isnull
 
 
+def _partition_key(uid, eid):
+    """Per-row partition key in FILE order from the ``(values, isnull)``
+    pairs of ``user_id`` and ``event_id``. Keyed records partition on the
+    key (Kafka default partitioner); NULL-key records use event_id — the
+    deterministic stand-in for Kafka's round-robin/sticky null-key
+    assignment; a record with NULL key AND NULL event_id round-robins on
+    its file row position (the last deterministic identity it has) —
+    total, never NaN % n."""
+    import numpy as np
+
+    uid_vals, uid_null = uid
+    eid_vals, eid_null = eid
+    pos = np.arange(len(uid_vals), dtype="int64")
+    return np.where(uid_null, np.where(eid_null, pos, eid_vals), uid_vals)
+
+
 #: per-process cache of the publish-order partition assignment, shared by
 #: ALL of a topic's partition read tasks in a worker (the assignment is a
 #: whole-table property; computing it per task would redo the global sort
@@ -193,16 +209,7 @@ def _partition_assignment(
         return cached
 
     _ts, eid, uid, order = _publish_order(path)
-    # keyed records partition on the key (Kafka default partitioner);
-    # NULL-key records use event_id % n — the deterministic stand-in for
-    # Kafka's round-robin/sticky null-key assignment; a record with NULL
-    # key AND NULL event_id round-robins on its file row position (the
-    # last deterministic identity it has) — total, never NaN % n
-    uid_vals, uid_null = uid
-    eid_vals, eid_null = eid
-    pos_all = np.arange(len(uid_vals), dtype="int64")
-    eid_rr = np.where(eid_null, pos_all, eid_vals)
-    part_key = np.where(uid_null, eid_rr, uid_vals)[order]
+    part_key = _partition_key(uid, eid)[order]
     pids = part_key % n_parts
     if grow_to and grow_to != n_parts:
         pos = np.arange(len(order))
@@ -220,8 +227,8 @@ def _partition_counts(
     """End offset (record count) per partition under the assignment.
 
     Without growth the counts don't depend on publish ORDER, so the
-    planner reads ONE column and bincounts — no sort, keeping offset
-    planning O(n) single-column driver-side work. Only the growth
+    planner reads the two key columns and bincounts — no sort, keeping
+    offset planning O(n) driver-side work. Only the growth
     simulation needs the publish ranking (the threshold is a position)."""
     import numpy as np
 
@@ -229,13 +236,9 @@ def _partition_counts(
         import pyarrow.parquet as pq
 
         t = pq.read_table(path, columns=["user_id", "event_id"])
-        uid_vals, uid_null = _key_array(t.column("user_id"))
-        eid_vals, eid_null = _key_array(t.column("event_id"))
-        # same NULL-key rule as _partition_assignment (event_id fallback,
-        # then file row position when the event_id is NULL too)
-        pos_all = np.arange(len(uid_vals), dtype="int64")
-        eid_rr = np.where(eid_null, pos_all, eid_vals)
-        part_key = np.where(uid_null, eid_rr, uid_vals)
+        part_key = _partition_key(
+            _key_array(t.column("user_id")), _key_array(t.column("event_id"))
+        )
         counts = np.bincount(part_key % n_parts, minlength=n_parts)
         return {p: int(counts[p]) for p in range(n_parts)}
 
@@ -764,6 +767,30 @@ class KafkaReplaySource(DataSource):
         return _StreamReader(self.options)
 
 
+def _subscribe(
+    reader, sf_dir, table, partitions, broker_dir, topics, topic_pattern,
+    grow_to, grow_at,
+):
+    """The ``kafka_replay`` options shared by :func:`read_wire` and
+    :func:`read_wire_stream`: partition count, subscription (one ``table``
+    under ``sf_dir``, or ``broker_dir`` with a ``topic_pattern`` or a
+    ``topics`` list) and the partition-growth simulation."""
+    rd = reader.format("kafka_replay").option("partitions", str(partitions))
+    if broker_dir:
+        rd = rd.option("broker_dir", broker_dir)
+        if topic_pattern:
+            rd = rd.option("topic_pattern", topic_pattern)
+        elif topics:
+            rd = rd.option("topics", ",".join(topics))
+    else:
+        rd = rd.option(
+            "path", os.path.join(sf_dir, f"{table}.parquet")
+        ).option("topic", table)
+    if grow_to:
+        rd = rd.option("grow_to", str(grow_to)).option("grow_at", str(grow_at))
+    return rd
+
+
 def read_wire(
     spark,
     sf_dir: str,
@@ -780,22 +807,10 @@ def read_wire(
     simulation as :func:`read_wire_stream` (a batch backfill over the same
     topic set a streaming job subscribes to)."""
     spark.dataSource.register(KafkaReplaySource)
-    rd = spark.read.format("kafka_replay").option(
-        "partitions", str(partitions)
-    )
-    if broker_dir:
-        rd = rd.option("broker_dir", broker_dir)
-        if topic_pattern:
-            rd = rd.option("topic_pattern", topic_pattern)
-        elif topics:
-            rd = rd.option("topics", ",".join(topics))
-    else:
-        rd = rd.option(
-            "path", os.path.join(sf_dir, f"{table}.parquet")
-        ).option("topic", table)
-    if grow_to:
-        rd = rd.option("grow_to", str(grow_to)).option("grow_at", str(grow_at))
-    return rd.load()
+    return _subscribe(
+        spark.read, sf_dir, table, partitions, broker_dir, topics,
+        topic_pattern, grow_to, grow_at,
+    ).load()
 
 
 def read_wire_stream(
@@ -847,23 +862,10 @@ def read_wire_stream(
     the old checkpoint.
     """
     spark.dataSource.register(KafkaReplaySource)
-    rd = (
-        spark.readStream.format("kafka_replay")
-        .option("partitions", str(partitions))
-        .option("batch_rows", str(batch_rows))
-    )
-    if broker_dir:
-        rd = rd.option("broker_dir", broker_dir)
-        if topic_pattern:
-            rd = rd.option("topic_pattern", topic_pattern)
-        elif topics:
-            rd = rd.option("topics", ",".join(topics))
-    else:
-        rd = rd.option(
-            "path", os.path.join(sf_dir, f"{table}.parquet")
-        ).option("topic", table)
-    if grow_to:
-        rd = rd.option("grow_to", str(grow_to)).option("grow_at", str(grow_at))
+    rd = _subscribe(
+        spark.readStream, sf_dir, table, partitions, broker_dir, topics,
+        topic_pattern, grow_to, grow_at,
+    ).option("batch_rows", str(batch_rows))
     if cursor_file:
         rd = rd.option("cursor_file", cursor_file)
     if fail_on_data_loss is not None:

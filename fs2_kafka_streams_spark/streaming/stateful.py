@@ -9,7 +9,7 @@ engines:
 
 - :func:`_native_fold`, Spark's built-in streaming aggregation
   (``max_by`` in update mode, the batch twin's plan), behind
-  :func:`latest_by_key_streaming`, its salted form and
+  :func:`latest_by_key_streaming` and
   :func:`latest_by_key_streaming_with_deletes`;
 - ``transformWithStateInPandas`` (:class:`LatestDeletesProcessor`, which
   runs the Python fold :func:`_fold_latest`), behind the ``*_tws``
@@ -78,16 +78,15 @@ _OUTPUT_SCHEMA_DEAD = _OUTPUT_SCHEMA + ", _dead boolean"
 
 
 def _changelog_source(
-    spark: SparkSession, path: str, schema: str = EVENTS_SCHEMA,
-    files_per_trigger: int = 2,
+    spark: SparkSession, path: str, schema: str = EVENTS_SCHEMA
 ) -> DataFrame:
-    """Parquet changelog directory replayed ``files_per_trigger`` files
-    per micro-batch. The default 2 still crosses micro-batch boundaries
-    (cross-batch state is the semantic under test — latest-by-key is
-    batching-insensitive) at half the per-batch machinery cost of 1."""
+    """Parquet changelog directory replayed 2 files per micro-batch: still
+    crosses micro-batch boundaries (cross-batch state is the semantic under
+    test — latest-by-key is batching-insensitive) at half the per-batch
+    machinery cost of 1."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
+        .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
 
@@ -189,15 +188,25 @@ def _view_row(key, best) -> pd.DataFrame:
 
 
 def _native_fold(
-    src: DataFrame, group_cols: list[str], tombstone_col: str | None = None
+    src: DataFrame, tombstone_col: str | None = None
 ) -> DataFrame:
     """The upsert engine of the latest-by-key streaming queries: Spark's
     built-in streaming aggregation, ``max_by`` of the row by
-    ``(ts, event_id)`` per ``group_cols`` in update mode — the batch twin's
+    ``(ts, event_id)`` per ``user_id`` in update mode — the batch twin's
     plan (``operators/latest_by_key.py``) kept across micro-batches in the
     state store, with no Python worker on the path. The state holds one
     ``max_by`` buffer per group (``read_table_state`` reads it back); each
     trigger emits the current best row of every group it touched.
+
+    A hot key needs no salting here. The fold can be pre-combined (max by
+    an ordering tuple is associative and commutative), so the
+    aggregation's map-side partial step folds each input task's rows of a
+    key into one row before the state shuffle: a key carrying 95% of a
+    trigger reaches its state partition as one row per input task, not as
+    one group holding 95% of the batch. Measured on a 6 M-event corpus
+    with one key carrying 95% of it, a two-level salted form of this fold
+    was slower than this plain one (SCALE.md "Hot keys on the native
+    fold").
 
     NULL ordering is the batch fold's: the ``struct(ts, event_id)``
     comparison puts a NULL ts or a NULL (unkeyed) event_id FIRST, so it
@@ -213,8 +222,7 @@ def _native_fold(
     never emits. Duality-tested against the batch MERGE, out-of-order late
     records included, in tests/test_streaming_duality.py.
 
-    Output is ``_OUTPUT_SCHEMA`` (plus ``_dead``): group columns other than
-    ``user_id`` — the salt — are dropped."""
+    Output is ``_OUTPUT_SCHEMA`` (plus ``_dead``)."""
     value_cols = ["event_id", "ts", "event_type", "value", "props"]
     if tombstone_col is not None:
         src = src.withColumn(
@@ -222,8 +230,8 @@ def _native_fold(
         )
         value_cols.append("_dead")
     return latest_by_key(
-        src, group_cols, ["ts", "event_id"], value_cols, unique_order=True
-    ).drop(*[c for c in group_cols if c != "user_id"])
+        src, ["user_id"], ["ts", "event_id"], value_cols, unique_order=True
+    )
 
 
 try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
@@ -489,21 +497,13 @@ def _read_upsert_log(
     ).parquet(sink_dir)
 
 
-def _log_head(
-    log: DataFrame,
-    dead_col: str | None = None,
-    order_cols: tuple[str, ...] = ("_epoch", "ts", "event_id"),
-) -> DataFrame:
-    """Latest row per key from the append log; with ``dead_col``, keys
-    whose head is a tombstone drop out — exactly a compacted topic's read
-    view (tombstoned keys vanish once the tombstone is the head).
-
-    ``order_cols``: the single-state folds emit MONOTONE rows per key, so
-    commit order (``_epoch`` first) is also data order. The SALTED fold's
-    per-(key, salt) partials are monotone only within a salt — a later
-    epoch may carry an older row from a different salt — so it orders by
-    the data itself, ``("ts", "event_id")``, which is what makes the
-    log-head aggregation the fold's associative second level.
+def _log_head(log: DataFrame, dead_col: str | None = None) -> DataFrame:
+    """Latest row per key from the append log by ``(_epoch, ts, event_id)``;
+    with ``dead_col``, keys whose head is a tombstone drop out — exactly a
+    compacted topic's read view (tombstoned keys vanish once the tombstone
+    is the head). The folds emit MONOTONE rows per key, so commit order
+    (``_epoch`` first) is also data order, the order
+    :func:`compact_upsert_log` keeps.
     """
     value_cols = ["event_id", "ts", "event_type", "value", "props"]
     if dead_col is not None:
@@ -511,13 +511,11 @@ def _log_head(
     head = latest_by_key(
         log,
         key_cols=["user_id"],
-        order_cols=list(order_cols),
+        order_cols=["_epoch", "ts", "event_id"],
         value_cols=value_cols,
         # (_epoch, ts, event_id) is unique per key per append; an
         # at-least-once duplicate append ties only against an IDENTICAL
-        # row, so dropping the value tie-break stays deterministic. The
-        # salted ordering (ts, event_id) ties only when a salt state
-        # re-emits its unchanged best row — also identical content.
+        # row, so dropping the value tie-break stays deterministic
         unique_order=True,
     )
     if dead_col is not None:
@@ -624,7 +622,6 @@ def _run_upsert_sink(
     spark: SparkSession, updates: DataFrame, checkpoint: str | None = None,
     sink_dir: str | None = None, row_schema: str = _OUTPUT_SCHEMA,
     dead_col: str | None = None,
-    head_order: tuple[str, ...] = ("_epoch", "ts", "event_id"),
 ) -> DataFrame:
     """Drive the update stream to completion; materialize the view through a
     KEYED PARQUET UPSERT SINK (the Spark-native analogue of a compacted
@@ -710,9 +707,7 @@ def _run_upsert_sink(
     )
 
     return _log_head(
-        _read_upsert_log(spark, sink_dir, row_schema),
-        dead_col=dead_col,
-        order_cols=head_order,
+        _read_upsert_log(spark, sink_dir, row_schema), dead_col=dead_col
     )
 
 
@@ -726,95 +721,9 @@ def latest_by_key_streaming(
     afterwards via :func:`read_table_state` (A10 interactive reads); pass
     ``sink_dir`` to keep the upsert log for :func:`compact_upsert_log`."""
     src = _changelog_source(spark, replay_dir(sf_dir, "events"))
-    updates = _native_fold(src, ["user_id"])
+    updates = _native_fold(src)
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir
-    )
-
-
-def latest_by_key_streaming_salted(
-    spark: SparkSession,
-    replay_path: str,
-    salt: int = 8,
-    hot_keys: list | None = None,
-    checkpoint: str | None = None,
-    sink_dir: str | None = None,
-    files_per_trigger: int = 2,
-) -> DataFrame:
-    """Hot-key-salted changelog→table materialization: the two-level fold
-    SCALE.md "Skew axis" prescribes, as a real operator.
-
-    The single-state fold (:func:`latest_by_key_streaming`) funnels EVERY
-    row of a key into one state group per trigger. Its native aggregation
-    already pre-reduces a hot key to one partial row per input task before
-    the state shuffle; on the ``applyInPandasWithState`` engine it replaced,
-    the hot group was the whole trigger's critical path (one Arrow
-    round-trip carrying 95% of the batch, measured in SCALE.md).
-    Here each row scatters to one of ``salt`` sub-groups by a
-    DETERMINISTIC row hash (``operators/joins.py::deterministic_salt`` on
-    ``(event_id, ts)``; never ``spark_partition_id`` — retry-safe), the
-    stateful level folds per ``(user_id, _salt)`` so the hot key's work
-    spreads over ``salt`` parallel groups, and the upsert sink's log-head
-    aggregation IS the second, tiny merge level: at most ``salt`` partial
-    rows per key, merged by ``max_by`` on ``(ts, event_id)`` — the fold
-    is associative and commutative, so salted ≡ unsalted ≡ batch
-    (equivalence-tested on hot40/hot95 corpora in
-    tests/test_salted_fold.py).
-
-    Why the merge lives in the sink and not a second in-query stateful
-    operator: Structured Streaming does not compose two update-mode
-    stateful operators in one query, and the sink's read-back aggregation
-    already runs per view materialization — O(keys·salt) rows, shuffle
-    O(keys). The log head orders by the DATA ``(ts, event_id)`` rather
-    than commit epoch: per-salt partials are monotone only within their
-    salt, so a later epoch may legitimately carry an older row from a
-    colder salt (see :func:`_log_head`).
-
-    ``hot_keys`` — SALT ONLY THESE KEYS (the known hot tenants /
-    celebrity users; the production pattern, since a changelog's hot keys
-    are stable and observable): everything else keeps ``_salt = 0``, so
-    the state-group count stays ≈ O(keys) + salt × |hot_keys|. This
-    mattered, measured on the ``applyInPandasWithState`` engine: full-row
-    salting multiplied the PER-GROUP Arrow round-trip overhead across
-    every cold key each trigger — at 6M events / hot95 the full-salt fold
-    was 2.6× SLOWER per trigger (p50 2.3 s → 5.9 s) than unsalted because
-    1,500 key groups became 12,000, while hot-only salting spreads the one
-    hot group without touching the cold 1,499 (numbers in SCALE.md "Skew
-    axis"). ``None`` salts every
-    row — only sensible when most keys are hot or the key domain is tiny.
-    Pick ``salt`` ≈ the per-executor core count the hot key should fan
-    out to.
-
-    ``replay_path``: a directory of parquet changelog files (events
-    schema), e.g. from ``streaming/replay.py::replay_dir`` or a test's
-    hot-key corpus. Reference anchor: the 4-hot-user fixture shape of
-    ``ReadOnlyTableSpec.scala:41-54`` scaled to a skewed domain.
-    """
-    src = _changelog_source(
-        spark, replay_path, files_per_trigger=files_per_trigger
-    )
-    # (event_id, ts) is the changelog position — unique per row, cheap to
-    # hash, and NOT the grouping key (salting by a key-correlated value
-    # would put the whole hot key back in one sub-group)
-    row_salt = F.pmod(F.xxhash64("event_id", "ts"), F.lit(salt)).cast("int")
-    if hot_keys is not None:
-        from fs2_kafka_streams_spark.operators.joins import (
-            hot_key_condition,
-        )
-
-        # shared predicate with the batch fold and salted_join (r9): a
-        # None entry targets the NULL-key group isin() cannot match
-        row_salt = (
-            F.when(hot_key_condition("user_id", hot_keys), row_salt)
-            .otherwise(F.lit(0))
-            .cast("int")
-        )
-    updates = _native_fold(
-        src.withColumn("_salt", row_salt), ["user_id", "_salt"]
-    )
-    return _run_upsert_sink(
-        spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-        head_order=("ts", "event_id"),
     )
 
 
@@ -839,7 +748,7 @@ def latest_by_key_streaming_with_deletes(
     src = _changelog_source(
         spark, replay_path, EVENTS_SCHEMA + f", {tombstone_col} boolean"
     )
-    updates = _native_fold(src, ["user_id"], tombstone_col)
+    updates = _native_fold(src, tombstone_col)
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
         row_schema=_OUTPUT_SCHEMA_DEAD, dead_col="_dead",

@@ -276,9 +276,9 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
             "wall_s": round(wall, 1),
             "triggers": len(trig_ms),
             "mean_trigger_ms": int(np.mean(trig_ms)) if trig_ms else -1,
-            # p50 vs max is the skew instrument: a hot key serializes one
-            # key-group's Arrow round-trip, stretching the worst trigger
-            # while the median stays put
+            # p50 vs max is the skew instrument: a hot key that one task
+            # must fold alone stretches the worst trigger while the median
+            # stays put
             "p50_trigger_ms": int(np.median(trig_ms)) if trig_ms else -1,
             "max_trigger_ms": int(np.max(trig_ms)) if trig_ms else -1,
             "state_rows": state_rows,
@@ -286,7 +286,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
         }
 
     def latest_updates(src):
-        return stateful._native_fold(src, ["user_id"])
+        return stateful._native_fold(src)
 
     def funnel_updates(src):
         return src.groupBy("user_id").applyInPandasWithState(
@@ -325,8 +325,8 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
     # axis 3: HOT KEY — same volume/key-domain as axis 1's largest run but
     # 40% of all events land on one user (the reference fixture's own shape,
     # ReadOnlyTableSpec.scala:41-54). State must stay O(keys) — the skew
-    # cost, if any, shows up in max_trigger_ms (one key group = one Arrow
-    # round-trip that cannot be split across tasks).
+    # cost, if any, shows up in max_trigger_ms (the funnel's key group is
+    # one Arrow round-trip that cannot be split across tasks).
     replay = _events_replay(out, n_ev, BASE_KEYS, n_files, hot_frac=0.4)
     for tag, builder, mode in (
         ("latest", latest_updates, "update"),
@@ -340,50 +340,19 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
         rows.append(row)
         print("STREAM_ROW", json.dumps(row), flush=True)
 
-    # axis 3b: the SALTED two-level fold on hot corpora — the mitigation
-    # SCALE.md prescribed and r8 made an operator
-    # (streaming/stateful.py::latest_by_key_streaming_salted). Same
-    # stateful level as that operator (fold per (user_id, _salt), salt=8,
-    # deterministic row hash); the sink-side merge level is a per-view
-    # O(keys·salt) aggregation not part of the per-trigger path, so the
-    # per-trigger max here is the number the salting must flatten. hot95
-    # is where the unsalted funnel becomes a real stall (one state group
-    # carries 95% of every batch).
-    from pyspark.sql import functions as F
-
-    def _salted_builder(hot_keys):
-        def build(src):
-            row_salt = F.pmod(
-                F.xxhash64("event_id", "ts"), F.lit(8)
-            ).cast("int")
-            if hot_keys is not None:
-                row_salt = (
-                    F.when(F.col("user_id").isin(list(hot_keys)), row_salt)
-                    .otherwise(F.lit(0))
-                    .cast("int")
-                )
-            salted = src.withColumn("_salt", row_salt)
-            return stateful._native_fold(salted, ["user_id", "_salt"])
-
-        return build
-
-    for hot in (0.4, 0.95):
-        replay = _events_replay(out, n_ev, BASE_KEYS, n_files, hot_frac=hot)
-        # gen_events plants the hot key on user_id 0
-        variants = [
-            ("latest_salted", _salted_builder(None)),
-            ("latest_salted_hotonly", _salted_builder([0])),
-        ]
-        if hot != 0.4:  # axis 3 already measured unsalted hot40
-            variants.insert(0, ("latest", latest_updates))
-        for tag, builder in variants:
-            m = drive(builder, replay, f"{tag}_hot{int(hot * 100)}")
-            row = {
-                "op": f"{tag}_hot{int(hot * 100)}", "scale": scales[-1],
-                "events": n_ev, "keys": BASE_KEYS, **m,
-            }
-            rows.append(row)
-            print("STREAM_ROW", json.dumps(row), flush=True)
+    # axis 3b: a 95%-hot key, where one state group would carry 95% of
+    # every batch if the fold could not pre-combine. The native fold's
+    # map-side partial aggregation reduces the hot key to one row per
+    # input task before the state shuffle (SCALE.md "Hot keys on the
+    # native fold").
+    replay = _events_replay(out, n_ev, BASE_KEYS, n_files, hot_frac=0.95)
+    m = drive(latest_updates, replay, "latest_hot95")
+    row = {
+        "op": "latest_hot95", "scale": scales[-1], "events": n_ev,
+        "keys": BASE_KEYS, **m,
+    }
+    rows.append(row)
+    print("STREAM_ROW", json.dumps(row), flush=True)
     return rows
 
 

@@ -78,8 +78,6 @@ SLOW_TESTS = {
     "test_review_r6_fixes.py::test_upsert_sink_epochs_monotone_across_runs",
     "test_review_r7_fixes.py::test_decode_and_pipeline_boundary_contracts",
     "test_review_r8_fixes.py::test_upsert_sink_files_bounded_by_buckets",
-    "test_salted_fold.py::test_streaming_salted_detected_equals_manual",
-    "test_salted_fold.py::test_streaming_salted_restart_appends_to_same_sink",
     "test_streaming_duality.py::test_compaction_concurrent_appends",
     "test_streaming_duality.py::test_random_changelog_duality[0-native_aggregate]",
     "test_streaming_duality.py::test_random_changelog_duality[0-transform_with_state]",

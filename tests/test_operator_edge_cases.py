@@ -536,3 +536,16 @@ def test_encode_for_kafka_nested_key_path(spark):
     )
     out = encode_for_kafka(df, value_cols=["x"], key_col="payload.user")
     assert bytes(out.collect()[0].key) == b"u9"
+
+
+def test_bucketed_stream_join_rejects_bucket_narrower_than_range():
+    """A bucket narrower than the 5-minute join range lets a pair sit two
+    buckets apart, past the three right-side replicas, and drops it
+    silently. The guard must hold under ``python -O`` too, so it is a
+    ValueError, not an assert; it fires before any Spark work."""
+    from fs2_kafka_streams_spark.queries.streaming_ext import (
+        stream_stream_join_bucketed,
+    )
+
+    with pytest.raises(ValueError, match="join range"):
+        stream_stream_join_bucketed(None, "unused", bucket_minutes=4)

@@ -285,31 +285,6 @@ def test_duration_us_shapes():
 
 
 @SET
-@given(rows=changelogs, salt=st.sampled_from([1, 2, 5]))
-def test_salted_fold_equals_unsalted(spark, rows, salt):
-    """r8 salted two-level fold: latest_by_key_salted ≡ latest_by_key for
-    ANY changelog and salt count — the associativity claim the streaming
-    operator's correctness rests on, beyond the fixed hot-corpus tests."""
-    from fs2_kafka_streams_spark.operators.latest_by_key import (
-        latest_by_key,
-        latest_by_key_salted,
-    )
-
-    df = spark.createDataFrame(rows, "k long, off long, v long")
-    base = latest_by_key(df, ["k"], ["off"], ["off", "v"])
-    got = latest_by_key_salted(df, ["k"], ["off"], ["off", "v"], salt=salt)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, base.collect())
-    )
-    hot = latest_by_key_salted(
-        df, ["k"], ["off"], ["off", "v"], salt=salt, hot_keys=[0, 3]
-    )
-    assert sorted(map(tuple, hot.collect())) == sorted(
-        map(tuple, base.collect())
-    )
-
-
-@SET
 @given(rows=changelogs, width=st.sampled_from([1, 3, 7, 50]))
 def test_bucketed_history_equals_default_any_width(spark, rows, width):
     """r8 salt-window-stitch: changelog_history(order_bucket=w) ≡ the

@@ -465,3 +465,44 @@ def test_global_latest_pacing_serves_mid_query_backlog_paced(tmp_path):
     assert served == ends1
     # and it genuinely took multiple triggers per partition
     assert max(ends1.values()) > 40
+
+
+@pytest.mark.parametrize("grow_to", [0, 7])
+def test_partition_counts_match_assignment_with_null_keys(tmp_path, grow_to):
+    """The offset planner's per-partition end offsets and the read tasks'
+    row assignment apply one partition-key rule (user_id, else event_id,
+    else file row position): on a corpus with NULL keys AND NULL ids, the
+    counts equal the bincount of the assigned pids, with and without
+    partition growth."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fs2_kafka_streams_spark.sources.python_source import (
+        _partition_assignment,
+        _partition_counts,
+    )
+
+    rng = np.random.default_rng(5)
+    n = 500
+    uid = rng.integers(0, 40, size=n)
+    eid = rng.permutation(np.arange(1, n + 1))
+    uid_null = rng.random(n) < 0.3
+    eid_null = rng.random(n) < 0.3
+    assert (uid_null & eid_null).any()
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(eid, pa.int64(), mask=eid_null),
+            "ts": pa.array(rng.integers(0, 10**9, size=n), pa.int64()).cast(
+                pa.timestamp("us")
+            ),
+            "user_id": pa.array(uid, pa.int64(), mask=uid_null),
+        }),
+        path,
+    )
+    counts = _partition_counts(path, N_PARTS, grow_to, n // 2)
+    _order, pids = _partition_assignment(path, N_PARTS, grow_to, n // 2)
+    want = np.bincount(pids, minlength=max(N_PARTS, grow_to))
+    assert counts == {p: int(c) for p, c in enumerate(want)}
+    assert sum(counts.values()) == n

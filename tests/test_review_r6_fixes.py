@@ -389,7 +389,7 @@ def test_upsert_sink_epochs_monotone_across_runs(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(rep))
         )
-        updates = _native_fold(src, ["user_id"])
+        updates = _native_fold(src)
         return _run_upsert_sink(spark, updates, sink_dir=sink)
 
     # run 1: five micro-batches -> epochs 0..4, head ts=50us

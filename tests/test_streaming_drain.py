@@ -135,7 +135,7 @@ def test_checkpoint_keeps_its_state_partitions_on_restart(
             .parquet(str(rep))
         )
         view = _run_upsert_sink(
-            spark, _native_fold(src, ["user_id"]), checkpoint=ckpt,
+            spark, _native_fold(src), checkpoint=ckpt,
             sink_dir=sink,
         )
         triggers = srun.RUN_TRACE[-1]["triggers"]

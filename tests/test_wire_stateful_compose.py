@@ -235,7 +235,7 @@ def test_stateful_fold_survives_topic_revocation(spark, tmp_path):
         src = decode_wire(wire).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-        upd = stateful._native_fold(src, ["user_id"])
+        upd = stateful._native_fold(src)
         with pinned_conf(spark, dict(STREAM_PERF_CONF)):
             q = (
                 upd.writeStream.outputMode("update")
