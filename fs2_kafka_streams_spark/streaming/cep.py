@@ -1,30 +1,40 @@
-"""Streaming pattern detection (CEP-lite): A-followed-by-B within a gap.
+"""Streaming pattern detection (CEP-lite): chains of "followed by" hops.
 
 The reference exposes per-partition, order-preserving typed streams
 (``client/RecordStream.scala:14-16``) precisely so consumers can run
 order-sensitive logic like this; here the same contract is a keyed
-stateful streaming operator: for every ``trigger_type`` event, emit a
-match against the key's most recent ``base_type`` event if it happened
-within ``gap`` — e.g. "click within 10 minutes of a view".
+stateful streaming operator running ONE algorithm, a chain over N event
+types (stages). A stage-0 row qualifies on its event type. Hop k
+qualifies a stage-k row when the key's last STRICTLY-prior qualified
+stage-(k-1) event — in ``(ts, event_id NULLS LAST)`` order, or carried
+from earlier micro-batches — lies within ``0 <= lag <= gap``. Every
+qualified final-stage row emits its chain. Followed-by is the two-stage
+chain ``(base, trigger)`` — e.g. "click within 10 minutes of a view";
+the funnel is the three-stage chain ``(view, click, purchase)``.
 
-State per key is ONE row (the latest base event) — O(keys) state, never
-O(events), and a key's state is overwritten on every base event, so state
-size is bounded regardless of stream length. Rows are processed in
-``(ts, event_id)`` order: the time-ordered replay guarantees it across
-micro-batches (contiguous time chunks), and the update function sorts
-within each batch — so the streaming result equals the batch
-last-prior-base window formulation row for row (asserted in
-tests/test_streaming_duality.py and hash-checked against the DuckDB
-oracle as q57).
+State per key is one chain per level, O(keys) state and never O(events):
+level k holds the chain ending at the key's last qualified stage-(k-1)
+event, as k ``(event_id, ts_us)`` pairs, newest stage first, overwritten
+whenever a newer one qualifies — so state size is bounded regardless of
+stream length. Followed-by keeps level 1 ``(base_event_id, base_ts_us)``;
+the funnel keeps levels 1 and 2 ``(v_id, v_ts, c_id, c_ts, cv_id,
+cv_ts)``. Rows are processed in ``(ts, event_id)`` order: the
+time-ordered replay guarantees it across micro-batches (contiguous time
+chunks), and the fold sorts within each batch — so the streaming result
+equals the batch last-prior-qualified window formulation row for row
+(asserted in tests/test_streaming_duality.py and hash-checked against
+the DuckDB oracle as q57 and q59).
 
-Match timestamps compare in exact microseconds; the emitted
-``lag_seconds`` is floor(epoch-seconds) difference, matching the SQL
-``floor(extract(epoch ...))`` convention used across the repo.
+Match timestamps compare in exact microseconds; the emitted lag is the
+floor(epoch-seconds) difference between the last and the first stage,
+matching the SQL ``floor(extract(epoch ...))`` convention used across
+the repo.
 """
 
 from __future__ import annotations
 
 import uuid
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -48,118 +58,255 @@ _MATCH_SCHEMA = (
     "base_ts timestamp_ntz, trigger_ts timestamp_ntz, lag_seconds long"
 )
 _STATE_SCHEMA = "base_event_id long, base_ts_us long"
+_FUNNEL_SCHEMA = (
+    "user_id long, view_event_id long, click_event_id long, "
+    "purchase_event_id long, view_ts timestamp_ntz, "
+    "click_ts timestamp_ntz, purchase_ts timestamp_ntz, "
+    "total_lag_seconds long"
+)
+# level-1 state (last base) + level-2 state (last qualified mid + its base)
+_FUNNEL_STATE = (
+    "v_id long, v_ts long, c_id long, c_ts long, cv_id long, cv_ts long"
+)
 
 
-def _fold_pattern(
+class _Shape(NamedTuple):
+    """How a chain is emitted: one output column stem per stage
+    (``{stem}_event_id`` ..., then ``{stem}_ts`` ...), the lag column,
+    and the output and state schemas."""
+
+    names: tuple[str, ...]
+    lag_col: str
+    out_schema: str
+    state_schema: str
+
+
+_FOLLOWED_BY = _Shape(
+    ("base", "trigger"), "lag_seconds", _MATCH_SCHEMA, _STATE_SCHEMA
+)
+_FUNNEL = _Shape(
+    ("view", "click", "purchase"), "total_lag_seconds",
+    _FUNNEL_SCHEMA, _FUNNEL_STATE,
+)
+
+
+def _chain_fold(
     frames: list[pd.DataFrame],
-    last: tuple[int, int] | None,
-    base_type: str,
-    trigger_type: str,
+    state: tuple,
+    stages: tuple[str, ...],
     gap_us: int,
-) -> tuple[tuple[int, int] | None, pd.DataFrame | None]:
+    shape: _Shape,
+) -> tuple[tuple, pd.DataFrame | None]:
     """Pure per-key fold shared by BOTH state APIs
-    (``applyInPandasWithState`` and ``transformWithStateInPandas``):
-    given the batch's frames and the carried (base_event_id, base_ts_us)
-    state, return (new_state, match_frame_or_None)."""
+    (``applyInPandasWithState`` and ``transformWithStateInPandas``): given
+    the batch's frames and the carried flat state (levels 1..N-1, level k
+    at slot ``k*(k-1)``, None slots while it is empty), return
+    (new_state, match_frame_or_None)."""
     if not frames:
-        return last, None
+        return state, None
     pdf = frames[0] if len(frames) == 1 else pd.concat(
         frames, ignore_index=True
     )
     # Per-key hot path (r12, guide §4.2): this fold runs once per KEY per
     # micro-batch, so its constant factor multiplies by the key count —
     # plain numpy throughout (lexsort + maximum.accumulate) instead of
-    # pandas Series machinery (measured 5.9× per call, byte-identical
-    # output on the randomized NULL/tie/extreme-ts sweep pinned in
-    # tests/test_fold_vectorized.py).
-    n = len(pdf)
-    ts_us = pdf["ts"].to_numpy().astype("int64") // 1000
-    ids = pdf["event_id"].to_numpy()
-    et = pdf["event_type"]
-    is_base_u = (et == base_type).to_numpy()
-    is_trig_u = (et == trigger_type).to_numpy()
+    # pandas Series machinery (byte-identical output on the randomized
+    # NULL/tie/extreme-ts sweeps pinned in tests/test_fold_vectorized.py).
+    ts = pdf["ts"].to_numpy().astype("int64") // 1000
+    # event_id as int64 values plus a NULL mask, for every dtype a state
+    # API hands over: an unkeyed event's NULL id is payload, carried
+    # faithfully into matches and state
+    keys = _id_sort_keys(pdf["event_id"].to_numpy(), nulls_first=False)
     # sort by (ts, id); NULL event_ids sort LAST among ts ties (pandas'
     # na_position default) — exactly DuckDB's ASC NULLS LAST, so the
     # oracle needs no spelling
-    order = np.lexsort((*_id_sort_keys(ids, nulls_first=False), ts_us))
-    ts_us = ts_us[order]
-    ids = ids[order]
-    is_base = is_base_u[order]
-    is_trig = is_trig_u[order]
+    order = np.lexsort((*keys, ts))
+    ts, ids = ts[order], keys[0][order]
+    null = keys[1][order] if len(keys) > 1 else np.zeros(len(ts), bool)
+    et = pdf["event_type"]
+    idx = np.arange(len(ts), dtype=np.int64)
+    qual = (et == stages[0]).to_numpy()[order]
+    quals, prior = [], []
+    for k, stage in enumerate(stages[1:], 1):
+        # last qualified stage-(k-1) row STRICTLY before each row, tracked
+        # by ROW POSITION (running max shifted one row, so a type that is
+        # both stages links to the PREVIOUS one — the batch 1-PRECEDING
+        # frame); -1 falls back to carried level k. Position, not id: a
+        # NULL-id event is still a real event, and an id-ffill would
+        # attribute its matches to an OLDER event's id (r10 NULL-id sweep).
+        pos = np.where(qual, idx, np.int64(-1))
+        np.maximum.accumulate(pos, out=pos)
+        pos = np.concatenate(([np.int64(-1)], pos[:-1]))
+        # the level's ts slot (never NULL after the ts filter) marks its
+        # existence — the id slot may be genuinely NULL
+        carried = state[k * (k - 1) + 1]
+        lag = ts - np.where(pos >= 0, ts[pos], carried or 0)
+        ok = (lag >= 0) & (lag <= gap_us)
+        if carried is None:
+            ok &= pos >= 0
+        quals.append(qual)
+        prior.append(pos)
+        qual = (et == stage).to_numpy()[order] & ok
 
-    # last base event STRICTLY before each row in (ts, id) order, tracked
-    # by ROW POSITION (running max of base positions, shifted one row, so
-    # a type that is both base and trigger matches the PREVIOUS base —
-    # the batch 1-PRECEDING frame). Position, not id: a base whose
-    # event_id is NULL is still a real base (the id is payload), and an
-    # id-ffill would silently attribute its matches to an OLDER base's id
-    # while taking the new base's ts (r10 NULL-id sweep).
-    idx = np.arange(n, dtype=np.int64)
-    bpos = np.where(is_base, idx, np.int64(-1))
-    np.maximum.accumulate(bpos, out=bpos)
-    prior_pos = np.empty(n, dtype=np.int64)
-    prior_pos[0] = -1
-    prior_pos[1:] = bpos[:-1]
-    have = prior_pos >= 0
-    prior_ts = np.where(have, ts_us[np.where(have, prior_pos, 0)], np.int64(0))
-    seed = last  # state BEFORE this batch seeds rows before its first base
-    if seed is not None:
-        # base_ts (never NULL after the ts filter) marks existence; the
-        # seeded id may itself be genuinely NULL
-        prior_ts = np.where(have, prior_ts, np.int64(seed[1]))
-        valid = None  # every row has a prior base (batch or seeded)
-    else:
-        valid = have
-    lag = ts_us - prior_ts
-    hit = is_trig & (lag <= gap_us) & (lag >= 0)
-    if valid is not None:
-        hit &= valid
+    def chain(rows, s):
+        # (ids, NULL-id mask, ts) of the chains ending at stage-s rows,
+        # stage s down to 0; lvl is the carried level a row's chain
+        # continues in (0: none yet)
+        links, lvl = [], np.zeros(len(rows), dtype=np.int64)
+        for k in range(s, -1, -1):
+            v, nl, t = ids[rows], null[rows], ts[rows]
+            for level in range(k + 1, len(stages)):
+                m = lvl == level
+                if m.any():
+                    o = level * (level - 1) + 2 * (level - 1 - k)
+                    v[m], nl[m] = state[o] or 0, state[o] is None
+                    t[m] = state[o + 1]
+            links.append((v, nl, t))
+            if k:
+                p = prior[k - 1][rows]
+                lvl = np.where((lvl == 0) & (p < 0), k, lvl)
+                rows = p
+        return links
 
-    if is_base.any():
-        i = int(np.nonzero(is_base)[0][-1])
-        eid = ids[i]
-        last = (None if pd.isna(eid) else int(eid), int(ts_us[i]))
-
-    match = None
-    if hit.any():
-        hidx = np.nonzero(hit)[0]
-        pp = prior_pos[hidx]
-        seeded = pp < 0
-        # nullable Int64: the NULL grouping key is a legitimate group
-        # (batch PARTITION BY groups NULLs together on both engines); a
-        # plain int64 cast crashes on its NaN. Same for the id columns:
-        # an unkeyed base/trigger emits NULL.
-        base_id = pd.array(ids[np.where(seeded, 0, pp)], dtype="Int64")
-        if seeded.any():
-            base_id[seeded] = seed[0]
-        uid = pdf["user_id"].to_numpy()[order][hidx]
-        match = pd.DataFrame(
-            {
-                "user_id": pd.array(uid, dtype="Int64"),
-                "base_event_id": base_id,
-                "trigger_event_id": pd.array(ids[hidx], dtype="Int64"),
-                "base_ts": pd.to_datetime(prior_ts[hidx], unit="us"),
-                "trigger_ts": pd.to_datetime(ts_us[hidx], unit="us"),
-                "lag_seconds": ts_us[hidx] // 1_000_000
-                - prior_ts[hidx] // 1_000_000,
-            }
-        )
-    return last, match
+    new = list(state)
+    for k, q in enumerate(quals, 1):
+        if q.any():
+            new[k * (k - 1):k * (k + 1)] = [
+                x
+                for v, nl, t in chain(np.flatnonzero(q)[-1:], k - 1)
+                for x in (None if nl[0] else int(v[0]), int(t[0]))
+            ]
+    hit = np.flatnonzero(qual)
+    if not len(hit):
+        return tuple(new), None
+    links = chain(hit, len(stages) - 1)[::-1]
+    # nullable Int64: the NULL grouping key is a legitimate group (batch
+    # PARTITION BY groups NULLs together on both engines)
+    cols = {
+        "user_id": pd.array(pdf["user_id"].to_numpy()[order][hit], "Int64")
+    }
+    for name, (v, nl, _) in zip(shape.names, links):
+        cols[f"{name}_event_id"] = pd.arrays.IntegerArray(v, nl)
+    for name, (_, _, t) in zip(shape.names, links):
+        cols[f"{name}_ts"] = pd.to_datetime(t, unit="us")
+    cols[shape.lag_col] = links[-1][2] // 1_000_000 - links[0][2] // 1_000_000
+    return tuple(new), pd.DataFrame(cols)
 
 
-def _pattern_update_fn(base_type: str, trigger_type: str, gap_us: int):
+def _chain_update_fn(stages: tuple[str, ...], gap_us: int, shape: _Shape):
+    """``applyInPandasWithState`` function running :func:`_chain_fold`."""
+    slots = len(stages) * (len(stages) - 1)
+
     def update(key, pdf_iter, state: GroupState):
-        last = tuple(state.get) if state.exists else None  # (event_id, ts_us)
+        st = tuple(state.get) if state.exists else (None,) * slots
         frames = [pdf for pdf in pdf_iter if not pdf.empty]
-        last, match = _fold_pattern(
-            frames, last, base_type, trigger_type, gap_us
-        )
-        if last is not None:
-            state.update(last)
+        new, match = _chain_fold(frames, st, stages, gap_us, shape)
+        if any(x is not None for x in new):
+            state.update(new)
         if match is not None:
             yield match
 
     return update
+
+
+def _events_source(
+    spark: SparkSession, sf_dir: str, source: DataFrame | None = None
+) -> DataFrame:
+    """``source`` (default: the time-ordered replay of
+    ``{sf_dir}/events.parquet``, 2 files per trigger, so cross-batch state
+    is exercised) without its NULL event-time rows."""
+    if source is None:
+        source = _changelog_source(
+            spark, replay_dir(sf_dir, "events", order_col="ts")
+        )
+    # NULL event-time contract (docs/USAGE.md): a row with no event time
+    # cannot be sequenced — CEP drops it, exactly as Spark's own
+    # event-time operators (window aggregation, stream-stream join) drop
+    # NULL event times. Without this, NaT → int64 µs is the int64-min
+    # sentinel and the fold crashes or mis-sequences.
+    return source.filter(F.col("ts").isNotNull())
+
+
+def _chain_stream(
+    src: DataFrame, stages: tuple[str, ...], gap: str, shape: _Shape
+) -> DataFrame:
+    """The un-sinked chain stream: :func:`_chain_fold` per ``user_id``
+    over ``src`` with ``applyInPandasWithState``."""
+    return (
+        # the fold touches only these four columns; value/props would
+        # otherwise ride the state shuffle AND the per-trigger Arrow
+        # JVM→Python transfer as dead weight (the grouped-state boundary
+        # ships every input column, opaque to Catalyst's pruning)
+        src.select("event_id", "ts", "user_id", "event_type")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _chain_update_fn(stages, duration_us(gap), shape),
+            outputStructType=shape.out_schema,
+            stateStructType=shape.state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+def _chain_batch(
+    events: DataFrame, stages: tuple[str, ...], gap: str, shape: _Shape
+) -> DataFrame:
+    """Batch twin of :func:`_chain_stream`: one last-prior-qualified window
+    per hop — pure column expressions, whole-stage codegen, one shuffle on
+    the key. Columns ``_t{j}``/``_i{j}`` carry the chain's stage-j event."""
+    # asc_nulls_last on the tie-break: the streaming fold puts NULL ids
+    # last among ts ties (Spark's window default would be NULLS FIRST and
+    # silently flip tie order; r10 NULL-id sweep)
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts"), F.col("event_id").asc_nulls_last())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    gap_i = F.expr(f"INTERVAL {gap}")
+    # NULL event-time contract — mirror of the streaming side's drop
+    seq = events.filter(F.col("ts").isNotNull()).select(
+        "user_id", "event_id", "ts", "event_type"
+    )
+    qual, held = F.col("event_type") == stages[0], []
+    for k, stage in enumerate(stages[1:], 1):
+        # the last prior qualified chain as ONE struct: an event whose
+        # event_id is NULL still qualifies (the struct is non-NULL), so
+        # its ts and its NULL id travel together — separate ignorenulls
+        # lasts would skip the id but take the ts
+        link = F.struct(
+            *held, F.col("ts").alias(f"_t{k - 1}"),
+            F.col("event_id").alias(f"_i{k - 1}"),
+        )
+        prior = F.last(F.when(qual, link), ignorenulls=True).over(w)
+        held = [*held, f"_t{k - 1}", f"_i{k - 1}"]
+        seq = seq.select(
+            "user_id", "event_id", "ts", "event_type",
+            *(prior[c].alias(c) for c in held),
+        )
+        qual = (
+            (F.col("event_type") == stage)
+            & F.col(f"_t{k - 1}").isNotNull()
+            & (F.col("ts") <= F.col(f"_t{k - 1}") + gap_i)
+        )
+    *names, last = shape.names
+    return seq.filter(qual).select(
+        "user_id",
+        *(F.col(f"_i{j}").alias(f"{n}_event_id") for j, n in enumerate(names)),
+        F.col("event_id").alias(f"{last}_event_id"),
+        *(F.col(f"_t{j}").alias(f"{n}_ts") for j, n in enumerate(names)),
+        F.col("ts").alias(f"{last}_ts"),
+        # NTZ-safe epoch arithmetic (r10 cold review): unix_timestamp
+        # interprets NTZ as session-LOCAL wall time, which is non-linear
+        # across a DST transition — a chain straddling one would report a
+        # lag ±3600 s off the streaming side's pure-µs integers under a
+        # DST session timezone
+        (ntz_epoch_seconds("ts") - ntz_epoch_seconds("_t0"))
+        .cast("long").alias(shape.lag_col),
+    )
+
+
+# ---- followed-by: the two-stage chain (base, trigger) ---------------------
 
 
 def pattern_matches_stream(
@@ -171,33 +318,12 @@ def pattern_matches_stream(
 ) -> DataFrame:
     """The UN-SINKED streaming match DataFrame (shared by the memory-sink
     runner and the crash-recovery tests, which drive it through their own
-    checkpointed sink)."""
-    gap_us = duration_us(gap)
-    # 2 files/trigger: cross-batch state is still exercised (2 triggers
-    # over the 4-file ts-ordered replay) at half the per-batch machinery
-    # cost; the update fn sorts each batch by (ts, event_id) so intra-
-    # trigger file order is irrelevant
-    src = (
-        _changelog_source(spark, replay_dir(sf_dir, "events", order_col="ts"))
-        # NULL event-time contract (docs/USAGE.md): a row with no event
-        # time cannot be sequenced — CEP drops it, exactly as Spark's own
-        # event-time operators (window aggregation, stream-stream join)
-        # drop NULL event times. Without this, NaT → int64 µs is the
-        # int64-min sentinel and the fold crashes or mis-sequences.
-        .filter(F.col("ts").isNotNull())
-        # the fold touches only these four columns; value/props would
-        # otherwise ride the state shuffle AND the per-trigger Arrow
-        # JVM→Python transfer as dead weight (guide §4: pass only the
-        # columns the function needs — the grouped-state boundary ships
-        # every input column, opaque to Catalyst's pruning)
-        .select("event_id", "ts", "user_id", "event_type")
-    )
-    return src.groupBy("user_id").applyInPandasWithState(
-        _pattern_update_fn(base_type, trigger_type, gap_us),
-        outputStructType=_MATCH_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    checkpointed sink): for every ``trigger_type`` event, a match against
+    the key's most recent prior ``base_type`` event if it happened within
+    ``gap``."""
+    return _chain_stream(
+        _events_source(spark, sf_dir), (base_type, trigger_type), gap,
+        _FOLLOWED_BY,
     )
 
 
@@ -223,55 +349,8 @@ def pattern_match_batch(
     gap: str = "10 minutes",
 ) -> DataFrame:
     """Batch twin: for each trigger event, the key's last preceding base
-    event in ``(ts, event_id)`` order, kept if within ``gap``. Pure window
-    expressions — whole-stage codegen, one shuffle on the key."""
-    # NULL event-time contract — mirror of the streaming side's drop
-    events = events.filter(F.col("ts").isNotNull())
-    # asc_nulls_last on the tie-break: the streaming fold's pandas sort
-    # puts NaN ids last among ts ties (Spark's window default would be
-    # NULLS FIRST and silently flip tie order; r10 NULL-id sweep)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts"), F.col("event_id").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # last prior base as ONE struct: a base whose event_id is NULL is
-    # still a base (the struct is non-NULL), so its ts and its NULL id
-    # travel together — two separate ignorenulls lasts would skip the id
-    # but take the ts, attributing the match to an older base's id
-    base = F.last(
-        F.when(
-            F.col("event_type") == base_type,
-            F.struct(F.col("ts"), F.col("event_id")),
-        ),
-        ignorenulls=True,
-    ).over(w)
-    seq = events.select(
-        "user_id", "event_id", "ts", "event_type",
-        base["ts"].alias("base_ts"), base["event_id"].alias("base_event_id"),
-    )
-    return (
-        seq.filter(
-            (F.col("event_type") == trigger_type)
-            & F.col("base_ts").isNotNull()
-            & (F.col("ts") <= F.col("base_ts") + F.expr(f"INTERVAL {gap}"))
-        )
-        .select(
-            "user_id",
-            "base_event_id",
-            F.col("event_id").alias("trigger_event_id"),
-            "base_ts",
-            F.col("ts").alias("trigger_ts"),
-            # NTZ-safe epoch arithmetic (r10 cold review): unix_timestamp
-            # interprets NTZ as session-LOCAL wall time, which is
-            # non-linear across a DST transition — a (base, trigger) pair
-            # straddling one would report a lag ±3600 s off the streaming
-            # side's pure-µs integers under a DST session timezone
-            (
-                ntz_epoch_seconds("ts") - ntz_epoch_seconds("base_ts")
-            ).cast("long").alias("lag_seconds"),
-        )
-    )
+    event in ``(ts, event_id)`` order, kept if within ``gap``."""
+    return _chain_batch(events, (base_type, trigger_type), gap, _FOLLOWED_BY)
 
 
 # ---- typed-state variant with event-time timers (A22 + A17 discipline) ----
@@ -303,8 +382,7 @@ if HAS_TWS:
         no-op."""
 
         def __init__(self, base_type: str, trigger_type: str, gap_us: int):
-            self._base_type = base_type
-            self._trigger_type = trigger_type
+            self._stages = (base_type, trigger_type)
             self._gap_us = gap_us
 
         def init(self, handle) -> None:
@@ -326,12 +404,12 @@ if HAS_TWS:
 
         def handleInputRows(self, key, rows, timerValues):
             prev = tuple(self._base.get()) if self._base.exists() else None
+            st = prev[:2] if prev else (None, None)
             frames = [pdf for pdf in rows if not pdf.empty]
-            last, match = _fold_pattern(
-                frames, prev[:2] if prev else None, self._base_type,
-                self._trigger_type, self._gap_us,
+            last, match = _chain_fold(
+                frames, st, self._stages, self._gap_us, _FOLLOWED_BY
             )
-            if last is not None and (prev is None or last != prev[:2]):
+            if last != st:
                 # NTZ wall-time micros drive matching and output; Spark's
                 # timer clock is UTC epoch ms (the watermark's domain), so
                 # convert through the JVM-computed per-row offset
@@ -408,14 +486,10 @@ def pattern_matches_stream_tws(
     ``{sf_dir}/events.parquet``."""
     _tws_prepare(spark)
     gap_us = duration_us(gap)
-    if source is None:
-        source = _changelog_source(
-            spark, replay_dir(sf_dir, "events", order_col="ts")
-        )
     src = (
-        # NULL event-time contract — see pattern_matches_stream (a NULL ts
-        # would also yield a NULL _evt watermark column here)
-        source.filter(F.col("ts").isNotNull())
+        # NULL event-time contract — see _events_source (a NULL ts would
+        # also yield a NULL _evt watermark column here)
+        _events_source(spark, sf_dir, source)
         .withColumn("_evt", F.col("ts").cast("timestamp"))
         .withColumn("_utc_us", F.unix_micros(F.col("_evt")))
         .withWatermark("_evt", "0 seconds")
@@ -463,154 +537,7 @@ def pattern_match_stream_tws(
     return spark.table(name)
 
 
-# ---- 3-stage funnel (A followed-by B followed-by C, gap per hop) ----------
-
-_FUNNEL_SCHEMA = (
-    "user_id long, view_event_id long, click_event_id long, "
-    "purchase_event_id long, view_ts timestamp_ntz, "
-    "click_ts timestamp_ntz, purchase_ts timestamp_ntz, "
-    "total_lag_seconds long"
-)
-# level-1 state (last base) + level-2 state (last qualified mid + its base)
-_FUNNEL_STATE = (
-    "v_id long, v_ts long, c_id long, c_ts long, cv_id long, cv_ts long"
-)
-
-
-def _funnel_update_fn(stages: tuple[str, str, str], gap_us: int):
-    base_t, mid_t, fin_t = stages
-
-    def update(key, pdf_iter, state: GroupState):
-        st = tuple(state.get) if state.exists else (None,) * 6
-        frames = [pdf for pdf in pdf_iter if not pdf.empty]
-        if not frames:
-            if state.exists:
-                state.update(st)
-            return
-        pdf = frames[0] if len(frames) == 1 else pd.concat(
-            frames, ignore_index=True
-        )
-        # Per-key hot path — numpy throughout, POSITION-tracked priors so
-        # a NULL value (unkeyed event's id) is carried faithfully, never
-        # skipped-over (r10 NULL-id sweep; see _fold_pattern, which pins
-        # the shared vectorization discipline + its equivalence sweep in
-        # tests/test_fold_vectorized.py — measured 7× per call here).
-        n = len(pdf)
-        tss = pdf["ts"].to_numpy().astype("int64") // 1000
-        ids = pdf["event_id"].to_numpy()
-        et = pdf["event_type"]
-        is_base_u = (et == base_t).to_numpy()
-        is_mid_u = (et == mid_t).to_numpy()
-        is_fin_u = (et == fin_t).to_numpy()
-        # NULL ids sort LAST among ts ties — DuckDB's ASC NULLS LAST
-        order = np.lexsort((*_id_sort_keys(ids, nulls_first=False), tss))
-        tss = tss[order]
-        ids = ids[order]
-        is_base = is_base_u[order]
-        is_mid = is_mid_u[order]
-        is_fin = is_fin_u[order]
-
-        idx = np.arange(n, dtype=np.int64)
-
-        def prior_pos(mask):
-            # position of the last STRICTLY-prior row where `mask` held
-            # (-1 = none in this batch → fall back to carried state)
-            p = np.where(mask, idx, np.int64(-1))
-            np.maximum.accumulate(p, out=p)
-            out = np.empty(n, dtype=np.int64)
-            out[0] = -1
-            out[1:] = p[:-1]
-            return out
-
-        # pass 1: last strictly-prior base per row (state seeds pos -1).
-        # st[1]/st[3] (the ts slots, never NULL after the ts filter) mark
-        # level existence — the id slots may be genuinely NULL.
-        v_pos = prior_pos(is_base)
-        have_v = v_pos >= 0
-        v_ts = np.where(have_v, tss[np.where(have_v, v_pos, 0)], np.int64(0))
-        if st[1] is not None:
-            v_ts = np.where(have_v, v_ts, np.int64(st[1]))
-            valid_v = None
-        else:
-            valid_v = have_v
-        # qualified mid: a mid-event whose own prior base is within gap
-        q_mid = is_mid & (tss - v_ts <= gap_us)
-        if valid_v is not None:
-            q_mid &= valid_v
-
-        # pass 2: last strictly-prior QUALIFIED mid (positions carry its
-        # base refs — resolved only at hit rows / the state roll-forward)
-        c_pos = prior_pos(q_mid)
-        have_c = c_pos >= 0
-        c_ts = np.where(have_c, tss[np.where(have_c, c_pos, 0)], np.int64(0))
-        if st[3] is not None:
-            c_ts = np.where(have_c, c_ts, np.int64(st[3]))
-            valid_c = None
-        else:
-            valid_c = have_c
-        hit = is_fin & (tss - c_ts <= gap_us)
-        if valid_c is not None:
-            hit &= valid_c
-
-        def opt(v):
-            return None if pd.isna(v) else int(v)
-
-        # roll state forward: last base; last qualified mid (+ its base)
-        new = list(st)
-        if is_base.any():
-            i = int(np.nonzero(is_base)[0][-1])
-            new[0], new[1] = opt(ids[i]), int(tss[i])
-        if q_mid.any():
-            j = int(np.nonzero(q_mid)[0][-1])
-            new[2], new[3] = opt(ids[j]), int(tss[j])
-            if v_pos[j] >= 0:
-                new[4], new[5] = opt(ids[v_pos[j]]), int(tss[v_pos[j]])
-            else:  # that mid was qualified by the carried level-1 state
-                new[4], new[5] = st[0], st[1]
-        if any(x is not None for x in new):
-            state.update(tuple(new))
-
-        if hit.any():
-            h = np.nonzero(hit)[0]
-            cp = c_pos[h]
-            from_state_c = cp < 0  # mid (and its base) from level-2 state
-            cp0 = np.where(from_state_c, 0, cp)
-            # nullable Int64 — NULL grouping key / unkeyed ids, see
-            # _fold_pattern
-            c_id_arr = pd.array(ids[cp0], dtype="Int64")
-            c_ts_arr = tss[cp0].copy()
-            # base refs carried by that mid: its own prior base in this
-            # batch, else the level-1 state that qualified it
-            vp = v_pos[cp0]
-            from_state_v = vp < 0
-            vp0 = np.where(from_state_v, 0, vp)
-            v_id_arr = pd.array(ids[vp0], dtype="Int64")
-            v_ts_arr = tss[vp0].copy()
-            seed_v = ~from_state_c & from_state_v
-            if seed_v.any():
-                v_id_arr[seed_v] = st[0]
-                v_ts_arr[seed_v] = st[1]
-            if from_state_c.any():
-                c_id_arr[from_state_c] = st[2]
-                c_ts_arr[from_state_c] = st[3]
-                v_id_arr[from_state_c] = st[4]
-                v_ts_arr[from_state_c] = st[5]
-            uid = pdf["user_id"].to_numpy()[order][h]
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.array(uid, dtype="Int64"),
-                    "view_event_id": v_id_arr,
-                    "click_event_id": c_id_arr,
-                    "purchase_event_id": pd.array(ids[h], dtype="Int64"),
-                    "view_ts": pd.to_datetime(v_ts_arr, unit="us"),
-                    "click_ts": pd.to_datetime(c_ts_arr, unit="us"),
-                    "purchase_ts": pd.to_datetime(tss[h], unit="us"),
-                    "total_lag_seconds": tss[h] // 1_000_000
-                    - v_ts_arr // 1_000_000,
-                }
-            )
-
-    return update
+# ---- funnel: the three-stage chain (view, click, purchase) ----------------
 
 
 def funnel_matches_stream(
@@ -621,23 +548,7 @@ def funnel_matches_stream(
 ) -> DataFrame:
     """The un-sinked 3-stage funnel stream (see
     :func:`pattern_matches_stream` for why this is split out)."""
-    gap_us = duration_us(gap)
-    # 2 files/trigger — same rationale as pattern_matches_stream
-    src = (
-        _changelog_source(spark, replay_dir(sf_dir, "events", order_col="ts"))
-        # NULL event-time contract — see pattern_matches_stream
-        .filter(F.col("ts").isNotNull())
-        # column pruning through the opaque state boundary — see
-        # pattern_matches_stream (the fold reads only these four)
-        .select("event_id", "ts", "user_id", "event_type")
-    )
-    return src.groupBy("user_id").applyInPandasWithState(
-        _funnel_update_fn(stages, gap_us),
-        outputStructType=_FUNNEL_SCHEMA,
-        stateStructType=_FUNNEL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _chain_stream(_events_source(spark, sf_dir), stages, gap, _FUNNEL)
 
 
 def funnel_match_stream(
@@ -649,8 +560,8 @@ def funnel_match_stream(
     """3-stage funnel detection as a stateful streaming query: for every
     final-stage event, the chain (last qualified mid-stage event, which in
     turn carries ITS last prior base event), each hop within ``gap``.
-    State per key is two rows (last base; last qualified mid + base refs)
-    — still O(keys), bounded forever."""
+    State per key is two levels (last base; last qualified mid + its
+    base) — still O(keys), bounded forever."""
     matches = funnel_matches_stream(spark, sf_dir, stages, gap)
     return run_to_memory(spark, matches, "funnel_sink")
 
@@ -662,62 +573,4 @@ def funnel_match_batch(
 ) -> DataFrame:
     """Batch twin of :func:`funnel_match_stream`: two chained
     last-prior-qualified windows — pure column expressions."""
-    # NULL event-time contract — mirror of the streaming side's drop
-    events = events.filter(F.col("ts").isNotNull())
-    base_t, mid_t, fin_t = stages
-    w = (
-        Window.partitionBy("user_id")
-        # asc_nulls_last + struct carry — see pattern_match_batch
-        .orderBy(F.col("ts"), F.col("event_id").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-
-    def lastq(col, cond):
-        return F.last(F.when(cond, col), ignorenulls=True).over(w)
-
-    is_base = F.col("event_type") == base_t
-    v = lastq(F.struct(F.col("ts"), F.col("event_id")), is_base)
-    s1 = events.select(
-        "user_id", "event_id", "ts", "event_type",
-        v["ts"].alias("v_ts"), v["event_id"].alias("v_id"),
-    )
-    gap_i = F.expr(f"INTERVAL {gap}")
-    q_mid = (
-        (F.col("event_type") == mid_t)
-        & F.col("v_ts").isNotNull()
-        & (F.col("ts") <= F.col("v_ts") + gap_i)
-    )
-    c = lastq(
-        F.struct(
-            F.col("ts"), F.col("event_id"),
-            F.col("v_ts"), F.col("v_id"),
-        ),
-        q_mid,
-    )
-    s2 = s1.select(
-        "user_id", "event_id", "ts", "event_type",
-        c["ts"].alias("c_ts"),
-        c["event_id"].alias("c_id"),
-        c["v_ts"].alias("cv_ts"),
-        c["v_id"].alias("cv_id"),
-    )
-    return (
-        s2.filter(
-            (F.col("event_type") == fin_t)
-            & F.col("c_ts").isNotNull()
-            & (F.col("ts") <= F.col("c_ts") + gap_i)
-        )
-        .select(
-            "user_id",
-            F.col("cv_id").alias("view_event_id"),
-            F.col("c_id").alias("click_event_id"),
-            F.col("event_id").alias("purchase_event_id"),
-            F.col("cv_ts").alias("view_ts"),
-            F.col("c_ts").alias("click_ts"),
-            F.col("ts").alias("purchase_ts"),
-            # NTZ-safe, like pattern_match_batch's lag_seconds (r10 review)
-            (
-                ntz_epoch_seconds("ts") - ntz_epoch_seconds("cv_ts")
-            ).cast("long").alias("total_lag_seconds"),
-        )
-    )
+    return _chain_batch(events, stages, gap, _FUNNEL)

@@ -33,7 +33,8 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BASE_DOCS = 5_000       # = sf0.1 documents rows
 BASE_VECS = 2_000       # = sf0.1 embeddings rows
@@ -226,8 +227,6 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
     import shutil
     import tempfile
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from fs2_kafka_streams_spark.streaming import cep, stateful
     from fs2_kafka_streams_spark.streaming.conf import (
         STREAM_PERF_CONF,
@@ -244,7 +243,15 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
             .parquet(replay)
         )
         updates = updates_builder(src)
-        with pinned_conf(spark, STREAM_PERF_CONF):
+        # state rows are what this section measures: count them, which
+        # STREAM_PERF_CONF turns off to save a RocksDB get per update
+        confs = {
+            **STREAM_PERF_CONF,
+            "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": (
+                "true"
+            ),
+        }
+        with pinned_conf(spark, confs):
             t0 = time.time()
             q = (
                 updates.writeStream.outputMode(output_mode)
@@ -289,12 +296,8 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
         return stateful._native_fold(src)
 
     def funnel_updates(src):
-        return src.groupBy("user_id").applyInPandasWithState(
-            cep._funnel_update_fn(("view", "click", "purchase"), 12 * 3600 * 10**6),
-            outputStructType=cep._FUNNEL_SCHEMA,
-            stateStructType=cep._FUNNEL_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        return cep._chain_stream(
+            src, ("view", "click", "purchase"), "12 hours", cep._FUNNEL
         )
 
     rows = []
@@ -462,6 +465,13 @@ def main() -> None:
     )
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
+    # Python workers import the package too (the streaming section's state
+    # functions) and see PYTHONPATH, not this process's sys.path: without
+    # it a run started outside the repo fails in its workers. Set before
+    # the session starts, so the JVM and every worker it forks inherit it.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
     os.makedirs(args.out, exist_ok=True)
 
     if args.streaming or args.rows:

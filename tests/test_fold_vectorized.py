@@ -1,13 +1,20 @@
 """r12 optimization guard: the numpy-vectorized per-key streaming folds
-(`cep._fold_pattern`, `cep._funnel_update_fn`, `stateful._pick_latest`)
-must stay byte-identical to the original pandas formulations they replaced
-(guide §4.2 — the fold runs once per KEY per micro-batch, so its constant
-factor multiplies by the key count; measured 6-9× per call at r12).
+(`cep._chain_fold`, run by `cep._chain_update_fn`, and
+`stateful._pick_latest`) must stay byte-identical to the original pandas
+formulations they replaced (the fold runs once per KEY per
+micro-batch, so its constant factor multiplies by the key count; measured
+6-9× per call at r12). The one chain fold serves both CEP shapes: the
+followed-by sweep runs it as the two-stage chain `(view, click)` against
+`_fold_pattern_ref`, the funnel sweep as the three-stage chain
+`(view, click, purchase)` against `_funnel_update_fn_ref`.
 
 The reference implementations below ARE the r11 pandas code, kept verbatim
 so any future drift in NULL handling, tie ordering (NaN ids last vs first),
 seeding from carried state, or output dtypes is caught against the original
-semantics — not against the optimized code's own behavior.
+semantics — not against the optimized code's own behavior. One edit: the
+funnel reference's two hops carry the `lag >= 0` term the followed-by
+reference always had, so a carried predecessor newer than the row is
+rejected on every hop.
 """
 
 from __future__ import annotations
@@ -17,8 +24,10 @@ import pandas as pd
 import pytest
 
 from fs2_kafka_streams_spark.streaming.cep import (
-    _fold_pattern,
-    _funnel_update_fn,
+    _FOLLOWED_BY,
+    _FUNNEL,
+    _chain_fold,
+    _chain_update_fn,
 )
 from fs2_kafka_streams_spark.streaming.stateful import _pick_latest
 
@@ -116,6 +125,7 @@ def _funnel_update_fn_ref(stages, gap_us):
             (pdf["event_type"] == mid_t)
             & pv_ts.notna()
             & (pdf["_ts_us"] - pv_ts <= gap_us)
+            & (pdf["_ts_us"] - pv_ts >= 0)
         ).fillna(False).astype(bool)
         pc_id, have_c = prior(q_mid, ids)
         pc_ts, _ = prior(q_mid, tss)
@@ -130,6 +140,7 @@ def _funnel_update_fn_ref(stages, gap_us):
             (pdf["event_type"] == fin_t)
             & pc_ts.notna()
             & (pdf["_ts_us"] - pc_ts <= gap_us)
+            & (pdf["_ts_us"] - pc_ts >= 0)
         ).fillna(False).astype(bool)
 
         def opt(v):
@@ -295,7 +306,10 @@ def assert_frames_equal(a, b):
         )
 
 
-def test_fold_pattern_matches_pandas_reference():
+FUNNEL = ("view", "click", "purchase")
+
+
+def test_chain_fold_followed_by_matches_pandas_reference():
     rng = np.random.default_rng(123)
     for _ in range(150):
         frames = [mk(int(rng.integers(1, 40)), rng, **_rand_kw(rng))]
@@ -311,17 +325,26 @@ def test_fold_pattern_matches_pandas_reference():
             last = (None, 1_600_000_000_000_000)  # NULL-id base in state
         lo, mo = _fold_pattern_ref(
             [f.copy() for f in frames], last, "view", "click", gap)
-        ln, mn = _fold_pattern(
-            [f.copy() for f in frames], last, "view", "click", gap)
-        assert lo == ln
+        ln, mn = _chain_fold(
+            [f.copy() for f in frames], last or (None, None),
+            ("view", "click"), gap, _FOLLOWED_BY)
+        assert (lo or (None, None)) == ln
         assert (mo is None) == (mn is None)
         if mo is not None:
             assert_frames_equal([mo], [mn])
+        # the same fold through the applyInPandasWithState factory
+        state = MockState(last)
+        fn = _chain_update_fn(("view", "click"), gap, _FOLLOWED_BY)
+        out = list(fn(None, iter([f.copy() for f in frames]), state))
+        assert state._st == lo
+        assert_frames_equal([] if mo is None else [mo], out)
     # empty input keeps state untouched
-    assert _fold_pattern([], (5, 10), "view", "click", 1) == ((5, 10), None)
+    assert _chain_fold(
+        [], (5, 10), ("view", "click"), 1, _FOLLOWED_BY
+    ) == ((5, 10), None)
 
 
-def test_funnel_update_matches_pandas_reference():
+def test_chain_fold_funnel_matches_pandas_reference():
     rng = np.random.default_rng(7)
     for _ in range(150):
         frames = [mk(int(rng.integers(1, 40)), rng, **_rand_kw(rng))]
@@ -341,8 +364,8 @@ def test_funnel_update_matches_pandas_reference():
                   int(rng.integers(0, 50)), bts)
         else:  # NULL-id slots with live ts slots
             st = (None, bts, None, bts + 5, None, bts)
-        ofn = _funnel_update_fn_ref(("view", "click", "purchase"), gap)
-        nfn = _funnel_update_fn(("view", "click", "purchase"), gap)
+        ofn = _funnel_update_fn_ref(FUNNEL, gap)
+        nfn = _chain_update_fn(FUNNEL, gap, _FUNNEL)
         so, sn = MockState(st), MockState(st)
         oo = list(ofn(None, iter([f.copy() for f in frames]), so) or [])
         nn = list(nfn(None, iter([f.copy() for f in frames]), sn) or [])
@@ -353,6 +376,27 @@ def test_funnel_update_matches_pandas_reference():
         assert list(ofn(None, iter([]), se_o) or []) == []
         assert list(nfn(None, iter([]), se_n) or []) == []
         assert se_o._st == se_n._st
+
+
+def test_funnel_rejects_carried_mid_newer_than_the_row():
+    # carried: view at T, click at T+60 s; a later batch brings a purchase
+    # at T+30 s. The click is not prior to the purchase, so no chain — the
+    # followed-by hop has always refused a negative lag, and the funnel's
+    # hops now do too.
+    t = 1_600_000_000_000_000
+    st = (1, t, 2, t + 60_000_000, 1, t)
+    batch = pd.DataFrame({
+        "event_id": [3],
+        "ts": pd.Series([t + 30_000_000]).astype("datetime64[us]")
+        .astype("datetime64[ns]"),
+        "user_id": [7],
+        "event_type": ["purchase"],
+    })
+    for fn in (_chain_update_fn(FUNNEL, 43_200_000_000, _FUNNEL),
+               _funnel_update_fn_ref(FUNNEL, 43_200_000_000)):
+        state = MockState(st)
+        assert list(fn(None, iter([batch.copy()]), state)) == []
+        assert state._st == st
 
 
 def test_pick_latest_matches_pandas_reference():
