@@ -491,21 +491,25 @@ def q75_state_reader(spark, sf_dir):
     over it.
 
     The checkpoint lives under the repo cache root keyed by the fold
-    engine (:data:`STATE_CKPT_ENGINE`) and the source parquet's (path,
-    size, mtime) — reusable across runs like the replay cache (no /tmp
-    leak per driver-gate run), re-materialized when the fixture or the
-    engine's state layout changes. The streaming query always STARTS on the cached
-    checkpoint: on a completed checkpoint it is a ~1s no-op resume (no
-    unread files), on a crashed one it completes the replay (recovery
-    semantics proven in tests/test_cep_recovery.py) — and, crucially, a
-    query start is what registers the session's StateStoreCoordinator,
-    without which a COLD state-source read of a RocksDB checkpoint fails
-    with CANNOT_LOAD_STATE_STORE (RpcEndpointNotFoundException).
+    engine (:data:`STATE_CKPT_ENGINE`), the source parquet's (path,
+    size, mtime) and the absolute replay directory it drains — reusable
+    across runs like the replay cache (no /tmp leak per driver-gate run),
+    re-materialized when the fixture, the engine's state layout or the
+    cache's location changes (the checkpoint's file-source log records
+    the replay files' absolute paths, so a checkpoint copied with a moved
+    cache fails with ``Wrong basePath``). The streaming query always
+    STARTS on the cached checkpoint: on a completed checkpoint it is a
+    ~1s no-op resume (no unread files), on a crashed one it completes the
+    replay (recovery semantics proven in tests/test_cep_recovery.py) —
+    and, crucially, a query start is what registers the session's
+    StateStoreCoordinator, without which a COLD state-source read of a
+    RocksDB checkpoint fails with CANNOT_LOAD_STATE_STORE
+    (RpcEndpointNotFoundException).
     """
     import hashlib
     import os
 
-    from fs2_kafka_streams_spark.streaming.replay import CACHE_ROOT
+    from fs2_kafka_streams_spark.streaming.replay import CACHE_ROOT, replay_dir
     from fs2_kafka_streams_spark.streaming.stateful import (
         latest_by_key_streaming,
         read_table_state,
@@ -515,7 +519,7 @@ def q75_state_reader(spark, sf_dir):
     st = os.stat(src)
     key = hashlib.md5(
         f"{STATE_CKPT_ENGINE}:{os.path.abspath(src)}:{st.st_size}:"
-        f"{int(st.st_mtime)}".encode()
+        f"{int(st.st_mtime)}:{os.path.abspath(replay_dir(sf_dir))}".encode()
     ).hexdigest()
     ckpt = os.path.join(CACHE_ROOT, "state_ckpt", key)
     os.makedirs(ckpt, exist_ok=True)

@@ -480,8 +480,10 @@ def streaming_ann_topk(spark, sf_dir, k: int = 3, sink=None):
             # coalesce would collapse INTO the final top-k merge stage
             # and serialize it; the explicit exchange ships only the
             # tiny result and keeps the spool at one file per epoch
-            # instead of one per task (the sink small-files rule,
-            # streaming/stateful.py::_run_upsert_sink)
+            # instead of one per task (the upsert sink,
+            # streaming/stateful.py::_run_upsert_sink, needs no exchange
+            # for its bound: its rows already sit one bucket per state
+            # task, which a top-k result does not)
             result_df.repartition(1).write.mode("overwrite").parquet(
                 f"{spool}/epoch={epoch_id}"
             )

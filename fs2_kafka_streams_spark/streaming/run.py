@@ -22,10 +22,10 @@ from fs2_kafka_streams_spark.streaming.conf import (
 )
 
 #: Rolling trace of completed streaming runs, appended by every runner
-#: right after ``awaitTermination``: ``{"name", "n_triggers", "triggers"}``
-#: per query, where ``triggers`` holds one record per progress event in
-#: ``recentProgress`` (see :func:`record_run`). Same contract as
-#: ``conf.PIN_TRACE``: measurement harnesses (bench.py) snapshot
+#: right after ``awaitTermination``: ``{"name", "run_id", "n_triggers",
+#: "triggers"}`` per query, where ``triggers`` holds one record per
+#: progress event in ``recentProgress`` (see :func:`record_run`). Same
+#: contract as ``conf.PIN_TRACE``: measurement harnesses (bench.py) snapshot
 #: ``RUN_SEQ`` around each timed entry and record how many micro-batches
 #: that entry actually executed and where each trigger's time went — the
 #: per-trigger checkpoint fsync count is the streaming family's dominant
@@ -49,8 +49,9 @@ def _trigger_record(progress) -> dict:
     """One trigger's wall phases, plus its state-store commit time summed
     over every store instance — a task sum (8 partitions × 4 stores is 32
     instances for a stream-stream join), never to be read as wall time —
-    and that instance count, ``state_instances`` (0 for a stateless
-    query)."""
+    that instance count, ``state_instances`` (0 for a stateless query),
+    and ``state_rows_removed``, the state rows the trigger evicted
+    (``numRowsRemoved`` summed over the stateful operators)."""
     dm = progress["durationMs"] or {}
     ops = progress["stateOperators"] or []
     return {
@@ -60,12 +61,14 @@ def _trigger_record(progress) -> dict:
         "state_instances": sum(
             s.get("numStateStoreInstances", 0) for s in ops
         ),
+        "state_rows_removed": sum(s["numRowsRemoved"] for s in ops),
     }
 
 
 def record_run(name: str, query) -> None:
     """Append a completed query's micro-batch count and per-trigger
-    breakdown to :data:`RUN_TRACE`.
+    breakdown to :data:`RUN_TRACE`, with its ``run_id``: the job group
+    Spark runs the query's triggers under.
 
     ``lastProgress.batchId`` is 0-based over a fresh checkpoint, so
     ``+ 1`` is the executed-trigger count; a query that never produced a
@@ -76,12 +79,14 @@ def record_run(name: str, query) -> None:
     ``triggers`` is ``None`` too."""
     global RUN_SEQ
     try:
+        run_id = str(query.runId)
         lp = query.lastProgress
         n = int(lp["batchId"]) + 1 if lp else 0
         triggers = [_trigger_record(p) for p in query.recentProgress]
     except Exception:  # pragma: no cover — tracing must never fail a run
-        n = triggers = None
-    RUN_TRACE.append({"name": name, "n_triggers": n, "triggers": triggers})
+        run_id = n = triggers = None
+    RUN_TRACE.append({"name": name, "run_id": run_id, "n_triggers": n,
+                      "triggers": triggers})
     RUN_SEQ += 1
     del RUN_TRACE[:-_RUN_TRACE_MAX]
 

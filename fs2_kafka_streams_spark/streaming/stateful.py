@@ -36,7 +36,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
@@ -457,11 +457,26 @@ def latest_by_key_tws_with_deletes(
         )
 
 
-#: Key-bucket count for the upsert sink's partitioned layout. At 100 TB this
-#: becomes O(state partitions) so each bucket's compaction is an independent
-#: task. Locally 8 bounds the files one epoch appends (≤ 8, whatever the
-#: state-partition count ``conf.STREAM_STATE_PARTITIONS`` picks).
-SINK_BUCKETS = 8
+def _sink_bucket(spark: SparkSession) -> Column:
+    """The upsert log's key bucket: ``pmod(hash(user_id), n)`` with ``n``
+    the session's state-partition count. Spark's stateful exchange is
+    ``hashpartitioning(user_id, n)``, Murmur3 with seed 42 as SQL
+    ``hash()`` (NULL keys included), so in a micro-batch's session this
+    is exactly the state partition a row was folded in: every state task
+    holds one bucket and appends one file in the stage that commits its
+    store, with no exchange. Appends and :func:`compact_upsert_log` both
+    bucket through here.
+
+    Spark 4 restores the count a checkpoint started with into the
+    micro-batch session's
+    ``spark.sql.streaming.internal.stateStore.partitions``; its
+    ``spark.sql.shuffle.partitions`` stays the current session's. Outside
+    a stream (compaction), where that key is unset, the count is the
+    shuffle partitions."""
+    n = spark.conf.get(
+        "spark.sql.streaming.internal.stateStore.partitions", None
+    ) or spark.conf.get("spark.sql.shuffle.partitions")
+    return F.pmod(F.hash("user_id"), F.lit(int(n))).alias("_bucket")
 
 
 @contextlib.contextmanager
@@ -542,8 +557,11 @@ def compact_upsert_log(
 
     The reference's table IS a compacted topic (``streams/Tables.scala``);
     this bounds the sink's storage at O(distinct keys) for a long-running
-    query, matching broker-side compaction. Each key bucket compacts as an
-    independent partitioned task. The swap is directory-rename (atomic on
+    query, matching broker-side compaction. The rewrite keeps the append
+    path's layout, bucketed by state partition (:func:`_sink_bucket` at
+    the ``STREAM_PERF_CONF`` count): the fold's own exchange places each
+    bucket in one task, which writes it as one file with no further
+    exchange. The swap is directory-rename (atomic on
     a POSIX filesystem) fenced by :func:`_sink_lock`: compaction holds the
     lock EXCLUSIVE for the whole read→rewrite→swap, triggers hold it
     SHARED around their append — so a concurrent trigger can never
@@ -585,14 +603,13 @@ def compact_upsert_log(
         )
         if dead_col is not None and not retain_tombstones:
             compacted = compacted.filter(~F.col(dead_col))
-        compacted = compacted.withColumn(
-            "_bucket", F.pmod(F.xxhash64("user_id"), F.lit(SINK_BUCKETS))
-        )
-        # same task-per-bucket co-location as the append path: a compaction
-        # whose OUTPUT re-fragments into tasks × buckets files would undo
-        # the very thing it runs for
-        compacted = compacted.repartition(SINK_BUCKETS, F.col("_bucket"))
-        compacted.write.mode("overwrite").partitionBy("_bucket").parquet(tmp_dir)
+        # at the streaming state-partition count, the fold's own exchange
+        # is the bucket layout: each task writes the buckets it holds, one
+        # file per bucket, with no second exchange
+        with pinned_conf(spark, STREAM_PERF_CONF):
+            compacted.select("*", _sink_bucket(spark)).write.mode(
+                "overwrite"
+            ).partitionBy("_bucket").parquet(tmp_dir)
         os.rename(sink_dir, old_dir)
         os.rename(tmp_dir, sink_dir)
         shutil.rmtree(old_dir)
@@ -628,8 +645,10 @@ def _run_upsert_sink(
     Kafka topic / KV store):
 
     - each micro-batch APPENDS its update rows — tagged with the commit
-      epoch — to a parquet log partitioned by key bucket (a distributed
-      executor-side write; nothing flows through the driver);
+      epoch — to a parquet log bucketed by state partition
+      (:func:`_sink_bucket`): each state task writes its own bucket, one
+      file per non-empty partition per epoch, in the stage that commits
+      its store — no exchange, and nothing flows through the driver;
     - the materialized view is the read-back latest row per key, ordered by
       (epoch, ts, event_id) — one ``max_by`` aggregation, shuffle volume
       O(distinct keys).
@@ -675,26 +694,14 @@ def _run_upsert_sink(
         # SHARED lock: appends may run concurrently with each other but
         # never overlap compaction's exclusive directory swap
         with _sink_lock(sink_dir, exclusive=False):
-            (
-                batch_df.withColumn("_epoch", F.lit(epoch_base + epoch_id))
-                .withColumn(
-                    "_bucket",
-                    F.pmod(F.xxhash64("user_id"), F.lit(SINK_BUCKETS)),
-                )
-                # co-locate each bucket in one task before the partitioned
-                # write: without this, partitionBy fans every input task
-                # out across all buckets — tasks × buckets files PER EPOCH
-                # (measured: 256 files for a 1,500-row view at sf0.1, 16×
-                # the bucket count). At 100 TB that is the classic
-                # small-files failure: metadata pressure on the store and
-                # O(files) footer reads for every log-head view. One
-                # narrow exchange of O(batch) update rows per epoch buys
-                # ≤ SINK_BUCKETS files instead.
-                .repartition(SINK_BUCKETS, F.col("_bucket"))
-                .write.mode("append")
-                .partitionBy("_bucket")
-                .parquet(sink_dir)
-            )
+            # the micro-batch's session carries the state-partition count
+            # the checkpoint started with, so each state task appends
+            # exactly one bucket file
+            batch_df.select(
+                "*",
+                F.lit(epoch_base + epoch_id).alias("_epoch"),
+                _sink_bucket(batch_df.sparkSession),
+            ).write.mode("append").partitionBy("_bucket").parquet(sink_dir)
 
     # a checkpoint the drain creates is deleted after termination; only
     # the sink must outlive this call (the returned view reads it lazily)

@@ -119,3 +119,24 @@ def test_driver_gate_fails_on_one_value_off(spark):
     res = driver_gate(spark, SF, spec(bad))
     assert res.rows_match and res.schema_match
     assert not res.hash_match and not res and res.why == "hash"
+
+
+def test_q75_checkpoint_follows_a_moved_cache(
+    spark, duck, tmp_path, monkeypatch
+):
+    """q75's cached checkpoint records the absolute paths of the replay
+    files it drained. A copy of a drained cache under another root must
+    still match the oracle: the copied checkpoint, keyed without the
+    replay location, used to stop with ``Wrong basePath``; keyed on it,
+    the moved cache drains a checkpoint of its own."""
+    import shutil
+
+    from fs2_kafka_streams_spark.streaming import replay
+
+    spec = REGISTRY["q75_state_reader"]
+    assert run_compare(spark, SF, spec, con=duck).ok  # drain in place
+    moved = tmp_path / "replay"
+    shutil.copytree(replay.CACHE_ROOT, moved)
+    monkeypatch.setattr(replay, "CACHE_ROOT", str(moved))
+    res = run_compare(spark, SF, spec, con=duck)
+    assert res.ok, res.detail

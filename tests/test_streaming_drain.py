@@ -1,5 +1,6 @@
 """The one availableNow drain (``streaming/run.py::_drain``): checkpoint
-ownership and conf pinning, independent of any particular query."""
+ownership, conf pinning and what its run trace records, plus the layout
+of the upsert sink it drives (one log bucket per state partition)."""
 
 from __future__ import annotations
 
@@ -102,61 +103,144 @@ def test_bench_run_entry_cleans_up_and_reports_triggers(spark):
             assert t["state_instances"] == 0
 
 
-def test_checkpoint_keeps_its_state_partitions_on_restart(
-    spark, tmp_path, monkeypatch
-):
-    """The partition rule sizes NEW stateful checkpoints only: one first
-    started at 16 state partitions restarts with 16 under the rule — Spark
-    restores ``spark.sql.shuffle.partitions`` from the offset log — and
-    the view still folds both runs' changes."""
+def _changes(i, n_keys):
+    """Replay file ``i``: one change for each of ``n_keys`` keys, at ts
+    ``i`` s, with event ids ``100 * i + key``."""
+    return pd.DataFrame({
+        "event_id": [100 * i + k for k in range(n_keys)],
+        "ts": pd.to_datetime([1_000_000 * i] * n_keys, unit="us"),
+        "user_id": list(range(n_keys)),
+        "event_type": ["view"] * n_keys,
+        "value": [float(i)] * n_keys,
+        "props": ["{}"] * n_keys,
+    })
+
+
+def _restarted_upsert(spark, tmp_path, monkeypatch, first, then, n_keys):
+    """Drain files 0-1 of a changelog through the upsert sink on a new
+    checkpoint at ``first`` state partitions, then files 2-3 on the same
+    checkpoint and sink with the rule pinning ``then``. Returns the
+    final view, the state-instance counts of each run's triggers and the
+    sink directory."""
     from fs2_kafka_streams_spark.streaming import run as srun
     from fs2_kafka_streams_spark.streaming.stateful import (
         _native_fold,
         _run_upsert_sink,
     )
 
-    def frame(i):
-        return pd.DataFrame({
-            "event_id": [i, 100 + i],
-            "ts": pd.to_datetime([1_000_000 * i] * 2, unit="us"),
-            "user_id": [i % 2, 2],
-            "event_type": ["view", "click"],
-            "value": [float(i), float(100 + i)],
-            "props": ["{}", "{}"],
-        })
-
     rep = tmp_path / "rep"
     ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "sink")
 
-    def drain():
+    def drain(partitions):
         src = (
             spark.readStream.schema(EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 2)
             .parquet(str(rep))
         )
-        view = _run_upsert_sink(
-            spark, _native_fold(src), checkpoint=ckpt,
-            sink_dir=sink,
-        )
+        with monkeypatch.context() as m:
+            m.setitem(
+                sconf.STREAM_PERF_CONF, "spark.sql.shuffle.partitions",
+                partitions,
+            )
+            view = _run_upsert_sink(
+                spark, _native_fold(src), checkpoint=ckpt, sink_dir=sink
+            )
         triggers = srun.RUN_TRACE[-1]["triggers"]
         return view, {t["state_instances"] for t in triggers}
 
-    write_replay_files(rep, [frame(0), frame(1)])
-    with monkeypatch.context() as m:
-        m.setitem(sconf.STREAM_PERF_CONF, "spark.sql.shuffle.partitions", "16")
-        _, first = drain()
-    assert first == {16}
-
-    # two more changes arrive; the restart runs under the rule
+    write_replay_files(rep, [_changes(0, n_keys), _changes(1, n_keys)])
+    _, first_run = drain(first)
+    # two more files arrive (later mtimes); the restart runs under `then`
     for i in (2, 3):
-        frame(i).astype({"ts": "datetime64[us]"}).to_parquet(
+        _changes(i, n_keys).astype({"ts": "datetime64[us]"}).to_parquet(
             rep / f"part-{i:02d}.parquet", index=False
         )
-    assert sconf.STREAM_PERF_CONF["spark.sql.shuffle.partitions"] == (
-        sconf.STREAM_STATE_PARTITIONS
+    view, second_run = drain(then)
+    return view, (first_run, second_run), sink
+
+
+def test_checkpoint_keeps_its_state_partitions_on_restart(
+    spark, tmp_path, monkeypatch
+):
+    """The partition rule sizes NEW stateful checkpoints only: one first
+    started at 16 state partitions restarts with 16 under the rule — Spark
+    restores the count from the offset log — and the view still folds
+    both runs' changes."""
+    view, runs, _ = _restarted_upsert(
+        spark, tmp_path, monkeypatch, "16", sconf.STREAM_STATE_PARTITIONS, 3
     )
-    view, second = drain()
-    assert second == {16}
+    assert runs == ({16}, {16})
     assert sorted((r.user_id, r.event_id) for r in view.collect()) == [
-        (0, 2), (1, 3), (2, 103),
+        (k, 300 + k) for k in range(3)
     ]
+
+
+def test_resumed_upsert_log_keeps_the_checkpoints_buckets(
+    spark, tmp_path, monkeypatch
+):
+    """The upsert log's bucket is the state partition, read from the
+    micro-batch's own session, which Spark restores from the checkpoint:
+    a checkpoint first started at 2 state partitions and resumed under a
+    4-partition rule still appends at most 2 files per epoch, into
+    buckets 0 and 1 — although its 20 keys spread over more than 2
+    buckets at 4 — and the view folds both runs."""
+    from pyspark.sql import functions as F
+
+    from fs2_kafka_streams_spark.streaming.stateful import _read_upsert_log
+
+    view, runs, sink = _restarted_upsert(
+        spark, tmp_path, monkeypatch, "2", "4", 20
+    )
+    assert runs == ({2}, {2})
+    at_four = spark.range(20).select(F.pmod(F.hash("id"), F.lit(4)))
+    assert at_four.distinct().count() > 2
+    log = _read_upsert_log(spark, sink).select("_epoch", "_bucket")
+    pairs = {tuple(r) for r in log.distinct().collect()}
+    assert {b for _, b in pairs} == {0, 1}
+    files = glob.glob(f"{sink}/**/*.parquet", recursive=True)
+    assert len(files) == len(pairs) == 2 * len({e for e, _ in pairs})
+    assert sorted((r.user_id, r.event_id) for r in view.collect()) == [
+        (k, 300 + k) for k in range(20)
+    ]
+
+
+def test_upsert_trigger_is_scan_and_state_write_stages(spark):
+    """Each upsert trigger is one job of two stages: the source scan, and
+    the state stage that folds, commits its store and appends its bucket
+    of the log, with no exchange between fold and write. Spark runs a
+    query's trigger jobs under its run id as the job group."""
+    from fs2_kafka_streams_spark.streaming import run as srun
+    from fs2_kafka_streams_spark.streaming.stateful import (
+        latest_by_key_streaming,
+    )
+
+    latest_by_key_streaming(spark, SF_SMOKE)
+    rec = srun.RUN_TRACE[-1]
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(rec["run_id"])
+    assert len(jobs) == rec["n_triggers"] >= 2
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == (
+        [2] * len(jobs)
+    )
+
+
+def test_q48_join_evicts_state_rows(spark, monkeypatch):
+    """q48's watermarked self-join evicts join state while it runs: at
+    least one trigger removes state rows. RocksDB counts rows only with
+    ``trackTotalNumberOfRows`` on; the drain pins ``STREAM_PERF_CONF``
+    over any outer scope, so the switch goes into that map for this
+    test only."""
+    from fs2_kafka_streams_spark.queries import load_all
+    from fs2_kafka_streams_spark.streaming import run as srun
+    from tests.conftest import SF_CORRECT
+
+    monkeypatch.setitem(
+        sconf.STREAM_PERF_CONF,
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
+        "true",
+    )
+    load_all()["q48_stream_stream_join"].build(spark, SF_CORRECT)
+    rec = srun.RUN_TRACE[-1]
+    removed = [t["state_rows_removed"] for t in rec["triggers"]]
+    assert rec["name"].startswith("q48_sink")
+    assert max(removed) > 0, removed

@@ -174,12 +174,12 @@ def test_q75_cache_key_skips_other_engine_checkpoint(spark, tmp_path):
     src = os.path.abspath(sf / "events.parquet")
     st = os.stat(src)
     ident = f"{src}:{st.st_size}:{int(st.st_mtime)}"
+    replay = replay_dir(str(sf), "events")
     root = os.path.join(CACHE_ROOT, "state_ckpt")
     stale = os.path.join(root, hashlib.md5(ident.encode()).hexdigest())
-    fresh = os.path.join(
-        root, hashlib.md5(f"{STATE_CKPT_ENGINE}:{ident}".encode()).hexdigest()
-    )
-    replay = replay_dir(str(sf), "events")
+    fresh = os.path.join(root, hashlib.md5(
+        f"{STATE_CKPT_ENGINE}:{ident}:{os.path.abspath(replay)}".encode()
+    ).hexdigest())
     try:
         # a real checkpoint of another state layout (a per-key count)
         # over the same changelog, under the untagged key
@@ -224,9 +224,9 @@ def test_upsert_log_compaction(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from fs2_kafka_streams_spark.streaming.stateful import (
-        SINK_BUCKETS,
         _log_head,
         _read_upsert_log,
+        _sink_bucket,
         compact_upsert_log,
         latest_by_key_streaming,
     )
@@ -255,9 +255,7 @@ def test_upsert_log_compaction(spark, tmp_path):
         [(some_user, 10**12, None, "compact_test", 1.0, "{}")],
         "user_id long, event_id long, ts timestamp_ntz, "
         "event_type string, value double, props string",
-    ).withColumn("_epoch", F.lit(max_epoch + 1)).withColumn(
-        "_bucket", F.pmod(F.xxhash64("user_id"), F.lit(SINK_BUCKETS))
-    )
+    ).select("*", F.lit(max_epoch + 1).alias("_epoch"), _sink_bucket(spark))
     update.write.mode("append").partitionBy("_bucket").parquet(sink)
     head = {
         r["user_id"]: (r["event_id"], r["event_type"])
@@ -598,9 +596,9 @@ def test_compaction_concurrent_appends(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from fs2_kafka_streams_spark.streaming.stateful import (
-        SINK_BUCKETS,
         _log_head,
         _read_upsert_log,
+        _sink_bucket,
         _sink_lock,
         compact_upsert_log,
         latest_by_key_streaming,
@@ -623,11 +621,9 @@ def test_compaction_concurrent_appends(spark, tmp_path):
                       float(i), "{}")],
                     "user_id long, event_id long, ts timestamp_ntz, "
                     "event_type string, value double, props string",
-                ).withColumn(
-                    "_epoch", F.lit(base_epoch + 1 + i)
-                ).withColumn(
-                    "_bucket",
-                    F.pmod(F.xxhash64("user_id"), F.lit(SINK_BUCKETS)),
+                ).select(
+                    "*", F.lit(base_epoch + 1 + i).alias("_epoch"),
+                    _sink_bucket(spark),
                 )
                 with _sink_lock(sink, exclusive=False):
                     row.write.mode("append").partitionBy("_bucket").parquet(
