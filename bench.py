@@ -16,9 +16,9 @@ this script.
 
 ``python bench.py NAME... [-n REPS]`` times only the named entries (same
 session, warm-up and per-run cleanup as the full run, ``REPS`` runs each,
-default 3) and prints one ``name: median=… reps=[…] tick=…`` line per
-entry; it writes no ``BENCH_FULL*.json``. ``scripts/ab_minloop.py`` runs
-its A/B arms through this mode.
+default 3) and prints one ``name: median=… reps=[…] tick=…
+add_batch_ms=[…]`` line per entry; it writes no ``BENCH_FULL*.json``.
+``scripts/ab_minloop.py`` runs its A/B arms through this mode.
 
 Execution is forced with the noop sink (full plan runs distributed; nothing
 is materialized on the driver), which is the scale-honest way to time a
@@ -347,8 +347,10 @@ def time_named(
     spark, registry, names: list[str], reps: int, sf_dir: str
 ) -> None:
     """Subset mode: ``reps`` timed runs of each named entry, one
-    ``name: median=… reps=[…] tick=…`` line each (``tick`` is the CPU
-    tick read right after the entry)."""
+    ``name: median=… reps=[…] tick=… add_batch_ms=[…]`` line each
+    (``tick`` is the CPU tick read right after the entry;
+    ``add_batch_ms`` holds the ``addBatch`` wall ms of every trigger the
+    reps drained, empty for a batch entry)."""
     import fs2_kafka_streams_spark as pkg
 
     # which tree's package is being timed (the A/B arms record it)
@@ -358,10 +360,18 @@ def time_named(
     cpu_probe(spark, TICK_ROWS)  # untimed: absorb the tick's codegen JIT
     for name in names:
         spec = registry[name]
-        ts = [run_entry(spark, spec, sf_dir)[0] for _ in range(reps)]
+        runs = [run_entry(spark, spec, sf_dir) for _ in range(reps)]
+        ts = [dt for dt, _, _ in runs]
+        add_ms = [
+            t["durationMs"].get("addBatch")
+            for _, _, queries in runs
+            for q in queries
+            for t in q["triggers"] or []
+        ]
         print(
             f"{name}: median={round(_median(ts), 3)} reps={ts} "
-            f"tick={cpu_probe(spark, TICK_ROWS)}",
+            f"tick={cpu_probe(spark, TICK_ROWS)} "
+            f"add_batch_ms={[ms for ms in add_ms if ms is not None]}",
             flush=True,
         )
 

@@ -10,17 +10,43 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
   (timestamps in the driver parquet are timezone-naive).
 - RocksDB state store for streaming state (reference keeps its table state in
   RocksDB too: ``streams/PolyKVStore.scala:79-219``) — bounded memory at scale.
+- Python workers fork from the package's worker daemon when they can import
+  the package (:func:`worker_daemon_conf`): it spares every Python task the
+  per-task re-read of ``pyspark.zip`` (:mod:`.worker_daemon`).
 """
 
 from __future__ import annotations
 
 import os
+import site
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def worker_daemon_conf(master: str) -> dict[str, str]:
+    """``spark.python.daemon.module`` set to the package's worker daemon, or
+    nothing (Spark's own daemon) unless the Python workers can import the
+    package: a local master, whose workers start in the JVM's cwd with its
+    ``PYTHONPATH``, and the package's parent directory is that cwd, on that
+    ``PYTHONPATH``, or in site-packages. A daemon module that does not
+    import would fail every Python task."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    jvm = SparkContext._jvm
+    cwd = (jvm.java.lang.System.getProperty("user.dir") if jvm is not None
+           else os.getcwd())
+    parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    dirs = [cwd, *(os.path.join(cwd, p) for p in parts if p),
+            *site.getsitepackages(), site.getusersitepackages()]
+    home = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if os.path.realpath(home) not in {os.path.realpath(d) for d in dirs}:
+        return {}
+    return {"spark.python.daemon.module": f"{__package__}.worker_daemon"}
 
 
 def get_spark(
@@ -63,7 +89,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.driver.maxResultSize", "4g")
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in {**worker_daemon_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(key, value)
 
     # getActiveSession is thread-local; a session created on another thread

@@ -105,7 +105,9 @@ def _publish_order(path: str):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t = pq.read_table(path, columns=["ts", "event_id", "user_id"])
+    # ParquetFile, not read_table, at every topic read: read_table imports
+    # pyarrow.dataset, 0.24 s of a fresh source runner's first latestOffset
+    t = pq.ParquetFile(path).read(columns=["ts", "event_id", "user_id"])
     ts_us = _ts_us_array(t.column("ts"))
     eid = _key_array(t.column("event_id"))
     uid = _key_array(t.column("user_id"))
@@ -235,7 +237,7 @@ def _partition_counts(
     if not grow_to or grow_to == n_parts:
         import pyarrow.parquet as pq
 
-        t = pq.read_table(path, columns=["user_id", "event_id"])
+        t = pq.ParquetFile(path).read(columns=["user_id", "event_id"])
         part_key = _partition_key(
             _key_array(t.column("user_id")), _key_array(t.column("event_id"))
         )
@@ -288,7 +290,7 @@ def _load_partition_batch(
     order, pids = _partition_assignment(path, n_parts, grow_to, grow_at)
     mine = order[pids == pid]  # row indices, already in publish order
 
-    t = pq.read_table(path)
+    t = pq.ParquetFile(path).read()
     ts_vals, ts_null = _ts_us_array(t.column("ts"))
 
     part = t.take(pa.array(mine))

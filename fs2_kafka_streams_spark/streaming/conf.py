@@ -12,6 +12,8 @@ session default.
 from __future__ import annotations
 
 import re
+import threading
+from collections import Counter
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -95,11 +97,25 @@ _PIN_TRACE_MAX = 256
 #: crosses ``_PIN_TRACE_MAX`` total pins.
 PIN_SEQ = 0
 
+#: Per thread, the keys that its open ``pinned_conf`` scopes pin (a count
+#: per key, for nested scopes). ``streaming/run.py::_drain`` leaves these
+#: keys alone, so a caller's scope wins over the drain's own pins.
+_OPEN = threading.local()
+
+
+def open_pins() -> Counter:
+    """The keys this thread's open ``pinned_conf`` scopes pin."""
+    if not hasattr(_OPEN, "keys"):
+        _OPEN.keys = Counter()
+    return _OPEN.keys
+
 
 @contextmanager
 def pinned_conf(spark: SparkSession, confs: dict[str, str]):
     global PIN_SEQ
     old: dict[str, str | None] = {}
+    held = open_pins()
+    held.update(confs.keys())
     try:
         # set inside the try: if a later key raises (static conf, bad
         # value), the finally still restores the keys already pinned —
@@ -119,6 +135,7 @@ def pinned_conf(spark: SparkSession, confs: dict[str, str]):
         del PIN_TRACE[:-_PIN_TRACE_MAX]
         yield
     finally:
+        held -= Counter(confs.keys())  # in place; drops keys no scope holds
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)

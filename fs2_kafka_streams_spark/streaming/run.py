@@ -18,6 +18,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from fs2_kafka_streams_spark.streaming.conf import (
     STREAM_PERF_CONF,
+    open_pins,
     pinned_conf,
 )
 
@@ -50,8 +51,10 @@ def _trigger_record(progress) -> dict:
     over every store instance — a task sum (8 partitions × 4 stores is 32
     instances for a stream-stream join), never to be read as wall time —
     that instance count, ``state_instances`` (0 for a stateless query),
-    and ``state_rows_removed``, the state rows the trigger evicted
-    (``numRowsRemoved`` summed over the stateful operators)."""
+    ``state_rows_removed``, the state rows the trigger evicted, and
+    ``state_rows``, the state rows held after it (``numRowsRemoved`` and
+    ``numRowsTotal`` summed over the stateful operators; RocksDB counts
+    ``numRowsTotal`` only with ``trackTotalNumberOfRows`` on)."""
     dm = progress["durationMs"] or {}
     ops = progress["stateOperators"] or []
     return {
@@ -62,6 +65,7 @@ def _trigger_record(progress) -> dict:
             s.get("numStateStoreInstances", 0) for s in ops
         ),
         "state_rows_removed": sum(s["numRowsRemoved"] for s in ops),
+        "state_rows": sum(s["numRowsTotal"] for s in ops),
     }
 
 
@@ -101,9 +105,11 @@ def _drain(
     """Run a configured ``DataStreamWriter`` to completion with an
     ``availableNow`` trigger — the one drain every bounded streaming run in
     the package goes through. ``confs`` are pinned (scoped, restored)
-    around start and termination; ``None`` pins nothing (a stateless
-    query's ``foreachBatch`` plans must see the session's own confs). The
-    completed run is appended to :data:`RUN_TRACE` under ``name``.
+    around start and termination, except the keys that the caller's own
+    open ``pinned_conf`` scopes pin: the caller's value wins. ``None``
+    pins nothing (a stateless query's ``foreachBatch`` plans must see the
+    session's own confs). The completed run is appended to
+    :data:`RUN_TRACE` under ``name``.
 
     ``checkpoint=None`` drains on a fresh tempdir checkpoint that is
     deleted afterwards, on failure too: availableNow ran the stream to
@@ -114,6 +120,8 @@ def _drain(
     if own:
         checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     try:
+        if confs is not None:
+            confs = {k: v for k, v in confs.items() if k not in open_pins()}
         pin = pinned_conf(spark, confs) if confs is not None else nullcontext()
         with pin:
             q = (

@@ -40,15 +40,9 @@ def tumbling_with_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping is non-linear, which would shift watermark arithmetic across DST
     boundaries relative to the wall-clock SQL oracle.
     """
-    from fs2_kafka_streams_spark.streaming.conf import (
-        STREAM_PERF_CONF,
-        pinned_conf,
-    )
+    from fs2_kafka_streams_spark.streaming.conf import pinned_conf
 
-    with pinned_conf(
-        spark,
-        {"spark.sql.session.timeZone": "UTC", **STREAM_PERF_CONF},
-    ):
+    with pinned_conf(spark, {"spark.sql.session.timeZone": "UTC"}):
         return _run_watermark_query(spark, sf_dir)
 
 
@@ -72,8 +66,8 @@ def _run_watermark_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    # the caller (tumbling_with_watermark) already pinned UTC +
-    # STREAM_PERF_CONF; run_to_memory re-pins the same values, a no-op.
+    # the caller (tumbling_with_watermark) pins UTC; the drain pins
+    # STREAM_PERF_CONF and 4 state partitions over it.
     # 4 state partitions (r12 probe, scripts/stream_partitions_probe.py):
     # mins 3.52 s @16 / 2.96 @8 / 2.58 @4 (1.36×) — 5 triggers
     # (1 file/trigger + the load-bearing no-data finalization batch)

@@ -16,7 +16,9 @@ gets the fresher host. Every rep and probe is recorded, nothing is
 filtered.
 
 Each arm is this tree's ``bench.py NAME... -n REPS`` (``AB_REPS``,
-default 3) run from the arm's tree with that tree first on ``sys.path``:
+default 3) run from the arm's tree with that tree first on ``sys.path``;
+a streaming entry also records the ``addBatch`` ms of every trigger it
+drained (``add_batch_ms``), the layer the per-trigger work shows in:
 both arms share one harness and warm-up, and each times its own
 ``fs2_kafka_streams_spark`` — the package path the arm imported is
 recorded. An arm that times out, exits non-zero or prints no line for a
@@ -48,7 +50,8 @@ _ARM = (
 
 
 def run_arm(tree: str, reps: int, names: list[str]) -> dict:
-    rec: dict = {"rc": None, "package": None, "reps": {}, "failed": None}
+    rec: dict = {"rc": None, "package": None, "reps": {}, "add_batch_ms": {},
+                 "failed": None}
     try:
         out = subprocess.run(
             [sys.executable, "-c", _ARM, str(HARNESS), *names,
@@ -69,6 +72,11 @@ def run_arm(tree: str, reps: int, names: list[str]) -> dict:
             name = line.split(":", 1)[0].strip()
             reps_s = line.split("reps=[", 1)[1].split("]", 1)[0]
             rec["reps"][name] = [float(x) for x in reps_s.split(",")]
+            if "add_batch_ms=[" in line:
+                ms = line.split("add_batch_ms=[", 1)[1].split("]", 1)[0]
+                rec["add_batch_ms"][name] = [
+                    float(x) for x in ms.split(",") if x.strip()
+                ]
     missing = [n for n in names if n not in rec["reps"]]
     if out.returncode != 0:
         rec["failed"] = f"exit {out.returncode}: {out.stderr[-500:]}"

@@ -13,9 +13,10 @@ store open/commit cost also wants fewer, larger stores — the q48/q72
 rationale — or whether aggregation parallelism pays for 16. Every rep is
 timed by ``bench.run_entry``, which also drops the rep's memory sink.
 
-Both entries pin their own count (q33b 8, q36 4), so a variant overrides
-the pin in ``streaming/run.py::_drain`` itself, the one drain every
-bounded run goes through. Each entry has one state operator with one
+Both entries pin their own count (q33b 8, q36 4); a variant pins its
+count in an outer ``pinned_conf`` scope, whose keys
+``streaming/run.py::_drain`` (the one drain every bounded run goes
+through) leaves alone. Each entry has one state operator with one
 store per partition, so every trigger that opened a store must report
 the variant's count as its ``state_instances`` (a trigger with no state
 work reports 0); a variant that did not take effect stops the probe
@@ -25,7 +26,6 @@ instead of printing a number.
 from __future__ import annotations
 
 import sys
-from contextlib import contextmanager
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -35,32 +35,13 @@ if _REPO not in sys.path:
 SF = "/root/testdata/sf0.1"
 
 
-@contextmanager
-def drains_at(partitions: str):
-    """Drain every streaming query at ``partitions`` shuffle (= state)
-    partitions, over any conf the entry pins; the drain is restored on
-    exit, on failure too."""
-    import fs2_kafka_streams_spark.streaming.run as srun
-
-    drain = srun._drain
-
-    def pinned(spark, writer, name, confs=None, checkpoint=None):
-        confs = {**(confs or {}), "spark.sql.shuffle.partitions": partitions}
-        drain(spark, writer, name, confs, checkpoint)
-
-    srun._drain = pinned
-    try:
-        yield
-    finally:
-        srun._drain = drain
-
-
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     sf = sys.argv[2] if len(sys.argv) > 2 else SF
     from bench import run_entry
     from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.session import get_spark
+    from fs2_kafka_streams_spark.streaming.conf import pinned_conf
 
     spark = get_spark(app_name="stream-partitions-probe")
     spark.read.parquet(f"{sf}/region.parquet").count()
@@ -75,7 +56,7 @@ def main() -> None:
         for name, variants in cases:
             for v in variants:
                 key = f"{name.split('_')[0]}@{v}"
-                with drains_at(v):
+                with pinned_conf(spark, {"spark.sql.shuffle.partitions": v}):
                     dt, _pinned, runs = run_entry(spark, specs[name], sf)
                 seen = {
                     t["state_instances"]

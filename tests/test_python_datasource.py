@@ -506,3 +506,29 @@ def test_partition_counts_match_assignment_with_null_keys(tmp_path, grow_to):
     want = np.bincount(pids, minlength=max(N_PARTS, grow_to))
     assert counts == {p: int(c) for p, c in enumerate(want)}
     assert sum(counts.values()) == n
+
+
+def test_topic_reads_skip_pyarrow_dataset():
+    """Planning offsets and serving a partition read the topic file without
+    importing ``pyarrow.dataset``: a fresh source runner or read worker
+    would pay its import (0.24 s) on its first call. Checked in a new
+    interpreter, whose imports no other test has made."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = f"""
+import sys
+from fs2_kafka_streams_spark.sources import python_source as ps
+path = "{SF}/events.parquet"
+counts = ps._partition_counts(path, {N_PARTS}, 0, 0)
+batch = ps._load_partition_batch(path, {N_PARTS}, 0, "events")
+assert batch.num_rows == counts[0] > 0, (batch.num_rows, counts)
+print("pyarrow.dataset" in sys.modules)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parent.parent, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["False"]

@@ -224,22 +224,47 @@ def test_upsert_trigger_is_scan_and_state_write_stages(spark):
     )
 
 
-def test_q48_join_evicts_state_rows(spark, monkeypatch):
+TRACK_ROWS = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+
+
+def test_drain_leaves_the_callers_pins_alone(spark, tmp_path):
+    """A key the caller pins in an open ``pinned_conf`` scope wins over the
+    drain's own pin of it: ``STREAM_PERF_CONF`` turns RocksDB's row count
+    off, the caller's scope turns it on, and the last trigger counts the
+    one key's state row. The drain still pins its other keys."""
+    writer = (
+        _source(spark, tmp_path).groupBy("user_id").count()
+        .writeStream.outputMode("update")
+        .foreachBatch(
+            lambda bdf, eid: bdf.write.format("noop").mode("overwrite").save()
+        )
+    )
+    seq = sconf.PIN_SEQ
+    with sconf.pinned_conf(spark, {TRACK_ROWS: "true"}):
+        _drain(spark, writer, "drain_caller_pins",
+               dict(sconf.STREAM_PERF_CONF))
+    from fs2_kafka_streams_spark.streaming import run as srun
+
+    assert srun.RUN_TRACE[-1]["triggers"][-1]["state_rows"] > 0
+    outer, drained = sconf.PIN_TRACE[seq - sconf.PIN_SEQ:]
+    assert outer == {TRACK_ROWS: "true"}
+    assert drained == {
+        k: v for k, v in sconf.STREAM_PERF_CONF.items() if k != TRACK_ROWS
+    }
+    assert not sconf.open_pins()
+
+
+def test_q48_join_evicts_state_rows(spark):
     """q48's watermarked self-join evicts join state while it runs: at
     least one trigger removes state rows. RocksDB counts rows only with
-    ``trackTotalNumberOfRows`` on; the drain pins ``STREAM_PERF_CONF``
-    over any outer scope, so the switch goes into that map for this
-    test only."""
+    ``trackTotalNumberOfRows`` on, which a scope around the entry turns
+    on over the drain's ``STREAM_PERF_CONF``."""
     from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.streaming import run as srun
     from tests.conftest import SF_CORRECT
 
-    monkeypatch.setitem(
-        sconf.STREAM_PERF_CONF,
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "true",
-    )
-    load_all()["q48_stream_stream_join"].build(spark, SF_CORRECT)
+    with sconf.pinned_conf(spark, {TRACK_ROWS: "true"}):
+        load_all()["q48_stream_stream_join"].build(spark, SF_CORRECT)
     rec = srun.RUN_TRACE[-1]
     removed = [t["state_rows_removed"] for t in rec["triggers"]]
     assert rec["name"].startswith("q48_sink")
