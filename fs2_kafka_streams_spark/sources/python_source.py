@@ -130,18 +130,12 @@ def _ts_us_array(ts):
     pair ``(values, isnull)``. ``to_numpy`` on a null-bearing int cast falls
     back to float64 + NaN, and ``int(NaN)`` used to crash the read task —
     a null timestamp must flow through the wire in-band, never crash it."""
-    import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     if pa.types.is_timestamp(ts.type) and ts.type.unit == "ns":
-        ts_i = ts.cast("int64")
-        vals = ts_i.fill_null(0).to_numpy() // 1000
-    else:
-        ts_i = ts.cast(pa.timestamp("us")).cast("int64")
-        vals = ts_i.fill_null(0).to_numpy()
-    isnull = np.asarray(pc.is_null(ts_i).to_numpy(zero_copy_only=False))
-    return vals, isnull
+        vals, isnull = _key_array(ts.cast("int64"))
+        return vals // 1000, isnull
+    return _key_array(ts.cast(pa.timestamp("us")).cast("int64"))
 
 
 def _ts_us_order_key(ts_us):
@@ -153,17 +147,27 @@ def _ts_us_order_key(ts_us):
 
 
 def _key_array(col):
-    """Int64 key column → NULL-preserving ``(values, isnull)`` pair — a
-    NULL record key is ordinary Kafka (the default partitioner round-robins
-    it), so it must never crash or silently vanish (``int(NaN)`` /
-    ``NaN % n`` both did: NaN % n is NaN, which matches NO partition id,
-    so every NULL-key record used to drop out of the topic)."""
-    import numpy as np
-    import pyarrow.compute as pc
+    """Int64 column → NULL-preserving ``(values, isnull)`` pair, NULL slots
+    0 — a NULL record key is ordinary Kafka (the default partitioner
+    round-robins it), so it must never crash or silently vanish
+    (``int(NaN)`` / ``NaN % n`` both did: NaN % n is NaN, which matches NO
+    partition id, so every NULL-key record used to drop out of the topic).
 
-    vals = col.combine_chunks().fill_null(0).to_numpy()
-    isnull = np.asarray(pc.is_null(col).to_numpy(zero_copy_only=False))
-    return vals, isnull
+    Read from the value and validity buffers: Arrow's ``fill_null`` and
+    ``to_numpy`` import pandas on first use, most of a fresh source
+    runner's first ``latestOffset``; the buffers do not."""
+    import numpy as np
+    import pyarrow as pa
+
+    arr = col.combine_chunks().cast(pa.int64())
+    n, off = len(arr), arr.offset
+    validity, data = arr.buffers()
+    vals = np.frombuffer(data, np.int64, n, off * 8)
+    if validity is None:
+        return vals.copy(), np.zeros(n, bool)
+    bits = np.unpackbits(np.frombuffer(validity, np.uint8), bitorder="little")
+    isnull = bits[off : off + n] == 0
+    return np.where(isnull, 0, vals), isnull
 
 
 def _partition_key(uid, eid):

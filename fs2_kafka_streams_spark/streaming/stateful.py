@@ -36,7 +36,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
@@ -75,6 +75,8 @@ _OUTPUT_SCHEMA = (
     "event_type string, value double, props string"
 )
 _OUTPUT_SCHEMA_DEAD = _OUTPUT_SCHEMA + ", _dead boolean"
+#: The view's value columns, in ``_OUTPUT_SCHEMA`` order after ``user_id``.
+_VIEW_COLS = ["event_id", "ts", "event_type", "value", "props"]
 
 
 def _changelog_source(
@@ -223,7 +225,7 @@ def _native_fold(
     records included, in tests/test_streaming_duality.py.
 
     Output is ``_OUTPUT_SCHEMA`` (plus ``_dead``)."""
-    value_cols = ["event_id", "ts", "event_type", "value", "props"]
+    value_cols = [*_VIEW_COLS]
     if tombstone_col is not None:
         src = src.withColumn(
             "_dead", F.coalesce(F.col(tombstone_col), F.lit(False))
@@ -453,30 +455,8 @@ def latest_by_key_tws_with_deletes(
     with pinned_conf(spark, conf):
         return _run_upsert_sink(
             spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-            row_schema=_OUTPUT_SCHEMA_DEAD, dead_col="_dead",
+            dead_col="_dead",
         )
-
-
-def _sink_bucket(spark: SparkSession) -> Column:
-    """The upsert log's key bucket: ``pmod(hash(user_id), n)`` with ``n``
-    the session's state-partition count. Spark's stateful exchange is
-    ``hashpartitioning(user_id, n)``, Murmur3 with seed 42 as SQL
-    ``hash()`` (NULL keys included), so in a micro-batch's session this
-    is exactly the state partition a row was folded in: every state task
-    holds one bucket and appends one file in the stage that commits its
-    store, with no exchange. Appends and :func:`compact_upsert_log` both
-    bucket through here.
-
-    Spark 4 restores the count a checkpoint started with into the
-    micro-batch session's
-    ``spark.sql.streaming.internal.stateStore.partitions``; its
-    ``spark.sql.shuffle.partitions`` stays the current session's. Outside
-    a stream (compaction), where that key is unset, the count is the
-    shuffle partitions."""
-    n = spark.conf.get(
-        "spark.sql.streaming.internal.stateStore.partitions", None
-    ) or spark.conf.get("spark.sql.shuffle.partitions")
-    return F.pmod(F.hash("user_id"), F.lit(int(n))).alias("_bucket")
 
 
 @contextlib.contextmanager
@@ -505,34 +485,40 @@ def _sink_lock(sink_dir: str, exclusive: bool):
 
 
 def _read_upsert_log(
-    spark: SparkSession, sink_dir: str, row_schema: str = _OUTPUT_SCHEMA
+    spark: SparkSession, sink_dir: str, dead_col: str | None = None
 ) -> DataFrame:
-    return spark.read.schema(
-        row_schema + ", _epoch long, _bucket int"
-    ).parquet(sink_dir)
-
-
-def _log_head(log: DataFrame, dead_col: str | None = None) -> DataFrame:
-    """Latest row per key from the append log by ``(_epoch, ts, event_id)``;
-    with ``dead_col``, keys whose head is a tombstone drop out — exactly a
-    compacted topic's read view (tombstoned keys vanish once the tombstone
-    is the head). The folds emit MONOTONE rows per key, so commit order
-    (``_epoch`` first) is also data order, the order
-    :func:`compact_upsert_log` keeps.
-    """
-    value_cols = ["event_id", "ts", "event_type", "value", "props"]
+    """The upsert log: the view's rows, the tombstone flag ``dead_col``
+    when the sink has one, and each row's commit ``_epoch``."""
+    schema = _OUTPUT_SCHEMA
     if dead_col is not None:
-        value_cols = value_cols + [dead_col]
-    head = latest_by_key(
+        schema += f", {dead_col} boolean"
+    return spark.read.schema(schema + ", _epoch long").parquet(sink_dir)
+
+
+def _log_fold(log: DataFrame, *cols: str | None) -> DataFrame:
+    """Latest row per key of the upsert log by ``(_epoch, ts, event_id)``:
+    its view columns plus the named ``cols`` (``_epoch``, the tombstone
+    flag; a None is skipped). The folds emit MONOTONE rows per key, so
+    commit order (``_epoch`` first) is also data order. The view read and
+    compaction both fold here."""
+    return latest_by_key(
         log,
         key_cols=["user_id"],
         order_cols=["_epoch", "ts", "event_id"],
-        value_cols=value_cols,
+        value_cols=[*_VIEW_COLS, *filter(None, cols)],
         # (_epoch, ts, event_id) is unique per key per append; an
         # at-least-once duplicate append ties only against an IDENTICAL
         # row, so dropping the value tie-break stays deterministic
         unique_order=True,
     )
+
+
+def _log_head(log: DataFrame, dead_col: str | None = None) -> DataFrame:
+    """The materialized view of the upsert log (:func:`_log_fold`); with
+    ``dead_col``, keys whose head is a tombstone drop out — exactly a
+    compacted topic's read view (tombstoned keys vanish once the tombstone
+    is the head)."""
+    head = _log_fold(log, dead_col)
     if dead_col is not None:
         head = head.filter(~F.col(dead_col)).drop(dead_col)
     return head
@@ -557,12 +543,13 @@ def compact_upsert_log(
 
     The reference's table IS a compacted topic (``streams/Tables.scala``);
     this bounds the sink's storage at O(distinct keys) for a long-running
-    query, matching broker-side compaction. The rewrite keeps the append
-    path's layout, bucketed by state partition (:func:`_sink_bucket` at
-    the ``STREAM_PERF_CONF`` count): the fold's own exchange places each
-    bucket in one task, which writes it as one file with no further
-    exchange. The swap is directory-rename (atomic on
-    a POSIX filesystem) fenced by :func:`_sink_lock`: compaction holds the
+    query, matching broker-side compaction. The rewrite is flat, like the
+    appends: each task of the fold writes one file. A log written in the
+    retired partition-directory layout reads whole here and is rewritten
+    flat, so compaction is its migration; appends refuse such a log until
+    it is compacted (a directory holding both layouts would read back
+    only part of its rows). The swap is directory-rename (atomic
+    on a POSIX filesystem) fenced by :func:`_sink_lock`: compaction holds the
     lock EXCLUSIVE for the whole read→rewrite→swap, triggers hold it
     SHARED around their append — so a concurrent trigger can never
     interleave destructively with the swap (race-tested in
@@ -571,11 +558,6 @@ def compact_upsert_log(
     transactional table format (Delta/Iceberg ``replaceWhere``) instead of
     a host-local lock.
     """
-    row_schema = _OUTPUT_SCHEMA
-    value_cols = ["event_id", "ts", "event_type", "value", "props", "_epoch"]
-    if dead_col is not None:
-        row_schema = row_schema + f", {dead_col} boolean"
-        value_cols = value_cols + [dead_col]
     with _sink_lock(sink_dir, exclusive=True):
         # crash recovery BEFORE reading (under the same exclusive lock the
         # swap holds): a previous compaction that died mid-swap leaves
@@ -592,28 +574,16 @@ def compact_upsert_log(
             else:
                 os.rename(old_dir, sink_dir)
         shutil.rmtree(tmp_dir, ignore_errors=True)  # stale partial output
-        log = _read_upsert_log(spark, sink_dir, row_schema)
+        log = _read_upsert_log(spark, sink_dir, dead_col)
         rows_before = log.count()
-        compacted = latest_by_key(
-            log,
-            key_cols=["user_id"],
-            order_cols=["_epoch", "ts", "event_id"],
-            value_cols=value_cols,
-            unique_order=True,
-        )
+        compacted = _log_fold(log, "_epoch", dead_col)
         if dead_col is not None and not retain_tombstones:
             compacted = compacted.filter(~F.col(dead_col))
-        # at the streaming state-partition count, the fold's own exchange
-        # is the bucket layout: each task writes the buckets it holds, one
-        # file per bucket, with no second exchange
-        with pinned_conf(spark, STREAM_PERF_CONF):
-            compacted.select("*", _sink_bucket(spark)).write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(tmp_dir)
+        compacted.write.mode("overwrite").parquet(tmp_dir)
         os.rename(sink_dir, old_dir)
         os.rename(tmp_dir, sink_dir)
         shutil.rmtree(old_dir)
-        rows_after = _read_upsert_log(spark, sink_dir, row_schema).count()
+        rows_after = _read_upsert_log(spark, sink_dir, dead_col).count()
     return rows_before, rows_after
 
 
@@ -637,18 +607,19 @@ def _reap_at_exit(path: str) -> None:
 
 def _run_upsert_sink(
     spark: SparkSession, updates: DataFrame, checkpoint: str | None = None,
-    sink_dir: str | None = None, row_schema: str = _OUTPUT_SCHEMA,
-    dead_col: str | None = None,
+    sink_dir: str | None = None, dead_col: str | None = None,
 ) -> DataFrame:
     """Drive the update stream to completion; materialize the view through a
     KEYED PARQUET UPSERT SINK (the Spark-native analogue of a compacted
     Kafka topic / KV store):
 
     - each micro-batch APPENDS its update rows — tagged with the commit
-      epoch — to a parquet log bucketed by state partition
-      (:func:`_sink_bucket`): each state task writes its own bucket, one
-      file per non-empty partition per epoch, in the stage that commits
-      its store — no exchange, and nothing flows through the driver;
+      epoch — to a flat parquet log: each state task writes its own rows
+      as one file in the stage that commits its store — no exchange, no
+      sort, and nothing flows through the driver. That is one file per
+      non-empty state partition per epoch (task 0 also writes one when
+      its partition is empty, for the schema); the log knows nothing of
+      the partitioning;
     - the materialized view is the read-back latest row per key, ordered by
       (epoch, ts, event_id) — one ``max_by`` aggregation, shuffle volume
       O(distinct keys).
@@ -656,6 +627,11 @@ def _run_upsert_sink(
     The round-1 version collected every batch into a driver dict — a driver
     bottleneck growing with key cardinality. This shape survives 100×: the
     append log and the compaction read-back are both partitioned work.
+
+    ``dead_col`` names the sink's tombstone column (the deletes engines'
+    ``_dead``). An existing log in the retired partition-directory
+    layout is refused with a ValueError before the query starts: run
+    :func:`compact_upsert_log` on it first.
     """
     if sink_dir is None:
         # The returned DataFrame reads the sink LAZILY, so the directory
@@ -680,11 +656,22 @@ def _run_upsert_sink(
     # supported either.
     epoch_base = 0
     with _sink_lock(sink_dir, exclusive=False):
-        if os.path.isdir(sink_dir) and any(
-            not f.startswith(".") for f in os.listdir(sink_dir)
-        ):
+        logged = (
+            [f for f in os.listdir(sink_dir) if not f.startswith(".")]
+            if os.path.isdir(sink_dir) else []
+        )
+        if any(f.startswith("_bucket=") for f in logged):
+            # flat appends beside partition directories would read back
+            # only part of the log
+            dead = "" if dead_col is None else f", dead_col={dead_col!r}"
+            raise ValueError(
+                f"upsert log {sink_dir} is in the retired _bucket= layout; "
+                f"run compact_upsert_log(spark, {sink_dir!r}{dead}) first, "
+                "which rewrites it flat"
+            )
+        if logged:
             prev_max = (
-                _read_upsert_log(spark, sink_dir, row_schema)
+                _read_upsert_log(spark, sink_dir, dead_col)
                 .agg(F.max("_epoch"))
                 .collect()[0][0]
             )
@@ -694,14 +681,9 @@ def _run_upsert_sink(
         # SHARED lock: appends may run concurrently with each other but
         # never overlap compaction's exclusive directory swap
         with _sink_lock(sink_dir, exclusive=False):
-            # the micro-batch's session carries the state-partition count
-            # the checkpoint started with, so each state task appends
-            # exactly one bucket file
             batch_df.select(
-                "*",
-                F.lit(epoch_base + epoch_id).alias("_epoch"),
-                _sink_bucket(batch_df.sparkSession),
-            ).write.mode("append").partitionBy("_bucket").parquet(sink_dir)
+                "*", F.lit(epoch_base + epoch_id).alias("_epoch")
+            ).write.mode("append").parquet(sink_dir)
 
     # a checkpoint the drain creates is deleted after termination; only
     # the sink must outlive this call (the returned view reads it lazily)
@@ -714,7 +696,7 @@ def _run_upsert_sink(
     )
 
     return _log_head(
-        _read_upsert_log(spark, sink_dir, row_schema), dead_col=dead_col
+        _read_upsert_log(spark, sink_dir, dead_col), dead_col=dead_col
     )
 
 
@@ -758,7 +740,7 @@ def latest_by_key_streaming_with_deletes(
     updates = _native_fold(src, tombstone_col)
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-        row_schema=_OUTPUT_SCHEMA_DEAD, dead_col="_dead",
+        dead_col="_dead",
     )
 
 

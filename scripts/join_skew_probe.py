@@ -100,6 +100,7 @@ def run_join(spark, sf_like: str, out: str, bucket_minutes: int = 0) -> dict:
         pinned_conf,
     )
     from fs2_kafka_streams_spark.streaming.replay import replay_dir
+    from fs2_kafka_streams_spark.streaming.run import RUN_TRACE, _drain
     from fs2_kafka_streams_spark.streaming.stateful import EVENTS_SCHEMA
 
     rd = replay_dir(
@@ -169,28 +170,25 @@ def run_join(spark, sf_like: str, out: str, bucket_minutes: int = 0) -> dict:
     def sink(bdf, bid):
         n_out["n"] += bdf.count()
 
+    t0 = time.time()
     with pinned_conf(
         spark,
-        {
-            **STREAM_PERF_CONF,
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.session.timeZone": "UTC",
-        },
+        {"spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "true"},
     ):
-        t0 = time.time()
-        q = (
-            joined.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            spark,
+            joined.writeStream.foreachBatch(sink),
+            "join_skew_probe",
+            {
+                **STREAM_PERF_CONF,
+                "spark.sql.shuffle.partitions": "8",
+                "spark.sql.session.timeZone": "UTC",
+            },
+            ckpt,
         )
-        q.awaitTermination()
-        wall = time.time() - t0
-    progress = [p for p in q.recentProgress if p.get("stateOperators")]
-    trig_ms = [p["durationMs"].get("triggerExecution", 0) for p in progress]
-    state_rows = [
-        p["stateOperators"][0].get("numRowsTotal", -1) for p in progress
-    ]
+    wall = time.time() - t0
+    triggers = RUN_TRACE[-1]["triggers"]
+    trig_ms = [t["durationMs"].get("triggerExecution", 0) for t in triggers]
     # end-of-run per-partition distribution (span <= delay: no eviction,
     # so this IS the retained join state, not a post-eviction residue)
     per_part = {}
@@ -212,7 +210,7 @@ def run_join(spark, sf_like: str, out: str, bucket_minutes: int = 0) -> dict:
         "p50_trigger_ms": int(np.median(trig_ms)) if trig_ms else -1,
         "max_trigger_ms": int(np.max(trig_ms)) if trig_ms else -1,
         "out_rows": n_out["n"],
-        "state_rows_final": state_rows[-1] if state_rows else -1,
+        "state_rows_final": triggers[-1]["state_rows"] if triggers else -1,
         "state_per_partition": parts,
         "state_part_max_over_mean": round(
             max(parts) / (sum(parts) / len(parts)), 2

@@ -232,6 +232,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
         STREAM_PERF_CONF,
         pinned_conf,
     )
+    from fs2_kafka_streams_spark.streaming.run import RUN_TRACE, _drain
 
     n_files = 8
 
@@ -242,41 +243,27 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
             .option("maxFilesPerTrigger", 1)
             .parquet(replay)
         )
-        updates = updates_builder(src)
+        writer = (
+            updates_builder(src).writeStream.outputMode(output_mode)
+            # noop write, not count(): count() materializes only what the
+            # count needs, silently excluding output serialization from
+            # the per-trigger times — the bench's noop-sink methodology
+            # includes it, and these numbers are compared against the
+            # bench's
+            .foreachBatch(
+                lambda bdf, bid: bdf.write.format("noop")
+                .mode("overwrite").save()
+            )
+        )
         # state rows are what this section measures: count them, which
         # STREAM_PERF_CONF turns off to save a RocksDB get per update
-        confs = {
-            **STREAM_PERF_CONF,
-            "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": (
-                "true"
-            ),
-        }
-        with pinned_conf(spark, confs):
-            t0 = time.time()
-            q = (
-                updates.writeStream.outputMode(output_mode)
-                # noop write, not count(): count() materializes only what
-                # the count needs, silently excluding output serialization
-                # from the per-trigger times — the bench's noop-sink
-                # methodology includes it, and these numbers are compared
-                # against the bench's
-                .foreachBatch(
-                    lambda bdf, bid: bdf.write.format("noop")
-                    .mode("overwrite").save()
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            wall = time.time() - t0
-        progress = [p for p in q.recentProgress if p.get("stateOperators")]
-        trig_ms = [p["durationMs"].get("triggerExecution", 0) for p in progress]
-        state_rows = (
-            progress[-1]["stateOperators"][0].get("numRowsTotal", -1)
-            if progress
-            else -1
-        )
+        t0 = time.time()
+        track_rows = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+        with pinned_conf(spark, {track_rows: "true"}):
+            _drain(spark, writer, f"scale_{tag}", STREAM_PERF_CONF, ckpt)
+        wall = time.time() - t0
+        triggers = RUN_TRACE[-1]["triggers"]
+        trig_ms = [t["durationMs"].get("triggerExecution", 0) for t in triggers]
         state_bytes = _dir_bytes(os.path.join(ckpt, "state"))
         shutil.rmtree(ckpt, ignore_errors=True)
         return {
@@ -288,7 +275,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
             # stays put
             "p50_trigger_ms": int(np.median(trig_ms)) if trig_ms else -1,
             "max_trigger_ms": int(np.max(trig_ms)) if trig_ms else -1,
-            "state_rows": state_rows,
+            "state_rows": triggers[-1]["state_rows"] if triggers else -1,
             "state_mb": round(state_bytes / 1e6, 1),
         }
 

@@ -11,7 +11,8 @@ This probe interleaves each entry at candidate partition counts (min-of-N
 per variant, same-window pairing) to decide whether their per-trigger
 store open/commit cost also wants fewer, larger stores — the q48/q72
 rationale — or whether aggregation parallelism pays for 16. Every rep is
-timed by ``bench.run_entry``, which also drops the rep's memory sink.
+timed by ``bench.run_entry``, which also drops the rep's memory sink,
+after ``bench.warm_session`` and ``bench.warm_streaming``.
 
 Both entries pin their own count (q33b 8, q36 4); a variant pins its
 count in an outer ``pinned_conf`` scope, whose keys
@@ -38,13 +39,15 @@ SF = "/root/testdata/sf0.1"
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     sf = sys.argv[2] if len(sys.argv) > 2 else SF
-    from bench import run_entry
+    from bench import run_entry, warm_session, warm_streaming
     from fs2_kafka_streams_spark.queries import load_all
     from fs2_kafka_streams_spark.session import get_spark
     from fs2_kafka_streams_spark.streaming.conf import pinned_conf
 
     spark = get_spark(app_name="stream-partitions-probe")
-    spark.read.parquet(f"{sf}/region.parquet").count()
+    # the first variant must not absorb the one-time streaming spin-up
+    warm_session(spark, sf)
+    warm_streaming(spark)
     specs = load_all()
 
     cases = [

@@ -148,3 +148,21 @@ def write_replay_files(replay_dir, frames):
         pdf.to_parquet(p, index=False)
         os.utime(p, (base + 10 * i, base + 10 * i))
     return str(replay_dir)
+
+
+def upsert_files_per_epoch(sink_dir):
+    """Parquet files of a flat upsert log, counted on disk per write job:
+    each trigger appends in one job, and Spark names every file of a job
+    ``part-<task>-<job uuid>-c000...``, so a count per uuid is a count per
+    epoch that includes the empty file task 0 keeps for the schema. Fails
+    on a file outside ``sink_dir`` itself (a partitioned layout)."""
+    import glob
+    import re
+    from collections import Counter
+
+    files = glob.glob(f"{sink_dir}/**/*.parquet", recursive=True)
+    assert {os.path.dirname(f) for f in files} == {str(sink_dir)}, files
+    return Counter(
+        re.match(r"part-\d+-([0-9a-f-]{36})", os.path.basename(f)).group(1)
+        for f in files
+    )

@@ -172,34 +172,30 @@ def test_bench_noise_flags_median_based():
 
 
 def test_upsert_sink_files_bounded_by_buckets(spark, tmp_path):
-    """r8: the upsert sink writes each bucket of an epoch from ONE task —
-    without that, partitionBy fanned every input task across all buckets
-    (measured 256 files for a 1,500-row view at sf0.1: tasks x buckets x
-    epochs), the classic small-files failure a 100 TB compacted log
-    cannot afford. The bucket is the state partition itself, so each
-    non-empty state partition appends exactly one file per epoch: at
-    most ``STREAM_STATE_PARTITIONS`` files per epoch."""
-    import glob
-
+    """r8: the upsert sink writes each epoch from the state tasks, one file
+    per task — without that, a write fanned every input task across the
+    log (measured 256 files for a 1,500-row view at sf0.1), the classic
+    small-files failure a 100 TB compacted log cannot afford. Each
+    non-empty state partition appends one file per epoch, and task 0
+    appends one even when its partition is empty (Spark keeps it for the
+    schema): at most ``STREAM_STATE_PARTITIONS`` files per epoch, counted
+    on disk (:func:`tests.conftest.upsert_files_per_epoch`)."""
     from fs2_kafka_streams_spark.streaming import stateful
     from fs2_kafka_streams_spark.streaming.conf import (
         STREAM_STATE_PARTITIONS,
     )
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, upsert_files_per_epoch
 
     sink = str(tmp_path / "sink")
     view = stateful.latest_by_key_streaming(spark, SF_SMOKE, sink_dir=sink)
     assert view.count() > 0
-    files = glob.glob(f"{sink}/**/*.parquet", recursive=True)
-    # epoch is a column, not a partition dir: one file per (epoch, bucket)
-    # the log holds, and no bucket outside the state partitions
-    pairs = {
-        (r["_epoch"], r["_bucket"])
-        for r in stateful._read_upsert_log(spark, sink)
-        .select("_epoch", "_bucket").distinct().collect()
-    }
-    assert len(files) == len(pairs), f"{len(files)} files, {len(pairs)} pairs"
-    assert {b for _, b in pairs} <= set(range(int(STREAM_STATE_PARTITIONS)))
+    per_epoch = upsert_files_per_epoch(sink)
+    epochs = (
+        stateful._read_upsert_log(spark, sink)
+        .select("_epoch").distinct().count()
+    )
+    assert len(per_epoch) == epochs > 1
+    assert max(per_epoch.values()) <= int(STREAM_STATE_PARTITIONS), per_epoch
 
 
 def test_apply_changes_snapshot_missing_columns_loud(spark):

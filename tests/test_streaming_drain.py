@@ -1,6 +1,6 @@
 """The one availableNow drain (``streaming/run.py::_drain``): checkpoint
 ownership, conf pinning and what its run trace records, plus the layout
-of the upsert sink it drives (one log bucket per state partition)."""
+of the upsert sink it drives (one log file per state task per epoch)."""
 
 from __future__ import annotations
 
@@ -175,18 +175,19 @@ def test_checkpoint_keeps_its_state_partitions_on_restart(
     ]
 
 
-def test_resumed_upsert_log_keeps_the_checkpoints_buckets(
+def test_resumed_upsert_log_appends_the_checkpoints_file_count(
     spark, tmp_path, monkeypatch
 ):
-    """The upsert log's bucket is the state partition, read from the
-    micro-batch's own session, which Spark restores from the checkpoint:
-    a checkpoint first started at 2 state partitions and resumed under a
-    4-partition rule still appends at most 2 files per epoch, into
-    buckets 0 and 1 — although its 20 keys spread over more than 2
-    buckets at 4 — and the view folds both runs."""
+    """Each state task appends its own file of the upsert log, and a
+    checkpoint's state-partition count is restored by Spark: a checkpoint
+    first started at 2 state partitions and resumed under a 4-partition
+    rule still runs 2 store instances and appends at most 2 files per
+    epoch — although its 20 keys spread over more than 2 partitions at 4
+    — and the view folds both runs."""
     from pyspark.sql import functions as F
 
     from fs2_kafka_streams_spark.streaming.stateful import _read_upsert_log
+    from tests.conftest import upsert_files_per_epoch
 
     view, runs, sink = _restarted_upsert(
         spark, tmp_path, monkeypatch, "2", "4", 20
@@ -194,11 +195,10 @@ def test_resumed_upsert_log_keeps_the_checkpoints_buckets(
     assert runs == ({2}, {2})
     at_four = spark.range(20).select(F.pmod(F.hash("id"), F.lit(4)))
     assert at_four.distinct().count() > 2
-    log = _read_upsert_log(spark, sink).select("_epoch", "_bucket")
-    pairs = {tuple(r) for r in log.distinct().collect()}
-    assert {b for _, b in pairs} == {0, 1}
-    files = glob.glob(f"{sink}/**/*.parquet", recursive=True)
-    assert len(files) == len(pairs) == 2 * len({e for e, _ in pairs})
+    per_epoch = upsert_files_per_epoch(sink)
+    epochs = _read_upsert_log(spark, sink).select("_epoch").distinct()
+    assert len(per_epoch) == epochs.count() > 1
+    assert max(per_epoch.values()) <= 2, per_epoch
     assert sorted((r.user_id, r.event_id) for r in view.collect()) == [
         (k, 300 + k) for k in range(20)
     ]
@@ -206,7 +206,7 @@ def test_resumed_upsert_log_keeps_the_checkpoints_buckets(
 
 def test_upsert_trigger_is_scan_and_state_write_stages(spark):
     """Each upsert trigger is one job of two stages: the source scan, and
-    the state stage that folds, commits its store and appends its bucket
+    the state stage that folds, commits its store and appends its file
     of the log, with no exchange between fold and write. Spark runs a
     query's trigger jobs under its run id as the job group."""
     from fs2_kafka_streams_spark.streaming import run as srun

@@ -226,7 +226,6 @@ def test_upsert_log_compaction(spark, tmp_path):
     from fs2_kafka_streams_spark.streaming.stateful import (
         _log_head,
         _read_upsert_log,
-        _sink_bucket,
         compact_upsert_log,
         latest_by_key_streaming,
     )
@@ -255,14 +254,70 @@ def test_upsert_log_compaction(spark, tmp_path):
         [(some_user, 10**12, None, "compact_test", 1.0, "{}")],
         "user_id long, event_id long, ts timestamp_ntz, "
         "event_type string, value double, props string",
-    ).select("*", F.lit(max_epoch + 1).alias("_epoch"), _sink_bucket(spark))
-    update.write.mode("append").partitionBy("_bucket").parquet(sink)
+    ).select("*", F.lit(max_epoch + 1).alias("_epoch"))
+    update.write.mode("append").parquet(sink)
     head = {
         r["user_id"]: (r["event_id"], r["event_type"])
         for r in _log_head(_read_upsert_log(spark, sink)).collect()
     }
     assert head[some_user] == (10**12, "compact_test")
     assert len(head) == n_keys
+
+
+def test_append_refuses_a_bucketed_log_until_compacted(spark, tmp_path):
+    """A log written in the retired ``_bucket=<n>`` directory layout would
+    read back only part of its rows once flat files land beside it, so an
+    append into it raises — naming :func:`compact_upsert_log` — and
+    touches no file. Compaction rewrites the old log flat; the same
+    append then runs, and the view is the batch latest-by-key with the
+    old log's keys folded in under it."""
+    import os
+
+    import pandas as pd
+
+    from fs2_kafka_streams_spark.catalog import Catalog
+    from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
+    from fs2_kafka_streams_spark.streaming.stateful import (
+        compact_upsert_log,
+        latest_by_key_streaming,
+    )
+
+    sink = str(tmp_path / "sink")
+    old = pd.DataFrame({
+        "user_id": [-1, -1, -2],
+        "event_id": [1, 2, 3],
+        "ts": pd.to_datetime([1, 2, 3], unit="s").astype("datetime64[us]"),
+        "event_type": ["view", "buy", "view"],
+        "value": [1.0, 2.0, 3.0],
+        "props": ["{}", "{}", "{}"],
+        "_epoch": [0, 1, 0],
+    })
+    os.makedirs(f"{sink}/_bucket=0")
+    old.to_parquet(f"{sink}/_bucket=0/part-0.parquet", index=False)
+
+    def listing():
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(sink) for f in fs
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="compact_upsert_log"):
+        latest_by_key_streaming(spark, SF_SMOKE, sink_dir=sink)
+    assert listing() == before
+
+    assert compact_upsert_log(spark, sink) == (3, 2)
+    view = latest_by_key_streaming(spark, SF_SMOKE, sink_dir=sink)
+    batch = latest_by_key(
+        Catalog(spark, SF_SMOKE).events,
+        key_cols=["user_id"],
+        order_cols=["ts", "event_id"],
+        value_cols=["event_id", "ts", "event_type", "value", "props"],
+    ).select(*view.columns)
+    got = [(r.user_id, r.event_id, r.event_type) for r in view.collect()]
+    want = {(r.user_id, r.event_id, r.event_type) for r in batch.collect()}
+    old_heads = {(-1, 2, "buy"), (-2, 3, "view")}
+    assert len(got) == len(set(got)) and set(got) == want | old_heads
 
 
 def test_session_window_append_mode(spark):
@@ -559,15 +614,10 @@ def test_compaction_preserves_tombstones(spark, tmp_path):
             ).collect(),
         )
     )
-    schema = (
-        "user_id long, event_id long, ts timestamp_ntz, event_type string, "
-        "value double, props string, _dead boolean"
-    )
-
     # retention compaction: one row per key, tombstone heads retained
     before, after = compact_upsert_log(spark, sink, dead_col="_dead")
     assert after < before
-    log = _read_upsert_log(spark, sink, schema)
+    log = _read_upsert_log(spark, sink, "_dead")
     assert log.count() == log.select("user_id").distinct().count()
     view_after = sorted(
         map(tuple, _log_head(log, dead_col="_dead").collect())
@@ -578,7 +628,7 @@ def test_compaction_preserves_tombstones(spark, tmp_path):
     _, after_gc = compact_upsert_log(
         spark, sink, dead_col="_dead", retain_tombstones=False
     )
-    log_gc = _read_upsert_log(spark, sink, schema)
+    log_gc = _read_upsert_log(spark, sink, "_dead")
     assert log_gc.filter("_dead").count() == 0
     view_gc = sorted(map(tuple, _log_head(log_gc, dead_col="_dead").collect()))
     assert view_gc == view_before
@@ -598,7 +648,6 @@ def test_compaction_concurrent_appends(spark, tmp_path):
     from fs2_kafka_streams_spark.streaming.stateful import (
         _log_head,
         _read_upsert_log,
-        _sink_bucket,
         _sink_lock,
         compact_upsert_log,
         latest_by_key_streaming,
@@ -621,14 +670,9 @@ def test_compaction_concurrent_appends(spark, tmp_path):
                       float(i), "{}")],
                     "user_id long, event_id long, ts timestamp_ntz, "
                     "event_type string, value double, props string",
-                ).select(
-                    "*", F.lit(base_epoch + 1 + i).alias("_epoch"),
-                    _sink_bucket(spark),
-                )
+                ).select("*", F.lit(base_epoch + 1 + i).alias("_epoch"))
                 with _sink_lock(sink, exclusive=False):
-                    row.write.mode("append").partitionBy("_bucket").parquet(
-                        sink
-                    )
+                    row.write.mode("append").parquet(sink)
         except Exception as e:  # surfaced in the main thread
             errors.append(e)
 
